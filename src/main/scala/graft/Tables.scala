@@ -28,26 +28,24 @@ object Tables {
 
   /** Memoized relation resolution. `spark.read.parquet` lists the
     * directory and reads footers on EVERY call — ~30-60 ms that lands in
-    * every catalog query's constant (the r10 floor audit). Keyed by
-    * session (a fresh session must never see another session's relation)
-    * and by the path's lastModified stamp, so suites that REWRITE a
-    * fixture dir between reads get a fresh resolution while the
-    * immutable testdata hits the memo every time. The logical plan
-    * returned is identical across calls, which is also what lets the
-    * CacheManager substitute pinned tables in the bench. */
-  private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), DataFrame]()
-
+    * every catalog query's constant (the r10 floor audit). Keyed by the
+    * path's lastModified stamp, so suites that REWRITE a fixture dir
+    * between reads get a fresh resolution while the immutable testdata
+    * hits the memo every time. The logical plan returned is identical
+    * across calls, which is also what lets the CacheManager substitute
+    * pinned tables in the bench. */
   private def memo(spark: SparkSession, sfDir: String, name: String)(
       load: => DataFrame): DataFrame = {
-    // every catalog query loads at least one table, so registering the
-    // function pack here makes graft_* resolvable inside any operator's
-    // expr() fragments (e.g. Dedup.h60) without per-site register calls;
-    // re-registration costs one set lookup (GraftFunctions.register)
-    graft.functions.GraftFunctions.register(spark)
     val path = s"$sfDir/$name.parquet"
     val stamp = new java.io.File(path).lastModified() // one stat, ~µs
-    resolved.computeIfAbsent((spark, path, stamp), _ => load)
+    ArtifactStore(spark, ("table", path, stamp)) {
+      // every catalog query loads at least one table, so registering the
+      // function pack with the session's first table makes graft_*
+      // resolvable inside any operator's expr() fragments (e.g. Dedup.h60)
+      // without per-site register calls
+      graft.functions.GraftFunctions.register(spark)
+      load
+    }
   }
 
   private def read(spark: SparkSession, sfDir: String, name: String): DataFrame =

@@ -400,23 +400,19 @@ object GraftFunctions {
       (FunctionIdentifier("graft_sig_agree"), sigAgreeInfo, sigAgreeBuilder),
       (FunctionIdentifier("graft_med_mad"), medMadInfo, medMadBuilder))
 
-  /** Inject into a live session's registry (idempotent). */
-  /** Idempotent per session: operators call this on every invocation
-    * (they can't know whether the session came up with GraftExtensions),
-    * so re-registration must cost a set lookup, not a registry walk —
-    * part of the catalog's per-query constant (r10 floor audit). */
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
-  def register(spark: SparkSession): Unit = {
-    if (registered.add(spark)) {
+  /** Inject into a live session's registry, once per session: operators
+    * call this on every invocation (they can't know whether the session
+    * came up with GraftExtensions), so re-registration must cost a lookup,
+    * not a registry walk — part of the catalog's per-query constant (r10
+    * floor audit). */
+  def register(spark: SparkSession): Unit =
+    graft.ArtifactStore(spark, "graft_functions") {
       val registry: FunctionRegistry = spark.sessionState.functionRegistry
       registrations.foreach { case (id, info, builder) =>
         registry.registerFunction(id, info, builder)
       }
+      registry
     }
-  }
 }
 
 /** `spark.sql.extensions` entry point: scalar/aggregate functions plus the

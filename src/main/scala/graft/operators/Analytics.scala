@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -327,7 +327,7 @@ object Analytics {
     * presence table on user_id (per-key fanout ≤ vocabulary²), and every
     * measure is integer counts until three final divides. */
   val qAssocRules: Q = (s, d) => {
-    // r18: a Ckpt pin of this 3×-consumed distinct was measured and
+    // r18: a rotate pin of this 3×-consumed distinct was measured and
     // REJECTED (0.28 → 0.44 s min-of-6, quiet window both sides): the
     // duplicated branches overlap inside one job at sf0.1 and the
     // checkpoint's materialization barrier costs more than the re-runs.
@@ -381,7 +381,7 @@ object Analytics {
     val baskets = Tables.lineitem(s, d)
       .groupBy(col("l_orderkey").as("ok"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("items"))
-      .localCheckpoint()
+      .transform(ArtifactStore.rotate("item_cooc_baskets"))
     val ni = baskets
       .select(explode(col("items")).as("pk"))
       .groupBy("pk").agg(count(lit(1)).as("n"))

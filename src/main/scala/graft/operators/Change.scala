@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -206,7 +206,7 @@ object Change {
   val qTsBurst: Q = (s, d) => {
     // r18: the panel feeds the per-type totals AND the marking pass — the
     // corpus-sized hourly aggregate ran twice. Pin: ≤ types × 720 rows.
-    val panel = Ckpt.rotate("burst_panel")(hourlyPanel(s, d))
+    val panel = ArtifactStore.rotate("burst_panel")(hourlyPanel(s, d))
     val tot = panel.groupBy(col("et").as("tet")).agg(sum("c").as("sc"))
     val wseq = Window.partitionBy("et").orderBy("x")
     val wcum = wseq.rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -394,7 +394,7 @@ object Corpus {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-      .transform(Ckpt.rotate("bm25_postings"))
+      .transform(ArtifactStore.rotate("bm25_postings"))
     val dl = postings.groupBy("doc_id").agg(sum("tf").as("dl"))
     val stats = dl.agg(count(lit(1)).as("n"), sum("dl").as("sdl"))
     // TakeOrdered head + 2-row rank — not a vocabulary-wide global window

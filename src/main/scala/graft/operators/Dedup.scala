@@ -212,37 +212,15 @@ object Dedup {
     * longs/doc vs shingle arrays at hundreds of strings/doc, so the
     * prefilter join is an order of magnitude lighter per row than the
     * verify join it starves. */
-  /** Corpus-build artifacts memoized per (docs frame, params) — r16
-    * (VERDICT r15 #7): the cascade trio (lsh_verified / cluster /
-    * survivors) runs the SAME sketch + screen over the SAME corpus, and
-    * the screen's three fixture-scale localCheckpoints tripled per
-    * query. Tables memoizes loaders by (session, path, stamp) and
-    * returns one frame INSTANCE per table, so keying on the docs frame's
-    * reference identity inherits that freshness: a rewritten fixture dir
-    * yields a new frame and a new memo entry. Checkpoint blocks are
-    * executor-local and die with the session; entries are
-    * few-per-session (one per corpus dir × param set). */
-  private val sigMemo =
-    new java.util.concurrent.ConcurrentHashMap[(DataFrame, String, String, Int, Int), DataFrame]()
-  private val preMemo =
-    new java.util.concurrent.ConcurrentHashMap[(DataFrame, String, String, Double, Int, Int, Int, Int), DataFrame]()
-  private val pairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(DataFrame, String, String, Double, Int, Int, Int, Int), DataFrame]()
-
-  /** ADVICE r16: entries keyed on frames from a STOPPED session linger
-    * forever (and their checkpoint blocks are already gone — a poisoned
-    * memo hit). Sweep dead-session entries on every cascade call; growth
-    * for live sessions stays bounded per corpus dir × param set as
-    * documented above. */
-  private def evictDeadSessions(): Unit = {
-    def sweep[K](m: java.util.concurrent.ConcurrentHashMap[K, DataFrame])(df: K => DataFrame): Unit =
-      m.keySet().removeIf { k =>
-        try df(k).sparkSession.sparkContext.isStopped catch { case _: Throwable => true }
-      }
-    sweep(sigMemo)(_._1)
-    sweep(preMemo)(_._1)
-    sweep(pairsMemo)(_._1)
-  }
+  /** Corpus-build artifacts are memoized per docs frame and params: the
+    * cascade trio (lsh_verified / cluster / survivors) runs the SAME
+    * sketch + screen over the SAME corpus, and the screen's three
+    * fixture-scale localCheckpoints tripled per query. Tables returns one
+    * frame INSTANCE per table and file stamp, so keying on the docs
+    * frame's reference identity inherits that freshness: a rewritten
+    * fixture dir yields a new frame and a new entry. */
+  private def built(docs: DataFrame, key: Product)(build: => DataFrame): DataFrame =
+    graft.ArtifactStore(docs.sparkSession, (docs, key))(build)
 
   /** The memoized EXTENDED sketch (eh positions) of a corpus — the one
     * signature frame every cascade stage and sketch-adjacent report
@@ -254,8 +232,7 @@ object Dedup {
     * executor-local, corpus-linear. */
   private def sketchExtended(docs: DataFrame, idCol: String, textCol: String,
                              eh: Int, n: Int): DataFrame = {
-    evictDeadSessions()
-    sigMemo.computeIfAbsent((docs, idCol, textCol, eh, n), _ =>
+    built(docs, ("dedup_sketch", idCol, textCol, eh, n))(
       minHashFromText(docs.select(col(idCol), col(textCol)), textCol, eh, n)
         .localCheckpoint())
   }
@@ -283,22 +260,22 @@ object Dedup {
     val sigs =
       if (eh == numHashes) sigsE
       else sigsE.withColumn("sig", expr(s"slice(sig, 1, $numHashes)"))
-    val pre = preMemo.computeIfAbsent(
-      (docs, idCol, textCol, threshold, numHashes, bands, n, eh), _ => {
-        val cands = lshCandidates(sigs, idCol, bands)
-        val minAgree = prefilterMinAgree(threshold, eh)
-        (if (minAgree <= 0) cands
-        else {
-          val ea = sigsE.select(col(idCol).as("id_a"), col("sig").as("__ea"))
-          val eb = sigsE.select(col(idCol).as("id_b"), col("sig").as("__eb"))
-          // compiled agreement count (graft_sig_agree): the HOF form costs
-          // ~µs/lambda × positions × candidates — more than the verify work
-          // it saves at corpus scale (measured at the 1000× slice)
-          cands.join(ea, "id_a").join(eb, "id_b")
-            .filter(expr(s"graft_sig_agree(__ea, __eb) >= $minAgree"))
-            .select("id_a", "id_b")
-        }).localCheckpoint() // consumed 3× below (needed + both verify sides)
-      })
+    val params = (idCol, textCol, threshold, numHashes, bands, n, eh)
+    val pre = built(docs, ("dedup_screen", params)) {
+      val cands = lshCandidates(sigs, idCol, bands)
+      val minAgree = prefilterMinAgree(threshold, eh)
+      (if (minAgree <= 0) cands
+      else {
+        val ea = sigsE.select(col(idCol).as("id_a"), col("sig").as("__ea"))
+        val eb = sigsE.select(col(idCol).as("id_b"), col("sig").as("__eb"))
+        // compiled agreement count (graft_sig_agree): the HOF form costs
+        // ~µs/lambda × positions × candidates — more than the verify work
+        // it saves at corpus scale (measured at the 1000× slice)
+        cands.join(ea, "id_a").join(eb, "id_b")
+          .filter(expr(s"graft_sig_agree(__ea, __eb) >= $minAgree"))
+          .select("id_a", "id_b")
+      }).localCheckpoint() // consumed 3× below (needed + both verify sides)
+    }
     // verify-side pruning: only docs that still appear in a screened pair
     // need shingling — the corpus-wide shingle explode + shuffle was the
     // verify stage's real cost, not the per-pair intersections. The
@@ -309,24 +286,23 @@ object Dedup {
     // pairs, and the verify join is the cascade's remaining per-query
     // wall once sketch + screen are shared. The checkpoint is pair-sized
     // (id_a, id_b, jaccard).
-    pairsMemo.computeIfAbsent(
-      (docs, idCol, textCol, threshold, numHashes, bands, n, eh), _ => {
-        val needed = pre.select(col("id_a").as(idCol))
-          .unionAll(pre.select(col("id_b").as(idCol))).distinct()
-        val sh = withShinglesFast(
-          docs.select(col(idCol), col(textCol)).join(needed, Seq(idCol), "left_semi"),
-          textCol, n)
-        val a = sh.select(col(idCol).as("id_a"), col("shingles").as("__ga"))
-        val b = sh.select(col(idCol).as("id_b"), col("shingles").as("__gb"))
-        pre.join(a, "id_a").join(b, "id_b")
-          .withColumn("__inter", size(array_intersect(col("__ga"), col("__gb"))))
-          .withColumn("jaccard",
-            col("__inter").cast("double") /
-              (size(col("__ga")) + size(col("__gb")) - col("__inter")))
-          .filter(col("jaccard") >= threshold)
-          .select("id_a", "id_b", "jaccard")
-          .localCheckpoint()
-      })
+    built(docs, ("dedup_pairs", params)) {
+      val needed = pre.select(col("id_a").as(idCol))
+        .unionAll(pre.select(col("id_b").as(idCol))).distinct()
+      val sh = withShinglesFast(
+        docs.select(col(idCol), col(textCol)).join(needed, Seq(idCol), "left_semi"),
+        textCol, n)
+      val a = sh.select(col(idCol).as("id_a"), col("shingles").as("__ga"))
+      val b = sh.select(col(idCol).as("id_b"), col("shingles").as("__gb"))
+      pre.join(a, "id_a").join(b, "id_b")
+        .withColumn("__inter", size(array_intersect(col("__ga"), col("__gb"))))
+        .withColumn("jaccard",
+          col("__inter").cast("double") /
+            (size(col("__ga")) + size(col("__gb")) - col("__inter")))
+        .filter(col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+        .localCheckpoint()
+    }
   }
 
   /** Connected components over an undirected edge list (`id_a`, `id_b`):

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -208,7 +208,7 @@ object Graphs {
     * bounds wedge fan-out by sqrt(|E|) — note for the general library
     * entry point; the label-vocabulary graph here never needs it). */
   val qGraphTriangles: Q = (s, d) => {
-    val ed = undirectedEdges(s, d).localCheckpoint()
+    val ed = ArtifactStore.rotate("graph_triangles_edges")(undirectedEdges(s, d))
     val e2 = ed.select(col("a").as("b2"), col("b").as("c"))
     val e3 = ed.select(col("a").as("a3"), col("b").as("c3"))
     ed.join(e2, col("b") === col("b2"))
@@ -222,7 +222,7 @@ object Graphs {
     * card. Two hash aggregates over the collapsed edge list, stitched
     * with a full outer join so pure sources and pure sinks both appear. */
   val qGraphDegree: Q = (s, d) => {
-    val ed = edges(s, d).localCheckpoint()
+    val ed = ArtifactStore.rotate("graph_degree_edges")(edges(s, d))
     val o = ed.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("out_deg"), sum("n").as("out_w"))
     val i = ed.groupBy(col("dst").as("node2"))
@@ -252,7 +252,7 @@ object Graphs {
     * terms); the 6 dp round absorbs summation-order drift — the
     * q_graph_pagerank device, not an engine IEEE guarantee. */
   val qGraphLinkPredict: Q = (s, d) => {
-    val und = undirectedEdges(s, d).localCheckpoint()
+    val und = ArtifactStore.rotate("graph_link_predict_edges")(undirectedEdges(s, d))
     val adj = und.select(col("a").as("node"), col("b").as("nbr"))
       .union(und.select(col("b").as("node"), col("a").as("nbr")))
     val deg = adj.groupBy("node").agg(count(lit(1)).as("deg"))
@@ -283,7 +283,7 @@ object Graphs {
     * corners; everything is exact longs until the single cc division
     * (NULL when deg < 2 — the coefficient is undefined, not zero). */
   val qGraphClusterCoef: Q = (s, d) => {
-    val und = undirectedEdges(s, d).localCheckpoint()
+    val und = ArtifactStore.rotate("graph_cluster_coef_edges")(undirectedEdges(s, d))
     val e2 = und.select(col("a").as("b2"), col("b").as("c"))
     val e3 = und.select(col("a").as("a3"), col("b").as("c3"))
     val tris = und.join(e2, col("b") === col("b2"))
@@ -348,7 +348,7 @@ object Graphs {
       .filter(col("event_type") =!= "purchase" && (col("pn").isNull || col("rn") < col("pn")))
       .withColumn("tn", row_number().over(wt))
       .withColumn("nx", lead("event_type", 1).over(wt))
-      .transform(Ckpt.rotate("markov_tt"))
+      .transform(ArtifactStore.rotate("markov_tt"))
     val mid = tt.select(col("event_type").as("src"),
       coalesce(col("nx"),
         when(col("pn").isNotNull, lit("CONV")).otherwise(lit("NULL"))).as("dst"))
@@ -420,7 +420,7 @@ object Graphs {
     * read, not hidden full-precision values); the ≤vocabulary-term dot
     * product re-rounds at 6. */
   val qGraphMarkov2: Q = (s, d) => {
-    // r18: a Ckpt pin of the ≤vocab²-row transition matrix was measured
+    // r18: a rotate pin of the ≤vocab²-row transition matrix was measured
     // and REJECTED (0.39 → 0.57 s): the two self-join sides' edge
     // derivations overlap inside one job at sf0.1, so the pin's
     // materialization barrier outweighs the duplicated window+aggregate.

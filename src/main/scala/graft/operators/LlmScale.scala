@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -389,7 +389,7 @@ object LlmScale {
     // it; the aggregate ships only vocab-sized partials and the posting
     // stream is never term-shuffled. tf is checkpointed because it feeds
     // both the df rollup and the scoring join (the bm25 postings device).
-    val tf = Ckpt.rotate("tfidf_tf")(
+    val tf = ArtifactStore.rotate("tfidf_tf")(
       toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("dfreq"))
     val n = docs.agg(count(lit(1)).as("n"))
@@ -433,7 +433,7 @@ object LlmScale {
     // joins. c1 is checkpointed (vocab-sized) because V is its row count
     // — the former countDistinct pass re-tokenized the corpus just to
     // count what c1 already holds (plans/r17/text_lm_score_before).
-    val c1 = Ckpt.rotate("lm_score_c1")(
+    val c1 = ArtifactStore.rotate("lm_score_c1")(
       uni.groupBy(col("t").as("a")).agg(count(lit(1)).as("c1")))
     val v = c1.agg(count(lit(1)).as("v"))
     val lpTab = c2.join(c1, Seq("a")).crossJoin(broadcast(v))

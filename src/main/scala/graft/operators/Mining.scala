@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -474,7 +474,7 @@ object Mining {
     // head: 6 corpus passes in the r16 plan, plans/r17/docs_pmi_before).
     // Checkpoint state is vocab/bigram-vocab-sized — bounded by language,
     // not corpus, so the device scales.
-    val uni = Ckpt.rotate("pmi_uni")(
+    val uni = ArtifactStore.rotate("pmi_uni")(
       toks.select(explode(col("tk")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("cw")))
     val nTot = uni.agg(sum("cw").as("n"))
@@ -483,7 +483,7 @@ object Mining {
         "zip_with(slice(tk, 1, size(tk)-1), slice(tk, 2, size(tk)-1), (a, b) -> concat(a, ' ', b))"))
         .as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("cxy"))
-      .transform(Ckpt.rotate("pmi_bg"))
+      .transform(ArtifactStore.rotate("pmi_bg"))
     val bTot = bg.agg(sum("cxy").as("b"))
     bg.filter(col("cxy") >= 5)
       .withColumn("w1", expr("split_part(bg, ' ', 1)"))
@@ -585,7 +585,7 @@ object Mining {
     * fan-out multiplies the VOCABULARY by the handful of source pairs,
     * never the corpus. */
   val qDocsSourceDivergence: Q = (s, d) => {
-    // r18: a Ckpt pin of this 4×-consumed count table was measured and
+    // r18: a rotate pin of this 4×-consumed count table was measured and
     // REJECTED (0.44 → 0.54-0.65 s): at sf0.1 the duplicated tokenize
     // branches overlap inside one job; the pin's barrier loses more.
     val cnt = withTokens(Tables.documents(s, d))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -163,7 +163,7 @@ object Ops {
     // exchanges so ReuseExchange can't fire and the corpus aggregate ran
     // twice (plans/r18/ts_alert_transitions_before). Checkpoint the grid:
     // one corpus-sized aggregate, both consumers read ≤3600 rows.
-    val hourly = Ckpt.rotate("alert_transitions_hourly")(
+    val hourly = ArtifactStore.rotate("alert_transitions_hourly")(
       Tables.events(s, d)
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
         .agg(count(lit(1)).as("mv")))
@@ -507,7 +507,7 @@ object Ops {
     // count and Σ_b distinct = distinct, exactly. The former shape
     // re-scanned events and customer a second time just to recount what
     // the bucket histograms already hold (plans/r18/ops_join_card_before:
-    // 6 scans → 4). A Ckpt pin of the rollups was measured and REJECTED
+    // 6 scans → 4). A rotate pin of the rollups was measured and REJECTED
     // (0.29 → 0.77 s: the 64-row subtrees overlap in one job; a
     // checkpoint serializes the pipeline for nothing).
     val hist = a.join(c, "b")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -104,7 +104,7 @@ object Relational {
       .select(col("event_type").as("src"), lead("event_type", 1).over(w).as("dst"))
       .filter(col("dst").isNotNull && col("src") =!= col("dst"))
       .distinct()
-      .localCheckpoint()
+      .transform(ArtifactStore.rotate("sql_bfs_edges"))
       .createOrReplaceTempView("graft_edges_rec")
     s.sql(
       """WITH RECURSIVE

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -256,7 +256,7 @@ object Signal {
     val loc = iv.withColumn("ck", ck)
       .withColumn("lpmax",
         max("e").over(wLoc.rowsBetween(Window.unboundedPreceding, -1)))
-      .transform(Ckpt.rotate("ivl_overlap_loc"))
+      .transform(ArtifactStore.rotate("ivl_overlap_loc"))
     val wc = Window.orderBy("ck") // ≤ days rows — bounded by time, not data
     val carry = loc.groupBy("ck").agg(max("e").as("cmax"))
       .withColumn("cin", max("cmax").over(wc.rowsBetween(Window.unboundedPreceding, -1)))

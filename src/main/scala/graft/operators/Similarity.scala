@@ -154,17 +154,15 @@ object Similarity {
   }
 
   object IvfModel {
-    private val cache = scala.collection.concurrent.TrieMap.empty[(Int, String, String, String, Int, Int), IvfModel]
-
-    /** Memoized build keyed on the source's canonicalized plan + params:
-      * the first call clusters and persists, every later call (any query,
-      * same session) probes the existing index. */
+    /** Memoized build keyed on the source frame INSTANCE + params: the
+      * first call clusters and persists, every later call (any query,
+      * same session) probes the existing index. Tables returns one
+      * embeddings frame per file stamp, so a rewritten source yields a
+      * new frame and a fresh index. */
     def build(emb: DataFrame, idCol: String, vecCol: String,
-              k: Int, iters: Int): IvfModel = {
-      val key = (System.identityHashCode(emb.sparkSession),
-        emb.queryExecution.analyzed.canonicalized.toString, idCol, vecCol, k, iters)
-      cache.getOrElseUpdate(key, buildUncached(emb, idCol, vecCol, k, iters))
-    }
+              k: Int, iters: Int): IvfModel =
+      graft.ArtifactStore(emb.sparkSession, ("ivf", emb, idCol, vecCol, k, iters))(
+        buildUncached(emb, idCol, vecCol, k, iters))
 
     /** Deterministic seeded k-means: initial centroids = the k lowest-id
       * vectors, `iters` Lloyd rounds. Assignment is the codegen'd
@@ -285,14 +283,11 @@ object Similarity {
   }
 
   object PqModel {
-    private val cache = scala.collection.concurrent.TrieMap.empty[(Int, String, String, String, Int, Int, Int), PqModel]
-
+    /** Memoized like [[IvfModel.build]], on the source frame instance. */
     def build(emb: DataFrame, idCol: String, vecCol: String,
-              numSub: Int = 8, k: Int = 16, iters: Int = 2): PqModel = {
-      val key = (System.identityHashCode(emb.sparkSession),
-        emb.queryExecution.analyzed.canonicalized.toString, idCol, vecCol, numSub, k, iters)
-      cache.getOrElseUpdate(key, buildUncached(emb, idCol, vecCol, numSub, k, iters))
-    }
+              numSub: Int = 8, k: Int = 16, iters: Int = 2): PqModel =
+      graft.ArtifactStore(emb.sparkSession, ("pq", emb, idCol, vecCol, numSub, k, iters))(
+        buildUncached(emb, idCol, vecCol, numSub, k, iters))
 
     private def buildUncached(emb: DataFrame, idCol: String, vecCol: String,
                               numSub: Int, k: Int, iters: Int): PqModel = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -264,7 +264,7 @@ object Sre {
         expr("weekday(ts)").cast("string").as("dow"))
       .agg(sum(when(col("ts") < expr(mid), 1L).otherwise(0L)).as("cf"),
         sum(when(col("ts") < expr(mid), 0L).otherwise(1L)).as("ca"))
-      .localCheckpoint()
+      .transform(ArtifactStore.rotate("root_cause_cube"))
     def roll(dim: String, key: Column): DataFrame = cube
       .groupBy(key.as("dim_value"))
       .agg(sum("cf").as("fv"), sum("ca").as("av"))

@@ -42,7 +42,7 @@ object Stats {
     val hourly = Tables.events(s, d)
       .groupBy(col("event_type").as("et"), date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("c"))
-    // r18: a Ckpt pin here was measured and REJECTED (cross_corr
+    // r18: a rotate pin here was measured and REJECTED (cross_corr
     // 0.28 → 0.46 s while ar2_fit −0.1 and ljung_box neutral — net
     // negative): the lag-join branches overlap inside one job at sf0.1.
     types.crossJoin(broadcast(grid))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -147,7 +147,7 @@ object Survival {
     // side) and its corpus-sized signup/purchase/customer join subtree
     // re-ran per consumer (plans/r18/user_logrank_before: 4 scans,
     // 16 jobs). Checkpoint state is the ≤ segments × study-hours grid.
-    val r = Ckpt.rotate("logrank_rollup")(subjectRollup(s, d))
+    val r = ArtifactStore.rotate("logrank_rollup")(subjectRollup(s, d))
     val wg = Window.orderBy("t").rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val spine = r.groupBy("t")
       .agg(sum("d").as("dall"), sum(col("d") + col("cns")).as("rall"))

@@ -210,7 +210,7 @@ object TimeSeries {
     val agg = Tables.events(s, d)
       .groupBy(date_trunc("hour", col("ts")).as("ah"))
       .agg(Num.roundd(sum("value"), 2).as("asv"))
-    // r18: a Ckpt.rotate pin here was measured and REJECTED (0.41→0.59 s
+    // r18: a rotate pin here was measured and REJECTED (0.41→0.59 s
     // lerp, 0.17→0.43 s locf): ReuseExchange already dedupes the corpus
     // aggregate across the Interpolate consumers (PlanAudit scans=1), so
     // the pin added a materialization job without removing corpus work.
@@ -1034,7 +1034,7 @@ object TimeSeries {
     val ev = Tables.events(s, d)
     val su = ev.filter(col("event_type") === "signup")
       .groupBy("user_id").agg(min("ts").as("sts"))
-    // r18: a Ckpt pin of this 2×-consumed per-user frame was measured and
+    // r18: a rotate pin of this 2×-consumed per-user frame was measured and
     // REJECTED (0.32 → 0.37-0.39 s): the duplicated ev ⋈ su branches
     // overlap inside one job at sf0.1; the pin's barrier loses slightly.
     val joined = ev.join(su, "user_id")

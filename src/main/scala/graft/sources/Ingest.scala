@@ -1,11 +1,10 @@
 package graft.sources
 
-import graft.Tables
+import graft.{ArtifactStore, Tables}
 import graft.operators.Similarity
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** The write path: layout-aware ingestion that makes the scale story real.
   *
@@ -34,7 +33,7 @@ import scala.collection.concurrent.TrieMap
   * `repartition(n, col, salt)`) to split hot partitions across writers
   * without changing the layout contract.
   *
-  * Writes are memoized per (JVM, dataset, scale dir): ingest is a
+  * Writes are memoized per (session, dataset, scale dir): ingest is a
   * once-per-corpus cost, queries only ever pay the pruned read — the same
   * contract as the cached tables and the prebuilt IVF index in Bench.
   */
@@ -43,8 +42,6 @@ object Ingest {
   /** Root for locally materialized layouts (harness-safe scratch space). */
   def defaultRoot: String =
     sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_ingest"
-
-  private val materialized = TrieMap.empty[String, String]
 
   private def slug(s: String): String = s.replaceAll("[^A-Za-z0-9._-]", "_")
 
@@ -212,14 +209,14 @@ object Ingest {
       .write.mode("overwrite").parquet(userIdxPath(layoutPath))
   }
 
-  /** Materialize (once per JVM) the by-day layout for a scale dir; returns
+  /** Materialize (once per session) the by-day layout for a scale dir; returns
     * the dataset path. */
   def eventsByDay(spark: SparkSession, sfDir: String, root: String = defaultRoot): String = {
-    val p = materialized.getOrElseUpdate(s"events_by_day:$sfDir:$root", {
+    val p = ArtifactStore(spark, s"events_by_day:$sfDir:$root") {
       val path = s"$root/${slug(sfDir)}/events_by_day"
       writeEventsByDay(Tables.events(spark, sfDir), path)
       path
-    })
+    }
     // The writer guarantees day == to_date(ts) for this layout; mark it so
     // DerivedPartitionFilters may derive day bounds from ts predicates.
     graft.plans.DerivedPartitionFilters.registerPath(spark, p)
@@ -233,7 +230,7 @@ object Ingest {
 
   // ---- per-day bloom index (sketch-as-partition-index) --------------------
 
-  /** Build (once per JVM) the per-day Bloom index over `event_id` for the
+  /** Build (once per session) the per-day Bloom index over `event_id` for the
     * by-day layout: one row per day — (day, serialized graft_bloom). This
     * is the sketch-index half of the TSDB ingest story: the same
     * single-shuffle mergeable aggregate that serves the runtime-filter
@@ -243,7 +240,7 @@ object Ingest {
   def eventsDayBloomIndex(spark: SparkSession, sfDir: String,
                           numBits: Int = 65536, numHashes: Int = 6,
                           root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_day_bloom:$sfDir:$numBits:$numHashes:$root", {
+    ArtifactStore(spark, s"events_day_bloom:$sfDir:$numBits:$numHashes:$root") {
       val p = s"$root/${slug(sfDir)}/events_day_bloom"
       graft.functions.GraftFunctions.register(spark)
       readEventsByDay(spark, eventsByDay(spark, sfDir, root))
@@ -253,7 +250,7 @@ object Ingest {
         .coalesce(1) // one row per day; the whole index is days × numBits/8 bytes
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
   /** Point lookups through the bloom index: read the index (a driver-side
     * collect of days × numBits/8 bytes — 30 rows here, 365/year at 100 TB;
@@ -288,7 +285,7 @@ object Ingest {
     * stats. Written with its tag index (`writeEventsTagIndex`). */
   def eventsByDayTyped(spark: SparkSession, sfDir: String,
                        root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_by_day_typed:$sfDir:$root", {
+    ArtifactStore(spark, s"events_by_day_typed:$sfDir:$root") {
       val p = s"$root/${slug(sfDir)}/events_by_day_typed"
       Tables.events(spark, sfDir)
         .withColumn("day", to_date(col("ts")))
@@ -299,7 +296,7 @@ object Ingest {
         .write.mode("overwrite").partitionBy("day").parquet(p)
       writeEventsTagIndex(spark, p)
       p
-    })
+    }
 
   private def tagIdxPath(layoutPath: String): String =
     layoutPath.stripSuffix("/") + "_tagidx"
@@ -355,7 +352,7 @@ object Ingest {
   val tierRollupFromDay = "2024-01-08"
   val tierRawFromDay = "2024-01-22"
 
-  /** Materialize (once per JVM) the TIERED lifecycle state (VERDICT r7
+  /** Materialize (once per session) the TIERED lifecycle state (VERDICT r7
     * missing #2 — the policy operator composing the three pieces that
     * already existed): a retention-dropped raw tail (partition drops, no
     * row rewrites) and an hourly rollup tier that itself expires at
@@ -365,21 +362,17 @@ object Ingest {
   def eventsTiered(spark: SparkSession, sfDir: String,
                    rollupFromDay: String = tierRollupFromDay,
                    rawFromDay: String = tierRawFromDay,
-                   root: String = defaultRoot): (String, String) = {
-    val joined = materialized.getOrElseUpdate(
-      s"events_tiered:$sfDir:$rollupFromDay:$rawFromDay:$root", {
-        val rollupAll = eventsHourlyRollup(spark, sfDir, cutoffDay = rawFromDay, root = root)
-        val p = s"$root/${slug(sfDir)}/events_tier_rollup_${rollupFromDay}_$rawFromDay"
-        // the rollup tier ages out too: hours before rollupFromDay DROP
-        spark.read.parquet(rollupAll)
-          .filter(col("h") >= lit(rollupFromDay).cast("timestamp_ntz"))
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        val raw = eventsWithRetention(spark, sfDir, keepFromDay = rawFromDay, root = root)
-        s"$p|$raw"
-      })
-    val Array(a, b) = joined.split('|')
-    (a, b)
-  }
+                   root: String = defaultRoot): (String, String) =
+    ArtifactStore(spark, s"events_tiered:$sfDir:$rollupFromDay:$rawFromDay:$root") {
+      val rollupAll = eventsHourlyRollup(spark, sfDir, cutoffDay = rawFromDay, root = root)
+      val p = s"$root/${slug(sfDir)}/events_tier_rollup_${rollupFromDay}_$rawFromDay"
+      // the rollup tier ages out too: hours before rollupFromDay DROP
+      spark.read.parquet(rollupAll)
+        .filter(col("h") >= lit(rollupFromDay).cast("timestamp_ntz"))
+        .coalesce(1).write.mode("overwrite").parquet(p)
+      val raw = eventsWithRetention(spark, sfDir, keepFromDay = rawFromDay, root = root)
+      (p, raw)
+    }
 
   /** Unified serve across the tiers: daily aggregate answered from the
     * stored rollup tier (a summary-file read) unioned with on-the-fly
@@ -405,7 +398,7 @@ object Ingest {
 
   // ---- continuous aggregate (rollup + raw tail) ---------------------------
 
-  /** Materialize (once per JVM) the hourly CONTINUOUS-AGGREGATE rollup of
+  /** Materialize (once per session) the hourly CONTINUOUS-AGGREGATE rollup of
     * events strictly before `cutoffDay`: one row per (hour, event_type)
     * with (cnt, sv8 = 8-dp-rounded hourly sum). This is the
     * TimescaleDB-continuous-aggregate / Druid-rollup ingest pattern: the
@@ -416,7 +409,7 @@ object Ingest {
   def eventsHourlyRollup(spark: SparkSession, sfDir: String,
                          cutoffDay: String = "2024-01-26",
                          root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_hourly_rollup:$sfDir:$cutoffDay:$root", {
+    ArtifactStore(spark, s"events_hourly_rollup:$sfDir:$cutoffDay:$root") {
       val p = s"$root/${slug(sfDir)}/events_hourly_rollup_$cutoffDay"
       readEventsByDay(spark, eventsByDay(spark, sfDir, root))
         .filter(col("day") < lit(cutoffDay).cast("date")) // partition-pruned
@@ -426,7 +419,7 @@ object Ingest {
         .coalesce(1) // hours × types rows — one small summary file
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
   /** Serve the full-range daily aggregate from rollup + raw tail: hourly
     * partials for days < cutoff come from the STORED rollup (a summary-file
@@ -488,14 +481,14 @@ object Ingest {
   def caggIncremental(spark: SparkSession, sfDir: String,
                       cutoffDay: String = "2024-01-26",
                       root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"cagg_incr:$sfDir:$cutoffDay:$root", {
+    ArtifactStore(spark, s"cagg_incr:$sfDir:$cutoffDay:$root") {
       val p = s"$root/${slug(sfDir)}/cagg_incremental_${slug(cutoffDay)}"
       val byDay = readEventsByDay(spark, eventsByDay(spark, sfDir, root))
       dailyPartials(byDay.filter(col("day") < lit(cutoffDay).cast("date")))
         .write.mode("overwrite").partitionBy("day").parquet(p)
       refreshCaggDays(spark, p, byDay, cutoffDay)
       p
-    })
+    }
 
   private def dailyPartials(df: DataFrame): DataFrame =
     df.groupBy(col("day"), col("event_type"))
@@ -563,20 +556,20 @@ object Ingest {
       .write.mode("append").partitionBy("cday").parquet(path)
   }
 
-  /** Materialize (once per JVM) the maintained join view: initial build
+  /** Materialize (once per session) the maintained join view: initial build
     * over the pre-cutoff prefix + one delta refresh. A serve-time read
     * of this artifact equaling the full-recompute oracle proves the
     * decomposition composed exactly. */
   def ivmJoinPairs(spark: SparkSession, sfDir: String,
                    cutoffDay: String = "2024-01-26",
                    root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"ivm_join:$sfDir:$cutoffDay:$root", {
+    ArtifactStore(spark, s"ivm_join:$sfDir:$cutoffDay:$root") {
       val p = s"$root/${slug(sfDir)}/ivm_join_${slug(cutoffDay)}"
       val ev = Tables.events(spark, sfDir)
       ivmJoinInitial(spark, p, ev, cutoffDay)
       ivmJoinRefresh(spark, p, ev, cutoffDay)
       p
-    })
+    }
 
   /** CDC delete composed with the maintained join view: removing source
     * events must remove exactly the pairs referencing them. The affected
@@ -639,7 +632,7 @@ object Ingest {
   def ivmJoinDeleted(spark: SparkSession, sfDir: String,
                      cutoffDay: String = "2024-01-26",
                      root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"ivm_join_del:$sfDir:$cutoffDay:$root", {
+    ArtifactStore(spark, s"ivm_join_del:$sfDir:$cutoffDay:$root") {
       val p = s"$root/${slug(sfDir)}/ivm_join_del_${slug(cutoffDay)}"
       val ev = Tables.events(spark, sfDir)
       ivmJoinInitial(spark, p, ev, cutoffDay)
@@ -648,7 +641,7 @@ object Ingest {
         (col("user_id") === 3 && col("event_type") === "purchase") ||
           (col("user_id") === 5 && col("event_type") === "click")))
       p
-    })
+    }
 
   /** The serve-side merge, rollup-source-agnostic: any (h, event_type,
     * cnt, sv8) hourly-partial set — the batch-materialized rollup OR the
@@ -668,7 +661,7 @@ object Ingest {
 
   // ---- text-format ingestion (JSON / CSV feeds) ----------------------------
 
-  /** Materialize (once per JVM) the events table as JSON-lines and CSV —
+  /** Materialize (once per session) the events table as JSON-lines and CSV —
     * the wire formats a TSDB's HTTP/collector ingest actually receives —
     * then read them back with EXPLICIT schemas (never inference: one bad
     * row must fail loudly, not silently retype a column at 100 TB).
@@ -677,14 +670,14 @@ object Ingest {
   def eventsTextFormats(spark: SparkSession, sfDir: String,
                         root: String = defaultRoot): (String, String) = {
     val key = s"events_textfmt:$sfDir:$root"
-    val p = materialized.getOrElseUpdate(key, {
+    val p = ArtifactStore(spark, key) {
       val base = s"$root/${slug(sfDir)}/events_text"
       val ev = Tables.events(spark, sfDir)
         .withColumn("ts", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
       ev.coalesce(4).write.mode("overwrite").json(s"$base/json")
       ev.coalesce(4).write.mode("overwrite").option("header", "true").csv(s"$base/csv")
       base
-    })
+    }
     (s"$p/json", s"$p/csv")
   }
 
@@ -707,14 +700,14 @@ object Ingest {
     * directories older than `keepFromDay` are dropped as pure metadata/file
     * operations — no row is ever read or rewritten, which is why TSDB
     * retention is partition-drop and never DELETE. Materialized once per
-    * JVM; returns the retained dataset path. */
+    * session; returns the retained dataset path. */
   def eventsWithRetention(spark: SparkSession, sfDir: String,
                           keepFromDay: String = "2024-01-08",
                           root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_retention:$sfDir:$keepFromDay:$root", {
+    ArtifactStore(spark, s"events_retention:$sfDir:$keepFromDay:$root") {
       val src = eventsByDay(spark, sfDir, root)
       val dst = s"$root/${slug(sfDir)}/events_retained_$keepFromDay"
-      // a leftover copy from an earlier JVM would MERGE (filenames differ
+      // a leftover copy from an earlier session would MERGE (filenames differ
       // per write) and double the data — copyTree starts from nothing
       copyTree(spark, src, dst)
       val (fs, d) = hfs(spark, dst)
@@ -724,7 +717,7 @@ object Ingest {
           java.time.LocalDate.parse(s.getPath.getName.stripPrefix("day=")).isBefore(cutoff)
       }.foreach(s => fs.delete(s.getPath, true)) // the partition DROP
       dst
-    })
+    }
 
   /** A deliberately FRAGMENTED by-day layout — what a streaming ingest
     * actually produces: one file per (microbatch, partition), here
@@ -732,7 +725,7 @@ object Ingest {
     * input fixture for compaction. */
   def eventsFragmented(spark: SparkSession, sfDir: String,
                        root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_fragmented:$sfDir:$root", {
+    ArtifactStore(spark, s"events_fragmented:$sfDir:$root") {
       val p = s"$root/${slug(sfDir)}/events_fragmented"
       Tables.events(spark, sfDir)
         .withColumn("day", to_date(col("ts")))
@@ -741,7 +734,7 @@ object Ingest {
         .repartition(64, col("day"), pmod(col("event_id"), lit(8))) // ~8 files/dir
         .write.mode("overwrite").partitionBy("day").parquet(p)
       p
-    })
+    }
 
   /** Compact the fragmented layout into one file per partition directory
     * (a rewrite into a NEW dataset; the source is untouched): the nightly
@@ -752,13 +745,13 @@ object Ingest {
     * file-count assertions in WritePathSpec. */
   def eventsCompacted(spark: SparkSession, sfDir: String,
                       root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_compacted:$sfDir:$root", {
+    ArtifactStore(spark, s"events_compacted:$sfDir:$root") {
       val p = s"$root/${slug(sfDir)}/events_compacted"
       spark.read.parquet(eventsFragmented(spark, sfDir, root))
         .repartition(col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(p)
       p
-    })
+    }
 
   /** A layout whose files span TWO schema GENERATIONS in one directory —
     * what a rolling collector upgrade actually leaves behind: v1 files
@@ -769,7 +762,7 @@ object Ingest {
     * (mergeSchema) and old rows surface the new column as NULL. */
   def eventsSchemaEvolved(spark: SparkSession, sfDir: String,
                           root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_schema_evolved:$sfDir:$root", {
+    ArtifactStore(spark, s"events_schema_evolved:$sfDir:$root") {
       val p = s"$root/${slug(sfDir)}/events_schema_evolved"
       val ev = Tables.events(spark, sfDir)
       val cutoff = to_date(lit("2024-01-15"))
@@ -781,7 +774,7 @@ object Ingest {
           concat(lit("r"), pmod(col("user_id"), lit(4))).as("source_region"))
         .write.mode("append").parquet(p)
       p
-    })
+    }
 
   // ---- events by z-order prefix (multi-dimensional pruning) ----------------
 
@@ -832,13 +825,13 @@ object Ingest {
       .write.mode("overwrite").partitionBy("zp").parquet(path)
   }
 
-  /** Materialize (once per JVM) the z-ordered layout for a scale dir. */
+  /** Materialize (once per session) the z-ordered layout for a scale dir. */
   def eventsZordered(spark: SparkSession, sfDir: String, root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_zorder:$sfDir:$root", {
+    ArtifactStore(spark, s"events_zorder:$sfDir:$root") {
       val p = s"$root/${slug(sfDir)}/events_zorder"
       writeEventsZordered(Tables.events(spark, sfDir), p)
       p
-    })
+    }
 
   /** The z-prefix partitions a (day, value) query box can touch: walk all
     * cell pairs in the box (≤ 2^(2·zBits) = 1024 — driver-side, O(1) in
@@ -886,14 +879,14 @@ object Ingest {
       .repartition(col("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
 
-  /** Materialize (once per JVM) the sharded docs layout for a scale dir. */
+  /** Materialize (once per session) the sharded docs layout for a scale dir. */
   def docsByShard(spark: SparkSession, sfDir: String,
                   root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"docs_by_shard:$sfDir:$root", {
+    ArtifactStore(spark, s"docs_by_shard:$sfDir:$root") {
       val p = s"$root/${slug(sfDir)}/docs_by_shard"
       writeDocsByShard(Tables.documents(spark, sfDir), p)
       p
-    })
+    }
 
   // ---- embeddings by LSH bucket -------------------------------------------
 
@@ -905,15 +898,15 @@ object Ingest {
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
 
-  /** Materialize (once per JVM) the by-bucket layout for a scale dir. */
+  /** Materialize (once per session) the by-bucket layout for a scale dir. */
   def embeddingsByBucket(spark: SparkSession, sfDir: String,
                          nPlanes: Int = 6, dim: Int = 64,
                          root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"emb_by_bucket:$sfDir:$nPlanes:$dim:$root", {
+    ArtifactStore(spark, s"emb_by_bucket:$sfDir:$nPlanes:$dim:$root") {
       val p = s"$root/${slug(sfDir)}/embeddings_by_bucket_$nPlanes"
       writeEmbeddingsByBucket(Tables.embeddings(spark, sfDir), p, nPlanes, dim)
       p
-    })
+    }
 
   /** Driver-side twin of the `srpBucket` expression: same md5-derived
     * plane matrix, same left-to-right double accumulation, same strict
@@ -1153,7 +1146,7 @@ object Ingest {
   val annDeletedVecIds: Seq[Long] = Seq(3L, 11L)
   val annUpsertedVecIds: Seq[Long] = Seq(5L, 17L)
 
-  /** Materialize (once per JVM) the CDC-maintained ANN layout: a copy of
+  /** Materialize (once per session) the CDC-maintained ANN layout: a copy of
     * the by-bucket layout where `annDeletedVecIds` were deleted and
     * `annUpsertedVecIds` re-embedded as the NEGATED vector (every SRP
     * sign flips ⇒ the vector provably moves to the complement bucket —
@@ -1163,7 +1156,7 @@ object Ingest {
   def annCdcMaintained(spark: SparkSession, sfDir: String,
                        nPlanes: Int = 6, dim: Int = 64,
                        root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"ann_cdc:$sfDir:$nPlanes:$root", {
+    ArtifactStore(spark, s"ann_cdc:$sfDir:$nPlanes:$root") {
       val src = embeddingsByBucket(spark, sfDir, nPlanes, dim, root)
       val dst = s"$root/${slug(sfDir)}/embeddings_cdc_$nPlanes"
       copyTree(spark, src, dst)
@@ -1174,9 +1167,9 @@ object Ingest {
         .withColumn("embedding", expr("transform(embedding, x -> -x)"))
       annUpsertVectors(spark, dst, upd, nPlanes, dim)
       dst
-    })
+    }
 
-  /** Materialize (once per JVM) the STREAM-maintained ANN layout: the
+  /** Materialize (once per session) the STREAM-maintained ANN layout: the
     * SAME net mutation set as [[annCdcMaintained]], but applied by
     * [[graft.streaming.StreamVectors]] over a two-file feed (negated
     * upserts of `annUpsertedVecIds`, then tombstones for
@@ -1187,7 +1180,7 @@ object Ingest {
   def annStreamMaintained(spark: SparkSession, sfDir: String,
                           nPlanes: Int = 6, dim: Int = 64,
                           root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"ann_stream:$sfDir:$nPlanes:$root", {
+    ArtifactStore(spark, s"ann_stream:$sfDir:$nPlanes:$root") {
       val src = embeddingsByBucket(spark, sfDir, nPlanes, dim, root)
       val dst = s"$root/${slug(sfDir)}/embeddings_stream_$nPlanes"
       copyTree(spark, src, dst)
@@ -1208,7 +1201,7 @@ object Ingest {
         .maintainAnnIndex(spark, feed, dst, ckpt, nPlanes, dim)
       q.awaitTermination(300000)
       dst
-    })
+    }
 
   // ---- row-level delete (GDPR / right-to-be-forgotten) ---------------------
 
@@ -1345,10 +1338,10 @@ object Ingest {
     * bytes (at 100 TB a short-lived user's forget request rewrites days,
     * not years; the synthetic fixture's users are active almost daily, so
     * the pruning there is thin — the mechanism, not the fixture, is the
-    * contract). Returns the retained dataset path; memoized per JVM. */
+    * contract). Returns the retained dataset path; memoized per session. */
   def eventsGdprDeleted(spark: SparkSession, sfDir: String,
                         root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_gdpr:$sfDir:$root", {
+    ArtifactStore(spark, s"events_gdpr:$sfDir:$root") {
       val src = eventsByDay(spark, sfDir, root)
       val dst = s"$root/${slug(sfDir)}/events_gdpr"
       copyTree(spark, src, dst)
@@ -1357,7 +1350,7 @@ object Ingest {
       copyTree(spark, userIdxPath(src), userIdxPath(dst))
       deleteUserEventsInPlace(spark, dst, gdprUserIds)
       dst
-    })
+    }
 
   /** The day-partition twin of `deleteRows` (VERDICT r7 what's-wrong #2 +
     * next-round #3/#7): candidate days come from the PERSISTED per-day
@@ -1494,12 +1487,12 @@ object Ingest {
   /** The event_ids the correction fixture re-sends with value 999.5. */
   val correctionIds: Seq[Long] = Seq(5L, 17L, 23L)
 
-  /** Materialize (once per JVM) the correction fixture: a copy of the
+  /** Materialize (once per session) the correction fixture: a copy of the
     * by-day layout with `correctionIds`' readings re-sent at value 999.5
     * (same envelope, fixed measurement). Returns the layout path. */
   def eventsCorrected(spark: SparkSession, sfDir: String,
                       root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"events_corrected:$sfDir:$root", {
+    ArtifactStore(spark, s"events_corrected:$sfDir:$root") {
       val src = eventsByDay(spark, sfDir, root)
       val dst = s"$root/${slug(sfDir)}/events_corrected"
       copyTree(spark, src, dst)
@@ -1509,7 +1502,7 @@ object Ingest {
         .withColumn("value", lit(999.5))
       upsertEventsInPlace(spark, dst, corrections)
       dst
-    })
+    }
 
   /** Row-level UPSERT as copy-on-write (CDC MERGE semantics — the other
     * half of the mutation story next to deleteRows): rows in `updates`
@@ -1578,36 +1571,33 @@ object Ingest {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
   }
 
-  /** Materialize (once per JVM) the CDC fixture: a documents corpus with
+  /** Materialize (once per session) the CDC fixture: a documents corpus with
     * `cdcBatch` upserted copy-on-write. Returns the corpus path. */
   def cdcUpserted(spark: SparkSession, sfDir: String, root: String = defaultRoot): String =
-    materialized.getOrElseUpdate(s"cdc_upserted:$sfDir:$root", {
+    ArtifactStore(spark, s"cdc_upserted:$sfDir:$root") {
       val p = s"$root/${slug(sfDir)}/docs_cdc"
       writeCorpusWithIndex(Tables.documents(spark, sfDir), "doc_id", p)
       upsertRows(spark, p, "doc_id", cdcBatch(spark))
       p
-    })
+    }
 
   /** The ids the catalog's GDPR fixture deletes (present at every SF). */
   val gdprIds: Seq[Long] = Seq(7L, 13L, 101L, 256L)
 
-  /** Materialize (once per JVM) the GDPR fixture: corpus copies of
+  /** Materialize (once per session) the GDPR fixture: corpus copies of
     * documents AND embeddings with `gdprIds` deleted copy-on-write — a
     * forget request erases the raw text and its vectors together, the
     * training-data-pipeline staple. Returns (docsPath, embeddingsPath). */
-  def gdprDeleted(spark: SparkSession, sfDir: String, root: String = defaultRoot): (String, String) = {
-    val joined = materialized.getOrElseUpdate(s"gdpr_deleted:$sfDir:$root", {
+  def gdprDeleted(spark: SparkSession, sfDir: String, root: String = defaultRoot): (String, String) =
+    ArtifactStore(spark, s"gdpr_deleted:$sfDir:$root") {
       val pd = s"$root/${slug(sfDir)}/docs_gdpr"
       val pe = s"$root/${slug(sfDir)}/emb_gdpr"
       writeCorpusWithIndex(Tables.documents(spark, sfDir), "doc_id", pd)
       writeCorpusWithIndex(Tables.embeddings(spark, sfDir), "vec_id", pe)
       deleteRows(spark, pd, "doc_id", gdprIds)
       deleteRows(spark, pe, "vec_id", gdprIds)
-      s"$pd|$pe"
-    })
-    val Array(a, b) = joined.split('|')
-    (a, b)
-  }
+      (pd, pe)
+    }
 
   /** Merge-on-read (MoR) delete fixture — the COMPLEMENT of
     * [[gdprDeleted]]'s copy-on-write: the forget request writes only a
@@ -1624,18 +1614,15 @@ object Ingest {
     * delete latency doesn't scale with data layout; the Bloom-indexed
     * CoW path stays right for rare bulk erasure. Returns
     * (dataPath, tombstonePath). */
-  def morDeleted(spark: SparkSession, sfDir: String, root: String = defaultRoot): (String, String) = {
-    val joined = materialized.getOrElseUpdate(s"mor_deleted:$sfDir:$root", {
+  def morDeleted(spark: SparkSession, sfDir: String, root: String = defaultRoot): (String, String) =
+    ArtifactStore(spark, s"mor_deleted:$sfDir:$root") {
       val pd = s"$root/${slug(sfDir)}/docs_mor"
       val pt = s"$root/${slug(sfDir)}/docs_mor_tombstones"
       Tables.documents(spark, sfDir).write.mode("overwrite").parquet(pd)
       import spark.implicits._
       gdprIds.toDF("doc_id").repartition(1).write.mode("overwrite").parquet(pt)
-      s"$pd|$pt"
-    })
-    val Array(a, b) = joined.split('|')
-    (a, b)
-  }
+      (pd, pt)
+    }
 
   /** MoR read path: data minus tombstones. The tombstone side is small
     * by construction (pending deletes since the last compaction), so the

@@ -1,7 +1,6 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
+import graft.ArtifactStore
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -238,16 +237,15 @@ object Versioned {
 
   // ---- catalog fixture -----------------------------------------------------
 
-  private val materialized = TrieMap.empty[String, String]
   private def slug(s: String): String = s.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  /** Materialize (once per JVM) the time-travel fixture over `documents`:
+  /** Materialize (once per session) the time-travel fixture over `documents`:
     * v1 = the corpus (8-file layout so mutations rewrite a strict
     * subset), v2 = upsert (bump n_chars by 1000 for doc_id % 10 = 0,
     * insert doc_id + 1000000 copies of doc_id < 5), v3 = delete
     * doc_id % 7 = 0. Returns the table dir. */
   def timeTravelFixture(spark: SparkSession, sfDir: String): String =
-    materialized.getOrElseUpdate(s"tt:$sfDir", {
+    ArtifactStore(spark, s"tt:$sfDir") {
       val dir = s"${Ingest.defaultRoot}/${slug(sfDir)}/docs_versioned"
       val (fs, d) = hfs(spark, dir)
       if (fs.exists(d)) fs.delete(d, true)
@@ -263,5 +261,5 @@ object Versioned {
         .select("doc_id").collect().map(_.getLong(0)).toSeq
       delete(spark, dir, "doc_id", dels)
       dir
-    })
+    }
 }

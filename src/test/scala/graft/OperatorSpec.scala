@@ -464,6 +464,13 @@ class OperatorSpec extends SparkSuite {
     val (assigned2, _) = Similarity.ivfIndex(
       Tables.embeddings(spark, sf0001), "vec_id", "embedding", k = 4, iters = 1)
     assert(assigned2 eq assigned, "expected the cached IvfModel, got a rebuild")
+    // another corpus of the same plan shape gets its own index, not this one
+    val (other, _) = Similarity.ivfIndex(
+      Tables.embeddings(spark, sf001), "vec_id", "embedding", k = 4, iters = 1)
+    def vec0(df: org.apache.spark.sql.DataFrame): Seq[Float] =
+      df.filter(col("vec_id") === 0L).select("embedding").head().getSeq[Float](0)
+    assert(vec0(other) == vec0(Tables.embeddings(spark, sf001)),
+      "the sf0.01 corpus was served the sf0.001 index")
     // expression agrees with a driver-side argmax on a sample
     val sample = emb.filter(col("vec_id") < 32).select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray.map(_.toDouble)).toMap
