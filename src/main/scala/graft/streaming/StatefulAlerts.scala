@@ -1,27 +1,22 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming threshold-crossing alerts via `flatMapGroupsWithState` — the
-  * streaming face of TimeSeries.qTsThresholdCross: fire when a series'
-  * hourly sum CROSSES above the level (prev ≤ T < curr), not on every
-  * hour it stays above.
+import SealedFold.{Next, Rearm}
+
+/** Streaming threshold-crossing alerts — the streaming face of
+  * TimeSeries.qTsThresholdCross: fire when a series' hourly sum CROSSES
+  * above the level (prev ≤ T < curr), not on every hour it stays above.
   *
   * A crossing compares two CONSECUTIVE closed hours, so an hour may only
   * be judged once the watermark passes its end (its sum is final) AND its
   * predecessor's final sum is known. State per series is the open hours'
-  * partial sums (watermark-horizon bounded) plus the last sealed hour's
-  * (hour, sum) carry — the alert fires exactly when the batch lag-form
-  * would, held equal by StreamParitySpec under ordered and jittered
-  * replay. Consecutive means adjacent PRESENT hours, matching the batch
-  * twin's lag over existing hourly rows (an empty hour between two
-  * present ones does not reset the comparison).
-  *
-  * Sums accumulate in µs-ordered insertion order within the hour only at
-  * sealing time (points are buffered, then summed in (ts, event_id)
-  * order), so the sealed sum is replay-order-independent — the property
-  * the out-of-order parity test pins.
+  * buffered points (watermark-horizon bounded) plus the last sealed
+  * hour's (hour, sum) carry — the alert fires exactly when the batch
+  * lag-form would, held equal by StreamParitySpec under ordered and
+  * jittered replay. Consecutive means adjacent PRESENT hours, matching
+  * the batch twin's lag over existing hourly rows (an empty hour between
+  * two present ones does not reset the comparison).
   */
 object StatefulAlerts {
 
@@ -32,54 +27,19 @@ object StatefulAlerts {
 
   /** Catalog default, matching the batch twin. */
   val defaultThreshold = 400.0
-  private val hourUsLen = 3600L * 1000000
 
-  /** DuckDB-round-mimicking 2-dp round (graft.operators.Num.roundd twin). */
-  private def r2(x: Double): Double = {
-    val m = math.floor(math.abs(x) * 100 + 0.5) / 100
-    if (x < 0) -m else m
-  }
-
-  /** Seal every hour strictly below the watermark, in time order; return
-    * (crossings, carry-open, new lastSealed). */
-  private[graft] def seal(
-      open: Seq[(Long, Long, Long, Double)], wmUs: Long,
-      last0: Option[(Long, Double)], threshold: Double): (Seq[Crossing], Seq[(Long, Long, Long, Double)], Option[(Long, Double)]) = {
-    val (sealable, carry) = open.partition { case (h, _, _, _) => h + hourUsLen - 1 < wmUs }
-    var last = last0
-    val out = scala.collection.mutable.ArrayBuffer.empty[Crossing]
-    sealable.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (h, pts) =>
-      // deterministic accumulation order = the batch engine's sort order
-      var sv = 0.0
-      pts.sortBy(p => (p._2, p._3)).foreach(sv += _._4)
-      val svr = r2(sv)
-      last match {
-        case Some((_, prev)) if prev <= threshold && svr > threshold =>
-          out += Crossing("", h, prev, svr) // event_type filled by caller
-        case _ => ()
-      }
-      last = Some((h, svr))
-    }
-    (out.toSeq, carry, last)
-  }
-
-  def alertize(threshold: Double)(
-      key: String,
+  private def alertize(threshold: Double)(
+      key: String, st: AlertState,
       events: Iterator[(String, java.sql.Timestamp, Long, Long, Double)],
-      state: GroupState[AlertState]): Iterator[Crossing] = {
-    val wmUs = state.getCurrentWatermarkMs() * 1000
-    var st = state.getOption.getOrElse(AlertState(Nil, None))
-    if (!state.hasTimedOut) {
-      val add = events.map { e =>
-        val us = e._3
-        (us - Math.floorMod(us, hourUsLen), us, e._4, e._5)
-      }.toSeq
-      st = st.copy(open = st.open ++ add)
+      wmUs: Long): (Next[AlertState], Iterator[Crossing]) = {
+    val (hours, carry) = SealedFold.sealHourSums(st.open, events.map(e => (e._3, e._4, e._5)), wmUs)
+    var last = st.lastSealed
+    val crossings = hours.flatMap { case (h, sv) =>
+      val c = last.collect { case (_, prev) if prev <= threshold && sv > threshold => Crossing(key, h, prev, sv) }
+      last = Some((h, sv))
+      c
     }
-    val (crossings, carry, last) = seal(st.open, wmUs, st.lastSealed, threshold)
-    state.update(AlertState(carry, last))
-    state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-    crossings.iterator.map(_.copy(event_type = key))
+    (Rearm(AlertState(carry, last)), crossings.iterator)
   }
 
   /** Streaming face: `events` must carry a watermarked TimestampType `ts`.
@@ -88,10 +48,7 @@ object StatefulAlerts {
   def alertsStream(events: DataFrame, threshold: Double = defaultThreshold): Dataset[Crossing] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr("event_type", "ts", "unix_micros(ts) as us", "event_id", "value")
-      .as[(String, java.sql.Timestamp, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(alertize(threshold))
+    SealedFold(events.selectExpr("event_type", "ts", "unix_micros(ts) as us", "event_id", "value")
+      .as[(String, java.sql.Timestamp, Long, Long, Double)])(_._1, AlertState(Nil, None))(alertize(threshold))
   }
 }

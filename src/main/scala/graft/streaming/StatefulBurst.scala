@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import SealedFold.{Grid0Us, HourUs, Next, Rearm, gridHour}
 
 /** Streaming hysteresis burst detector — the live face of
   * Change.burstCausalEpisodes: per event_type over the sealed hourly
@@ -12,45 +13,29 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * with only causal state, so the stream needs nothing the batch twin
   * doesn't derive from the same prefix.
   *
-  * Hour-sealing is the StatefulPh device: a cell seals when the
-  * watermark passes its hour end, absent hours seal as real zeros.
-  * State is the open tail's counts plus FIVE longs and a flag —
-  * bounded regardless of stream length; sealed hours evict. Every
-  * compare is exact integer arithmetic, so an emitted episode is
-  * bit-equal to its batch twin (append-mode exactly-once: episodes
-  * emit exactly when their closing hour seals).
+  * A cell seals when the watermark passes its hour end; absent hours
+  * seal as real zeros. State is the open tail's counts plus FIVE longs
+  * and a flag — bounded regardless of stream length; sealed hours evict.
+  * Every compare is exact integer arithmetic, so an emitted episode is
+  * bit-equal to its batch twin (append-mode exactly-once: episodes emit
+  * exactly when their closing hour seals).
   */
 object StatefulBurst {
-
-  private val HOUR_US = 3600000000L
-  /** Grid origin, identical to the batch panel. */
-  private val GRID0_US = 1704067200000000L // 2024-01-01 00:00:00 UTC
 
   case class BState(sealedThrough: Long, counts: Map[Long, Long], sc: Long,
                     inBurst: Boolean, start: Long, peak: Long, total: Long, len: Long)
   case class BurstRow(event_type: String, start_h: java.sql.Timestamp,
                       end_h: java.sql.Timestamp, n_hours: Long, peak: Long, total: Long)
 
-  private def tsOf(x: Long): java.sql.Timestamp = java.sql.Timestamp.from(
-    java.time.Instant.ofEpochSecond((GRID0_US + x * HOUR_US) / 1000000L))
-
-  private[graft] def seal(
-      key: String,
-      events: Iterator[(String, Long, java.sql.Timestamp)], // (type, hourIdx, ts)
-      state: GroupState[BState]): Iterator[BurstRow] = {
-    val wmUs = state.getCurrentWatermarkMs() * 1000
-    val st = state.getOption.getOrElse(
-      BState(-1L, Map.empty, 0L, inBurst = false, -1L, 0L, 0L, 0L))
-    var counts = st.counts
-    if (!state.hasTimedOut)
-      events.foreach { e => counts = counts.updated(e._2, counts.getOrElse(e._2, 0L) + 1L) }
+  private[graft] def seal(key: String, st: BState,
+                          events: Iterator[(String, Long, java.sql.Timestamp)], // (type, hourIdx, ts)
+                          wmUs: Long): (Next[BState], Iterator[BurstRow]) = {
+    val counts = SealedFold.tally(st.counts, events.map(_._2))
+    val cells = SealedFold.sealCells(st.sealedThrough, counts, wmUs)(x => Grid0Us + (x + 1) * HourUs)
     var sc = st.sc; var inB = st.inBurst; var start = st.start
     var peak = st.peak; var total = st.total; var len = st.len
     val out = scala.collection.mutable.ArrayBuffer.empty[BurstRow]
-    var x = st.sealedThrough + 1
-    while (GRID0_US + (x + 1) * HOUR_US <= wmUs) {
-      val c = counts.getOrElse(x, 0L)
-      counts -= x
+    cells.foreach { case (x, c) =>
       sc += c
       val n = x + 1
       val mark = if (2L * c * n > 3L * sc) 1L else if (c * n < sc) -1L else 0L
@@ -59,27 +44,23 @@ object StatefulBurst {
       } else if (inB && mark >= 0L) {
         len += 1L; total += c; peak = math.max(peak, c)
       } else if (inB && mark == -1L) {
-        out += BurstRow(key, tsOf(start), tsOf(x - 1), len, peak, total)
+        out += BurstRow(key, gridHour(start), gridHour(x - 1), len, peak, total)
         inB = false
       }
-      x += 1
     }
-    state.update(BState(x - 1, counts, sc, inB, start, peak, total, len))
-    state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-    out.iterator
+    (Rearm(BState(st.sealedThrough + cells.length, counts -- cells.map(_._1),
+      sc, inB, start, peak, total, len)), out.iterator)
   }
 
   /** `events` must carry a watermarked TimestampType `ts`. */
   def burstStream(events: DataFrame): Dataset[BurstRow] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr(
+    SealedFold(events.selectExpr(
         "event_type",
-        s"(unix_micros(ts) - ${GRID0_US}L) div $HOUR_US as hour_idx",
+        s"(unix_micros(ts) - ${Grid0Us}L) div $HourUs as hour_idx",
         "ts")
-      .as[(String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(seal)
+      .as[(String, Long, java.sql.Timestamp)])(
+      _._1, BState(-1L, Map.empty, 0L, inBurst = false, -1L, 0L, 0L, 0L))(seal)
   }
 }

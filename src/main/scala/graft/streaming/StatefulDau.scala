@@ -1,13 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import SealedFold.{DayUs, Hold, Next, Rearm, Untouched}
 
 /** Streaming EXACT daily-distinct-users — the "DAU live" panel, sealed
-  * per day under the watermark: one `flatMapGroupsWithState` keyed by
-  * epoch DAY, whose state is the day's user-id set; when the watermark
-  * passes the day boundary no admissible arrival can still land in the
-  * day, so the count seals and emits exactly once.
+  * per day under the watermark: one fold keyed by epoch DAY, whose
+  * state is the day's user-id set; when the watermark passes the day
+  * boundary no admissible arrival can still land in the day, so the
+  * count seals and emits exactly once.
   *
   * Why not chained stateful operators (dedup → windowed count):
   * `dropDuplicatesWithinWatermark` only guarantees dedup WITHIN the
@@ -28,40 +29,27 @@ object StatefulDau {
   case class DauState(isSealed: Boolean, users: Set[Long])
   case class DayUsers(dayUs: Long, n_users: Long)
 
-  private val DAY_US = 86400000000L
-
-  private[graft] def seal(
-      dayUs: Long,
-      events: Iterator[(Long, Long, java.sql.Timestamp)], // (dayUs, user_id, ts)
-      state: GroupState[DauState]): Iterator[DayUsers] = {
-    val wmUs = state.getCurrentWatermarkMs() * 1000
-    val st = state.getOption.getOrElse(DauState(isSealed = false, Set.empty))
-    if (st.isSealed) return Iterator.empty // late stragglers of a sealed day
-    val users = if (state.hasTimedOut) st.users else st.users ++ events.map(_._2)
-    if (wmUs >= dayUs + DAY_US) {
+  private[graft] def seal(dayUs: Long, st: DauState,
+                          events: Iterator[(Long, Long, java.sql.Timestamp)], // (dayUs, user_id, ts)
+                          wmUs: Long): (Next[DauState], Iterator[DayUsers]) =
+    if (st.isSealed) (Untouched, Iterator.empty) // late stragglers of a sealed day
+    else {
+      val users = st.users ++ events.map(_._2)
       // watermark passed end-of-day: the set is complete — seal and shed
       // the user set (the sealed flag alone suppresses stragglers)
-      state.update(DauState(isSealed = true, Set.empty))
-      Iterator.single(DayUsers(dayUs, users.size.toLong))
-    } else {
-      state.update(DauState(isSealed = false, users))
-      // re-fire as the watermark advances so a quiet day still seals
-      state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-      Iterator.empty
+      if (wmUs >= dayUs + DayUs)
+        (Hold(DauState(isSealed = true, Set.empty)), Iterator.single(DayUsers(dayUs, users.size.toLong)))
+      else (Rearm(DauState(isSealed = false, users)), Iterator.empty)
     }
-  }
 
   /** `events` must carry a watermarked TimestampType `ts` and `user_id`. */
   def dauStream(events: DataFrame): Dataset[DayUsers] = {
     val s = events.sparkSession
     import s.implicits._
     // `ts` rides along: the watermark is attached to the event-time
-    // column, and EventTimeTimeout requires it visible in the fMGWS input
-    events
-      .selectExpr(s"unix_micros(ts) div $DAY_US * $DAY_US as day_us", "user_id", "ts")
-      .as[(Long, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(seal)
+    // column, and the event-time timeout requires it in the fold's input
+    SealedFold(events
+      .selectExpr(s"unix_micros(ts) div $DayUs * $DayUs as day_us", "user_id", "ts")
+      .as[(Long, Long, java.sql.Timestamp)])(_._1, DauState(isSealed = false, Set.empty))(seal)
   }
 }

@@ -1,12 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming first-seen screen via `flatMapGroupsWithState` — the ingest
-  * face of Ops.qTsNewSeries: admit exactly one event per series (user_id),
-  * the one with the EARLIEST event time, so downstream day-rollups of
-  * series churn match the batch `min(ts)` definition.
+import SealedFold.{Hold, Next, Rearm, Untouched}
+
+/** Streaming first-seen screen — the ingest face of Ops.qTsNewSeries:
+  * admit exactly one event per series (user_id), the one with the
+  * EARLIEST event time, so downstream day-rollups of series churn match
+  * the batch `min(ts)` definition.
   *
   * "First" is a claim about event time under out-of-order arrival, so an
   * admission seals only when the watermark passes the current candidate:
@@ -29,35 +30,23 @@ object StatefulFirstSeen {
   case class FirstState(isSealed: Boolean, candidateUs: Long)
   case class FirstSeen(user_id: Long, first_us: Long)
 
-  private[graft] def screen(
-      key: Long,
-      events: Iterator[(Long, java.sql.Timestamp, Long)],
-      state: GroupState[FirstState]): Iterator[FirstSeen] = {
-    val wmUs = state.getCurrentWatermarkMs() * 1000
-    val st = state.getOption.getOrElse(FirstState(isSealed = false, Long.MaxValue))
-    if (st.isSealed) return Iterator.empty // later events of a known series
-    var cand = st.candidateUs
-    if (!state.hasTimedOut) events.foreach(e => if (e._3 < cand) cand = e._3)
-    if (cand < wmUs) {
+  private[graft] def screen(key: Long, st: FirstState,
+                            events: Iterator[(Long, java.sql.Timestamp, Long)],
+                            wmUs: Long): (Next[FirstState], Iterator[FirstSeen]) =
+    if (st.isSealed) (Untouched, Iterator.empty) // later events of a known series
+    else {
+      var cand = st.candidateUs
+      events.foreach(e => if (e._3 < cand) cand = e._3)
       // no admissible arrival can now be earlier — the candidate IS first
-      state.update(FirstState(isSealed = true, cand))
-      Iterator.single(FirstSeen(key, cand))
-    } else {
-      state.update(FirstState(isSealed = false, cand))
-      // re-fire as the watermark advances so quiet series still seal
-      state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-      Iterator.empty
+      if (cand < wmUs) (Hold(FirstState(isSealed = true, cand)), Iterator.single(FirstSeen(key, cand)))
+      else (Rearm(FirstState(isSealed = false, cand)), Iterator.empty)
     }
-  }
 
   /** `events` must carry a watermarked TimestampType `ts`. */
   def firstSeenStream(events: DataFrame): Dataset[FirstSeen] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr("user_id", "ts", "unix_micros(ts) as us")
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(screen)
+    SealedFold(events.selectExpr("user_id", "ts", "unix_micros(ts) as us")
+      .as[(Long, java.sql.Timestamp, Long)])(_._1, FirstState(isSealed = false, Long.MaxValue))(screen)
   }
 }

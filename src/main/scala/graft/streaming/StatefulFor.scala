@@ -1,26 +1,25 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming for-duration alert lifecycle via `flatMapGroupsWithState` —
-  * the streaming face of Ops.qTsAlertTransitions and the stateful sibling
-  * of [[StatefulAlerts]]: per series (event_type), an alert FIRES when
-  * the hourly sum has breached the threshold for `forN` CONSECUTIVE
-  * sealed hours (Prometheus `for:` semantics — one fire per sustained
-  * episode, not one per breach hour), and RESOLVES at the first sealed
-  * non-breach hour while firing.
+import SealedFold.{Next, Rearm}
+
+/** Streaming for-duration alert lifecycle — the streaming face of
+  * Ops.qTsAlertTransitions and the stateful sibling of [[StatefulAlerts]]:
+  * per series (event_type), an alert FIRES when the hourly sum has
+  * breached the threshold for `forN` CONSECUTIVE sealed hours (Prometheus
+  * `for:` semantics — one fire per sustained episode, not one per breach
+  * hour), and RESOLVES at the first sealed non-breach hour while firing.
   *
   * Consecutive means adjacent PRESENT hours, matching the batch twin's
-  * windows over existing hourly rows (StatefulAlerts' convention). Hours
-  * seal strictly under the watermark in time order; within an hour the
-  * buffered points sum in (ts, event_id) order, so the sealed sum — and
-  * therefore every transition — is replay-order-independent.
+  * windows over existing hourly rows. Hours seal strictly under the
+  * watermark in time order, with sums that do not depend on arrival
+  * order, so every transition is replay-order-independent.
   *
   * State per series: the open hours' buffered points (watermark-horizon
-  * bounded) plus three scalars (streak, firing, nothing else) — the
-  * whole alert lifecycle lives in O(open window) state, no closed-hour
-  * history is retained.
+  * bounded) plus two scalars (streak, firing) — the whole alert
+  * lifecycle lives in O(open window) state, no closed-hour history is
+  * retained.
   */
 object StatefulFor {
 
@@ -33,61 +32,30 @@ object StatefulFor {
   /** Catalog defaults, matching the batch twin. */
   val defaultThreshold = 800.0
   val defaultForN = 3
-  private val hourUsLen = 3600L * 1000000
 
-  private def r2(x: Double): Double = {
-    val m = math.floor(math.abs(x) * 100 + 0.5) / 100
-    if (x < 0) -m else m
-  }
-
-  /** Seal every hour strictly below the watermark in time order, driving
-    * the streak/firing machine; returns (transitions, carry, streak,
-    * firing). */
-  private[graft] def seal(
-      open: Seq[(Long, Long, Long, Double)], wmUs: Long,
-      streak0: Long, firing0: Boolean, threshold: Double, forN: Int)
-      : (Seq[Transition], Seq[(Long, Long, Long, Double)], Long, Boolean) = {
-    val (sealable, carry) = open.partition { case (h, _, _, _) => h + hourUsLen - 1 < wmUs }
-    var streak = streak0
-    var firing = firing0
-    val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-    sealable.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (h, pts) =>
-      var sv = 0.0
-      pts.sortBy(p => (p._2, p._3)).foreach(sv += _._4)
-      val svr = r2(sv)
-      if (svr > threshold) {
+  /** Drives the streak/firing machine over the sealed hours in time order. */
+  private def forize(threshold: Double, forN: Int)(
+      key: String, st: ForState,
+      events: Iterator[(String, java.sql.Timestamp, Long, Long, Double)],
+      wmUs: Long): (Next[ForState], Iterator[Transition]) = {
+    val (hours, carry) = SealedFold.sealHourSums(st.open, events.map(e => (e._3, e._4, e._5)), wmUs)
+    var streak = st.streak
+    var firing = st.firing
+    val transitions = hours.flatMap { case (h, sv) =>
+      if (sv > threshold) {
         streak += 1
         if (!firing && streak == forN) {
           firing = true
-          out += Transition("", "fire", h, svr)
-        }
+          Some(Transition(key, "fire", h, sv))
+        } else None
       } else {
-        if (firing) out += Transition("", "resolve", h, svr)
+        val resolve = if (firing) Some(Transition(key, "resolve", h, sv)) else None
         firing = false
         streak = 0
+        resolve
       }
     }
-    (out.toSeq, carry, streak, firing)
-  }
-
-  def forize(threshold: Double, forN: Int)(
-      key: String,
-      events: Iterator[(String, java.sql.Timestamp, Long, Long, Double)],
-      state: GroupState[ForState]): Iterator[Transition] = {
-    val wmUs = state.getCurrentWatermarkMs() * 1000
-    var st = state.getOption.getOrElse(ForState(Nil, 0L, firing = false))
-    if (!state.hasTimedOut) {
-      val add = events.map { e =>
-        val us = e._3
-        (us - Math.floorMod(us, hourUsLen), us, e._4, e._5)
-      }.toSeq
-      st = st.copy(open = st.open ++ add)
-    }
-    val (transitions, carry, streak, firing) =
-      seal(st.open, wmUs, st.streak, st.firing, threshold, forN)
-    state.update(ForState(carry, streak, firing))
-    state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-    transitions.iterator.map(_.copy(event_type = key))
+    (Rearm(ForState(carry, streak, firing)), transitions.iterator)
   }
 
   /** Streaming face: `events` must carry a watermarked TimestampType `ts`.
@@ -98,10 +66,8 @@ object StatefulFor {
                 forN: Int = defaultForN): Dataset[Transition] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr("event_type", "ts", "unix_micros(ts) as us", "event_id", "value")
-      .as[(String, java.sql.Timestamp, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(forize(threshold, forN))
+    SealedFold(events.selectExpr("event_type", "ts", "unix_micros(ts) as us", "event_id", "value")
+      .as[(String, java.sql.Timestamp, Long, Long, Double)])(
+      _._1, ForState(Nil, 0L, firing = false))(forize(threshold, forN))
   }
 }

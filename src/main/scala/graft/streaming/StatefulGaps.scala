@@ -1,12 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming gap / outage detection via `flatMapGroupsWithState` — the
-  * streaming face of TimeSeries.qTsGaps: per series (event_type), emit
-  * every silence longer than 60 minutes between consecutive events as a
-  * closed (gap_start, gap_end) interval.
+import SealedFold.{Next, Rearm, Remove}
+
+/** Streaming gap / outage detection — the streaming face of
+  * TimeSeries.qTsGaps: per series (event_type), emit every silence longer
+  * than 60 minutes between consecutive events as a closed
+  * (gap_start, gap_end) interval.
   *
   * A gap is a claim about ABSENCE, so an endpoint pair is only final when
   * no admissible event can still land inside it: once the watermark
@@ -19,8 +20,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State per series is the timestamps newer than the last sealed point —
   * bounded by the watermark horizon (events/series within ~10 min), plus
-  * one carry element; an event-time timeout re-fires quiet groups so
-  * sealing progresses as the watermark advances even with no new data.
+  * one carry element, the left end of the next gap, which stays for the
+  * series' lifetime.
   *
   * Scale note: parallelism equals the number of series. For a feed with
   * few, very hot series, shard the stream by (series, time-chunk) and
@@ -34,7 +35,7 @@ object StatefulGaps {
   case class ClosedGap(event_type: String, gap_start_us: Long, gap_end_us: Long, gap_s: Long)
 
   /** 60 minutes, matching the batch twin. */
-  val thresholdUs: Long = 3600L * 1000000
+  val thresholdUs: Long = SealedFold.HourUs
 
   /** Pure merge-and-seal: given the unsealed timestamps and the watermark,
     * return (final gaps, carry). A consecutive pair (a, b) is final once
@@ -53,26 +54,13 @@ object StatefulGaps {
     (gaps.toSeq, sorted.drop(i))
   }
 
-  def gapize(key: String,
-             events: Iterator[(String, java.sql.Timestamp, Long)],
-             state: GroupState[GapState]): Iterator[ClosedGap] = {
-    val wmUs = state.getCurrentWatermarkMs() * 1000
-    var pend: Seq[Long] = state.getOption.map(_.pending).getOrElse(Nil)
-    if (!state.hasTimedOut)
-      pend = pend ++ events.map(_._3)
-    val (gaps, carry) = seal(pend, wmUs)
-    if (carry.nonEmpty) {
-      state.update(GapState(carry))
-      // re-fire when the watermark advances so sealing progresses on quiet
-      // series (same idiom as StatefulTwa's day-close timeout)
-      state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-    } else {
-      state.remove()
-    }
+  private[graft] def gapize(key: String, st: GapState,
+                            events: Iterator[(String, java.sql.Timestamp, Long)],
+                            wmUs: Long): (Next[GapState], Iterator[ClosedGap]) = {
+    val (gaps, carry) = seal(st.pending ++ events.map(_._3), wmUs)
     // gap_s mirrors the batch twin's exact integer µs→s floor-diff
-    gaps.iterator.map { case (a, b) =>
-      ClosedGap(key, a, b, b / 1000000L - a / 1000000L)
-    }
+    (if (carry.nonEmpty) Rearm(GapState(carry)) else Remove,
+      gaps.iterator.map { case (a, b) => ClosedGap(key, a, b, b / 1000000L - a / 1000000L) })
   }
 
   /** Streaming face: `events` must carry a watermarked TimestampType `ts`
@@ -81,10 +69,7 @@ object StatefulGaps {
   def gapsStream(events: DataFrame): Dataset[ClosedGap] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr("event_type", "ts", "unix_micros(ts) as us")
-      .as[(String, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(gapize)
+    SealedFold(events.selectExpr("event_type", "ts", "unix_micros(ts) as us")
+      .as[(String, java.sql.Timestamp, Long)])(_._1, GapState(Nil))(gapize)
   }
 }

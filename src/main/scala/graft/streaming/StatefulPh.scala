@@ -1,15 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.Num
+import SealedFold.{Grid0Us, HourUs, Next, Rearm, gridHour}
 
 /** Streaming Page–Hinkley drift detector — the live face of
   * Change.qTsPageHinkley: per event_type, the PH statistic over the
   * gapless hourly count grid, sealed hour by hour under the watermark.
   *
-  * Hour-sealing is the StatefulDau/StatefulSpike device at hour grain:
-  * a cell seals when the watermark passes its hour end, ABSENT hours
-  * seal as real zeros (the batch panel's gap-fill — the while-loop walks
+  * A cell seals when the watermark passes its hour end; ABSENT hours
+  * seal as real zeros (the batch panel's gap-fill — the walk covers
   * every grid hour, not just observed ones), so the stream's running
   * (n, Σc, m, min m) fold replays the batch trace term for term. The
   * per-hour term is the ONE double — (c − mean − δ) rounded once to
@@ -20,9 +21,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StatefulPh {
 
-  private val HOUR_US = 3600000000L
-  /** Grid origin, identical to the batch panel. */
-  private val GRID0_US = 1704067200000000L // 2024-01-01 00:00:00 UTC
   private val DELTA = 0.5
   private val LAMBDA_MICRO = 100L * 1000000L
 
@@ -30,64 +28,36 @@ object StatefulPh {
                      cx: Long, m: Long, runmin: Long)
   case class PhRow(event_type: String, h: java.sql.Timestamp, ph: Double, alarm: Long)
 
-  /** Num.roundd(v, 0) mimic: half away from zero in double space. */
-  private def r0(v: Double): Double = {
-    val m = math.floor(math.abs(v) + 0.5)
-    if (v < 0) -m else m
-  }
-
-  /** Num.roundd(v, 6) mimic — the batch twin's display round of ph/1e6. */
-  private def r6(v: Double): Double = {
-    val m = math.floor(math.abs(v) * 1e6 + 0.5) / 1e6
-    if (v < 0) -m else m
-  }
-
-  private[graft] def seal(
-      key: String,
-      events: Iterator[(String, Long, java.sql.Timestamp)], // (type, hourIdx, ts)
-      state: GroupState[PhState]): Iterator[PhRow] = {
-    val wmUs = state.getCurrentWatermarkMs() * 1000
-    val st = state.getOption.getOrElse(PhState(-1L, Map.empty, 0L, 0L, 0L))
-    var counts = st.counts
-    if (!state.hasTimedOut)
-      events.foreach { e => counts = counts.updated(e._2, counts.getOrElse(e._2, 0L) + 1L) }
+  private[graft] def seal(key: String, st: PhState,
+                          events: Iterator[(String, Long, java.sql.Timestamp)], // (type, hourIdx, ts)
+                          wmUs: Long): (Next[PhState], Iterator[PhRow]) = {
+    val counts = SealedFold.tally(st.counts, events.map(_._2))
+    val cells = SealedFold.sealCells(st.sealedThrough, counts, wmUs)(x => Grid0Us + (x + 1) * HourUs)
     var cx = st.cx; var m = st.m; var runmin = st.runmin
-    val out = scala.collection.mutable.ArrayBuffer.empty[PhRow]
-    var x = st.sealedThrough + 1
-    while (GRID0_US + (x + 1) * HOUR_US <= wmUs) {
-      val c = counts.getOrElse(x, 0L)
-      counts -= x
+    val out = cells.map { case (x, c) =>
       val n = x + 1
       cx += c
       // identical IEEE sequence as the batch plan: (c − cx/n − δ)·1e6,
       // rounded half-away once, then the exact integer fold
-      val t6 = r0((c.toDouble - cx.toDouble / n.toDouble - DELTA) * 1e6).toLong
+      val t6 = Num.rounddD((c.toDouble - cx.toDouble / n.toDouble - DELTA) * 1e6, 0).toLong
       m += t6
       runmin = if (n == 1) m else math.min(runmin, m)
       val ph = m - runmin
-      out += PhRow(key,
-        java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-          (GRID0_US + x * HOUR_US) / 1000000L)),
-        r6(ph.toDouble / 1e6),
-        if (ph > LAMBDA_MICRO) 1L else 0L)
-      x += 1
+      // the batch twin's display round of ph/1e6
+      PhRow(key, gridHour(x), Num.rounddD(ph.toDouble / 1e6, 6), if (ph > LAMBDA_MICRO) 1L else 0L)
     }
-    state.update(PhState(x - 1, counts, cx, m, runmin))
-    state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-    out.iterator
+    (Rearm(PhState(st.sealedThrough + cells.length, counts -- cells.map(_._1), cx, m, runmin)),
+      out.iterator)
   }
 
   /** `events` must carry a watermarked TimestampType `ts`. */
   def phStream(events: DataFrame): Dataset[PhRow] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr(
+    SealedFold(events.selectExpr(
         "event_type",
-        s"(unix_micros(ts) - ${GRID0_US}L) div $HOUR_US as hour_idx",
+        s"(unix_micros(ts) - ${Grid0Us}L) div $HourUs as hour_idx",
         "ts")
-      .as[(String, Long, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(seal)
+      .as[(String, Long, java.sql.Timestamp)])(_._1, PhState(-1L, Map.empty, 0L, 0L, 0L))(seal)
   }
 }

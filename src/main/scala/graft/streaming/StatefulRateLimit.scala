@@ -1,20 +1,20 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming token-bucket admission control via `flatMapGroupsWithState` —
-  * the live face of Sre.qTsRateLimit (2 tokens per user, 1 per 2 h,
-  * exact integer-µs credit).
+import SealedFold.{Next, Rearm, RearmAt, Remove}
+
+/** Streaming token-bucket admission control — the live face of
+  * Sre.qTsRateLimit (2 tokens per user, 1 per 2 h, exact integer-µs
+  * credit).
   *
   * Admission is ORDER-SENSITIVE state (an early event can drain the
   * token a later one needed), so a decision is only correct once no
   * earlier event can still arrive: arrivals buffer in state and the fold
   * runs — in event-time order — over exactly the prefix the watermark
-  * has sealed. That buffered-fold-on-seal device is the same one the
-  * stateful sessionizer uses; a naive process-on-arrival limiter gives
-  * arrival-order answers that disagree with the batch replay whenever
-  * the feed is out of order (which is exactly when quotas matter).
+  * has sealed. A naive process-on-arrival limiter gives arrival-order
+  * answers that disagree with the batch replay whenever the feed is out
+  * of order (which is exactly when quotas matter).
   *
   * State per user: the O(1) (credit, last) pair plus the not-yet-sealed
   * tail of arrivals — bounded by the watermark delay × per-user rate,
@@ -29,14 +29,10 @@ object StatefulRateLimit {
   case class RlState(creditUs: Long, lastUs: Long, pending: List[(Long, Long)])
   case class Decision(user_id: Long, event_id: Long, tus: Long, admitted: Boolean)
 
-  private[graft] def admit(
-      key: Long,
-      events: Iterator[(Long, Long, java.sql.Timestamp, Long)], // (user_id, event_id, ts, tus)
-      state: GroupState[RlState]): Iterator[Decision] = {
-    val wmUs = state.getCurrentWatermarkMs() * 1000
-    val st = state.getOption.getOrElse(RlState(CapacityUs, -1L, Nil))
-    val incoming =
-      if (state.hasTimedOut) Nil else events.map(e => (e._4, e._2)).toList // (tus, event_id)
+  private[graft] def admit(key: Long, st: RlState,
+                           events: Iterator[(Long, Long, java.sql.Timestamp, Long)], // (user_id, event_id, ts, tus)
+                           wmUs: Long): (Next[RlState], Iterator[Decision]) = {
+    val incoming = events.map(e => (e._4, e._2)).toList // (tus, event_id)
     val (ready, rest) = (st.pending ++ incoming).sorted.partition(_._1 < wmUs)
     var credit = st.creditUs
     var last = st.lastUs
@@ -52,28 +48,21 @@ object StatefulRateLimit {
     // first charge), so drop it instead of keeping one entry per user
     // ever seen — state size stays bounded by the *active* user set.
     val backAtFull = last < 0L || wmUs - last >= CapacityUs - credit
-    if (rest.isEmpty && backAtFull) state.remove()
-    else {
-      state.update(RlState(credit, last, rest))
-      if (rest.nonEmpty)
-        // re-fire as the watermark advances so the buffered tail still seals
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-      else
-        // idle but not yet refilled: re-fire once the bucket is provably
-        // full again so the entry self-removes without another event
-        state.setTimeoutTimestamp((last + (CapacityUs - credit)) / 1000 + 1)
-    }
-    out.iterator
+    val next =
+      if (rest.isEmpty && backAtFull) Remove
+      // the buffered tail seals as the watermark advances
+      else if (rest.nonEmpty) Rearm(RlState(credit, last, rest))
+      // idle but not yet refilled: re-fire once the bucket is provably
+      // full again so the entry self-removes without another event
+      else RearmAt(RlState(credit, last, rest), (last + (CapacityUs - credit)) / 1000 + 1)
+    (next, out.iterator)
   }
 
   /** `events` must carry a watermarked TimestampType `ts`. */
   def rateLimitStream(events: DataFrame): Dataset[Decision] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr("user_id", "event_id", "ts", "unix_micros(ts) as tus")
-      .as[(Long, Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(admit)
+    SealedFold(events.selectExpr("user_id", "event_id", "ts", "unix_micros(ts) as tus")
+      .as[(Long, Long, java.sql.Timestamp, Long)])(_._1, RlState(CapacityUs, -1L, Nil))(admit)
   }
 }

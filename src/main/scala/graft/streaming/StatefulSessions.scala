@@ -1,12 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Custom-state sessionization via `flatMapGroupsWithState` — the
-  * arbitrary-state primitive for semantics that `session_window` can't
-  * express (here it CAN, which is the point: three independent
+import SealedFold.{Next, RearmAt, Remove}
+
+/** Custom-state sessionization — for semantics that `session_window`
+  * can't express (here it CAN, which is the point: three independent
   * implementations of the same 30-minute-gap rule — gaps-and-islands
   * windows (batch), native session_window (stream), and this explicit
   * state machine — must agree, and the parity suite holds them to it).
@@ -21,10 +20,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * union); a session is emitted ONLY once the watermark has passed
   * (last + gap) — at that point no admissible future event can extend it
   * backward or forward, or bridge it to a neighbor, so what is emitted is
-  * exactly what the batch gaps-and-islands formulation computes. An
-  * event-time timeout fires when the watermark crosses the earliest
-  * deadline so idle sessions close without new data — state stays bounded
-  * by the watermark, the only shape that survives an unbounded feed.
+  * exactly what the batch gaps-and-islands formulation computes. A timer
+  * at the earliest deadline closes idle sessions without new data, and a
+  * user with no open session has no state — state stays bounded by the
+  * watermark, the only shape that survives an unbounded feed.
   */
 object StatefulSessions {
 
@@ -55,25 +54,18 @@ object StatefulSessions {
     }.reverse
   }
 
-  def sessionize(userId: Long, events: Iterator[(Long, java.sql.Timestamp, Long)],
-                 state: GroupState[SessionsState]): Iterator[ClosedSession] = {
-    val wmMs = state.getCurrentWatermarkMs()
-    var intervals: Seq[OpenSession] = state.getOption.map(_.open).getOrElse(Nil)
-    if (!state.hasTimedOut) {
-      intervals = merge(intervals, events.map(_._3).toArray.sorted)
-    }
+  private[graft] def sessionize(userId: Long, st: SessionsState,
+                                events: Iterator[(Long, java.sql.Timestamp, Long)],
+                                wmUs: Long): (Next[SessionsState], Iterator[ClosedSession]) = {
+    val wmMs = wmUs / 1000
+    val intervals = merge(st.open, events.map(_._3).toArray.sorted)
     // Emit iff watermark passed (last + gap): any future event has
     // ts_ms >= wmMs > last + gap >= start + gap, so it can neither extend
     // this interval (either direction) nor bridge it to the next one.
     val (closed, stillOpen) = intervals.partition(s => s.lastUs / 1000 + gapMs < wmMs)
-    if (stillOpen.isEmpty) state.remove()
-    else {
-      state.update(SessionsState(stillOpen))
-      val minDeadline = stillOpen.map(_.lastUs / 1000 + gapMs).min
-      // EventTimeTimeout requires a deadline strictly beyond the watermark
-      state.setTimeoutTimestamp(math.max(minDeadline, wmMs + 1))
-    }
-    closed.map(close(userId, _)).iterator
+    (if (stillOpen.isEmpty) Remove
+     else RearmAt(SessionsState(stillOpen), stillOpen.map(_.lastUs / 1000 + gapMs).min),
+      closed.map(close(userId, _)).iterator)
   }
 
   /** Streaming face: events must carry a watermarked TimestampType `ts`
@@ -83,10 +75,7 @@ object StatefulSessions {
   def sessionsStream(events: DataFrame): Dataset[ClosedSession] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr("user_id", "ts", "unix_micros(ts) as us")
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(sessionize)
+    SealedFold(events.selectExpr("user_id", "ts", "unix_micros(ts) as us")
+      .as[(Long, java.sql.Timestamp, Long)])(_._1, SessionsState(Nil))(sessionize)
   }
 }

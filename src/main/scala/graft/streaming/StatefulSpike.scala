@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.Num
+import SealedFold.{DayUs, Grid0Us, HourUs, Next, Rearm}
 
 /** Streaming week-over-week spike detection — the live face of
   * Sre.qTsSpikeRatio: each (event_type, hour-of-day) cell's daily count
@@ -15,72 +17,47 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ago and the baseline is final — so each emission is exact and
   * exactly-once (`sealedThrough` advances monotonically; days older than
   * the baseline window evict, bounding state at 8 entries + the open
-  * tail). Day-keyed sealing is the same device as StatefulDau; what this
-  * adds is the RING of trailing sealed days feeding each new seal's
-  * baseline.
+  * tail). Each new seal's baseline is the RING of trailing sealed days.
   */
 object StatefulSpike {
-
-  private val DAY_US = 86400000000L
-  private val HOUR_US = 3600000000L
-  /** Grid origin, identical to the batch query's calendar grid. */
-  private val GRID0_US = 1704067200000000L // 2024-01-01 00:00:00 UTC
 
   case class SpikeState(sealedThrough: Long, counts: Map[Long, Long])
   case class SpikeRow(event_type: String, dday: java.sql.Date, hod: Long,
                       x: Long, base: Double, ratio: Double, spike: Long)
 
-  private def r4(x: Double): Double = {
-    val m = math.floor(math.abs(x) * 1e4 + 0.5) / 1e4
-    if (x < 0) -m else m
-  }
-
-  private[graft] def seal(
-      key: (String, Long),
-      events: Iterator[(String, Long, Long, java.sql.Timestamp)], // (type, hod, dayIdx, ts)
-      state: GroupState[SpikeState]): Iterator[SpikeRow] = {
-    val wmUs = state.getCurrentWatermarkMs() * 1000
-    val st = state.getOption.getOrElse(SpikeState(-1L, Map.empty))
-    var counts = st.counts
-    if (!state.hasTimedOut)
-      events.foreach { e => counts = counts.updated(e._3, counts.getOrElse(e._3, 0L) + 1L) }
+  private[graft] def seal(key: (String, Long), st: SpikeState,
+                          events: Iterator[(String, Long, Long, java.sql.Timestamp)], // (type, hod, dayIdx, ts)
+                          wmUs: Long): (Next[SpikeState], Iterator[SpikeRow]) = {
+    val counts = SealedFold.tally(st.counts, events.map(_._3))
     val (etype, hod) = key
-    def cellEndUs(d: Long) = GRID0_US + d * DAY_US + (hod + 1L) * HOUR_US
-    val out = scala.collection.mutable.ArrayBuffer.empty[SpikeRow]
-    var d = st.sealedThrough + 1
-    while (cellEndUs(d) <= wmUs) {
+    val cells = SealedFold.sealCells(st.sealedThrough, counts, wmUs)(
+      d => Grid0Us + d * DayUs + (hod + 1L) * HourUs)
+    val out = cells.flatMap { case (d, x) =>
       // the 7 predecessor cells sealed earlier; absent days are zeros
       val s7 = (d - 7 to d - 1).map(counts.getOrElse(_, 0L)).sum
       if (d >= 7 && s7 > 0) {
-        val x = counts.getOrElse(d, 0L)
-        val base = r4(s7.toDouble / 7.0)
-        val ratio = r4(x.toDouble * 7.0 / s7.toDouble)
-        out += SpikeRow(etype,
+        val base = Num.rounddD(s7.toDouble / 7.0, 4)
+        val ratio = Num.rounddD(x.toDouble * 7.0 / s7.toDouble, 4)
+        Some(SpikeRow(etype,
           java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(d)),
-          hod, x, base, ratio, if (ratio >= 2.0) 1L else 0L)
-      }
-      d += 1
+          hod, x, base, ratio, if (ratio >= 2.0) 1L else 0L))
+      } else None
     }
-    val sealedThrough = d - 1
+    val sealedThrough = st.sealedThrough + cells.length
     // evict everything older than the newest baseline window
-    counts = counts.filter { case (day, _) => day >= sealedThrough - 7 }
-    state.update(SpikeState(sealedThrough, counts))
-    state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-    out.iterator
+    (Rearm(SpikeState(sealedThrough, counts.filter { case (day, _) => day >= sealedThrough - 7 })),
+      out.iterator)
   }
 
   /** `events` must carry a watermarked TimestampType `ts`. */
   def spikeStream(events: DataFrame): Dataset[SpikeRow] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr(
+    SealedFold(events.selectExpr(
         "event_type",
-        s"unix_micros(ts) % $DAY_US div $HOUR_US as hod",
-        s"(unix_micros(ts) - ${GRID0_US}L) div $DAY_US as day_idx",
+        s"unix_micros(ts) % $DayUs div $HourUs as hod",
+        s"(unix_micros(ts) - ${Grid0Us}L) div $DayUs as day_idx",
         "ts")
-      .as[(String, Long, Long, java.sql.Timestamp)]
-      .groupByKey(e => (e._1, e._2))
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(seal)
+      .as[(String, Long, Long, java.sql.Timestamp)])(e => (e._1, e._2), SpikeState(-1L, Map.empty))(seal)
   }
 }

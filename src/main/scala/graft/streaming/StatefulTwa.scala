@@ -1,10 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming time-weighted average via `flatMapGroupsWithState` — the
-  * streaming face of TimeSeries.qTsTwa (SURVEY §2.1-K): per (user, day),
+import SealedFold.{DayUs, Next, RearmAt, Remove}
+
+/** Streaming time-weighted average — the streaming face of
+  * TimeSeries.qTsTwa (SURVEY §2.1-K): per (user, day),
   * TWA = Σ value·dt / Σ dt over consecutive-event segments ordered by
   * (ts, event_id), where the day's last point contributes no segment.
   *
@@ -16,16 +17,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * O(points per user-day), bounded because the watermark closes days:
   * once wm ≥ day end, no admissible event can land in the day, the group
   * emits exactly what the batch lead()-formulation computes, and its
-  * state is freed (an event-time timeout fires for days whose users go
-  * quiet, so state never outlives the watermark).
+  * state is freed (a timer at day end closes days whose users go quiet,
+  * so state never outlives the watermark).
   */
 object StatefulTwa {
 
   /** (us, event_id, value) triples of the open day, unordered. */
   case class TwaState(points: Seq[(Long, Long, Double)])
   case class ClosedTwa(user_id: Long, day_us: Long, n_seg: Long, twa: Double)
-
-  private val dayUs = 86400L * 1000000
 
   /** Sort by (us, event_id) — the batch twin's window order — and
     * integrate pairwise segments. Returns (n_seg, twa). */
@@ -43,28 +42,18 @@ object StatefulTwa {
     (math.max(0, sorted.length - 1).toLong, if (sumDt > 0) sumVdt / sumDt else Double.NaN)
   }
 
-  def twaize(key: (Long, Long),
-             events: Iterator[(Long, java.sql.Timestamp, Long, Long, Long, Double)],
-             state: GroupState[TwaState]): Iterator[ClosedTwa] = {
-    val wmMs = state.getCurrentWatermarkMs()
-    var pts: Seq[(Long, Long, Double)] = state.getOption.map(_.points).getOrElse(Nil)
-    if (!state.hasTimedOut)
-      pts = pts ++ events.map(e => (e._4, e._5, e._6))
-    val dayEndMs = (key._2 + dayUs) / 1000
-    if (dayEndMs <= wmMs) {
+  private[graft] def twaize(key: (Long, Long), st: TwaState,
+                            events: Iterator[(Long, java.sql.Timestamp, Long, Long, Long, Double)],
+                            wmUs: Long): (Next[TwaState], Iterator[ClosedTwa]) = {
+    val pts = st.points ++ events.map(e => (e._4, e._5, e._6))
+    val dayEndMs = (key._2 + DayUs) / 1000
+    if (dayEndMs <= wmUs / 1000) {
       // watermark passed day end: every admissible event has arrived
-      state.remove()
       val (nSeg, twa) = integrate(pts)
       // a single-point day has no segment — the batch twin (WHERE dt IS
       // NOT NULL) drops it, so the stream emits nothing either
-      if (nSeg > 0) Iterator.single(ClosedTwa(key._1, key._2, nSeg, twa))
-      else Iterator.empty
-    } else {
-      state.update(TwaState(pts))
-      // close the day without new data once the watermark crosses day end
-      state.setTimeoutTimestamp(math.max(dayEndMs, wmMs + 1))
-      Iterator.empty
-    }
+      (Remove, if (nSeg > 0) Iterator.single(ClosedTwa(key._1, key._2, nSeg, twa)) else Iterator.empty)
+    } else (RearmAt(TwaState(pts), dayEndMs), Iterator.empty)
   }
 
   /** Streaming face: `events` must carry a watermarked TimestampType `ts`
@@ -73,13 +62,10 @@ object StatefulTwa {
   def twaStream(events: DataFrame): Dataset[ClosedTwa] = {
     val s = events.sparkSession
     import s.implicits._
-    events.selectExpr(
+    SealedFold(events.selectExpr(
         "user_id", "ts",
         "unix_micros(date_trunc('DAY', ts)) as day_us",
         "unix_micros(ts) as us", "event_id", "value")
-      .as[(Long, java.sql.Timestamp, Long, Long, Long, Double)]
-      .groupByKey(r => (r._1, r._3))
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(twaize)
+      .as[(Long, java.sql.Timestamp, Long, Long, Long, Double)])(r => (r._1, r._3), TwaState(Nil))(twaize)
   }
 }

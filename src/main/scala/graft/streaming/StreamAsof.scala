@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import SealedFold.{Hold, Next, RearmAt, Remove}
 
 /** STREAM-STREAM AS-OF enrichment (VERDICT r7 missing #4) — the streaming
   * face of the as-of family (AsofJoin.keyedAsof / plans.NativeAsof are the
@@ -14,8 +15,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * two-sided time bound, and as-of's "latest earlier row" is unbounded
   * lookback. The operator is therefore built on the custom-state tier:
   * both streams are tagged and unioned (the same union-carry idea as
-  * keyedAsof, lifted to streaming), grouped by key, and folded through
-  * `flatMapGroupsWithState` with an event-time timeout:
+  * keyedAsof, lifted to streaming) and folded per key:
   *
   *  - a probe at time t is SEALED once the watermark passes t — no
   *    reference row with ts <= t can legally arrive after that — and is
@@ -26,7 +26,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - reference history is pruned to the single latest row at-or-below
   *    the watermark plus everything above it — exactly what any still-open
   *    probe can reach, so per-key state is O(late window), not O(stream);
-  *  - keys with open probes arm a timeout at the earliest open probe's
+  *  - keys with open probes arm a timer at the earliest open probe's
   *    time, so sealing happens even when a key receives no further rows.
   *
   * At 100 TB/day the state store holds (per key) only the open-probe
@@ -38,7 +38,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object StreamAsof {
 
   /** `ts` stays in the row: the watermarked event-time column must reach
-    * the stateful operator for EventTimeTimeout to resolve. */
+    * the stateful operator for the event-time timeout to resolve. */
   case class AsofEvent(key: Long, ts: java.sql.Timestamp, tMicros: Long,
                        isRight: Boolean, probeId: Long, value: Double)
   case class AsofState(pending: List[(Long, Long)], // (t, probeId), open probes
@@ -48,16 +48,14 @@ object StreamAsof {
 
   /** Per-key fold: buffer arrivals, seal probes the watermark has passed,
     * prune reference history to what open probes can still reach. */
-  def enrichGroup(key: Long, it: Iterator[AsofEvent],
-                  state: GroupState[AsofState]): Iterator[Enriched] = {
-    val prev = state.getOption.getOrElse(AsofState(Nil, Nil))
+  private[graft] def enrichGroup(key: Long, prev: AsofState, it: Iterator[AsofEvent],
+                                 wmMicros: Long): (Next[AsofState], Iterator[Enriched]) = {
     var pending = prev.pending
     var rights = prev.rights
     it.foreach { e =>
       if (e.isRight) rights ::= (e.tMicros, e.value)
       else pending ::= (e.tMicros, e.probeId)
     }
-    val wmMicros = state.getCurrentWatermarkMs() * 1000L
     val (ripe, open) = pending.partition(_._1 <= wmMicros)
     val out = ripe.sortBy(p => (p._1, p._2)).map { case (t, id) =>
       val reachable = rights.filter(_._1 <= t)
@@ -70,15 +68,12 @@ object StreamAsof {
     val (below, above) = rights.partition(_._1 <= wmMicros)
     val keepBelow = if (below.isEmpty) Nil else List(below.maxBy(r => (r._1, r._2)))
     val next = AsofState(open, keepBelow ++ above)
-    if (next.pending.isEmpty && next.rights.isEmpty) state.remove()
-    else {
-      state.update(next)
-      // seal the earliest open probe as soon as the watermark passes it,
-      // even if this key never sees another row (open t > wm guarantees
-      // the timestamp is legal, i.e. strictly above the current watermark)
-      if (open.nonEmpty) state.setTimeoutTimestamp(open.map(_._1).min / 1000L + 1L)
-    }
-    out.iterator
+    (if (next.pending.isEmpty && next.rights.isEmpty) Remove
+     // seal the earliest open probe as soon as the watermark passes it,
+     // even if this key never sees another row
+     else if (open.nonEmpty) RearmAt(next, open.map(_._1).min / 1000L + 1L)
+     else Hold(next),
+      out.iterator)
   }
 
   /** Wire two watermarked streams into the stateful as-of enrichment.
@@ -97,13 +92,10 @@ object StreamAsof {
     val r = reference.select(
       col("user_id").as("key"), col("ts"),
       lit(true).as("isRight"), lit(-1L).as("probeId"), col("value"))
-    p.withWatermark("ts", delay)
+    SealedFold(p.withWatermark("ts", delay)
       .unionByName(r.withWatermark("ts", delay))
       .withColumn("tMicros", unix_micros(col("ts")))
       .select("key", "ts", "tMicros", "isRight", "probeId", "value")
-      .as[AsofEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(enrichGroup)
+      .as[AsofEvent])(_.key, AsofState(Nil, Nil))(enrichGroup)
   }
 }

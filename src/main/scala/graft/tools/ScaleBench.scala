@@ -3,6 +3,8 @@ package graft.tools
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -88,6 +90,18 @@ object ScaleBench {
     "q_stat_bootstrap_ci", "q_seq_entropy", "q_stat_mutual_info",
     "q_ops_fair_share", "q_rfm_segments", "q_stat_ks")
 
+  /** (total, steal) jiffies summed over all CPUs from `/proc/stat`, or
+    * None where it cannot be read; the steal share of a timed window is
+    * the steal delta over the total delta. */
+  def cpuTicks(): Option[(Long, Long)] =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try {
+        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
+        Some((f.sum, if (f.length > 7) f(7) else 0L))
+      } finally src.close()
+    } catch { case NonFatal(_) => None }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "BENCH_SCALE_r13.json"
@@ -102,15 +116,6 @@ object ScaleBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    def cpuTicks(): Option[(Long, Long)] =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try {
-          val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-          Some((f.sum, if (f.length > 7) f(7) else 0L))
-        } finally src.close()
-      } catch { case _: Throwable => None }
 
     def slice(factor: Int): String =
       if (factor == 1) sfDir

@@ -67,15 +67,6 @@ object StreamBench {
       .foreach(n => org.apache.logging.log4j.core.config.Configurator.setLevel(
         n, org.apache.logging.log4j.Level.OFF))
 
-    def cpuTicks(): Option[(Long, Long)] =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try {
-          val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-          Some((f.sum, if (f.length > 7) f(7) else 0L))
-        } finally src.close()
-      } catch { case _: Throwable => None }
-
     val rows = factors.flatMap { f =>
       val dir = if (f == 1) sfDir else s"/tmp/graft_scale_${f}x"
       // geofence joins the slice dir's (fixed) supplier fences per
@@ -104,14 +95,14 @@ object StreamBench {
         heads.zipWithIndex.foreach { case ((_, mk), i) =>
           run(spark, mk(spark, replay), s"warm$i")
         }
-        val t0 = cpuTicks()
+        val t0 = ScaleBench.cpuTicks()
         val timed = heads.map { case (name, mk) =>
           val w0 = System.nanoTime()
           val emitted = run(spark, mk(spark, replay), s"sb_${name}_$f")
           val sec = (System.nanoTime() - w0) / 1e9
           (name, sec, emitted)
         }
-        val t1 = cpuTicks()
+        val t1 = ScaleBench.cpuTicks()
         val stealPct = (t0, t1) match {
           case (Some((a, s0)), Some((b, s1))) if b > a => 100.0 * (s1 - s0) / (b - a)
           case _ => -1.0

@@ -100,20 +100,30 @@ class ArtifactStoreSpec extends SparkSuite {
     } finally deleteTree(work.toFile)
   }
 
-  test("src/main/scala keeps one cache mechanism: concurrent maps only in ArtifactStore") {
+  // Source scans: each mechanism has one owner file in src/main/scala, and
+  // its code forms (not prose about it) may appear nowhere else.
+  // (test name, pattern, owner file, failure message)
+  private val owners = Seq(
+    ("src/main/scala keeps one cache mechanism: concurrent maps only in ArtifactStore",
+      "TrieMap|ConcurrentHashMap|newSetFromMap", "ArtifactStore.scala", "a second cache mechanism"),
+    ("src/main/scala keeps one keyed-state mechanism: GroupState and *WithState calls only in SealedFold",
+      """GroupState\[|\.(flatMapGroupsWithState|mapGroupsWithState|transformWithState)\(""",
+      "SealedFold.scala", "keyed streaming state outside the sealed fold"))
+
+  for ((name, pattern, owner, what) <- owners) test(name) {
     val main = new File("src/main/scala")
     assert(main.isDirectory, s"run from the repository root (cwd ${new File(".").getAbsolutePath})")
     def files(d: File): Seq[File] =
       Option(d.listFiles).toSeq.flatten.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val banned = "TrieMap|ConcurrentHashMap|newSetFromMap".r
-    val hits = files(main).filter(f => f.getName.endsWith(".scala") && f.getName != "ArtifactStore.scala")
+    val banned = pattern.r
+    val hits = files(main).filter(f => f.getName.endsWith(".scala") && f.getName != owner)
       .flatMap { f =>
         val text = new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
         text.linesIterator.zipWithIndex.collect {
           case (l, i) if banned.findFirstIn(l).isDefined => s"${f.getPath}:${i + 1}: ${l.trim}"
         }
       }
-    assert(hits.isEmpty, "a second cache mechanism; route it through ArtifactStore:\n" +
+    assert(hits.isEmpty, s"$what; route it through ${owner.stripSuffix(".scala")}:\n" +
       hits.mkString("\n"))
   }
 
