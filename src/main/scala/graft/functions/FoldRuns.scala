@@ -7,6 +7,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+/** The folds' scalar parameters must be non-null literals; checking them
+  * at analysis keeps a column or a null (which would unbox to 0) from
+  * reaching the task-time lazy vals. */
+private object FoldArgs {
+  def literals(fn: String, args: (String, Expression)*): TypeCheckResult =
+    args.collectFirst {
+      case (n, e) if !e.foldable => s"$fn: $n must be a literal"
+      case (n, e) if e.eval() == null => s"$fn: $n must not be null"
+    }.fold[TypeCheckResult](TypeCheckResult.TypeCheckSuccess)(TypeCheckResult.TypeCheckFailure)
+}
+
 /** Native generator `graft_sessionize(es, gap, cap)`: gap+cap
   * sessionization of ONE user's time-sorted event list, emitted directly
   * as per-SESSION rows (sst, n_events, dur_s).
@@ -40,7 +51,7 @@ case class SessionizeFold(es: Expression, gapExpr: Expression, capExpr: Expressi
         // ADVICE r17: eval hardcodes getStruct(i, 2) — pin the field count
         if fs.length == 2 && fs.head.dataType == LongType &&
           gapExpr.dataType == LongType && capExpr.dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
+      FoldArgs.literals(prettyName, "gap" -> gapExpr, "cap" -> capExpr)
     case other => TypeCheckResult.TypeCheckFailure(
       "graft_sessionize expects (array<struct<tus:bigint, _:bigint>>, bigint gap, bigint cap), got " +
         children.map(_.dataType.catalogString).mkString(", "))
@@ -53,11 +64,7 @@ case class SessionizeFold(es: Expression, gapExpr: Expression, capExpr: Expressi
 
   override def prettyName: String = "graft_sessionize"
 
-  @transient private lazy val gapV: Long = {
-    require(gapExpr.foldable && capExpr.foldable,
-      "graft_sessionize: gap and cap must be literals")
-    gapExpr.eval().asInstanceOf[Long]
-  }
+  @transient private lazy val gapV: Long = gapExpr.eval().asInstanceOf[Long]
   @transient private lazy val capV: Long = capExpr.eval().asInstanceOf[Long]
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
@@ -110,7 +117,7 @@ case class PackBinsFold(ds: Expression, cExpr: Expression)
     case ArrayType(StructType(fs), _)
         if fs.length == 2 && fs.forall(_.dataType == LongType) &&
           cExpr.dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
+      FoldArgs.literals(prettyName, "C" -> cExpr)
     case other => TypeCheckResult.TypeCheckFailure(
       "graft_pack_bins expects (array<struct<doc_id:bigint, tok:bigint>>, bigint C), got " +
         children.map(_.dataType.catalogString).mkString(", "))
@@ -123,10 +130,7 @@ case class PackBinsFold(ds: Expression, cExpr: Expression)
 
   override def prettyName: String = "graft_pack_bins"
 
-  @transient private lazy val cV: Long = {
-    require(cExpr.foldable, "graft_pack_bins: C must be a literal")
-    cExpr.eval().asInstanceOf[Long]
-  }
+  @transient private lazy val cV: Long = cExpr.eval().asInstanceOf[Long]
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val a0 = ds.eval(input)
@@ -179,7 +183,7 @@ case class RateLimitFold(es: Expression, capExpr: Expression, costExpr: Expressi
     case ArrayType(StructType(fs), _)
         if fs.length == 2 && fs.head.dataType == LongType &&
           capExpr.dataType == LongType && costExpr.dataType == LongType =>
-      TypeCheckResult.TypeCheckSuccess
+      FoldArgs.literals(prettyName, "cap" -> capExpr, "cost" -> costExpr)
     case _ => TypeCheckResult.TypeCheckFailure(
       "graft_rate_limit expects (array<struct<tus:bigint, _:bigint>>, bigint cap, bigint cost), got " +
         children.map(_.dataType.catalogString).mkString(", "))
@@ -191,11 +195,7 @@ case class RateLimitFold(es: Expression, capExpr: Expression, costExpr: Expressi
 
   override def prettyName: String = "graft_rate_limit"
 
-  @transient private lazy val capV: Long = {
-    require(capExpr.foldable && costExpr.foldable,
-      "graft_rate_limit: cap and cost must be literals")
-    capExpr.eval().asInstanceOf[Long]
-  }
+  @transient private lazy val capV: Long = capExpr.eval().asInstanceOf[Long]
   @transient private lazy val costV: Long = costExpr.eval().asInstanceOf[Long]
 
   override def eval(input: InternalRow): Any = {

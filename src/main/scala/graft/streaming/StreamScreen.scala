@@ -46,7 +46,7 @@ object StreamScreen {
                  maxFilesPerTrigger: Int = 1,
                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val schema = s.read.parquet(feedDir).schema
-    s.readStream.schema(schema)
+    LocalCheckpointFs.readStream(s).schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(feedDir)
       .writeStream

@@ -57,7 +57,7 @@ object StreamVectors {
                        trigger: Trigger = Trigger.AvailableNow(),
                        maxTombstonesPerBatch: Long = MaxTombstonesPerBatch): StreamingQuery = {
     val schema = s.read.parquet(feedDir).schema
-    s.readStream.schema(schema)
+    LocalCheckpointFs.readStream(s).schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(feedDir)
       .writeStream

@@ -48,7 +48,7 @@ object StreamingQueries {
   def eventsStream(s: SparkSession, dir: String,
                    maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val reader = s.readStream.schema(rawSchema)
+    val reader = LocalCheckpointFs.readStream(s).schema(rawSchema)
     val withOpt = maxFilesPerTrigger.fold(reader)(n =>
       reader.option("maxFilesPerTrigger", n.toString))
     withOpt.parquet(dir)

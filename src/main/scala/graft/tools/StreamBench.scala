@@ -25,9 +25,12 @@ import graft.streaming.{StreamingQueries, StreamReplay}
   *
   * Reading it: per-trigger overhead (~a bench floor per micro-batch ×
   * `files` batches) dominates at 1× and amortizes with volume — rows/sec
-  * should RISE with the factor until state-store commit bandwidth binds,
-  * mirroring the batch ScaleBench amortization story on the streaming
-  * axis.
+  * should RISE with the factor, mirroring the batch ScaleBench
+  * amortization story on the streaming axis. Each head also records the
+  * durable-commit layer summed over its micro-batches: `state_commit_ms`
+  * (state-store commits) and `wal_commit_ms` (offset and commit logs).
+  * When these two track the wall time, checkpoint I/O binds, not state
+  * size or compute.
   *
   * Usage: runMain graft.tools.StreamBench [sfDir] [outJson] [factor...]
   * Factors > 1 read the ScaleBench slice dirs (/tmp/graft_scale_<F>x —
@@ -98,9 +101,9 @@ object StreamBench {
         val t0 = ScaleBench.cpuTicks()
         val timed = heads.map { case (name, mk) =>
           val w0 = System.nanoTime()
-          val emitted = run(spark, mk(spark, replay), s"sb_${name}_$f")
+          val (emitted, commit) = run(spark, mk(spark, replay), s"sb_${name}_$f")
           val sec = (System.nanoTime() - w0) / 1e9
-          (name, sec, emitted)
+          (name, sec, emitted, commit)
         }
         val t1 = ScaleBench.cpuTicks()
         val stealPct = (t0, t1) match {
@@ -111,8 +114,9 @@ object StreamBench {
       }
     }
     val body = rows.map { case (f, n, steal, timed) =>
-      val qj = timed.map { case (name, sec, emitted) =>
-        f""""$name":{"sec":$sec%.3f,"rows_per_sec":${n / sec}%.0f,"emitted":$emitted}"""
+      val qj = timed.map { case (name, sec, emitted, (stateMs, walMs)) =>
+        f""""$name":{"sec":$sec%.3f,"rows_per_sec":${n / sec}%.0f,""" +
+          s""""state_commit_ms":$stateMs,"wal_commit_ms":$walMs,"emitted":$emitted}"""
       }.mkString(",")
       f"""{"factor":$f,"input_rows":$n,"microbatches":$files,"steal_pct":$steal%.3f,"queries":{$qj}}"""
     }.mkString(",")
@@ -127,12 +131,13 @@ object StreamBench {
     spark.stop()
   }
 
-  /** Run a finite streaming frame to completion; returns emitted rows.
+  /** Run a finite streaming frame to completion; returns emitted rows and
+    * (state-store commit ms, WAL commit ms) summed over its progress.
     * Counts through foreachBatch (distributed count per micro-batch) —
     * a memory sink would collect every emitted row to the driver, which
     * OOMs at the 100× factor (10M dedup pass-throughs). */
   private def run(s: SparkSession, df: org.apache.spark.sql.DataFrame,
-                  name: String): Long = {
+                  name: String): (Long, (Long, Long)) = {
     val emitted = new java.util.concurrent.atomic.LongAdder
     val q = df.writeStream
       .option("checkpointLocation",
@@ -142,6 +147,9 @@ object StreamBench {
       }
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    emitted.sum()
+    val progress = q.recentProgress.toSeq
+    val stateMs = progress.flatMap(_.stateOperators.map(_.commitTimeMs)).sum
+    val walMs = progress.flatMap(p => Option(p.durationMs.get("walCommit")).map(_.longValue)).sum
+    (emitted.sum(), (stateMs, walMs))
   }
 }

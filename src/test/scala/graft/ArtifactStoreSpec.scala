@@ -108,7 +108,10 @@ class ArtifactStoreSpec extends SparkSuite {
       "TrieMap|ConcurrentHashMap|newSetFromMap", "ArtifactStore.scala", "a second cache mechanism"),
     ("src/main/scala keeps one keyed-state mechanism: GroupState and *WithState calls only in SealedFold",
       """GroupState\[|\.(flatMapGroupsWithState|mapGroupsWithState|transformWithState)\(""",
-      "SealedFold.scala", "keyed streaming state outside the sealed fold"))
+      "SealedFold.scala", "keyed streaming state outside the sealed fold"),
+    ("src/main/scala keeps one stream reader: .readStream only in LocalCheckpointFs",
+      """(?<!LocalCheckpointFs)\.readStream\b""",
+      "LocalCheckpointFs.scala", "a stream reader that skips the checkpoint filesystem"))
 
   for ((name, pattern, owner, what) <- owners) test(name) {
     val main = new File("src/main/scala")

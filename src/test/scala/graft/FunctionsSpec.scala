@@ -429,6 +429,25 @@ class FunctionsSpec extends SparkSuite {
     assert(got.count(_._1 == "b") >= 3, "the oversized doc must break shard b into bins")
   }
 
+  test("graft_rate_limit, graft_sessionize and graft_pack_bins reject a column or null parameter at analysis") {
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    val df = Seq((1L, 10L, 2L)).toDF("k", "a", "b")
+      .groupBy("k").agg(collect_list(struct(col("a"), col("b"))).as("es"), max("a").as("c"))
+    val nul = "cast(null as bigint)"
+    val calls = Seq(
+      s"graft_rate_limit(es, c, 5L)" -> "cap must be a literal",
+      s"graft_rate_limit(es, 5L, $nul)" -> "cost must not be null",
+      s"graft_sessionize(es, 5L, c)" -> "cap must be a literal",
+      s"graft_sessionize(es, $nul, 5L)" -> "gap must not be null",
+      s"graft_pack_bins(es, c)" -> "C must be a literal",
+      s"graft_pack_bins(es, $nul)" -> "C must not be null")
+    calls.foreach { case (call, why) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.select(expr(call)))
+      assert(e.getMessage.contains(why), s"$call: ${e.getMessage}")
+    }
+  }
+
   test("graft_gram ≡ the posexplode self-join Gram (negatives, nulls, empty input)") {
     GraftFunctions.register(spark)
     import spark.implicits._
