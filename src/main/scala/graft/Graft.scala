@@ -20,7 +20,10 @@ import org.apache.spark.sql.SparkSession
   * `spark.sql.extensions=graft.functions.GraftExtensions` the functions
   * (and the native as-of join strategy + derived-partition-filter rule)
   * are injected at session build for every user, and the views come from
-  * the real catalog (saveAsTable) instead of temp views. SqlSpec
+  * the real catalog (saveAsTable) instead of temp views. The extension
+  * also defaults the codegen cache to `GraftExtensions.CodegenCacheEntries`
+  * and turns artifact isolation off, so a generated class compiles once
+  * per JVM rather than once per pass or per streaming query. SqlSpec
   * exercises the surface end-to-end against DataFrame-API twins.
   */
 object Graft {

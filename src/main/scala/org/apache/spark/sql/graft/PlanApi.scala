@@ -1,13 +1,15 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.SparkStrategy
 
-/** The two `private[sql]` touch points a library-defined operator needs:
-  * turning a hand-built LogicalPlan into a DataFrame, and registering a
-  * planner strategy on a live session. Isolated here (the standard
+/** The `private[sql]`/`private[spark]` touch points graft needs: turning
+  * a hand-built LogicalPlan into a DataFrame, registering a planner
+  * strategy on a live session, and writing a default into the conf of the
+  * SparkContext a session is being built on. Isolated here (the standard
   * spark-namespace shim pattern) so graft.* stays on public API; Spark 4
   * split Dataset into api/classic, hence the casts to the classic
   * implementations that actually carry `ofRows`/`experimental`. */
@@ -60,4 +62,13 @@ object PlanApi {
     cs.experimental.extraOptimizations =
       cs.experimental.extraOptimizations.filterNot(_ == r)
   }
+
+  /** Set `key` on the active SparkContext's conf unless it is set there
+    * already (`SparkContext.getActive` and `.conf` are `private[spark]`).
+    * Called from a `spark.sql.extensions` entry, which runs after the
+    * context exists and before the session reads that conf into its own:
+    * static SQL conf written here reaches the session, and a value the
+    * user put on the builder wins. */
+  def setIfMissing(key: String, value: String): Unit =
+    SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
 }

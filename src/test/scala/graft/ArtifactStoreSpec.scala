@@ -111,7 +111,10 @@ class ArtifactStoreSpec extends SparkSuite {
       "SealedFold.scala", "keyed streaming state outside the sealed fold"),
     ("src/main/scala keeps one stream reader: .readStream only in LocalCheckpointFs",
       """(?<!LocalCheckpointFs)\.readStream\b""",
-      "LocalCheckpointFs.scala", "a stream reader that skips the checkpoint filesystem"))
+      "LocalCheckpointFs.scala", "a stream reader that skips the checkpoint filesystem"),
+    ("src/main/scala sets the codegen cache and artifact isolation in one place: GraftExtensions",
+      """codegen\.cache\.maxEntries|artifact\.isolation""",
+      "GraftFunctions.scala", "a second place that sets graft's session defaults"))
 
   for ((name, pattern, owner, what) <- owners) test(name) {
     val main = new File("src/main/scala")
