@@ -1,9 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // ADVICE r7: with SPARK_GRAFT_ROUND unset the round is inferred from
     // max(BENCH_r*.json)+1, which mis-numbers a re-run performed after the
     // driver has written the current round's file. Warn up-front (far from
@@ -12,107 +11,27 @@ object Bench {
       System.err.println("[bench] SPARK_GRAFT_ROUND unset - round number inferred " +
         "from BENCH_r*.json; a post-round re-run will be numbered into the NEXT round. " +
         "Export SPARK_GRAFT_ROUND to pin it.")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // A/B knob: SPARK_GRAFT_AQE=off disables adaptive execution to
-      // measure its per-stage re-plan latency at interactive scale
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "on") != "off")
-      // timestamp NTZ casts in Tables are wall-clock identities ONLY under
-      // UTC — must match Verify's session config on any host timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // graft's session defaults: a generated-class cache sized for the
-      // catalog and stream tasks on the shared executor class loader
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session before timing: run EVERY catalog query once at
-    // sf0.001 — JVM/JIT warmup plus Janino codegen for each plan shape
-    // happen outside the timed loop. The codegen cache hits on the timed
-    // run where the sf0.1 plan generates the same source as the sf0.001
-    // one; it holds the whole catalog only because GraftExtensions sizes
-    // it (at Spark's 100 entries nearly every class recompiled). The timed
+    val spark = Harness.session()
+    // Warm the session before timing: run EVERY catalog query once on the
+    // sf0.001 tables beside sfDir — JVM/JIT warmup plus Janino codegen
+    // for each plan shape happen outside the timed loop. The codegen cache
+    // holds the whole catalog only because GraftExtensions sizes it (at
+    // Spark's 100 entries nearly every class recompiled). The timed
     // numbers then measure steady-state operator execution, which is what the
     // cross-round regression axis tracks; BASELINE.md documents the
     // methodology asymmetry vs the DuckDB oracle.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => () }
-    }
-    // Pin the shared tables in memory: Tables.* builds identical logical
-    // plans on every call, so the CacheManager substitutes the cached
-    // relation in every query — the bench then measures operator execution,
-    // not 55 re-reads of the same parquet (the DuckDB baseline gets the
-    // same effect from the OS page cache + its buffer pool).
+    Harness.warm(spark, sfDir, SparkEntry.queries.keys)
+    // Pin the ingest-time state (Harness.pin): the bench then measures
+    // operator execution, not 55 re-reads of the same parquet (the DuckDB
+    // baseline gets the same effect from the OS page cache + its buffer
+    // pool). Each pin's failure is reported by name, so its cost cannot
+    // move into the timed region unseen.
     // VERDICT r12 #1: eviction mid-run bleeds re-materialization into a
     // query's time invisibly (the 17-40× selective inflation steal_pct
-    // missed). rewarmCaches() re-counts every pinned relation — called
-    // whenever storage occupancy drops below 90% of the post-pin
-    // baseline, so evicted blocks re-load OUTSIDE the timed window.
-    val cachedTables = Seq(Tables.lineitem _, Tables.orders _, Tables.customer _,
-      Tables.supplier _, Tables.part _, Tables.nation _, Tables.region _,
-      Tables.events _, Tables.documents _, Tables.embeddings _)
-    var cachedDedupFrames: Seq[org.apache.spark.sql.DataFrame] = Nil
-    def rewarmCaches(): Unit = {
-      cachedTables.foreach { t => t(spark, sfDir).count() }
-      cachedDedupFrames.foreach(_.count())
-      ()
-    }
-    try {
-      cachedTables.foreach { t => t(spark, sfDir).cache().count() }
-      // The IVF index is ingest-time state like the table cache: build it
-      // for the bench tables once so q_sim_ann_ivf measures the probe
-      // (the memoized IvfModel makes the query reuse this build).
-      graft.operators.Similarity
-        .ivfIndex(Tables.embeddings(spark, sfDir), "vec_id", "embedding", k = 8, iters = 1)
-        ._1.count()
-      // Partitioned layouts are likewise ingest-time state: materialize the
-      // by-day and by-bucket datasets once so the ingest queries measure
-      // the pruned read, not the one-off write.
-      graft.sources.Ingest.eventsByDay(spark, sfDir)
-      graft.sources.Ingest.embeddingsByBucket(spark, sfDir, nPlanes = 6)
-      graft.sources.Ingest.bucketedOrdersCustomer(spark, sfDir)
-      graft.sources.Ingest.eventsZordered(spark, sfDir)
-      graft.sources.Ingest.eventsHourlyRollup(spark, sfDir)
-      graft.sources.Ingest.eventsWithRetention(spark, sfDir)
-      graft.sources.Ingest.eventsCompacted(spark, sfDir)
-      graft.sources.Ingest.eventsTextFormats(spark, sfDir)
-      graft.sources.Ingest.eventsByDayTyped(spark, sfDir)
-      graft.sources.Ingest.eventsTiered(spark, sfDir)
-      graft.sources.Ingest.docsByShard(spark, sfDir)
-      // mutation fixtures (GDPR delete, CDC upsert) are ingest-time state:
-      // corpus + index build + the one-off rewrite happen here, timed
-      // passes measure the post-mutation reads
-      graft.sources.Ingest.annCdcMaintained(spark, sfDir)
-      graft.sources.Ingest.annStreamMaintained(spark, sfDir)
-      graft.sources.Ingest.ivmJoinPairs(spark, sfDir)
-      graft.sources.Ingest.ivmJoinDeleted(spark, sfDir)
-      graft.sources.Ingest.gdprDeleted(spark, sfDir)
-      graft.sources.Ingest.cdcUpserted(spark, sfDir)
-      graft.sources.Ingest.eventsGdprDeleted(spark, sfDir)
-      graft.sources.Ingest.eventsCorrected(spark, sfDir)
-      // Dedup sketches are ingest-time state too: a real pipeline computes
-      // MinHash signatures / shingle sets once at ingest and persists them
-      // next to the corpus. Pin both plan shapes the LSH queries build
-      // (full table and id+text projection) so CacheManager substitutes.
-      val docs = graft.Tables.documents(spark, sfDir)
-      import org.apache.spark.sql.functions.col
-      cachedDedupFrames = Seq(
-        // synthetic media BYTES are ingest-time state like the dedup
-        // sketches: a real pipeline stores payloads once and queries
-        // decode them — pin the encoded corpora (memoized Datasets, so
-        // the catalog queries' plans substitute) and let the timed
-        // passes measure the DECODE stage
-        graft.operators.Multimodal.syntheticImages(spark, sfDir).toDF(),
-        graft.operators.Multimodal.syntheticWavs(spark, sfDir).toDF(),
-        graft.operators.Dedup.minHashFromText(docs, "text", 8, 3),
-        graft.operators.Dedup.minHashFromText(
-          docs.select(col("doc_id"), col("text")), "text", 8, 3),
-        graft.operators.Dedup.withShinglesFast(docs, "text", 3))
-      cachedDedupFrames.foreach(df => df.cache().count())
-    } catch { case _: Throwable => () }
+    // missed). Re-counting the pinned frames is called whenever storage
+    // occupancy drops below 90% of the post-pin baseline, so evicted
+    // blocks re-load OUTSIDE the timed window.
+    val pinned = Harness.pin(spark, sfDir)
     // VERDICT r11 "what's wrong" #2: the record protocol had no
     // machine-readable contention defense — a CPU-steal burst during the
     // driver run produced a 12.7× outlier on the permanent record and only
@@ -120,19 +39,11 @@ object Bench {
     // aggregate CPU ticks around the timed window and emits steal_pct (plus
     // the end-of-run 1-min load average) in BOTH the driver line and
     // BENCH_LOCAL_r{N}.json, so a contended record self-identifies.
-    def cpuTicks(): Option[(Long, Long)] =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        try {
-          val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-          Some((f.sum, if (f.length > 7) f(7) else 0L))
-        } finally src.close()
-      } catch { case _: Throwable => None }
     def loadAvg(): Double =
       try {
         val src = scala.io.Source.fromFile("/proc/loadavg")
         try src.getLines().next().split("\\s+")(0).toDouble finally src.close()
-      } catch { case _: Throwable => -1.0 }
+      } catch { case NonFatal(_) => -1.0 }
     // VERDICT r12 #1: steal_pct catches hypervisor steal but not IN-JVM
     // disturbance — the r12 driver record carried a selective 17-40×
     // per-query inflation (GC storm / cache eviction in a long-lived
@@ -141,7 +52,7 @@ object Bench {
     //      land in BENCH_LOCAL_r{N}.json and pass totals in the driver
     //      line — a stall with a matching gc delta self-diagnoses;
     //  (b) storage-memory occupancy is sampled before every query; a drop
-    //      below 90% of the post-pin baseline triggers rewarmCaches(), so
+    //      below 90% of the post-pin baseline re-counts the pinned frames, so
     //      eviction re-warms OUTSIDE the timed window (rewarm count and
     //      end-of-run occupancy go in both records);
     //  (c) keep-best protocol below protects a better committed record.
@@ -162,7 +73,7 @@ object Bench {
       dt
     }
     def calibNMs(): Long = {
-      val n = cpus.toInt
+      val n = Harness.cpus
       val t0 = System.nanoTime()
       val ts = (1 to n).map { k =>
         new Thread(() => {
@@ -187,34 +98,38 @@ object Bench {
       spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
     val storageBaseline = storageUsed()
     var rewarms = 0
-    val ticks0 = cpuTicks()
+    val ticks0 = Harness.cpuTicks()
     // Two timed passes per query, report the min: a single OS stall or GC
     // pause otherwise lands a 30× outlier on the driver's permanent record
     // (r3's 12.3 s ts_tumbling), and round-over-round deltas drown in the
     // box's documented ±25% single-sample noise. Min-of-2 bounds one-off
     // stalls; steady-state regressions still show in both passes.
     // Methodology change recorded in BASELINE.md (r6).
-    val timed = SparkEntry.queries.map { case (name, fn) =>
+    // A query that throws is not a time: it is left out of every total
+    // and of n_queries, and recorded by name and exception class in
+    // "errors" (BENCH_LOCAL) and "err" (driver line).
+    val runs = SparkEntry.queries.map { case (name, fn) =>
       if (storageBaseline > 0 && storageUsed() < (storageBaseline * 9) / 10) {
         rewarms += 1
-        try rewarmCaches() catch { case _: Throwable => () }
+        try pinned.foreach(_.count())
+        catch { case NonFatal(e) => System.err.println(s"[bench] rewarm failed: $e") }
       }
-      val passes = Seq.fill(2) {
+      name -> (try Right(Seq.fill(2) {
         val g0 = gcMs()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        fn(spark, sfDir).count()
         ((System.nanoTime() - t0) / 1e9, gcMs() - g0)
-      }
-      name -> passes
+      }) catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        Left(e.getClass.getName)
+      })
     }
-    val ticks1 = cpuTicks()
+    val timed = runs.collect { case (name, Right(passes)) => name -> passes }
+    val errors = runs.collect { case (name, Left(cls)) => name -> cls }.toSeq.sorted
+    val ticks1 = Harness.cpuTicks()
     val storageEndMb = storageUsed() / (1024 * 1024)
     val (cal1b, calNb) = (calib1Ms(), calibNMs())
-    val stealPct = (ticks0, ticks1) match {
-      case (Some((t0v, s0)), Some((t1v, s1))) if t1v > t0v =>
-        100.0 * (s1 - s0) / (t1v - t0v)
-      case _ => -1.0 // /proc/stat unreadable: flag, don't fake a clean 0
-    }
+    val stealPct = Harness.stealPct(ticks0, ticks1)
     val load1 = loadAvg()
     val results = timed.map { case (name, ts) => name -> ts.map(_._1).min }
     val passTotals = Seq(0, 1).map(i => timed.values.map(_(i)._1).sum)
@@ -279,11 +194,13 @@ object Bench {
           .collect { case re(n) => n.toInt }
         (if (seen.isEmpty) 0 else seen.max + 1, "inferred")
     }
+    val errorsJson = errors.map { case (k, cls) => s"""{"query":"$k","error":"$cls"}""" }
+      .mkString("[", ",", "]")
     val localArtifact = {
       val qs = timed.toSeq.sortBy(_._1).map { case (k, ts) =>
         f""""$k":{"p1":${ts.head._1}%.6f,"p2":${ts(1)._1}%.6f,"min":${ts.map(_._1).min}%.6f,"gc1":${ts.head._2},"gc2":${ts(1)._2}}"""
       }.mkString("{\n  ", ",\n  ", "\n}")
-      f"""{"round":$round,"round_source":"$roundSource","sf":"$sfTag","n_queries":${results.size},"pass1_total":${passTotals.head}%.4f,"pass2_total":${passTotals(1)}%.4f,"min_total":$total%.4f,"steal_pct":$stealPct%.3f,"loadavg_end":$load1%.2f,"gc1_total_ms":${gcTotals.head},"gc2_total_ms":${gcTotals(1)},"rewarms":$rewarms,"storage_end_mb":$storageEndMb,"cal1_ms":[$cal1a,$cal1b],"calN_ms":[$calNa,$calNb],
+      f"""{"round":$round,"round_source":"$roundSource","sf":"$sfTag","n_queries":${results.size},"pass1_total":${passTotals.head}%.4f,"pass2_total":${passTotals(1)}%.4f,"min_total":$total%.4f,"steal_pct":$stealPct%.3f,"loadavg_end":$load1%.2f,"gc1_total_ms":${gcTotals.head},"gc2_total_ms":${gcTotals(1)},"rewarms":$rewarms,"storage_end_mb":$storageEndMb,"cal1_ms":[$cal1a,$cal1b],"calN_ms":[$calNa,$calNb],"errors":$errorsJson,
 "queries":$qs}
 """
     }
@@ -297,7 +214,7 @@ object Bench {
     val existingRecord: Option[String] =
       try Some(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(localPath)), "UTF-8"))
-      catch { case _: Throwable => None }
+      catch { case NonFatal(_) => None }
     val existingBest: Option[Double] = existingRecord.flatMap(s =>
       """"min_total":([0-9.]+)""".r.findFirstMatchIn(s).map(_.group(1).toDouble))
     // totals are only comparable over the SAME catalog: when the query set
@@ -305,17 +222,18 @@ object Bench {
     // overwrite rather than sidecar. ADVICE r13: the record carries an
     // explicit n_queries field (key-shape regexes undercounted on any
     // rename/reorder, silently disabling keep-best); the regex fallback
-    // only serves records written before the field existed.
+    // only serves records written before the field existed. A run that
+    // times fewer queries than the record (some threw) never displaces it.
     val existingN: Option[Int] = existingRecord.map(s =>
       """"n_queries":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
         .getOrElse(""""q_[a-z0-9_]+":\{"p1"""".r.findAllMatchIn(s).size))
-    val keepExisting =
-      existingBest.exists(_ < total) && existingN.contains(results.size)
+    val keepExisting = existingN.exists(n =>
+      n > results.size || (n == results.size && existingBest.exists(_ < total)))
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(
         if (keepExisting) localPath + ".contended" else localPath),
       localArtifact.getBytes("UTF-8"))
-    catch { case _: Throwable => () } // read-only cwd must not kill the bench
+    catch { case NonFatal(_) => () } // read-only cwd must not kill the bench
     // VERDICT r7 "what's wrong" #1: at 144 keys even the all-integer tier
     // overflowed the driver's 2000-char tail (2201 chars), cutting the line's
     // HEAD — value/p1/p2 — and leaving BENCH_r07 unparseable. New shape:
@@ -327,13 +245,13 @@ object Bench {
     // committed BENCH_LOCAL_r{N}.json as before.
     val sorted = results.toSeq.sortBy { case (k, v) => (-v, k) }
     // best: the committed record this run refused to overwrite (keep-best)
-    val bestField = if (keepExisting) f""","best":${existingBest.get}%.1f""" else ""
+    val bestField = existingBest.filter(_ => keepExisting).fold("")(b => f""","best":$b%.1f""")
     def lineFor(n: Int): String = {
       val (shown, rest) = sorted.splitAt(n)
       val qs = shown.map { case (k, v) => "\"" + shortKey(k) + "\":" + fmt(2)(v) }
         .mkString("{", ",", "}")
       val fast = f""""fast":{"n":${rest.size},"sum":${rest.map(_._2).sum}%.2f}"""
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","p1":${passTotals.head}%.1f,"p2":${passTotals(1)}%.1f,"steal":$stealPct%.2f,"load":$load1%.1f,"gc1":${gcTotals.head},"gc2":${gcTotals(1)},"rw":$rewarms,"stmb":$storageEndMb,"cal1":$cal1b,"calN":$calNb$bestField,"queries":$qs,$fast,"sf":"$sfTag"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","p1":${passTotals.head}%.1f,"p2":${passTotals(1)}%.1f,"steal":$stealPct%.2f,"load":$load1%.1f,"gc1":${gcTotals.head},"gc2":${gcTotals(1)},"rw":$rewarms,"stmb":$storageEndMb,"cal1":$cal1b,"calN":$calNb$bestField,"err":${errors.size},"queries":$qs,$fast,"sf":"$sfTag"}"""
     }
     // 1900-char budget leaves ~100 chars of tail slack for sbt's trailing
     // "[success]" line plus timing-digit variance across runs.

@@ -4,8 +4,8 @@ package graft.functions
   * public-domain constants and round structure).
   *
   * Why it exists: the minhash sketch is the measured wall of the dedup
-  * cascade at the 100M-row slice (62.8 s of an ~85 s head — ProbeDedup
-  * r15), and the cost is NOT the MD5 rounds but the per-shingle
+  * cascade at the 100M-row slice (62.8 s of an ~85 s head in the round-15
+  * dedup profile), and the cost is NOT the MD5 rounds but the per-shingle
   * allocation storm of the MessageDigest path (StringBuilder → String →
   * getBytes → digest byte[16], ~2 billion short-lived objects per 5M-doc
   * slice). This class hashes a caller-owned byte buffer in place and

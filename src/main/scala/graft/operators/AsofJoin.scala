@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   *    operator (LogicalPlan + SparkStrategy + SparkPlan) with SortMergeJoin
   *    geometry and an O(1)-state two-pointer merge; carries every right
   *    column, unlike keyedAsof's single value column. AsofJoinSpec holds
-  *    the two result-equal. Measured (AsofBench, sf0.1): keyedAsof's
+  *    the two result-equal. Measured (round 3 micro-bench, sf0.1): keyedAsof's
   *    codegen'd window is ~2× faster, so it remains the default; the
   *    native op is the template for semantics windows can't express.
   *

@@ -228,7 +228,7 @@ object Dedup {
     * PERSISTS its signature index"): the sketch subtree feeds banding
     * AND both screen sides, and without materialization each consumer
     * re-sketches the corpus — the measured wall of the 100M-doc slice
-    * (ProbeDedup r15). Checkpointed state is (id, sig): ~8·eh bytes/doc,
+    * (round-15 dedup profile). Checkpointed state is (id, sig): ~8·eh bytes/doc,
     * executor-local, corpus-linear. */
   private def sketchExtended(docs: DataFrame, idCol: String, textCol: String,
                              eh: Int, n: Int): DataFrame = {

@@ -130,7 +130,7 @@ object Rank {
     * serve every dimension: 3 jobs for all dims where the per-dim path
     * pays 2 jobs (plus a range-sampling pass) EACH — and sub-0.3 s
     * queries are job-floor-bound, so jobs are the unit that matters
-    * (PlanAudit r15). Exactness: negation and the long→double cast are
+    * (round-15 job-count audit). Exactness: negation and the long→double cast are
     * order-exact (|metric| ≤ 2^53 — counts, day diffs and pre-rounded
     * sums; the tie column must already be LongType), so the fused order
     * is the dim's order and the cuts are the same rows the per-dim

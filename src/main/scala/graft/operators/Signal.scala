@@ -316,7 +316,7 @@ object Signal {
     * lies. The median is pre-rounded before the deviation pass so both
     * engines take identical inputs into the second quantile.
     *
-    * Round 15 (PlanAudit job-count pass): both exact percentiles come
+    * Round 15 (job-count audit): both exact percentiles come
     * from ONE custom hash aggregate (graft_med_mad — packed-double
     * buffers, concat merge, both quantiles at eval; MedMadAgg). The
     * previous shape scanned events twice and shipped per-group value

@@ -164,7 +164,7 @@ object Stats {
     * 6 dp. Zero-margin cells are excluded (the textbook convention —
     * their expected count is undefined).
     *
-    * Round 15 (PlanAudit job-count pass): ONE hash aggregate reduces the
+    * Round 15 (job-count audit): ONE hash aggregate reduces the
     * scan to the ≤ types×7 observed grid, which is collected and folded
     * driver-side — marginals, totals, cells, χ², V — exactly the
     * qStatMutualInfo device; the previous shape paid three extra

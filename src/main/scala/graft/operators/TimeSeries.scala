@@ -212,7 +212,7 @@ object TimeSeries {
       .agg(Num.roundd(sum("value"), 2).as("asv"))
     // r18: a rotate pin here was measured and REJECTED (0.41→0.59 s
     // lerp, 0.17→0.43 s locf): ReuseExchange already dedupes the corpus
-    // aggregate across the Interpolate consumers (PlanAudit scans=1), so
+    // aggregate across the Interpolate consumers (r18 plan audit: scans=1), so
     // the pin added a materialization job without removing corpus work.
     hours.join(agg, col("h") === col("ah"), "left")
   }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.graft.PlanApi
   * construction, every right column carried without keyedAsof's
   * pack-into-one-column contract or union materialization.
   *
-  * Honest measurement (graft.tools.AsofBench, sf0.1, 95k probes × 100k
+  * Honest measurement (round 3's as-of micro-bench, sf0.1, 95k probes × 100k
   * events, local[32]): the composed `AsofJoin.keyedAsof` beats this exec
   * ~2× (0.35 s vs 0.8 s, narrow AND wide payloads) — its window runs
   * inside whole-stage codegen while this merge pays interpreted

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -114,14 +114,7 @@ object DedupQuality {
       if (args.length > 1) args.drop(1).toSeq.map { a =>
         val Array(f, d) = a.split(":", 2); (f.toLong, d)
       } else defaults
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val (threshold, numHashes, bands) = (0.2, 8, 4)
     val base = slices.head._2

@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.operators.Similarity
 import graft.sources.Ingest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN recall/parameter sweep (VERDICT r6 missing #5): measures recall@10
@@ -24,14 +23,7 @@ object RecallSweep {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outFile = args.lift(1).getOrElse("ANN_RECALL.md")
     val stride = args.lift(2).map(_.toLong).getOrElse(1L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val emb = Tables.embeddings(spark, sfDir).cache()
     val corpus = emb.count()

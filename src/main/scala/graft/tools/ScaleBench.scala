@@ -3,12 +3,9 @@ package graft.tools
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, Tables}
+import graft.{Harness, SparkEntry, Tables}
 
 /** Scale-up evidence harness (VERDICT r11 missing #4): BASELINE.md argues
   * the per-query floor (~50-110 ms per execution on this VM) is a
@@ -90,33 +87,13 @@ object ScaleBench {
     "q_stat_bootstrap_ci", "q_seq_entropy", "q_stat_mutual_info",
     "q_ops_fair_share", "q_rfm_segments", "q_stat_ks")
 
-  /** (total, steal) jiffies summed over all CPUs from `/proc/stat`, or
-    * None where it cannot be read; the steal share of a timed window is
-    * the steal delta over the total delta. */
-  def cpuTicks(): Option[(Long, Long)] =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        Some((f.sum, if (f.length > 7) f(7) else 0L))
-      } finally src.close()
-    } catch { case NonFatal(_) => None }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "BENCH_SCALE_r13.json"
     if (args.length > 2 && args(2) == "merge") { mergeParts(out); return }
     val factors = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(1, 10, 100)
     val partSuffix = if (args.length > 2) s".f${factors.mkString("_")}" else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def slice(factor: Int): String =
       if (factor == 1) sfDir
@@ -140,7 +117,7 @@ object ScaleBench {
               col("ts").cast("timestamp").as("ts"),
               (col("user_id") + col("__k") * 10000000L).as("user_id"),
               col("event_type"), col("value"), col("props"))
-            .repartition(cpus.toInt)
+            .repartition(Harness.cpus)
             .write.mode("overwrite").parquet(s"$dir/events.parquet")
           // documents: copy k gets DISTINCT text — every token suffixed
           // with _k (copy 0 passes through verbatim, so the base corpus
@@ -159,7 +136,7 @@ object ScaleBench {
                 regexp_replace(col("text"), lit("(\\S+)"),
                   concat(lit("$1_"), col("__k")))).as("text"),
               col("lang"), col("source"), col("n_chars"))
-            .repartition(cpus.toInt)
+            .repartition(Harness.cpus)
             .write.mode("overwrite").parquet(s"$dir/documents.parquet")
           // embeddings: copy k nudged by k·1e-6 per element — direction
           // (SRP bucket) preserved, so buckets grow ~F like uniformly
@@ -171,7 +148,7 @@ object ScaleBench {
               expr("transform(embedding, x -> cast(x + __k * 1e-6 as float))")
                 .as("embedding"),
               col("label"))
-            .repartition(cpus.toInt)
+            .repartition(Harness.cpus)
             .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
           // customers: copy k remaps the key (→ distinct derived geo
           // points per copy, the events device); nation/segment pass
@@ -188,7 +165,7 @@ object ScaleBench {
               (col("c_custkey") * factor + col("__k")).as("c_custkey"),
               col("c_name"), col("c_nationkey"), col("c_acctbal"),
               col("c_mktsegment"))
-            .repartition(cpus.toInt)
+            .repartition(Harness.cpus)
             .write.mode("overwrite").parquet(s"$dir/customer.parquet")
           for (t <- Seq("region", "nation", "supplier", "part",
               "orders", "lineitem"))
@@ -224,11 +201,11 @@ object ScaleBench {
       // For the LLM head the warm pass ALSO builds the per-dir ingest
       // state (signature index, by-bucket ANN layout) — ingest-time work
       // a pipeline pays once, outside the per-batch screen/probe cost.
-      // SPARK_GRAFT_SCALE_WARM=k repeats the warm pass: heads whose hot
-      // loop is one giant codegen stage (q_geo_nearest_hub: a 375M-row
-      // broadcast-join-aggregate) need ~5 executions before C2 finishes
+      // Three warm passes: heads whose hot loop is one giant codegen
+      // stage (q_geo_nearest_hub: a 375M-row broadcast-join-aggregate)
+      // need ~5 executions before C2 finishes
       // — measured r16: warm+2 read 26.0 s where a 7-pass run converges
-      // to 8.5 s. r17 (VERDICT r16 #1): warm=3 IS the committed protocol
+      // to 8.5 s. r17 (VERDICT r16 #1): three IS the committed protocol
       // — the r15/r16 records twice let a C2-warmup artifact stand on the
       // permanent f1000 sidecar (nearest_hub 10.8 vs 8.5 s converged,
       // sliding_topk 17.4 vs 11.8 s standalone); three warm executions
@@ -236,11 +213,10 @@ object ScaleBench {
       // JIT convergence point, so the record measures the PLAN. One
       // number per head, no dual bookkeeping; BASELINE.md carries the
       // protocol note.
-      val warmPasses = sys.env.getOrElse("SPARK_GRAFT_SCALE_WARM", "3").toInt
-      (1 to warmPasses).foreach { _ =>
+      (1 to 3).foreach { _ =>
         allHead.foreach { n => qs(n)(spark, dir).count() }
       }
-      val t0 = cpuTicks()
+      val t0 = Harness.cpuTicks()
       val timed = allHead.map { n =>
         val ts = Seq.fill(2) {
           val s0 = System.nanoTime()
@@ -249,11 +225,7 @@ object ScaleBench {
         }
         (n, ts.head, ts(1))
       }
-      val t1 = cpuTicks()
-      val stealPct = (t0, t1) match {
-        case (Some((a, s0)), Some((b, s1))) if b > a => 100.0 * (s1 - s0) / (b - a)
-        case _ => -1.0
-      }
+      val stealPct = Harness.stealPct(t0, Harness.cpuTicks())
       ev.unpersist()
       Tables.documents(spark, dir).unpersist()
       Tables.embeddings(spark, dir).unpersist()
@@ -266,7 +238,7 @@ object ScaleBench {
         f""""$n":{"p1":$p1%.4f,"p2":$p2%.4f,"min":$mn%.4f}"""
       }.mkString(",")
       val tot = timed.map(t => math.min(t._2, t._3)).sum
-      f"""{"factor":$f,"event_rows":$rows,"steal_pct":$stealPct%.3f,"total_min":$tot%.4f,"queries":{$qj}}"""
+      f"""{"factor":$f,"cpus":${Harness.cpus},"event_rows":$rows,"steal_pct":$stealPct%.3f,"total_min":$tot%.4f,"queries":{$qj}}"""
     }.mkString(",")
     val json = s"""{"sf_base":"$sfDir","factors":[$body]}\n"""
     Files.writeString(Paths.get(out + partSuffix), json)

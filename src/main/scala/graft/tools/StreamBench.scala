@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Harness
 import graft.streaming.{StreamingQueries, StreamReplay}
 
 /** Streaming throughput evidence (round 13): the streaming tier has had
@@ -42,24 +43,16 @@ object StreamBench {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "BENCH_STREAM_r13.json"
     val factors = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(1, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val files = 24 // micro-batches per run: one file per trigger
     // SPARK_GRAFT_STATE_STORE=rocksdb swaps the default in-heap
     // HDFSBackedStateStore (state capped by driver heap — 100M dedup
     // keys OOM a 64g box) for Spark's bundled RocksDB provider (state
     // on disk, bounded memtables) — the same switch a cluster makes at
     // high key cardinality
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    val spark = (if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb"))
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rocksdb = sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb")
+    val stateStore = if (!rocksdb) Nil else Seq("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = Harness.session(stateStore: _*)
     // Silence the RocksDB JNI info-log callback: Spark's state store wires
     // native RocksDB logging back into log4j through LoggerJniCallback,
     // whose Logv segfaulted a 100M-key run (r15's hs_err artifact). Spark
@@ -99,19 +92,14 @@ object StreamBench {
         heads.zipWithIndex.foreach { case ((_, mk), i) =>
           run(spark, mk(spark, replay), s"warm$i")
         }
-        val t0 = ScaleBench.cpuTicks()
+        val t0 = Harness.cpuTicks()
         val timed = heads.map { case (name, mk) =>
           val w0 = System.nanoTime()
           val (emitted, commit) = run(spark, mk(spark, replay), s"sb_${name}_$f")
           val sec = (System.nanoTime() - w0) / 1e9
           (name, sec, emitted, commit)
         }
-        val t1 = ScaleBench.cpuTicks()
-        val stealPct = (t0, t1) match {
-          case (Some((a, s0)), Some((b, s1))) if b > a => 100.0 * (s1 - s0) / (b - a)
-          case _ => -1.0
-        }
-        Seq((f, inputRows, stealPct, timed))
+        Seq((f, inputRows, Harness.stealPct(t0, Harness.cpuTicks()), timed))
       }
     }
     val body = rows.map { case (f, n, steal, timed) =>
@@ -123,10 +111,11 @@ object StreamBench {
     }.mkString(",")
     // self-describing record (the r12 lesson): state-store-heavy heads are
     // HEAP-SENSITIVE — at 8g the 100× session_window ran 6× slower under
-    // GC pressure than at 16g — so the artifact carries the heap it ran with
+    // GC pressure than at 16g — so the artifact carries the heap and the
+    // cores it ran with
     val heapMb = Runtime.getRuntime.maxMemory / 1048576
-    val store = if (sys.env.get("SPARK_GRAFT_STATE_STORE").contains("rocksdb")) "rocksdb" else "hdfs"
-    val json = s"""{"sf_base":"$sfDir","heap_mb":$heapMb,"state_store":"$store","factors":[$body]}\n"""
+    val store = if (rocksdb) "rocksdb" else "hdfs"
+    val json = s"""{"sf_base":"$sfDir","cpus":${Harness.cpus},"heap_mb":$heapMb,"state_store":"$store","factors":[$body]}\n"""
     Files.writeString(Paths.get(out), json)
     println(json)
     spark.stop()

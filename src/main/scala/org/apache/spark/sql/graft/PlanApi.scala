@@ -8,11 +8,12 @@ import org.apache.spark.sql.execution.SparkStrategy
 
 /** The `private[sql]`/`private[spark]` touch points graft needs: turning
   * a hand-built LogicalPlan into a DataFrame, registering a planner
-  * strategy on a live session, and writing a default into the conf of the
-  * SparkContext a session is being built on. Isolated here (the standard
-  * spark-namespace shim pattern) so graft.* stays on public API; Spark 4
-  * split Dataset into api/classic, hence the casts to the classic
-  * implementations that actually carry `ofRows`/`experimental`. */
+  * strategy on a live session, writing a default into the conf of the
+  * SparkContext a session is being built on, and draining the listener
+  * bus. Isolated here (the standard spark-namespace shim pattern) so
+  * graft.* stays on public API; Spark 4 split Dataset into api/classic,
+  * hence the casts to the classic implementations that actually carry
+  * `ofRows`/`experimental`. */
 object PlanApi {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -71,4 +72,9 @@ object PlanApi {
     * user put on the builder wins. */
   def setIfMissing(key: String, value: String): Unit =
     SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
+
+  /** Block until every event posted so far has reached every listener
+    * (`SparkContext.listenerBus` is `private[spark]`); a listener's counts
+    * are then complete for the actions that have returned. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -114,7 +114,11 @@ class ArtifactStoreSpec extends SparkSuite {
       "LocalCheckpointFs.scala", "a stream reader that skips the checkpoint filesystem"),
     ("src/main/scala sets the codegen cache and artifact isolation in one place: GraftExtensions",
       """codegen\.cache\.maxEntries|artifact\.isolation""",
-      "GraftFunctions.scala", "a second place that sets graft's session defaults"))
+      "GraftFunctions.scala", "a second place that sets graft's session defaults"),
+    ("src/main/scala builds sessions in one place: SparkSession.builder only in Harness",
+      """SparkSession\.builder""", "Harness.scala", "a second session builder"),
+    ("src/main/scala samples host steal in one place: the /proc/stat reader only in Harness",
+      "\"/proc/stat\"", "Harness.scala", "a second /proc/stat reader"))
 
   for ((name, pattern, owner, what) <- owners) test(name) {
     val main = new File("src/main/scala")
