@@ -194,13 +194,14 @@ object Bench {
           .collect { case re(n) => n.toInt }
         (if (seen.isEmpty) 0 else seen.max + 1, "inferred")
     }
+    val sha = headSha(new java.io.File(".git"))
     val errorsJson = errors.map { case (k, cls) => s"""{"query":"$k","error":"$cls"}""" }
       .mkString("[", ",", "]")
     val localArtifact = {
       val qs = timed.toSeq.sortBy(_._1).map { case (k, ts) =>
         f""""$k":{"p1":${ts.head._1}%.6f,"p2":${ts(1)._1}%.6f,"min":${ts.map(_._1).min}%.6f,"gc1":${ts.head._2},"gc2":${ts(1)._2}}"""
       }.mkString("{\n  ", ",\n  ", "\n}")
-      f"""{"round":$round,"round_source":"$roundSource","sf":"$sfTag","n_queries":${results.size},"pass1_total":${passTotals.head}%.4f,"pass2_total":${passTotals(1)}%.4f,"min_total":$total%.4f,"steal_pct":$stealPct%.3f,"loadavg_end":$load1%.2f,"gc1_total_ms":${gcTotals.head},"gc2_total_ms":${gcTotals(1)},"rewarms":$rewarms,"storage_end_mb":$storageEndMb,"cal1_ms":[$cal1a,$cal1b],"calN_ms":[$calNa,$calNb],"errors":$errorsJson,
+      f"""{"round":$round,"round_source":"$roundSource","sf":"$sfTag","n_queries":${results.size},"pass1_total":${passTotals.head}%.4f,"pass2_total":${passTotals(1)}%.4f,"min_total":$total%.4f,"steal_pct":$stealPct%.3f,"loadavg_end":$load1%.2f,"gc1_total_ms":${gcTotals.head},"gc2_total_ms":${gcTotals(1)},"rewarms":$rewarms,"storage_end_mb":$storageEndMb,"cal1_ms":[$cal1a,$cal1b],"calN_ms":[$calNa,$calNb],"errors":$errorsJson,"sha":"$sha",
 "queries":$qs}
 """
     }
@@ -210,6 +211,10 @@ object Bench {
     // this run (same code ⇒ slower total = more disturbance, not more
     // truth), the new run lands in a .contended sidecar instead, and the
     // driver line carries best_total so the divergence self-documents.
+    // "Same code" is checked, not assumed: a record keeps its place only
+    // against a run of the commit it timed (its "sha"); a record of
+    // another commit, of no known commit, or written before the field
+    // existed is replaced.
     val localPath = f"BENCH_LOCAL_r$round%02d.json"
     val existingRecord: Option[String] =
       try Some(new String(java.nio.file.Files.readAllBytes(
@@ -227,7 +232,8 @@ object Bench {
     val existingN: Option[Int] = existingRecord.map(s =>
       """"n_queries":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
         .getOrElse(""""q_[a-z0-9_]+":\{"p1"""".r.findAllMatchIn(s).size))
-    val keepExisting = existingN.exists(n =>
+    val sameCommit = sha != "unknown" && existingRecord.exists(_.contains(s""""sha":"$sha""""))
+    val keepExisting = sameCommit && existingN.exists(n =>
       n > results.size || (n == results.size && existingBest.exists(_ < total)))
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(
@@ -259,5 +265,27 @@ object Bench {
       .getOrElse(lineFor(0))
     println(out)
     spark.stop()
+  }
+
+  /** The commit a git directory's HEAD names (directly, or through its
+    * loose or packed ref), read without forking git; "unknown" when it
+    * cannot be read. */
+  private[graft] def headSha(gitDir: java.io.File): String = {
+    def read(f: String) =
+      new String(java.nio.file.Files.readAllBytes(new java.io.File(gitDir, f).toPath), "UTF-8")
+    try {
+      val head = read("HEAD").trim
+      val sha =
+        if (!head.startsWith("ref: ")) head
+        else {
+          val ref = head.stripPrefix("ref: ")
+          try read(ref).trim
+          catch { case NonFatal(_) =>
+            read("packed-refs").linesIterator.map(_.split(' '))
+              .collectFirst { case Array(s, r) if r == ref => s }.getOrElse("")
+          }
+        }
+      if (sha.matches("[0-9a-f]{40}")) sha else "unknown"
+    } catch { case NonFatal(_) => "unknown" }
   }
 }

@@ -3,7 +3,7 @@ package graft.sources
 import graft.{ArtifactStore, Tables}
 import graft.operators.Similarity
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The write path: layout-aware ingestion that makes the scale story real.
@@ -52,25 +52,11 @@ object Ingest {
     * batch must split, and the failure says so instead of OOMing. */
   val MaxCdcBatchIds: Long = 1000000L
 
-  /** Collect a CDC batch's id column under [[MaxCdcBatchIds]]: reads at
-    * most cap+1 rows through CollectLimit (no separate count job) and
-    * fails LOUDLY when the batch exceeds the cap. */
-  private def collectBatchIds(df: DataFrame, idCol: String, op: String): Seq[Long] = {
-    val rows = df.select(idCol).limit(MaxCdcBatchIds.toInt + 1).collect()
-    require(rows.length <= MaxCdcBatchIds,
-      s"graft $op: batch exceeds MaxCdcBatchIds=$MaxCdcBatchIds ids (the " +
-        "CDC-batch-is-bounded contract) — split the batch into smaller calls " +
-        "or route it through the streaming maintenance path")
-    rows.map(_.getLong(0)).toSeq
-  }
-
-  /** The same cap for callers that hand over an already-materialized id
-    * Seq — fail loudly before any filesystem work begins. */
-  private def requireBatchBound(n: Int, op: String): Unit =
-    require(n <= MaxCdcBatchIds,
-      s"graft $op: batch of $n ids exceeds MaxCdcBatchIds=$MaxCdcBatchIds (the " +
-        "CDC-batch-is-bounded contract) — split the batch into smaller calls " +
-        "or route it through the streaming maintenance path")
+  /** Collect a CDC batch's id column for the [[MaxCdcBatchIds]] check in
+    * [[open]]: at most cap+1 rows through CollectLimit (no separate count
+    * job) — enough to see an over-cap batch without materializing it. */
+  private def collectBatchIds(df: DataFrame, idCol: String): Seq[Long] =
+    df.select(idCol).limit(MaxCdcBatchIds.toInt + 1).collect().map(_.getLong(0)).toSeq
 
   // ---- filesystem plumbing + commit protocol ------------------------------
 
@@ -175,6 +161,148 @@ object Ingest {
     spark.read.parquet(path)
   }
 
+  // ---- one bloom index + one copy-on-write rewrite --------------------------
+
+  /** Size of every id bloom: 64 Kibit (8 KiB per unit), 6 hashes. */
+  private val BloomBits = 65536
+  private val BloomHashes = 6
+
+  /** The units of a layout on disk: its `unit=v` partition directories by
+    * v, or, for the `file` unit of a flat corpus, its data files by path. */
+  private def unitsOnDisk(fs: FileSystem, base: HPath, unit: String): Map[String, HPath] =
+    if (unit == "file") listParquet(fs, base).map(p => pathKey(p.toString) -> p).toMap
+    else if (!fs.exists(base)) Map.empty
+    else fs.listStatus(base).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(unit + "="))
+      .map(s => s.getPath.getName.stripPrefix(unit + "=") -> s.getPath).toMap
+
+  /** A bloom index over `layout`: one (unit, bloom) row per unit — a `day`
+    * or `bucket` partition, or (`file`) a data file of a flat corpus — the
+    * graft_bloom of the unit's `id` values, stored at `path` next to the
+    * layout. A lookup reads units × 8 KiB instead of the layout: the
+    * sketch-as-partition-index (what parquet/Iceberg column bloom filters
+    * do, lifted to the layout level where a mutation can skip whole
+    * directories or files). */
+  private[graft] final case class BloomIndex(layout: String, unit: String, id: String,
+                                             path: String) {
+    /** The index rows of `df`, a read of all or part of the layout. */
+    def blooms(df: DataFrame): DataFrame = {
+      graft.functions.GraftFunctions.register(df.sparkSession)
+      val unitCol = if (unit == "file") col("_metadata.file_path") else col(unit)
+      df.select(unitCol.as(unit), col(id))
+        .groupBy(unit)
+        .agg(call_function("graft_bloom", col(id), lit(BloomBits), lit(BloomHashes)).as("bloom"))
+    }
+
+    /** The index of the layout as it stands on disk. */
+    def build(spark: SparkSession): DataFrame = blooms(spark.read.parquet(layout))
+
+    def write(spark: SparkSession): Unit =
+      build(spark).coalesce(1).write.mode("overwrite").parquet(path)
+
+    /** The persisted rows; an index lost in a crash between a data swap and
+      * its index rewrite is rebuilt from the layout first. */
+    def load(spark: SparkSession): Seq[Row] = {
+      val (fs, p) = hfs(spark, path)
+      if (!fs.exists(p)) write(spark)
+      spark.read.parquet(path).select(unit, "bloom").collect().toSeq
+    }
+
+    def key(r: Row): String = if (unit == "file") pathKey(r.getString(0)) else r.get(0).toString
+
+    /** The candidate units for `ids`: on-disk units whose bloom might hold
+      * one, plus every on-disk unit the index does not cover — a unit is
+      * unindexed only after a crash, and always-candidate keeps the
+      * no-false-negative contract through every crash window. */
+    def lookup(rows: Seq[Row], onDisk: Set[String], ids: Seq[Long]): Seq[String] = {
+      val hits = rows.filter { r =>
+        val sk = graft.functions.BloomSketch.deserialize(r.getAs[Array[Byte]]("bloom"))
+        ids.exists(sk.mightContainLong)
+      }.map(key)
+      (hits.filter(onDisk) ++ (onDisk -- rows.map(key))).distinct.sorted
+    }
+  }
+
+  /** A layout opened for one mutation: its units on disk and the rows of
+    * its index (if it keeps one) as they stood before the mutation. */
+  private final case class Target(fs: FileSystem, base: HPath, layout: String, unit: String,
+                                  units: Map[String, HPath], index: Option[BloomIndex],
+                                  rows: Seq[Row]) {
+    def lookup(ids: Seq[Long]): Seq[String] =
+      index.fold(Seq.empty[String])(_.lookup(rows, units.keySet, ids))
+  }
+
+  /** Open `layout` for a mutation carrying the id batch `ids`: enforce
+    * [[MaxCdcBatchIds]] before any filesystem work, roll a crashed
+    * predecessor forward, then list the units and load the index. */
+  private def open(spark: SparkSession, op: String, ids: Seq[Long], layout: String,
+                   unit: String, index: Option[BloomIndex]): Target = {
+    require(ids.size <= MaxCdcBatchIds,
+      s"graft $op: batch exceeds MaxCdcBatchIds=$MaxCdcBatchIds ids (the " +
+        "CDC-batch-is-bounded contract) — split the batch into smaller calls " +
+        "or route it through the streaming maintenance path")
+    val (fs, base) = hfs(spark, layout)
+    reconcile(spark, layout)
+    Target(fs, base, layout, unit, unitsOnDisk(fs, base, unit), index,
+      index.fold(Seq.empty[Row])(_.load(spark)))
+  }
+
+  /** The copy-on-write rewrite every mutation shares. `f` maps the rows of
+    * the candidate units `cand` to their replacements; then
+    *  1. ONE staged write holds them, partitioned by the unit column (flat
+    *     for the file unit) — a 500-day backfill stages in one job, not one
+    *     per unit;
+    *  2. each staged file adopts its staging-relative path under the layout
+    *     (job-unique part names cannot collide with the survivors);
+    *  3. the candidates' files drop — adopt-then-drop under one commit
+    *     marker ([[commitSwap]]);
+    *  4. a candidate partition that staged nothing drops its directory;
+    *  5. the index keeps the rows of untouched units and takes fresh blooms
+    *     of the adopted files.
+    * Untouched units keep their bytes and their index rows. `added` counts
+    * the batch rows `f` unions in, so rowsDeleted counts the rows the batch
+    * deleted or replaced. */
+  private def rewrite(spark: SparkSession, t: Target, cand: Seq[String], added: Long)
+                     (f: DataFrame => DataFrame): DeleteStats = {
+    val units = cand.distinct.sorted
+    if (units.isEmpty && added == 0) return DeleteStats(t.units.size, 0, 0L)
+    val existing = units.flatMap(t.units.get)
+    def read(files: Seq[HPath]) =
+      spark.read.option("basePath", t.layout).parquet(files.map(_.toString): _*)
+    val before = if (existing.isEmpty) spark.read.parquet(t.layout).limit(0) else read(existing)
+    val rowsBefore = before.count()
+    val staging = t.layout.stripSuffix("/") + "_stage"
+    rmTree(spark, staging)
+    val out = f(before)
+    (if (t.unit == "file") out.write
+     else out.repartition(col(t.unit)).write.partitionBy(t.unit))
+      .mode("overwrite").parquet(staging)
+    val stage = t.fs.makeQualified(new HPath(staging))
+    val staged = t.fs.listFiles(stage, true)
+    val renames = Iterator.continually(staged).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.endsWith(".parquet")).toSeq
+      .map(p => p -> new HPath(t.base, stage.toUri.relativize(p.toUri).getPath))
+    val drops = if (t.unit == "file") existing else existing.flatMap(listParquet(t.fs, _))
+    commitSwap(t.fs, t.base, renames, drops)
+    rmTree(spark, staging)
+    val adopted = renames.map(_._2)
+    if (t.unit != "file") {
+      val kept = adopted.map(_.getParent.getName).toSet
+      existing.filterNot(d => kept(d.getName)).foreach(t.fs.delete(_, true))
+    }
+    val after = if (adopted.isEmpty) None else Some(read(adopted))
+    t.index.foreach { ix =>
+      val keep = t.rows.filter { r =>
+        val k = ix.key(r)
+        t.units.contains(k) && !units.contains(k)
+      }
+      val fresh = after.fold(Seq.empty[Row])(ix.blooms(_).collect().toSeq)
+      spark.createDataFrame(java.util.Arrays.asList(keep ++ fresh: _*), ix.blooms(before).schema)
+        .coalesce(1).write.mode("overwrite").parquet(ix.path)
+    }
+    DeleteStats(t.units.size, units.length, rowsBefore + added - after.fold(0L)(_.count()))
+  }
+
   // ---- events by day ------------------------------------------------------
 
   /** Write `events` partitioned by event day (the TSDB layout), plus the
@@ -192,22 +320,16 @@ object Ingest {
   private def userIdxPath(layoutPath: String): String =
     layoutPath.stripSuffix("/") + "_useridx"
 
-  /** (Re)build the per-day user_id bloom index for a by-day layout: one
-    * row per day — (day, serialized graft_bloom over user_id), stored
+  private def userIndex(layoutPath: String) =
+    BloomIndex(layoutPath, "day", "user_id", userIdxPath(layoutPath))
+
+  /** (Re)build the per-day user_id bloom index for a by-day layout, stored
     * NEXT to the layout (sibling `_useridx` dataset, the day-granular twin
     * of `writeCorpusWithIndex`'s per-file index). Ingest and compaction
     * write it; the mutation paths maintain it incrementally; a forget
-    * request reads days × numBits/8 bytes instead of the corpus. */
-  def writeEventsUserIndex(spark: SparkSession, layoutPath: String,
-                           numBits: Int = 65536, numHashes: Int = 6): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(layoutPath)
-      .groupBy("day")
-      .agg(call_function("graft_bloom",
-        col("user_id"), lit(numBits), lit(numHashes)).as("bloom"))
-      .coalesce(1) // one row per day — a footer-sized index
-      .write.mode("overwrite").parquet(userIdxPath(layoutPath))
-  }
+    * request reads days × 8 KiB instead of the corpus. */
+  def writeEventsUserIndex(spark: SparkSession, layoutPath: String): Unit =
+    userIndex(layoutPath).write(spark)
 
   /** Materialize (once per session) the by-day layout for a scale dir; returns
     * the dataset path. */
@@ -230,6 +352,10 @@ object Ingest {
 
   // ---- per-day bloom index (sketch-as-partition-index) --------------------
 
+  private def eventsDayIndex(spark: SparkSession, sfDir: String, root: String) =
+    BloomIndex(eventsByDay(spark, sfDir, root), "day", "event_id",
+      s"$root/${slug(sfDir)}/events_day_bloom")
+
   /** Build (once per session) the per-day Bloom index over `event_id` for the
     * by-day layout: one row per day — (day, serialized graft_bloom). This
     * is the sketch-index half of the TSDB ingest story: the same
@@ -238,22 +364,15 @@ object Ingest {
     * parquet/Iceberg column bloom filters do, lifted to the layout level
     * where the PLANNER can use it to skip whole directories). */
   def eventsDayBloomIndex(spark: SparkSession, sfDir: String,
-                          numBits: Int = 65536, numHashes: Int = 6,
                           root: String = defaultRoot): String =
-    ArtifactStore(spark, s"events_day_bloom:$sfDir:$numBits:$numHashes:$root") {
-      val p = s"$root/${slug(sfDir)}/events_day_bloom"
-      graft.functions.GraftFunctions.register(spark)
-      readEventsByDay(spark, eventsByDay(spark, sfDir, root))
-        .groupBy("day")
-        .agg(call_function("graft_bloom",
-          col("event_id"), lit(numBits), lit(numHashes)).as("bloom"))
-        .coalesce(1) // one row per day; the whole index is days × numBits/8 bytes
-        .write.mode("overwrite").parquet(p)
-      p
+    ArtifactStore(spark, s"events_day_bloom:$sfDir:$root") {
+      val ix = eventsDayIndex(spark, sfDir, root)
+      ix.write(spark)
+      ix.path
     }
 
   /** Point lookups through the bloom index: read the index (a driver-side
-    * collect of days × numBits/8 bytes — 30 rows here, 365/year at 100 TB;
+    * collect of days × 8 KiB — 30 rows here, 365/year at 100 TB;
     * bounded by design like the IVF centroid pull), keep the days whose
     * bloom MIGHT contain one of the probed ids, scan ONLY those partition
     * directories, and apply the exact id filter (removing bloom false
@@ -262,16 +381,12 @@ object Ingest {
     * needle-in-haystack read a raw scan can never give you. */
   def eventsByIdPruned(spark: SparkSession, sfDir: String, eventIds: Seq[Long],
                        root: String = defaultRoot): DataFrame = {
-    val layout = eventsByDay(spark, sfDir, root)
-    val idxPath = eventsDayBloomIndex(spark, sfDir, root = root)
-    val candidateDays = spark.read.parquet(idxPath).select("day", "bloom").collect()
-      .filter { r =>
-        val sk = graft.functions.BloomSketch.deserialize(r.getAs[Array[Byte]]("bloom"))
-        eventIds.exists(sk.mightContainLong)
-      }
-      .map(_.getDate(0))
-    readEventsByDay(spark, layout)
-      .filter(col("day").isin(candidateDays.toSeq: _*) &&
+    eventsDayBloomIndex(spark, sfDir, root)
+    val ix = eventsDayIndex(spark, sfDir, root)
+    val (fs, base) = hfs(spark, ix.layout)
+    val days = ix.lookup(ix.load(spark), unitsOnDisk(fs, base, "day").keySet, eventIds)
+    readEventsByDay(spark, ix.layout)
+      .filter(col("day").isin(days.map(java.sql.Date.valueOf): _*) &&
         col("event_id").isin(eventIds: _*))
   }
 
@@ -497,15 +612,14 @@ object Ingest {
 
   /** The refresh step alone, re-runnable: partials for days ≥ cutoff,
     * written under dynamic partitionOverwriteMode so ONLY the day
-    * directories present in the refresh output are replaced. */
+    * directories present in the refresh output are replaced. The mode is
+    * this write's option, not session state: a concurrent query in the
+    * same session keeps the session's static overwrite. */
   def refreshCaggDays(spark: SparkSession, caggPath: String,
-                      byDay: DataFrame, cutoffDay: String): Unit = {
-    val fresh = dailyPartials(byDay.filter(col("day") >= lit(cutoffDay).cast("date")))
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try fresh.write.mode("overwrite").partitionBy("day").parquet(caggPath)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-  }
+                      byDay: DataFrame, cutoffDay: String): Unit =
+    dailyPartials(byDay.filter(col("day") >= lit(cutoffDay).cast("date")))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(caggPath)
 
   // ---- incremental view maintenance: interval-JOIN view --------------------
 
@@ -584,47 +698,24 @@ object Ingest {
     * explicitly (dynamic overwrite alone would leave it stale). I/O =
     * O(|affected days| + |deletes|), independent of view size.
     *
-    * Crash safety (ADVICE r11): the rewrite stages to `path`_stage and
-    * publishes through the same manifest-backed [[commitSwap]] the bloom
-    * CDC path uses — the earlier dynamic-overwrite-in-place form read and
-    * rewrote the SAME directory in one plan, so a mid-write failure left
-    * affected cday partitions half-rewritten. Now a crash before the
-    * marker leaves the view untouched (plus dead staging files), and a
-    * crash after it rolls forward via [[reconcile]]. */
+    * Crash safety (ADVICE r11): the cday-granular [[rewrite]] stages the
+    * kept pairs and publishes them under the commit marker — the earlier
+    * dynamic-overwrite-in-place form read and rewrote the SAME directory
+    * in one plan, so a mid-write failure left affected cday partitions
+    * half-rewritten. Now a crash before the marker leaves the view
+    * untouched (plus dead staging files), and a crash after it rolls
+    * forward via [[reconcile]]. */
   def ivmJoinDelete(spark: SparkSession, path: String, delEvents: DataFrame): Unit = {
-    reconcile(spark, path)
+    val t = open(spark, "ivmJoinDelete", Nil, path, "cday", None)
     val days = delEvents
       .select(explode(array(to_date(col("ts")),
         to_date(col("ts") - expr("INTERVAL '30' MINUTE")))).as("cday"))
-      .distinct().collect().map(_.getDate(0))
-    if (days.isEmpty) return
+      .distinct().collect().map(_.getDate(0).toString)
     val ids = delEvents.select(col("event_id")).distinct()
-    val aff = spark.read.parquet(path).filter(col("cday").isin(days: _*))
-    val kept = aff
-      .join(broadcast(ids.select(col("event_id").as("cid"))), Seq("cid"), "left_anti")
+    rewrite(spark, t, days.toSeq, 0L)(
+      _.join(broadcast(ids.select(col("event_id").as("cid"))), Seq("cid"), "left_anti")
       .join(broadcast(ids.select(col("event_id").as("pid"))), Seq("pid"), "left_anti")
-      .select("user_id", "cid", "pid", "lag_us", "cday")
-    val staging = path.stripSuffix("/") + "_stage"
-    rmTree(spark, staging)
-    kept.write.mode("overwrite").partitionBy("cday").parquet(staging)
-    val (fs, base) = hfs(spark, path)
-    val stagedDirs = fs.listStatus(new HPath(staging))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cday="))
-      .map(_.getPath).toSeq
-    val renames = stagedDirs.flatMap { dd =>
-      listParquet(fs, dd).map(f => (f, new HPath(new HPath(base, dd.getName), f.getName)))
-    }
-    val drops = days.map(dd => new HPath(base, s"cday=$dd"))
-      .filter(fs.exists).flatMap(listParquet(fs, _))
-    commitSwap(fs, base, renames, drops)
-    rmTree(spark, staging)
-    // a day whose pairs all died has no staged dir; its (now file-less)
-    // partition dir drops so readers don't list an empty partition
-    val stagedNames = stagedDirs.map(_.getName).toSet
-    days.map(dd => s"cday=$dd").filterNot(stagedNames.contains).foreach { nm =>
-      val dir = new HPath(base, nm)
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
+      .select("user_id", "cid", "pid", "lag_us", "cday"))
   }
 
   /** The maintained view after a CDC delete batch (all purchases of user
@@ -989,54 +1080,24 @@ object Ingest {
     * serving stale vectors until rebuild). */
   def vecIdxPath(path: String): String = path.stripSuffix("/") + "_vecidx"
 
-  def writeEmbeddingsVecIndex(spark: SparkSession, layoutPath: String,
-                              numBits: Int = 65536, numHashes: Int = 6): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(layoutPath)
-      .groupBy("bucket")
-      .agg(call_function("graft_bloom",
-        col("vec_id"), lit(numBits), lit(numHashes)).as("bloom"))
-      .coalesce(1) // 2^nPlanes rows × numBits/8 bytes
-      .write.mode("overwrite").parquet(vecIdxPath(layoutPath))
-  }
+  private def vecIndex(layoutPath: String) =
+    BloomIndex(layoutPath, "bucket", "vec_id", vecIdxPath(layoutPath))
+
+  def writeEmbeddingsVecIndex(spark: SparkSession, layoutPath: String): Unit =
+    vecIndex(layoutPath).write(spark)
 
   /** CDC DELETE against the ANN layout: bucket-granular copy-on-write.
     * Candidate buckets come from the persisted per-bucket vec_id bloom
-    * index (bloom hits + any unindexed post-crash directory), ONE staged
-    * partitioned write rewrites them, the swap adopts-then-drops under
-    * the commit marker, and the index updates incrementally — untouched
-    * buckets keep their bytes AND their index rows (WritePathSpec holds
+    * index (bloom hits + any unindexed post-crash directory), and the
+    * shared [[rewrite]] restages them in one write — untouched buckets
+    * keep their bytes AND their index rows (WritePathSpec holds
     * post-delete probes ≡ probes on a layout rebuilt from scratch, and
     * untouched directories byte-identical). I/O is |affected buckets| of
     * corpus/2^nPlanes each, never the corpus. */
-  def annDeleteVectors(spark: SparkSession, layoutPath: String, ids: Seq[Long],
-                       numBits: Int = 65536, numHashes: Int = 6): DeleteStats = {
+  def annDeleteVectors(spark: SparkSession, layoutPath: String, ids: Seq[Long]): DeleteStats = {
     require(ids.nonEmpty, "graft annDeleteVectors: empty id batch")
-    requireBatchBound(ids.size, "annDeleteVectors")
-    val (fs, base) = hfs(spark, layoutPath)
-    reconcile(spark, layoutPath)
-    if (!fs.exists(new HPath(vecIdxPath(layoutPath))))
-      writeEmbeddingsVecIndex(spark, layoutPath, numBits, numHashes)
-    val idx = spark.read.parquet(vecIdxPath(layoutPath))
-      .select("bucket", "bloom").collect()
-    val bucketDirs = listBucketNames(fs, base)
-    val indexed = idx.map(_.getInt(0).toString).toSet
-    val hits = idx.filter { r =>
-      val sk = graft.functions.BloomSketch.deserialize(r.getAs[Array[Byte]]("bloom"))
-      ids.exists(sk.mightContainLong)
-    }.map(_.getInt(0).toString).toSeq
-    val cand = (hits ++ bucketDirs.filterNot(indexed.contains)).distinct.sorted
-    if (cand.isEmpty) return DeleteStats(bucketDirs.length, 0, 0L)
-    val candPaths = cand.map(b => s"${layoutPath.stripSuffix("/")}/bucket=$b")
-    val before = spark.read.option("basePath", layoutPath).parquet(candPaths: _*)
-    val beforeCount = before.count()
-    val staging = layoutPath.stripSuffix("/") + "_stage"
-    rmTree(spark, staging)
-    before.filter(!col("vec_id").isin(ids: _*))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    swapStagedBuckets(spark, fs, base, layoutPath, staging, cand, idx,
-      beforeCount, bucketDirs.length, numBits, numHashes)
+    val t = open(spark, "annDeleteVectors", ids, layoutPath, "bucket", Some(vecIndex(layoutPath)))
+    rewrite(spark, t, t.lookup(ids), 0L)(_.filter(!col("vec_id").isin(ids: _*)))
   }
 
   /** CDC UPSERT against the ANN layout — the case r10 called out: an
@@ -1046,100 +1107,21 @@ object Ingest {
     * vectors' target buckets (where they land — computed by the same
     * codegen'd srpBucket the ingest writer uses, so placement is
     * bit-identical to a from-scratch rebuild) ∪ unindexed post-crash
-    * dirs. One staged write, adopt-then-drop, incremental index;
-    * brand-new buckets materialize through the swap's mkdirs. */
+    * dirs. Brand-new buckets materialize through the swap's mkdirs. */
   def annUpsertVectors(spark: SparkSession, layoutPath: String, updates: DataFrame,
-                       nPlanes: Int = 6, dim: Int = 64,
-                       numBits: Int = 65536, numHashes: Int = 6): DeleteStats = {
-    val (fs, base) = hfs(spark, layoutPath)
-    reconcile(spark, layoutPath)
-    if (!fs.exists(new HPath(vecIdxPath(layoutPath))))
-      writeEmbeddingsVecIndex(spark, layoutPath, numBits, numHashes)
-    val idx = spark.read.parquet(vecIdxPath(layoutPath))
-      .select("bucket", "bloom").collect()
+                       nPlanes: Int = 6, dim: Int = 64): DeleteStats = {
     val upd = updates.withColumn("bucket",
       Similarity.srpBucket("embedding", nPlanes, dim))
-    // the CDC-batch-is-bounded contract: ids + targets collect driver-side,
-    // enforced at MaxCdcBatchIds with a loud failure
-    val ids = collectBatchIds(upd, "vec_id", "annUpsertVectors")
+    val ids = collectBatchIds(upd, "vec_id")
     require(ids.nonEmpty, "graft annUpsertVectors: empty update batch")
     require(ids.distinct.length == ids.length,
       "graft annUpsertVectors: duplicate vec_id in batch (one row per id)")
+    val t = open(spark, "annUpsertVectors", ids, layoutPath, "bucket", Some(vecIndex(layoutPath)))
     val targets = upd.select("bucket").distinct().collect().map(_.getInt(0).toString)
-    val bucketDirs = listBucketNames(fs, base)
-    val indexed = idx.map(_.getInt(0).toString).toSet
-    val hits = idx.filter { r =>
-      val sk = graft.functions.BloomSketch.deserialize(r.getAs[Array[Byte]]("bloom"))
-      ids.exists(sk.mightContainLong)
-    }.map(_.getInt(0).toString).toSeq
-    val cand = (hits ++ targets ++ bucketDirs.filterNot(indexed.contains))
-      .distinct.sorted
-    val existing = cand.filter(b => fs.exists(new HPath(base, s"bucket=$b")))
-    val before =
-      if (existing.isEmpty) spark.read.parquet(layoutPath).limit(0)
-      else spark.read.option("basePath", layoutPath)
-        .parquet(existing.map(b => s"${layoutPath.stripSuffix("/")}/bucket=$b"): _*)
-    val beforeCount = before.count()
-    val updCount = ids.length.toLong
-    val kept = before.join(broadcast(upd.select("vec_id")), Seq("vec_id"), "left_anti")
-    val merged = kept.unionByName(upd.select(kept.columns.map(col): _*))
-    val staging = layoutPath.stripSuffix("/") + "_stage"
-    rmTree(spark, staging)
-    merged.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    // staged = kept + batch ⇒ helper's (before-staged) = replaced-row count
-    swapStagedBuckets(spark, fs, base, layoutPath, staging, cand, idx,
-      beforeCount + updCount, bucketDirs.length, numBits, numHashes)
-  }
-
-  private def listBucketNames(fs: FileSystem, base: HPath): Seq[String] =
-    fs.listStatus(base)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath.getName.stripPrefix("bucket=")).toSeq.sorted
-
-  /** Shared tail of the bucket-granular ANN mutations — the bucket twin
-    * of `swapStagedDays`: count + re-index the staged buckets, adopt-
-    * then-drop under the commit marker, drop fully-emptied bucket dirs,
-    * rewrite the per-bucket vec index incrementally. */
-  private def swapStagedBuckets(spark: SparkSession, fs: FileSystem, base: HPath,
-                                layoutPath: String, staging: String,
-                                cand: Seq[String], idx: Array[org.apache.spark.sql.Row],
-                                beforeCount: Long, bucketTotal: Int,
-                                numBits: Int, numHashes: Int): DeleteStats = {
-    graft.functions.GraftFunctions.register(spark)
-    val stagedDirs = fs.listStatus(new HPath(staging))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath).toSeq
-    val (keptCount, newIdxRows) =
-      if (stagedDirs.isEmpty) (0L, Array.empty[(Int, Array[Byte])])
-      else {
-        val staged = spark.read.option("basePath", staging)
-          .parquet(stagedDirs.map(_.toString): _*)
-        import spark.implicits._
-        (staged.count(),
-          staged.groupBy("bucket")
-            .agg(call_function("graft_bloom",
-              col("vec_id"), lit(numBits), lit(numHashes)).as("bloom"))
-            .as[(Int, Array[Byte])].collect())
-      }
-    val removed = beforeCount - keptCount
-    val renames = stagedDirs.flatMap { dd =>
-      listParquet(fs, dd).map(f => (f, new HPath(new HPath(base, dd.getName), f.getName)))
+    rewrite(spark, t, t.lookup(ids) ++ targets, ids.length) { before =>
+      val kept = before.join(broadcast(upd.select("vec_id")), Seq("vec_id"), "left_anti")
+      kept.unionByName(upd.select(kept.columns.map(col): _*))
     }
-    val drops = cand.map(b => new HPath(base, s"bucket=$b"))
-      .filter(fs.exists).flatMap(listParquet(fs, _))
-    commitSwap(fs, base, renames, drops)
-    rmTree(spark, staging)
-    val stagedNames = stagedDirs.map(_.getName.stripPrefix("bucket=")).toSet
-    cand.filterNot(stagedNames.contains)
-      .foreach(b => fs.delete(new HPath(base, s"bucket=$b"), true))
-    val candSet = cand.toSet
-    val keepIdx = idx.filter(r => !candSet.contains(r.getInt(0).toString))
-      .map(r => (r.getInt(0), r.getAs[Array[Byte]]("bloom")))
-    import spark.implicits._
-    (keepIdx ++ newIdxRows).toSeq.toDF("bucket", "bloom")
-      .coalesce(1).write.mode("overwrite").parquet(vecIdxPath(layoutPath))
-    DeleteStats(bucketTotal, cand.length, removed)
   }
 
   /** The vec_ids the ANN CDC fixture forgets / re-embeds. */
@@ -1193,10 +1175,15 @@ object Ingest {
         .withColumn("embedding", expr("transform(embedding, x -> -x)"))
         .withColumn("op", lit("u"))
         .repartition(1).write.mode("append").parquet(feed)
-      Thread.sleep(1100) // file-stream trigger order follows file mtime
+      val (fs, feedDir) = hfs(spark, feed)
+      val upserts = listParquet(fs, feedDir).toSet
       emb.filter(col("vec_id").isin(annDeletedVecIds: _*))
         .withColumn("op", lit("d")) // CDC last-image delete record
         .repartition(1).write.mode("append").parquet(feed)
+      // file-stream triggers follow file mtime: date the tombstones a
+      // second after the upserts so they always run in the second trigger
+      val after = upserts.map(fs.getFileStatus(_).getModificationTime).max + 1000L
+      listParquet(fs, feedDir).filterNot(upserts).foreach(fs.setTimes(_, after, -1L))
       val q = graft.streaming.StreamVectors
         .maintainAnnIndex(spark, feed, dst, ckpt, nPlanes, dim)
       q.awaitTermination(300000)
@@ -1212,76 +1199,27 @@ object Ingest {
 
   private def bloomIdxPath(path: String): String = path.stripSuffix("/") + "_bloomidx"
 
+  private def fileIndex(path: String, idCol: String) =
+    BloomIndex(path, "file", idCol, bloomIdxPath(path))
+
   /** Write `df` as an `nFiles` hash-split corpus plus a per-FILE Bloom
     * index over `idCol` — the same sketch-as-index pattern as the by-day
     * bloom index, at file grain: the index is what lets a row-level delete
     * find the files holding a doc without scanning the corpus. */
   def writeCorpusWithIndex(df: DataFrame, idCol: String, path: String,
-                           nFiles: Int = 8, numBits: Int = 65536, numHashes: Int = 6): Unit = {
+                           nFiles: Int = 8): Unit = {
     df.repartition(nFiles, col(idCol)).write.mode("overwrite").parquet(path)
-    rebuildBloomIndex(df.sparkSession, path, idCol, numBits, numHashes)
+    rebuildBloomIndex(df.sparkSession, path, idCol)
   }
 
   /** (Re)build the per-file bloom index from the corpus as it stands on
-    * disk — the ingest-time builder, and the recovery path when a crash
-    * between a data swap and its index rewrite lost the index dataset. */
-  def rebuildBloomIndex(spark: SparkSession, path: String, idCol: String,
-                        numBits: Int = 65536, numHashes: Int = 6): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(path)
-      .select(col(idCol), col("_metadata.file_path").as("file"))
-      .groupBy("file")
-      .agg(call_function("graft_bloom", col(idCol), lit(numBits), lit(numHashes)).as("bloom"))
-      .coalesce(1) // nFiles rows × numBits/8 bytes — a footer-sized index
-      .write.mode("overwrite").parquet(bloomIdxPath(path))
-  }
-
-  /** The candidate files of a flat-corpus mutation: index hits that still
-    * exist, PLUS any on-disk file the index does not cover — a file can be
-    * unindexed only after a crash between a data swap and its index
-    * rewrite, and treating it as always-candidate keeps the no-false-
-    * negative contract through every crash window. */
-  private def candidateFiles(fs: FileSystem, dir: HPath,
-                             idx: Array[org.apache.spark.sql.Row],
-                             hit: org.apache.spark.sql.Row => Boolean): Seq[String] = {
-    val onDisk = listParquet(fs, dir)
-    val onDiskKeys = onDisk.map(p => pathKey(p.toString)).toSet
-    val indexedKeys = idx.map(r => pathKey(r.getString(0))).toSet
-    val hits = idx.filter(r => onDiskKeys.contains(pathKey(r.getString(0))) && hit(r))
-      .map(_.getString(0)).toSeq
-    val unindexed = onDisk.filterNot(p => indexedKeys.contains(pathKey(p.toString)))
-      .map(_.toString)
-    hits ++ unindexed
-  }
-
-  /** Rewrite the per-file bloom index after a swap: survivors keep their
-    * rows (dropping any whose file is gone), every current file the kept
-    * rows don't cover gets a fresh bloom computed from disk. */
-  private def refreshBloomIndex(spark: SparkSession, path: String, idCol: String,
-                                idx: Array[org.apache.spark.sql.Row],
-                                rewrittenKeys: Set[String],
-                                numBits: Int, numHashes: Int): Unit = {
-    val keepRows = idx.filterNot(r => rewrittenKeys.contains(pathKey(r.getString(0))))
-      .map(r => (r.getString(0), r.getAs[Array[Byte]]("bloom")))
-    graft.functions.GraftFunctions.register(spark)
-    import spark.implicits._
-    val keepKeys = keepRows.map(t => pathKey(t._1)).toSet
-    // the metadata filter skips the kept files at the scan — only the
-    // adopted files are read to compute their fresh blooms
-    val newRows = spark.read.parquet(path)
-      .select(col(idCol), col("_metadata.file_path").as("file"))
-      .filter(!col("file").isin(keepRows.map(_._1).toSeq: _*))
-      .groupBy("file")
-      .agg(call_function("graft_bloom", col(idCol), lit(numBits), lit(numHashes)).as("bloom"))
-      .as[(String, Array[Byte])].collect()
-      .filterNot(t => keepKeys.contains(pathKey(t._1))) // form-mismatch guard
-    (keepRows ++ newRows).toSeq.toDF("file", "bloom")
-      .coalesce(1).write.mode("overwrite").parquet(bloomIdxPath(path))
-  }
+    * disk — nFiles rows × 8 KiB, a footer-sized index. */
+  def rebuildBloomIndex(spark: SparkSession, path: String, idCol: String): Unit =
+    fileIndex(path, idCol).write(spark)
 
   /** Row-level DELETE as copy-on-write (the GDPR / right-to-be-forgotten
     * path — VERDICT r6 missing #2). Retention drops whole partitions;
-    * this deletes individual ids:
+    * this deletes individual ids at FILE grain:
     *
     *  1. roll forward any crashed predecessor (`reconcile`), then consult
     *     the per-file Bloom index (a driver-side collect of nFiles rows —
@@ -1289,42 +1227,17 @@ object Ingest {
     *     contain a target id;
     *  2. rewrite ONLY those files with the ids anti-filtered out (bloom
     *     false positives cost a no-op rewrite, never a wrong result);
-    *  3. commit the swap under a marker — staged files adopt FIRST, the
-    *     superseded originals drop after (`commitSwap`) — and update the
-    *     index incrementally: untouched files keep their bytes AND their
-    *     index rows.
+    *  3. the shared [[rewrite]] adopts the staged files before dropping
+    *     the originals and updates the index incrementally: untouched
+    *     files keep their bytes AND their index rows.
     *
     * At 100 TB: I/O is |affected files|, i.e. ≈ |ids| of the ~corpus/nFiles
-    * file size, not a corpus rewrite. Idempotent: deleting absent ids
-    * rewrites nothing (second call returns rowsDeleted = 0). */
-  def deleteRows(spark: SparkSession, path: String, idCol: String, ids: Seq[Long],
-                 numBits: Int = 65536, numHashes: Int = 6): DeleteStats = {
-    requireBatchBound(ids.size, "deleteRows")
-    val (fs, dir) = hfs(spark, path)
-    reconcile(spark, path)
-    if (!fs.exists(new HPath(bloomIdxPath(path)))) // lost mid-crash: rebuild
-      rebuildBloomIndex(spark, path, idCol, numBits, numHashes)
-    val idx = spark.read.parquet(bloomIdxPath(path)).select("file", "bloom").collect()
-    val cand = candidateFiles(fs, dir, idx, { r =>
-      val sk = graft.functions.BloomSketch.deserialize(r.getAs[Array[Byte]]("bloom"))
-      ids.exists(sk.mightContainLong)
-    })
-    if (cand.isEmpty) return DeleteStats(idx.length, 0, 0L)
-    val candDf = spark.read.parquet(cand: _*)
-    val keepDf = candDf.filter(!col(idCol).isin(ids: _*))
-    val rowsBefore = candDf.count()
-    val rowsAfter = keepDf.count()
-    if (rowsAfter == rowsBefore) return DeleteStats(idx.length, 0, 0L) // pure false positives
-    val tmp = path.stripSuffix("/") + "_rewrite_tmp"
-    keepDf.write.mode("overwrite").parquet(tmp)
-    val staged = listParquet(fs, new HPath(tmp))
-    // job-unique part-file names cannot collide with the survivors
-    commitSwap(fs, dir,
-      renames = staged.map(f => (f, new HPath(dir, f.getName))),
-      drops = cand.map(new HPath(_)))
-    rmTree(spark, tmp)
-    refreshBloomIndex(spark, path, idCol, idx, cand.map(pathKey).toSet, numBits, numHashes)
-    DeleteStats(idx.length, cand.length, rowsBefore - rowsAfter)
+    * file size, not a corpus rewrite. Idempotent: the maintained index no
+    * longer holds deleted ids, so a second call finds no candidate file
+    * and returns rowsDeleted = 0. */
+  def deleteRows(spark: SparkSession, path: String, idCol: String, ids: Seq[Long]): DeleteStats = {
+    val t = open(spark, "deleteRows", ids, path, "file", Some(fileIndex(path, idCol)))
+    rewrite(spark, t, t.lookup(ids), 0L)(_.filter(!col(idCol).isin(ids: _*)))
   }
 
   /** The user whose events the TSDB GDPR fixture forgets. */
@@ -1352,136 +1265,47 @@ object Ingest {
       dst
     }
 
-  /** The day-partition twin of `deleteRows` (VERDICT r7 what's-wrong #2 +
-    * next-round #3/#7): candidate days come from the PERSISTED per-day
-    * user bloom index (`writeEventsUserIndex` — written at ingest, never
-    * recomputed here; a missing index, e.g. after a crash mid-index-
-    * rewrite, is rebuilt once and persisted), every candidate day is
-    * rewritten by ONE staged partitioned write (not a job per day — a
-    * 500-day backfill stages in a single shuffle), and the swap adopts
-    * staged files before dropping originals under a commit marker. A day
-    * whose every row belonged to the user stages nothing and its
+  /** GDPR at DAY grain, the day-partition twin of `deleteRows` (VERDICT
+    * r7 what's-wrong #2 + next-round #3/#7): candidate days come from the
+    * PERSISTED per-day user bloom index (`writeEventsUserIndex` — written
+    * at ingest, never recomputed here; a missing index, e.g. after a crash
+    * mid-index-rewrite, is rebuilt once and persisted), and the shared
+    * [[rewrite]] restages every candidate day in ONE partitioned write. A
+    * day whose every row belonged to the user stages nothing and its
     * directory drops. Stats count DAY PARTITIONS. */
-  def deleteUserEventsInPlace(spark: SparkSession, layoutPath: String, userIds: Seq[Long],
-                              numBits: Int = 65536, numHashes: Int = 6): DeleteStats = {
-    graft.functions.GraftFunctions.register(spark)
-    val (fs, base) = hfs(spark, layoutPath)
-    reconcile(spark, layoutPath)
-    if (!fs.exists(new HPath(userIdxPath(layoutPath))))
-      writeEventsUserIndex(spark, layoutPath, numBits, numHashes)
-    val idx = spark.read.parquet(userIdxPath(layoutPath)).select("day", "bloom").collect()
-    val dayDirs = fs.listStatus(base)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("day="))
-      .map(_.getPath.getName.stripPrefix("day=")).toSeq.sorted
-    val indexedDays = idx.map(_.getDate(0).toString).toSet
-    val hits = idx.filter { r =>
-      val sk = graft.functions.BloomSketch.deserialize(r.getAs[Array[Byte]]("bloom"))
-      userIds.exists(sk.mightContainLong)
-    }.map(_.getDate(0).toString).toSeq
-    // un-indexed day dirs (possible only after a crash) are always-candidates
-    val cand = (hits ++ dayDirs.filterNot(indexedDays.contains)).distinct.sorted
-    if (cand.isEmpty) return DeleteStats(dayDirs.length, 0, 0L)
-    val candPaths = cand.map(d => s"${layoutPath.stripSuffix("/")}/day=$d")
-    val before = spark.read.option("basePath", layoutPath).parquet(candPaths: _*)
-    val beforeCount = before.count()
-    // ONE job stages the rewrite of every candidate day
-    val staging = layoutPath.stripSuffix("/") + "_stage"
-    rmTree(spark, staging)
-    before.filter(!col("user_id").isin(userIds: _*))
-      .repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(staging)
-    swapStagedDays(spark, fs, base, layoutPath, staging, cand, idx, beforeCount,
-      dayDirs.length, numBits, numHashes)
+  def deleteUserEventsInPlace(spark: SparkSession, layoutPath: String,
+                              userIds: Seq[Long]): DeleteStats = {
+    val t = open(spark, "deleteUserEventsInPlace", userIds, layoutPath, "day",
+      Some(userIndex(layoutPath)))
+    rewrite(spark, t, t.lookup(userIds), 0L)(_.filter(!col("user_id").isin(userIds: _*)))
   }
 
-  /** Shared tail of the day-granular mutations: count + index the staged
-    * days, adopt-then-drop under a commit marker, drop fully-emptied day
-    * dirs, and rewrite the per-day user index incrementally. */
-  private def swapStagedDays(spark: SparkSession, fs: FileSystem, base: HPath,
-                             layoutPath: String, staging: String,
-                             cand: Seq[String], idx: Array[org.apache.spark.sql.Row],
-                             beforeCount: Long, dayTotal: Int,
-                             numBits: Int, numHashes: Int): DeleteStats = {
-    val stagedDayDirs = fs.listStatus(new HPath(staging))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("day=")).map(_.getPath).toSeq
-    val (keptCount, newIdxRows) =
-      if (stagedDayDirs.isEmpty) (0L, Array.empty[(java.sql.Date, Array[Byte])])
-      else {
-        val staged = spark.read.option("basePath", staging)
-          .parquet(stagedDayDirs.map(_.toString): _*)
-        import spark.implicits._
-        (staged.count(),
-          staged.groupBy("day")
-            .agg(call_function("graft_bloom",
-              col("user_id"), lit(numBits), lit(numHashes)).as("bloom"))
-            .as[(java.sql.Date, Array[Byte])].collect())
-      }
-    val removed = beforeCount - keptCount
-    // adopt every staged day's files first, then drop the originals
-    val renames = stagedDayDirs.flatMap { dd =>
-      listParquet(fs, dd).map(f => (f, new HPath(new HPath(base, dd.getName), f.getName)))
-    }
-    val drops = cand.flatMap(d => listParquet(fs, new HPath(base, s"day=$d")))
-    commitSwap(fs, base, renames, drops)
-    rmTree(spark, staging)
-    // a day whose every row was removed staged nothing: drop its empty dir
-    val stagedNames = stagedDayDirs.map(_.getName.stripPrefix("day=")).toSet
-    cand.filterNot(stagedNames.contains)
-      .foreach(d => fs.delete(new HPath(base, s"day=$d"), true))
-    // index maintenance: untouched days keep their rows, candidate days
-    // get the recomputed blooms (absent entirely if the day dropped)
-    val candSet = cand.toSet
-    val keepIdx = idx.filter(r => !candSet.contains(r.getDate(0).toString))
-      .map(r => (r.getDate(0), r.getAs[Array[Byte]]("bloom")))
-    import spark.implicits._
-    (keepIdx ++ newIdxRows).toSeq.toDF("day", "bloom")
-      .coalesce(1).write.mode("overwrite").parquet(userIdxPath(layoutPath))
-    DeleteStats(dayTotal, cand.length, removed)
-  }
-
-  /** Late-correction UPSERT for the PARTITIONED layout (the TSDB backfill
-    * path: a collector re-sends fixed readings after the fact). Each
-    * correction row carries its event time, so the affected day
-    * directories come straight from the batch — no index probe needed; a
-    * stale version is replaced only within the day the correction's ts
-    * names (a same-id row on another day is a different reading). ONE
-    * staged partitioned write rewrites every affected day (VERDICT r7 #7:
-    * the per-day loop serialized a 500-day backfill), then the swap
-    * adopts-then-drops under the commit marker, and the per-day user
-    * index is maintained for the rewritten days (a correction may carry
-    * a user the day never saw). Day-granular copy-on-write, the
-    * events-table sibling of upsertRows. */
+  /** Late-correction UPSERT at DAY grain (the TSDB backfill path: a
+    * collector re-sends fixed readings after the fact). Each correction
+    * row carries its event time, so the affected day directories come
+    * straight from the batch — no index probe needed; a stale version is
+    * replaced only within the day the correction's ts names (a same-id
+    * row on another day is a different reading). The shared [[rewrite]]
+    * restages every affected day in ONE write (VERDICT r7 #7: the per-day
+    * loop serialized a 500-day backfill) and maintains the per-day user
+    * index for the rewritten days (a correction may carry a user the day
+    * never saw). The events-table sibling of upsertRows. */
   def upsertEventsInPlace(spark: SparkSession, layoutPath: String,
                           corrections: DataFrame): DeleteStats = {
-    val (fs, base) = hfs(spark, layoutPath)
-    reconcile(spark, layoutPath)
-    if (!fs.exists(new HPath(userIdxPath(layoutPath))))
-      writeEventsUserIndex(spark, layoutPath)
-    val idx = spark.read.parquet(userIdxPath(layoutPath)).select("day", "bloom").collect()
     val corr = corrections.withColumn("day", to_date(col("ts")))
-    // the CDC-batch-is-bounded contract: days + count collect driver-side
-    val days = corr.select("day").distinct().collect().map(_.getDate(0).toString).sorted
-    val corrCount = corr.count()
-    val dayTotal = fs.listStatus(base)
-      .count(s => s.isDirectory && s.getPath.getName.startsWith("day="))
-    days.foreach(d => require(fs.exists(new HPath(base, s"day=$d")),
+    val ids = collectBatchIds(corr, "event_id")
+    val t = open(spark, "upsertEventsInPlace", ids, layoutPath, "day",
+      Some(userIndex(layoutPath)))
+    val days = corr.select("day").distinct().collect().map(_.getDate(0).toString)
+    days.foreach(d => require(t.units.contains(d),
       s"graft upsertEventsInPlace: no partition for day=$d"))
-    val candPaths = days.map(d => s"${layoutPath.stripSuffix("/")}/day=$d").toSeq
-    val before = spark.read.option("basePath", layoutPath).parquet(candPaths: _*)
-    val beforeCount = before.count()
     // stale versions leave per (day, event_id); the correction batch is
     // tiny, so the anti-join broadcasts
-    val kept = before.join(
-      broadcast(corr.select("day", "event_id")), Seq("day", "event_id"), "left_anti")
-    val merged = kept.unionByName(corr.select(kept.columns.map(col): _*))
-    val staging = layoutPath.stripSuffix("/") + "_stage"
-    rmTree(spark, staging)
-    merged.repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(staging)
-    // staged = kept + corrections, so passing beforeCount + |batch| makes
-    // the helper's (before - staged) come out as the replaced-row count
-    swapStagedDays(spark, fs, base, layoutPath, staging, days.toSeq, idx,
-      beforeCount + corrCount, dayTotal, 65536, 6)
+    rewrite(spark, t, days.toSeq, ids.length) { before =>
+      val kept = before.join(
+        broadcast(corr.select("day", "event_id")), Seq("day", "event_id"), "left_anti")
+      kept.unionByName(corr.select(kept.columns.map(col): _*))
+    }
   }
 
   /** The event_ids the correction fixture re-sends with value 999.5. */
@@ -1513,7 +1337,7 @@ object Ingest {
     *     provably hold none);
     *  2. those files rewrite with stale versions anti-filtered out, the
     *     whole update batch unioned in (replacements + inserts together);
-    *  3. swap + incremental index maintenance, same as deleteRows.
+    *  3. the shared [[rewrite]] swaps them in and maintains the index.
     *
     * The update batch's ids are collected driver-side to probe the index
     * — the CDC-batch-is-bounded contract, ENFORCED at [[MaxCdcBatchIds]]
@@ -1521,9 +1345,9 @@ object Ingest {
     * index). I/O is |affected files| + |batch|, never the
     * corpus. Idempotent: re-applying the same batch yields the same
     * corpus state. */
-  def upsertRows(spark: SparkSession, path: String, idCol: String, updates: DataFrame,
-                 numBits: Int = 65536, numHashes: Int = 6): DeleteStats = {
-    val ids = collectBatchIds(updates, idCol, "upsertRows")
+  def upsertRows(spark: SparkSession, path: String, idCol: String,
+                 updates: DataFrame): DeleteStats = {
+    val ids = collectBatchIds(updates, idCol)
     require(ids.nonEmpty, "graft upsertRows: empty update batch")
     // ADVICE r7: a batch carrying two rows for one id would insert both,
     // breaking the one-row-per-id invariant every other path assumes
@@ -1531,32 +1355,9 @@ object Ingest {
       s"graft upsertRows: update batch carries duplicate ids " +
         s"(${ids.diff(ids.distinct).distinct.take(5).mkString(", ")}, ...) — " +
         "MERGE semantics require one row per id; dedup the batch first")
-    val (fs, dir) = hfs(spark, path)
-    reconcile(spark, path)
-    if (!fs.exists(new HPath(bloomIdxPath(path)))) // lost mid-crash: rebuild
-      rebuildBloomIndex(spark, path, idCol, numBits, numHashes)
-    val idx = spark.read.parquet(bloomIdxPath(path)).select("file", "bloom").collect()
-    val cand = candidateFiles(fs, dir, idx, { r =>
-      val sk = graft.functions.BloomSketch.deserialize(r.getAs[Array[Byte]]("bloom"))
-      ids.exists(sk.mightContainLong)
-    })
-    val stale =
-      if (cand.isEmpty) spark.emptyDataFrame
-      else spark.read.parquet(cand: _*)
-    val survivors =
-      if (cand.isEmpty) updates
-      else stale.filter(!col(idCol).isin(ids: _*)).unionByName(updates)
-    val removed = if (cand.isEmpty) 0L
-      else stale.filter(col(idCol).isin(ids: _*)).count()
-    val tmp = path.stripSuffix("/") + "_rewrite_tmp"
-    survivors.write.mode("overwrite").parquet(tmp)
-    val staged = listParquet(fs, new HPath(tmp))
-    commitSwap(fs, dir,
-      renames = staged.map(f => (f, new HPath(dir, f.getName))),
-      drops = cand.map(new HPath(_)))
-    rmTree(spark, tmp)
-    refreshBloomIndex(spark, path, idCol, idx, cand.map(pathKey).toSet, numBits, numHashes)
-    DeleteStats(idx.length, cand.length, removed)
+    val t = open(spark, "upsertRows", ids, path, "file", Some(fileIndex(path, idCol)))
+    rewrite(spark, t, t.lookup(ids), ids.length)(
+      _.filter(!col(idCol).isin(ids: _*)).unionByName(updates))
   }
 
   /** The CDC fixture batch applied by q_docs_upsert: two replacements of

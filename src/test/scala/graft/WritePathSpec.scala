@@ -776,6 +776,17 @@ class WritePathSpec extends SparkSuite {
         (1 to over).map(_.toLong))
     }
     assert(eAnnDel.getMessage.contains("MaxCdcBatchIds"), eAnnDel.getMessage)
+    val eUserDel = intercept[IllegalArgumentException] {
+      Ingest.deleteUserEventsInPlace(spark, s"$root/nonexistent_layout",
+        (1 to over).map(_.toLong))
+    }
+    assert(eUserDel.getMessage.contains("MaxCdcBatchIds"), eUserDel.getMessage)
+    val eCorr = intercept[IllegalArgumentException] {
+      Ingest.upsertEventsInPlace(spark, s"$root/nonexistent_layout",
+        spark.range(over.toLong).select(col("id").as("event_id"),
+          lit("2024-01-05 00:00:00").cast("timestamp_ntz").as("ts")))
+    }
+    assert(eCorr.getMessage.contains("MaxCdcBatchIds"), eCorr.getMessage)
     // DataFrame-based batch API: CollectLimit reads cap+1 rows, then trips
     val big = spark.range(over.toLong).select(
       col("id").as("doc_id"), lit("t").as("text"), lit("en").as("lang"),
@@ -787,6 +798,29 @@ class WritePathSpec extends SparkSuite {
     // the corpus is untouched: all original rows still read back
     assert(spark.read.parquet(path).count() ==
       Tables.documents(spark, sf0001).count())
+  }
+
+  test("maintained bloom indexes equal the index rebuilt from the layout on disk") {
+    def blooms(df: org.apache.spark.sql.DataFrame): Map[String, Vector[Byte]] =
+      df.collect().map(r => r.get(0).toString -> r.getAs[Array[Byte]]("bloom").toVector).toMap
+    val (docsGdpr, embGdpr) = Ingest.gdprDeleted(spark, sf0001, root)
+    // (mutated layout, unit, id column, index suffix) — every grain
+    val fixtures = Seq(
+      (Ingest.cdcUpserted(spark, sf0001, root), "file", "doc_id", "_bloomidx"),
+      (docsGdpr, "file", "doc_id", "_bloomidx"),
+      (embGdpr, "file", "vec_id", "_bloomidx"),
+      (Ingest.eventsGdprDeleted(spark, sf0001, root), "day", "user_id", "_useridx"),
+      (Ingest.eventsCorrected(spark, sf0001, root), "day", "user_id", "_useridx"),
+      (Ingest.annCdcMaintained(spark, sf0001, root = root), "bucket", "vec_id", "_vecidx"))
+    fixtures.foreach { case (layout, unit, id, suffix) =>
+      val kept = blooms(spark.read.parquet(layout + suffix))
+      val rebuilt = blooms(Ingest.BloomIndex(layout, unit, id, layout + suffix).build(spark))
+      assert(kept.keySet == rebuilt.keySet,
+        s"$layout: indexed units ${kept.keySet.size} != units on disk ${rebuilt.keySet.size}")
+      kept.foreach { case (u, b) =>
+        assert(b == rebuilt(u), s"$layout: bloom of $unit $u diverges from a rebuild")
+      }
+    }
   }
 
   test("commit marker: a swap crashed at the worst window rolls forward with no lost row") {
