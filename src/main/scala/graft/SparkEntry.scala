@@ -12,8 +12,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  private val catalog: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] =
-    (Relational.all ++ TimeSeries.all ++ Llm.all ++ Analytics.all).map { case (n, q, o) => (n, q, Some(o)) } ++
+  /** The one entry list: every module's `all`, in catalog order. */
+  private[graft] val entries: Seq[Catalog.Entry] =
+    Relational.all ++ TimeSeries.all ++ Llm.all ++ Analytics.all ++
       StreamingQueries.all ++ LlmScale.all ++ Sketches.all ++ IngestQueries.all ++ Corpus.all ++ Ops.all ++ Signal.all ++ Graphs.all ++ Retrieval.all ++ Features.all ++ Promql.all ++ PromqlFront.all ++ Sre.all ++ Quality.all ++ Fit.all ++ Mining.all ++ Change.all ++ Stats.all ++ Survival.all ++ Geo.all ++ Token.all ++ Mix.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -22,10 +23,10 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    catalog.map { case (n, q, _) => n -> q }.toMap
+    entries.map(e => e.name -> e.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    catalog.collect { case (n, _, Some(o)) => n -> o }.toMap
+    entries.flatMap(e => e.oracle.map(e.name -> _)).toMap
 }

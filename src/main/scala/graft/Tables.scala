@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
+import graft.Catalog.Fixture
+
 /** Shared parquet loaders for the graft engine.
   *
   * Design notes (SURVEY.md §1):
@@ -87,4 +89,13 @@ object Tables {
         raw.withColumn("ts", col("ts").cast("timestamp_ntz"))
     }
   }
+
+  /** The ten tables as fixtures. `Harness.pin` caches them before any
+    * entry's `needs`, so no entry lists them. */
+  val fixtures: Seq[Fixture[DataFrame]] = Seq(
+    Fixture.cached("lineitem")(lineitem), Fixture.cached("orders")(orders),
+    Fixture.cached("customer")(customer), Fixture.cached("supplier")(supplier),
+    Fixture.cached("part")(part), Fixture.cached("nation")(nation),
+    Fixture.cached("region")(region), Fixture.cached("events")(events),
+    Fixture.cached("documents")(documents), Fixture.cached("embeddings")(embeddings))
 }

@@ -21,6 +21,13 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    writeOracles(outDir, SparkEntry.oracleSql.filter { case (k, _) => selected(k) })
+    spark.stop()
+  }
+
+  /** Write `oracles` (name → DuckDB SQL) as `outDir/oracle_sql.json`, the
+    * file the driver's DuckDB compare reads. */
+  def writeOracles(outDir: String, oracles: Map[String, String]): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -33,9 +40,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,8 +28,6 @@ import org.apache.spark.sql.expressions.Window
   *    group (see graft.functions.BottomK).
   */
 object Analytics {
-  type Q = (SparkSession, String) => DataFrame
-
   /** All five event types, pinned: pivot columns must be an explicit,
     * ordered list for schema determinism (and to skip the discovery scan). */
   private val EventTypes = Seq("click", "error", "purchase", "signup", "view")
@@ -451,18 +450,18 @@ object Analytics {
 
   // ---- oracle SQL ----------------------------------------------------------
 
-  val all: Seq[(String, Q, String)] = Seq(
-    ("q_abc_pareto", qAbcPareto,
-      "WITH rev AS (SELECT o_custkey, CAST(sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) revc FROM orders GROUP BY 1), " +
+  val all: Seq[Entry] = Seq(
+    Entry("q_abc_pareto", qAbcPareto,
+      Some("WITH rev AS (SELECT o_custkey, CAST(sum(CAST(round(o_totalprice * 100.0) AS BIGINT)) AS BIGINT) revc FROM orders GROUP BY 1), " +
         "t AS (SELECT CAST(sum(revc) AS BIGINT) tot FROM rev), " +
         "c AS (SELECT revc, CAST(sum(revc) OVER (ORDER BY revc DESC, o_custkey) AS BIGINT) cum FROM rev), " +
         "k AS (SELECT revc, CASE WHEN 5 * cum <= 4 * tot THEN 'A' WHEN 20 * cum <= 19 * tot THEN 'B' ELSE 'C' END cls " +
         "FROM c, t) " +
         "SELECT cls, CAST(count(*) AS BIGINT) n_cust, round(CAST(sum(revc) AS DOUBLE) / 100.0, 4) revenue, " +
         "round(CAST(min(revc) AS DOUBLE) / 100.0, 4) min_rev, round(CAST(max(revc) AS DOUBLE) / 100.0, 4) max_rev " +
-        "FROM k GROUP BY 1 ORDER BY 1"),
-    ("q_assoc_rules", qAssocRules,
-      "WITH pres AS (SELECT DISTINCT user_id, event_type FROM events), " +
+        "FROM k GROUP BY 1 ORDER BY 1")),
+    Entry("q_assoc_rules", qAssocRules,
+      Some("WITH pres AS (SELECT DISTINCT user_id, event_type FROM events), " +
         "nu AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) n FROM pres), " +
         "s1 AS (SELECT event_type t, CAST(count(*) AS BIGINT) n1 FROM pres GROUP BY 1), " +
         "pr AS (SELECT x.event_type ante, y.event_type cons, CAST(count(*) AS BIGINT) n_ab " +
@@ -471,69 +470,69 @@ object Analytics {
         "round(CAST(n_ab AS DOUBLE) / nu.n, 6) support, " +
         "round(CAST(n_ab AS DOUBLE) / a.n1, 6) confidence, " +
         "round(CAST(n_ab AS DOUBLE) * nu.n / (CAST(a.n1 AS DOUBLE) * b.n1), 6) lift " +
-        "FROM pr JOIN s1 a ON a.t = ante JOIN s1 b ON b.t = cons, nu ORDER BY ante, cons"),
-    ("q_ts_gini", qTsGini,
-      "WITH ux AS (SELECT event_type, user_id, CAST(count(*) AS BIGINT) x FROM events GROUP BY 1, 2), " +
+        "FROM pr JOIN s1 a ON a.t = ante JOIN s1 b ON b.t = cons, nu ORDER BY ante, cons")),
+    Entry("q_ts_gini", qTsGini,
+      Some("WITH ux AS (SELECT event_type, user_id, CAST(count(*) AS BIGINT) x FROM events GROUP BY 1, 2), " +
         "r AS (SELECT event_type, x, CAST(row_number() OVER " +
         "(PARTITION BY event_type ORDER BY x, user_id) AS BIGINT) i FROM ux) " +
         "SELECT event_type, CAST(count(*) AS BIGINT) n, CAST(sum(x) AS BIGINT) total, " +
         "round(CAST(2 * sum(i * x) - (count(*) + 1) * sum(x) AS DOUBLE) / " +
         "CAST(count(*) * sum(x) AS DOUBLE), 6) gini " +
-        "FROM r GROUP BY 1 ORDER BY 1"),
-    ("q_agg_mode", qAggMode,
-      "WITH c AS (SELECT user_id, event_type, CAST(count(*) AS BIGINT) n FROM events GROUP BY 1, 2), " +
+        "FROM r GROUP BY 1 ORDER BY 1")),
+    Entry("q_agg_mode", qAggMode,
+      Some("WITH c AS (SELECT user_id, event_type, CAST(count(*) AS BIGINT) n FROM events GROUP BY 1, 2), " +
         "r AS (SELECT user_id, event_type, n, row_number() OVER " +
         "(PARTITION BY user_id ORDER BY n DESC, event_type ASC) rk FROM c) " +
-        "SELECT user_id, event_type mode_type, n FROM r WHERE rk = 1 ORDER BY user_id"),
-    ("q_string_agg", qStringAgg,
-      "SELECT r_name, CAST(count(*) AS BIGINT) n_nations, " +
+        "SELECT user_id, event_type mode_type, n FROM r WHERE rk = 1 ORDER BY user_id")),
+    Entry("q_string_agg", qStringAgg,
+      Some("SELECT r_name, CAST(count(*) AS BIGINT) n_nations, " +
         "string_agg(n_name, ',' ORDER BY n_name) nations " +
         "FROM nation JOIN region ON n_regionkey = r_regionkey " +
-        "GROUP BY r_name ORDER BY r_name"),
-    ("q_percentile_disc", qPercentileDisc,
-      "WITH t AS (SELECT o_orderpriority, o_totalprice, " +
+        "GROUP BY r_name ORDER BY r_name")),
+    Entry("q_percentile_disc", qPercentileDisc,
+      Some("WITH t AS (SELECT o_orderpriority, o_totalprice, " +
         "CAST(row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey) AS BIGINT) rn, " +
         "CAST(count(*) OVER (PARTITION BY o_orderpriority) AS BIGINT) n FROM orders) " +
         "SELECT o_orderpriority, max(n) n, " +
         "max(CASE WHEN rn = ceil(n * 0.25) THEN o_totalprice END) p25, " +
         "max(CASE WHEN rn = ceil(n * 0.5) THEN o_totalprice END) p50, " +
         "max(CASE WHEN rn = ceil(n * 0.75) THEN o_totalprice END) p75 " +
-        "FROM t GROUP BY 1 ORDER BY 1"),
-    ("q_pivot", qPivot,
-      "SELECT CAST(ts AS DATE) AS \"day\", " +
+        "FROM t GROUP BY 1 ORDER BY 1")),
+    Entry("q_pivot", qPivot,
+      Some("SELECT CAST(ts AS DATE) AS \"day\", " +
         EventTypes.map(t => s"count(*) FILTER (WHERE event_type = '$t') AS $t").mkString(", ") +
-        " FROM events GROUP BY 1 ORDER BY 1"),
-    ("q_unpivot", qUnpivot,
-      "SELECT l_orderkey, l_linenumber, metric, val FROM " +
+        " FROM events GROUP BY 1 ORDER BY 1")),
+    Entry("q_unpivot", qUnpivot,
+      Some("SELECT l_orderkey, l_linenumber, metric, val FROM " +
         "(SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount FROM lineitem WHERE l_orderkey <= 200) " +
         "UNPIVOT (val FOR metric IN (l_quantity, l_extendedprice, l_discount)) " +
-        "ORDER BY l_orderkey, l_linenumber, metric, val"),
-    ("q_subquery_scalar", qSubqueryScalar,
-      "WITH na AS (SELECT c_nationkey, round(round(sum(c_acctbal), 8)/count(*), 4) nat_avg FROM customer GROUP BY 1) " +
+        "ORDER BY l_orderkey, l_linenumber, metric, val")),
+    Entry("q_subquery_scalar", qSubqueryScalar,
+      Some("WITH na AS (SELECT c_nationkey, round(round(sum(c_acctbal), 8)/count(*), 4) nat_avg FROM customer GROUP BY 1) " +
         "SELECT c_custkey, c_acctbal, nat_avg FROM customer JOIN na USING (c_nationkey) " +
-        "WHERE c_acctbal > nat_avg ORDER BY c_custkey"),
-    ("q_agg_stats", qAggStats,
-      "SELECT l_returnflag, round(stddev_samp(l_quantity), 4) sd_qty, round(var_samp(l_quantity), 4) var_qty, " +
+        "WHERE c_acctbal > nat_avg ORDER BY c_custkey")),
+    Entry("q_agg_stats", qAggStats,
+      Some("SELECT l_returnflag, round(stddev_samp(l_quantity), 4) sd_qty, round(var_samp(l_quantity), 4) var_qty, " +
         "round(corr(l_quantity, l_extendedprice), 6) corr_qp, round(covar_samp(l_quantity, l_extendedprice), 2) cov_qp, " +
-        "count(*) cnt FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"),
-    ("q_join_skew_salted", qJoinSkewSalted,
-      "SELECT c_mktsegment, count(*) cnt, round(sum(value), 2) sv FROM events " +
-        "JOIN customer ON user_id = c_custkey GROUP BY c_mktsegment ORDER BY c_mktsegment"),
-    ("q_ts_calendar", qTsCalendar,
-      "SELECT CAST(extract(dow FROM ts) AS BIGINT) dow, event_type, count(*) cnt, " +
-        "round(round(sum(value), 8)/count(*), 4) av FROM events GROUP BY 1, 2 ORDER BY dow, event_type"),
-    ("q_window_ntile", qWindowNtile,
-      "SELECT event_id, event_type, value, CAST(ntile(4) OVER w AS BIGINT) quartile, " +
+        "count(*) cnt FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag")),
+    Entry("q_join_skew_salted", qJoinSkewSalted,
+      Some("SELECT c_mktsegment, count(*) cnt, round(sum(value), 2) sv FROM events " +
+        "JOIN customer ON user_id = c_custkey GROUP BY c_mktsegment ORDER BY c_mktsegment")),
+    Entry("q_ts_calendar", qTsCalendar,
+      Some("SELECT CAST(extract(dow FROM ts) AS BIGINT) dow, event_type, count(*) cnt, " +
+        "round(round(sum(value), 8)/count(*), 4) av FROM events GROUP BY 1, 2 ORDER BY dow, event_type")),
+    Entry("q_window_ntile", qWindowNtile,
+      Some("SELECT event_id, event_type, value, CAST(ntile(4) OVER w AS BIGINT) quartile, " +
         "round(percent_rank() OVER w, 6) pr, round(cume_dist() OVER w, 6) cd " +
         "FROM events WHERE event_id < 2000 " +
-        "WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id) ORDER BY event_id"),
-    ("q_sample_stratified", qSampleStratified,
-      "SELECT event_type, rn, event_id, ts, value FROM " +
+        "WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id) ORDER BY event_id")),
+    Entry("q_sample_stratified", qSampleStratified,
+      Some("SELECT event_type, rn, event_id, ts, value FROM " +
         "(SELECT event_type, event_id, ts, value, CAST(row_number() OVER " +
         "(PARTITION BY event_type ORDER BY md5(CAST(event_id AS VARCHAR)), event_id) AS BIGINT) rn " +
-        "FROM events) WHERE rn <= 20 ORDER BY event_type, rn"),
-    ("q_rfm_segments", qRfmSegments,
-      "WITH u AS (SELECT user_id, max(CAST(ts AS DATE)) last_day, CAST(count(*) AS BIGINT) freq, " +
+        "FROM events) WHERE rn <= 20 ORDER BY event_type, rn")),
+    Entry("q_rfm_segments", qRfmSegments,
+      Some("WITH u AS (SELECT user_id, max(CAST(ts AS DATE)) last_day, CAST(count(*) AS BIGINT) freq, " +
         "round(sum(value), 6) mon FROM events GROUP BY 1), " +
         "r AS (SELECT user_id, CAST(DATE '2024-01-31' - last_day AS BIGINT) rec, freq, mon FROM u), " +
         "q AS (SELECT user_id, mon, CAST(ntile(5) OVER (ORDER BY rec ASC, user_id) AS BIGINT) r, " +
@@ -541,16 +540,16 @@ object Analytics {
         "CAST(ntile(5) OVER (ORDER BY mon DESC, user_id) AS BIGINT) m FROM r) " +
         "SELECT CAST(r AS VARCHAR) || CAST(f AS VARCHAR) || CAST(m AS VARCHAR) segment, " +
         "CAST(count(*) AS BIGINT) n_users, round(round(sum(mon), 6) / count(*), 2) avg_monetary " +
-        "FROM q GROUP BY 1 ORDER BY 1"),
-    ("q_agg_bottomk", qAggBottomk,
+        "FROM q GROUP BY 1 ORDER BY 1")),
+    Entry("q_agg_bottomk", qAggBottomk,
       // gs <= len(bot3), not a fixed series: a segment with < k customers
       // yields len rows from the engine's posexplode — the oracle must too
-      "WITH a AS (SELECT c_mktsegment, (list(c_custkey ORDER BY c_acctbal, c_custkey))[1:3] bot3 " +
+      Some("WITH a AS (SELECT c_mktsegment, (list(c_custkey ORDER BY c_acctbal, c_custkey))[1:3] bot3 " +
         "FROM customer GROUP BY c_mktsegment) " +
         "SELECT c_mktsegment, CAST(gs - 1 AS BIGINT) pos, bot3[CAST(gs AS INT)] custkey " +
-        "FROM a, generate_series(1, 3) t(gs) WHERE gs <= len(bot3) ORDER BY c_mktsegment, pos"),
-    ("q_item_cooc_topk", qItemCoocTopk,
-      "WITH pres AS (SELECT DISTINCT l_orderkey ok, l_partkey pk FROM lineitem), " +
+        "FROM a, generate_series(1, 3) t(gs) WHERE gs <= len(bot3) ORDER BY c_mktsegment, pos")),
+    Entry("q_item_cooc_topk", qItemCoocTopk,
+      Some("WITH pres AS (SELECT DISTINCT l_orderkey ok, l_partkey pk FROM lineitem), " +
         "ni AS (SELECT pk, CAST(count(*) AS BIGINT) n FROM pres GROUP BY 1), " +
         "pr AS (SELECT a.pk, b.pk pk2, CAST(count(*) AS BIGINT) cij FROM pres a " +
         "JOIN pres b ON b.ok = a.ok AND a.pk < b.pk GROUP BY 1, 2), " +
@@ -559,6 +558,6 @@ object Analytics {
         "round(CAST(sym.cij AS DOUBLE) / sqrt(CAST(ci.n * cj.n AS DOUBLE)), 6) cosine " +
         "FROM sym JOIN ni ci ON ci.pk = sym.i JOIN ni cj ON cj.pk = sym.j), " +
         "rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY i ORDER BY cosine DESC, cij DESC, j) AS BIGINT) rk FROM sc) " +
-        "SELECT i part, j neighbor, cij cooc, cosine, rk FROM rk WHERE rk <= 3 ORDER BY part, rk"),
+        "SELECT i part, j neighbor, cij cooc, cosine, rk FROM rk WHERE rk <= 3 ORDER BY part, rk")),
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -31,30 +32,8 @@ import org.apache.spark.sql.functions._
   * all time-bounded per series, embarrassingly parallel across types.
   */
 object Change {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Grid length: 2024-01-01 00:00 .. 2024-01-30 23:00 inclusive. */
   private val N = 720L
-
-  /** Gapless hour grid of the dataset's range (q_ts_gapfill bounds). */
-  private def hourGrid(s: SparkSession): DataFrame = s.sql(
-    "SELECT explode(sequence(TIMESTAMP_NTZ '2024-01-01 00:00:00', TIMESTAMP_NTZ '2024-01-30 23:00:00', INTERVAL 1 HOUR)) AS h")
-
-  /** (et, x, c) panel: per-type hourly event counts on the gapless grid
-    * (absent hours are real zeros), x = hours since 2024-01-01 — the
-    * shared series all four detectors read (the Fit-tier device). */
-  private def hourlyPanel(s: SparkSession, d: String): DataFrame = {
-    val types = Tables.events(s, d).select(col("event_type").as("et")).distinct()
-    val hourly = Tables.events(s, d)
-      .groupBy(col("event_type").as("et"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
-    types.crossJoin(broadcast(hourGrid(s)))
-      .join(hourly, Seq("et", "h"), "left")
-      .select(col("et"),
-        expr("timestampdiff(HOUR, TIMESTAMP_NTZ '2024-01-01 00:00:00', h)")
-          .cast("long").as("x"),
-        coalesce(col("c"), lit(0L)).as("c"))
-  }
 
   private def gridHour(xc: String) =
     expr(s"timestampadd(HOUR, $xc, TIMESTAMP_NTZ '2024-01-01 00:00:00')")
@@ -71,7 +50,7 @@ object Change {
     val wc = Window.partitionBy("et").orderBy("x")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wp = Window.partitionBy("et")
-    val g = hourlyPanel(s, d)
+    val g = Fit.hourlyPanel(s, d)
       .withColumn("cx", sum("c").over(wc))
       .withColumn("tot", sum("c").over(wp))
       .withColumn("k", col("x") + 1)
@@ -101,7 +80,7 @@ object Change {
     * decides a rank. */
   val qTsLevelShift: Q = (s, d) => {
     val wo = Window.partitionBy("et").orderBy("x")
-    val p = hourlyPanel(s, d)
+    val p = Fit.hourlyPanel(s, d)
       .withColumn("sb", sum("c").over(wo.rowsBetween(-24, -1)))
       .withColumn("cb", count(lit(1)).over(wo.rowsBetween(-24, -1)))
       .withColumn("sa", sum("c").over(wo.rowsBetween(0, 23)))
@@ -135,7 +114,7 @@ object Change {
   private[graft] def phTrace(s: SparkSession, d: String): DataFrame = {
     val wc = Window.partitionBy("et").orderBy("x")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hourlyPanel(s, d)
+    Fit.hourlyPanel(s, d)
       .withColumn("cx", sum("c").over(wc))
       .withColumn("t6", Num.roundd(
         (col("c").cast("double") - col("cx").cast("double") / (col("x") + 1).cast("double") -
@@ -169,7 +148,7 @@ object Change {
     * must pass before serving. */
   val qTsBacktest: Q = (s, d) => {
     val wo = Window.partitionBy("et").orderBy("x")
-    hourlyPanel(s, d)
+    Fit.hourlyPanel(s, d)
       .withColumn("f168", lag("c", 168).over(wo))
       .withColumn("f24", lag("c", 24).over(wo))
       .filter(col("x") >= 168)
@@ -206,7 +185,7 @@ object Change {
   val qTsBurst: Q = (s, d) => {
     // r18: the panel feeds the per-type totals AND the marking pass — the
     // corpus-sized hourly aggregate ran twice. Pin: ≤ types × 720 rows.
-    val panel = ArtifactStore.rotate("burst_panel")(hourlyPanel(s, d))
+    val panel = ArtifactStore.rotate("burst_panel")(Fit.hourlyPanel(s, d))
     val tot = panel.groupBy(col("et").as("tet")).agg(sum("c").as("sc"))
     val wseq = Window.partitionBy("et").orderBy("x")
     val wcum = wseq.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -241,7 +220,7 @@ object Change {
   private[graft] def burstCausalEpisodes(s: SparkSession, d: String): DataFrame = {
     val wseq = Window.partitionBy("et").orderBy("x")
     val wcum = wseq.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val marked = hourlyPanel(s, d)
+    val marked = Fit.hourlyPanel(s, d)
       .withColumn("sc", sum("c").over(wcum))
       .withColumn("n", col("x") + 1L)
       .withColumn("mark",
@@ -273,8 +252,8 @@ object Change {
       "p AS (SELECT ty.et, CAST(datediff('hour', TIMESTAMP '2024-01-01', g.h) AS BIGINT) x, coalesce(hc.c, 0) c " +
       "FROM ty CROSS JOIN g LEFT JOIN hc ON hc.et = ty.et AND hc.h = g.h), "
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_ts_changepoint", qTsChangepoint, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_ts_changepoint", qTsChangepoint, Some(
       panelCte +
         "w AS (SELECT et, x, c, " +
         "CAST(sum(c) OVER (PARTITION BY et ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) cx, " +
@@ -289,7 +268,7 @@ object Change {
         "round(CAST(tot - cx AS DOUBLE) / (720 - k), 6) mean_after, " +
         "round(gain - CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE) / 720.0, 6) sse_drop " +
         "FROM r WHERE rn = 1 ORDER BY 1")),
-    ("q_ts_level_shift", qTsLevelShift, Some(
+    Entry("q_ts_level_shift", qTsLevelShift, Some(
       panelCte +
         "w AS (SELECT et, x, " +
         "CAST(sum(c) OVER (PARTITION BY et ORDER BY x ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS BIGINT) sb, " +
@@ -307,7 +286,7 @@ object Change {
         "round(CAST(sa AS DOUBLE) / 24.0, 6) mean_after, " +
         "round(CAST(sa - sb AS DOUBLE) / 24.0, 6) shift " +
         "FROM r WHERE rn <= 3 ORDER BY event_type, \"rank\"")),
-    ("q_ts_page_hinkley", qTsPageHinkley, Some(
+    Entry("q_ts_page_hinkley", qTsPageHinkley, Some(
       panelCte +
         "w AS (SELECT et, x, c, " +
         "CAST(sum(c) OVER (PARTITION BY et ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) cx " +
@@ -322,7 +301,7 @@ object Change {
         "min(CASE WHEN ph > 100000000 THEN TIMESTAMP '2024-01-01' + x * INTERVAL 1 HOUR END) first_alarm_h, " +
         "round(CAST(max(ph) AS DOUBLE) / 1000000, 6) max_ph " +
         "FROM ph GROUP BY 1 ORDER BY 1")),
-    ("q_ts_backtest", qTsBacktest, Some(
+    Entry("q_ts_backtest", qTsBacktest, Some(
       panelCte +
         "w AS (SELECT et, x, c, " +
         "lag(c, 168) OVER (PARTITION BY et ORDER BY x) f168, " +
@@ -336,7 +315,7 @@ object Change {
         "round(CAST(sae24 AS DOUBLE) / n, 6) mae_daily, " +
         "CASE WHEN sae24 = 0 THEN NULL ELSE round(1.0 - CAST(sae168 AS DOUBLE) / CAST(sae24 AS DOUBLE), 6) END skill " +
         "FROM m ORDER BY 1")),
-    ("q_ts_burst", qTsBurst, Some(
+    Entry("q_ts_burst", qTsBurst, Some(
       panelCte +
         "t AS (SELECT et, CAST(sum(c) AS BIGINT) sc FROM p GROUP BY 1), " +
         "mk AS (SELECT p.et, p.x, p.c, " +

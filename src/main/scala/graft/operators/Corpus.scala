@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -24,8 +25,6 @@ import org.apache.spark.sql.functions._
   * work per shard).
   */
 object Corpus {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Whitespace token count, identical to q_text_tokencount's ws_tokens.
     * NULL text is coalesced to '' (1 token on both engines) so tok >= 1
     * always holds: Spark's legacy sizeOfNull would return -1 where DuckDB
@@ -648,8 +647,8 @@ object Corpus {
 
   // ---- catalog ------------------------------------------------------------
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_text_substring_dup", qTextSubstringDup, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_text_substring_dup", qTextSubstringDup, Some(
       "WITH t AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') tk FROM documents), " +
         "g AS (SELECT doc_id, unnest(list_transform(range(1, len(tk) - 6), i -> array_to_string(tk[i:i+7], ' '))) gram " +
         "FROM t WHERE len(tk) >= 8), " +
@@ -660,7 +659,7 @@ object Corpus {
         "rep AS (SELECT gh, min(gram) gram FROM h GROUP BY 1) " +
         "SELECT rep.gram, n_docs, n_occur FROM l2 JOIN rep USING (gh) " +
         "ORDER BY n_docs DESC, n_occur DESC, gram LIMIT 50")),
-    ("q_profile_stats", qProfileStats, Some(
+    Entry("q_profile_stats", qProfileStats, Some(
       "WITH a AS (SELECT count(*) n_rows, " +
         "count(doc_id) nn1, count(DISTINCT doc_id) nd1, CAST(min(doc_id) AS VARCHAR) mn1, CAST(max(doc_id) AS VARCHAR) mx1, " +
         "count(text) nn2, count(DISTINCT text) nd2, CAST(min(text) AS VARCHAR) mn2, CAST(max(text) AS VARCHAR) mx2, " +
@@ -674,14 +673,14 @@ object Corpus {
         "SELECT 'lang', n_rows, nn3, nd3, mn3, mx3 FROM a UNION ALL " +
         "SELECT 'source', n_rows, nn4, nd4, mn4, mx4 FROM a UNION ALL " +
         "SELECT 'n_chars', n_rows, nn5, nd5, mn5, mx5 FROM a) ORDER BY col")),
-    ("q_text_editdist", qTextEditdist, Some(
+    Entry("q_text_editdist", qTextEditdist, Some(
       "WITH t AS (SELECT doc_id, lang, substr(text, 1, 32) t, " +
         "lead(doc_id) OVER (PARTITION BY lang ORDER BY doc_id) next_id, " +
         "lead(substr(text, 1, 32)) OVER (PARTITION BY lang ORDER BY doc_id) next_t FROM documents) " +
         "SELECT lang, doc_id id_a, next_id id_b, CAST(levenshtein(t, next_t) AS BIGINT) dist, " +
         "round(1.0 - levenshtein(t, next_t) / CAST(greatest(length(t), length(next_t), 1) AS DOUBLE), 4) sim " +
         "FROM t WHERE next_id IS NOT NULL ORDER BY id_a")),
-    ("q_text_search", qTextSearch, Some(
+    Entry("q_text_search", qTextSearch, Some(
       "WITH p AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) tf FROM " +
         "(SELECT doc_id, unnest(string_split(text, ' ')) w FROM documents) WHERE w != '' GROUP BY 1, 2), " +
         "top2 AS (SELECT w qw, row_number() OVER (ORDER BY cnt DESC, qw ASC) qi FROM " +
@@ -691,7 +690,7 @@ object Corpus {
         "FROM p JOIN top2 ON p.w = top2.qw GROUP BY 1) " +
         "SELECT doc_id, tf1, tf2, CAST(tf1 + tf2 AS BIGINT) score FROM hits WHERE tf1 > 0 AND tf2 > 0 " +
         "ORDER BY score DESC, doc_id ASC LIMIT 20")),
-    ("q_docs_seq_pack", qDocsSeqPack, Some(
+    Entry("q_docs_seq_pack", qDocsSeqPack, Some(
       "WITH t AS (SELECT lang, doc_id, CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok FROM documents), " +
         "o AS (SELECT lang, doc_id, tok, CAST(sum(tok) OVER (PARTITION BY lang ORDER BY doc_id) AS BIGINT) off_end, " +
         "CAST(sum(tok) OVER (PARTITION BY lang) AS BIGINT) lang_total FROM t), " +
@@ -702,7 +701,7 @@ object Corpus {
         "CAST(sum(CASE WHEN seq_first = seq_id THEN 1 ELSE 0 END) AS BIGINT) n_starts, " +
         "CAST(least(512, max(lang_total) - seq_id * 512) AS BIGINT) fill " +
         "FROM e GROUP BY lang, seq_id ORDER BY lang, seq_id")),
-    ("q_docs_pack_greedy", qDocsPackGreedy, Some(
+    Entry("q_docs_pack_greedy", qDocsPackGreedy, Some(
       "WITH RECURSIVE t AS (SELECT lang, doc_id, CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok, " +
         "CAST(row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS BIGINT) i FROM documents), " +
         "rec AS (" +
@@ -715,7 +714,7 @@ object Corpus {
         "SELECT lang, bin, CAST(count(*) AS BIGINT) n_docs, CAST(sum(tok) AS BIGINT) tokens, " +
         "round(sum(tok) / 1024.0, 4) util " +
         "FROM rec GROUP BY lang, bin ORDER BY lang, bin")),
-    ("q_docs_shard_assign", qDocsShardAssign, Some(
+    Entry("q_docs_shard_assign", qDocsShardAssign, Some(
       "WITH t AS (SELECT doc_id, source, CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok, " +
         "CAST('0x' || substr(md5('shard' || ':' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 16 shard FROM documents), " +
         "a AS (SELECT shard, CAST(count(*) AS BIGINT) n_docs, CAST(sum(tok) AS BIGINT) tokens, " +
@@ -723,36 +722,36 @@ object Corpus {
         "g AS (SELECT CAST(sum(tokens) AS BIGINT) total FROM a) " +
         "SELECT shard, n_docs, tokens, n_sources, round(tokens * 16.0 / total, 4) skew " +
         "FROM a, g ORDER BY shard")),
-    ("q_docs_split", qDocsSplit, Some(
+    Entry("q_docs_split", qDocsSplit, Some(
       "WITH t AS (SELECT lang, CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok, " +
         "CAST('0x' || substr(md5('split' || ':' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 hmod FROM documents) " +
         "SELECT CASE WHEN hmod < 90 THEN 'train' WHEN hmod < 95 THEN 'val' ELSE 'test' END split, lang, " +
         "CAST(count(*) AS BIGINT) n_docs, CAST(sum(tok) AS BIGINT) tokens " +
         "FROM t GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_docs_length_dist", qDocsLengthDist, Some(
+    Entry("q_docs_length_dist", qDocsLengthDist, Some(
       "WITH t AS (SELECT source, CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok FROM documents) " +
         "SELECT source, CAST(count(*) AS BIGINT) n_docs, " +
         "round(quantile_cont(tok, 0.5), 4) p50, round(quantile_cont(tok, 0.9), 4) p90, " +
         "round(quantile_cont(tok, 0.99), 4) p99, max(tok) mx " +
         "FROM t GROUP BY source ORDER BY source")),
-    ("q_source_overlap", qSourceOverlap, Some(
+    Entry("q_source_overlap", qSourceOverlap, Some(
       "WITH t AS (SELECT DISTINCT substr(text, 1, 16) h, source FROM documents) " +
         "SELECT a.source src_a, b.source src_b, CAST(count(DISTINCT a.h) AS BIGINT) n_shared " +
         "FROM t a JOIN t b ON a.h = b.h AND a.source < b.source " +
         "GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_docs_shuffle", qDocsShuffle, Some(
+    Entry("q_docs_shuffle", qDocsShuffle, Some(
       "WITH t AS (SELECT doc_id, lang, " +
         "CAST('0x' || substr(md5('epoch0' || ':' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) h FROM documents), " +
         "top AS (SELECT doc_id, lang, h FROM t ORDER BY h, doc_id LIMIT 100) " +
         "SELECT CAST(row_number() OVER (ORDER BY h, doc_id) AS BIGINT) pos, doc_id, lang, h " +
         "FROM top ORDER BY pos")),
-    ("q_docs_budget_cap", qDocsBudgetCap, Some(
+    Entry("q_docs_budget_cap", qDocsBudgetCap, Some(
       "WITH t AS (SELECT source, doc_id, CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok FROM documents), " +
         "c AS (SELECT source, tok, CASE WHEN sum(tok) OVER (PARTITION BY source ORDER BY doc_id) <= 1000 THEN 1 ELSE 0 END kept FROM t) " +
         "SELECT source, CAST(sum(kept) AS BIGINT) n_kept, CAST(sum(kept * tok) AS BIGINT) tok_kept, " +
         "CAST(sum(1 - kept) AS BIGINT) n_drop, CAST(sum((1 - kept) * tok) AS BIGINT) tok_drop " +
         "FROM c GROUP BY source ORDER BY source")),
-    ("q_text_bm25", qTextBm25, Some(
+    Entry("q_text_bm25", qTextBm25, Some(
       "WITH p AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) tf FROM " +
         "(SELECT doc_id, unnest(string_split(text, ' ')) w FROM documents) WHERE w != '' GROUP BY 1, 2), " +
         "dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) dl FROM p GROUP BY 1), " +
@@ -766,7 +765,7 @@ object Corpus {
         "* (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / (CAST(sdl AS DOUBLE) / n))), 6) contrib FROM j) " +
         "SELECT doc_id, round(sum(contrib), 6) score, CAST(count(*) AS BIGINT) n_terms " +
         "FROM c GROUP BY 1 ORDER BY score DESC, doc_id LIMIT 20")),
-    ("q_docs_chunks", qDocsChunks, Some(
+    Entry("q_docs_chunks", qDocsChunks, Some(
       "WITH t AS (SELECT source, doc_id, CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok FROM documents), " +
         "nc AS (SELECT source, doc_id, tok, CASE WHEN tok <= 128 THEN 1 ELSE 1 + (tok - 128 + 95) // 96 END n FROM t), " +
         "e AS (SELECT source, doc_id, tok, unnest(range(n)) i FROM nc), " +
@@ -776,7 +775,7 @@ object Corpus {
         "SELECT source, n_docs, n_chunks, chunk_tok, CAST(chunk_tok - doc_tok AS BIGINT) overhead, " +
         "round(CAST(chunk_tok - doc_tok AS DOUBLE) / doc_tok, 6) overhead_ratio " +
         "FROM a ORDER BY source")),
-    ("q_text_zipf", qTextZipf, Some(
+    Entry("q_text_zipf", qTextZipf, Some(
       "WITH t AS (SELECT lang, w, CAST(count(*) AS BIGINT) cnt FROM " +
         "(SELECT lang, unnest(string_split(text, ' ')) w FROM documents) WHERE w != '' GROUP BY 1, 2), " +
         "r AS (SELECT lang, cnt, row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, w ASC) rk FROM t), " +
@@ -787,12 +786,12 @@ object Corpus {
         "round((n * sxy - sx * sy) / (n * sxx - sx * sx), 4) slope, " +
         "round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 4) intercept " +
         "FROM a ORDER BY lang")),
-    ("q_docs_interleave", qDocsInterleave, Some(
+    Entry("q_docs_interleave", qDocsInterleave, Some(
       "WITH t AS (SELECT source, doc_id, CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) AS BIGINT) rk FROM documents), " +
         "top AS (SELECT source, doc_id, rk FROM t ORDER BY rk, source LIMIT 100) " +
         "SELECT CAST(row_number() OVER (ORDER BY rk, source) AS BIGINT) pos, source, doc_id, rk " +
         "FROM top ORDER BY pos")),
-    ("q_text_decontaminate", qTextDecontaminate, Some(
+    Entry("q_text_decontaminate", qTextDecontaminate, Some(
       "WITH g AS (SELECT doc_id, source, list_distinct(list_transform(range(len(w) - 7), i -> array_to_string(w[i+1:i+8], ' '))) gs " +
         "FROM (SELECT doc_id, source, string_split(text, ' ') w FROM documents) WHERE len(w) >= 8), " +
         "e AS (SELECT DISTINCT unnest(gs) ng FROM g WHERE source = 'src0'), " +

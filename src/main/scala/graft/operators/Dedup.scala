@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Catalog.Fixture
+
 /** Deduplication operators for text corpora, scale-first.
   *
   * Tiers (cheapest → most thorough):
@@ -94,6 +96,11 @@ object Dedup {
     df.withColumn("sig", expr(s"graft_minhash($textCol, $n, $numHashes)"))
       .filter(col("sig").isNotNull)
   }
+
+  /** 8-hash signatures of the documents table, pinned in memory as a
+    * corpus build keeps its sketch index. */
+  val MinhashDocs: Fixture[DataFrame] = Fixture.cached("minhash_docs")((s, d) =>
+    minHashFromText(graft.Tables.documents(s, d), "text", numHashes = 8))
 
   /** LSH banding: explode signatures into (band, band-signature) keys,
     * hash-aggregate ids per bucket, and expand each bucket's id list into

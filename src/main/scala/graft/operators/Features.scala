@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -12,8 +13,6 @@ import org.apache.spark.sql.functions._
   * 24 h" panel that additive window sums cannot express).
   */
 object Features {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Point-in-time (PIT) correct feature backfill: for every (user,
     * active day) training row, features computed STRICTLY before that
     * day's midnight — trailing-7-day event count and value sum, the last
@@ -149,8 +148,8 @@ object Features {
 
   // ---- catalog ------------------------------------------------------------
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_scd2_build", qScd2Build, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_scd2_build", qScd2Build, Some(
       "WITH m AS (SELECT user_id, ts, event_id, event_type status, " +
         "CASE WHEN lag(event_type) OVER w IS NULL OR lag(event_type) OVER w <> event_type " +
         "THEN 1 ELSE 0 END chg " +
@@ -162,7 +161,7 @@ object Features {
         "SELECT user_id, status, valid_from, valid_to, " +
         "CAST(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END AS BIGINT) is_current " +
         "FROM x ORDER BY user_id, valid_from")),
-    ("q_feat_pit", qFeatPit, Some(
+    Entry("q_feat_pit", qFeatPit, Some(
       "WITH dr AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) dday, value, " +
         "row_number() OVER (PARTITION BY user_id, date_trunc('day', ts) ORDER BY ts DESC, event_id DESC) rn FROM events), " +
         "dl AS (SELECT user_id, dday, value day_last FROM dr WHERE rn = 1), " +
@@ -181,7 +180,7 @@ object Features {
         "u AS (PARTITION BY user_id ORDER BY d)) " +
         "SELECT user_id, dday, cnt7, sum7, last_v, CAST(days_since AS BIGINT) days_since " +
         "FROM w ORDER BY user_id, dday")),
-    ("q_dq_audit", qDqAudit, Some(
+    Entry("q_dq_audit", qDqAudit, Some(
       "SELECT * FROM (" +
         "SELECT 'orders_orphan_custkey' chk, CAST(count(*) AS BIGINT) n FROM orders " +
         "WHERE o_custkey NOT IN (SELECT c_custkey FROM customer) " +
@@ -200,13 +199,13 @@ object Features {
         "SELECT 'documents_empty_text', CAST(count(*) AS BIGINT) FROM documents " +
         "WHERE text IS NULL OR length(text) = 0" +
         ") ORDER BY chk")),
-    ("q_ts_sliding_distinct", qTsSlidingDistinct, Some(
+    Entry("q_ts_sliding_distinct", qTsSlidingDistinct, Some(
       "WITH pres AS (SELECT DISTINCT user_id, date_trunc('hour', ts) h FROM events), " +
         "ex AS (SELECT DISTINCT user_id, h + i * INTERVAL 1 HOUR w " +
         "FROM pres CROSS JOIN (SELECT unnest(range(0, 24)) i) " +
         "WHERE h + i * INTERVAL 1 HOUR <= TIMESTAMP '2024-01-30 23:00:00') " +
         "SELECT w, CAST(count(*) AS BIGINT) n_users FROM ex GROUP BY 1 ORDER BY 1")),
-    ("q_feat_target_encode", qFeatTargetEncode, Some(
+    Entry("q_feat_target_encode", qFeatTargetEncode, Some(
       "WITH g AS (SELECT event_type, round(sum(value), 6) sv, CAST(count(*) AS BIGINT) n " +
         "FROM events GROUP BY 1 HAVING count(*) > 1) " +
         "SELECT e.event_id, e.event_type, e.value, " +

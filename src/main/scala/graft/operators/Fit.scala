@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -34,16 +35,24 @@ import org.apache.spark.sql.functions._
   * sessionizer and the streaming rate limiter already rely on.
   */
 object Fit {
-  type Q = (SparkSession, String) => DataFrame
-
-  /** Gapless hour grid of the dataset's range (q_ts_gapfill bounds). */
-  private def hourGrid(s: SparkSession): DataFrame = s.sql(
+  /** The canonical gapless hour grid of the dataset's time range (the
+    * q_ts_gapfill bounds). Absent hours are real zeros for COUNT series —
+    * correlating only observed hours would bias r toward dense periods. */
+  private[operators] def hourGrid(s: SparkSession): DataFrame = s.sql(
     "SELECT explode(sequence(TIMESTAMP_NTZ '2024-01-01 00:00:00', TIMESTAMP_NTZ '2024-01-30 23:00:00', INTERVAL 1 HOUR)) AS h")
+
+  /** DuckDB twin of `hourGrid`, for oracles. */
+  private[operators] val HourGridSql =
+    "SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h"
 
   /** (et, x, c) panel: per-type hourly event counts on the gapless grid
     * (absent hours are real zeros), x = hours since 2024-01-01. Shared
-    * by the OLS and Theil–Sen fits so both see the identical series. */
-  private def hourlyPanel(s: SparkSession, d: String): DataFrame = {
+    * by the fits here, Change's detectors and Stats' tests, so all of
+    * them see the identical series. (r18: a rotate pin under Stats was
+    * measured and REJECTED — cross_corr 0.28 → 0.46 s while ar2_fit −0.1
+    * and ljung_box neutral, net negative: the lag-join branches overlap
+    * inside one job at sf0.1.) */
+  private[operators] def hourlyPanel(s: SparkSession, d: String): DataFrame = {
     val types = Tables.events(s, d).select(col("event_type").as("et")).distinct()
     val hourly = Tables.events(s, d)
       .groupBy(col("event_type").as("et"), date_trunc("hour", col("ts")).as("h"))
@@ -362,8 +371,8 @@ object Fit {
 
   // ---- catalog ------------------------------------------------------------
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_ts_regr_fit", qTsRegrFit, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_ts_regr_fit", qTsRegrFit, Some(
       "WITH g AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
@@ -378,7 +387,7 @@ object Fit {
         "round(CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE) / " +
         "(CAST(n * sxx - sx * sx AS DOUBLE) * CAST(n * syy - sy * sy AS DOUBLE)), 6) END r2 " +
         "FROM m ORDER BY 1")),
-    ("q_ts_theil_sen", qTsTheilSen, Some(
+    Entry("q_ts_theil_sen", qTsTheilSen, Some(
       "WITH g AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
@@ -388,7 +397,7 @@ object Fit {
         "FROM p a JOIN p b ON b.et = a.et AND a.x < b.x) " +
         "SELECT et event_type, CAST(count(*) AS BIGINT) n_pairs, " +
         "round(quantile_cont(sl, 0.5), 6) slope FROM pr GROUP BY 1 ORDER BY 1")),
-    ("q_ts_drawdown", qTsDrawdown, Some(
+    Entry("q_ts_drawdown", qTsDrawdown, Some(
       "WITH h AS (SELECT event_type et, date_trunc('hour', ts) h, " +
         "CAST(round(sum(value) * 1000000, 0) AS BIGINT) v FROM events GROUP BY 1, 2), " +
         "c AS (SELECT et, h, CAST(sum(v) OVER w AS BIGINT) cum FROM h " +
@@ -400,7 +409,7 @@ object Fit {
         "round(CAST(max(dd) AS DOUBLE) / 1000000, 6) max_dd, " +
         "min(CASE WHEN dd = ddmax THEN h END) trough_h " +
         "FROM x GROUP BY 1 ORDER BY 1")),
-    ("q_ts_season_strength", qTsSeasonStrength, Some(
+    Entry("q_ts_season_strength", qTsSeasonStrength, Some(
       "WITH g AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
@@ -416,7 +425,7 @@ object Fit {
         "SELECT m.et event_type, peak_hod, " +
         "round(1.0 - CAST(n * srr - sr * sr AS DOUBLE) / (900.0 * CAST(n * scc - sc * sc AS DOUBLE)), 6) strength " +
         "FROM m JOIN pk ON pk.et = m.et ORDER BY 1")),
-    ("q_ts_wilson_ci", qTsWilsonCi, Some(
+    Entry("q_ts_wilson_ci", qTsWilsonCi, Some(
       "WITH a AS (SELECT CAST(date_trunc('day', ts) AS DATE) d, " +
         "CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) x, " +
         "CAST(count(*) AS BIGINT) n FROM events GROUP BY 1), " +
@@ -425,7 +434,7 @@ object Fit {
         "1.96 * sqrt(p * (1.0 - p) / nd + (1.96 * 1.96) / (4.0 * nd * nd)) rad FROM b) " +
         "SELECT d, n, x, round(p, 6) p, round((center - rad) / den, 6) lo, " +
         "round((center + rad) / den, 6) hi FROM cx ORDER BY d")),
-    ("q_ts_ma_cross", qTsMaCross, Some(
+    Entry("q_ts_ma_cross", qTsMaCross, Some(
       "WITH dp AS (SELECT event_type et, CAST(date_trunc('day', ts) AS DATE) dd, " +
         "CAST(round(sum(value) * 1000000, 0) AS BIGINT) v FROM events GROUP BY 1, 2), " +
         "m AS (SELECT et, dd, " +
@@ -442,14 +451,14 @@ object Fit {
         "CASE WHEN cmp = 1 THEN 'golden' ELSE 'death' END signal " +
         "FROM x WHERE prev IS NOT NULL AND cmp <> prev AND cmp <> 0 " +
         "ORDER BY event_type, d")),
-    ("q_ts_capped_cumsum", qTsCappedCumsum, Some(
+    Entry("q_ts_capped_cumsum", qTsCappedCumsum, Some(
       "WITH RECURSIVE e AS (SELECT user_id, event_id, round(value, 6) - 40.0 delta, " +
         "CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) rn FROM events), " +
         "s AS (SELECT user_id, event_id, rn, least(greatest(100.0 + delta, 0.0), 200.0) bal FROM e WHERE rn = 1 " +
         "UNION ALL SELECT e.user_id, e.event_id, e.rn, least(greatest(s.bal + e.delta, 0.0), 200.0) " +
         "FROM s JOIN e ON e.user_id = s.user_id AND e.rn = s.rn + 1) " +
         "SELECT user_id, event_id, round(bal, 6) bal FROM s ORDER BY user_id, event_id")),
-    ("q_ts_kalman", qTsKalman, Some(
+    Entry("q_ts_kalman", qTsKalman, Some(
       "WITH RECURSIVE g AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
@@ -462,7 +471,7 @@ object Fit {
         "round(round(s.pv + 1.0, 6) / (round(s.pv + 1.0, 6) + 4.0), 6) " +
         "FROM s JOIN p ON p.et = s.et AND p.x = s.x + 1) " +
         "SELECT et event_type, x, round(lvl, 6) AS \"level\", k gain FROM s WHERE x >= 690 ORDER BY 1, 2")),
-    ("q_ts_classical_decomp", qTsClassicalDecomp, Some(
+    Entry("q_ts_classical_decomp", qTsClassicalDecomp, Some(
       "WITH g AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
@@ -479,7 +488,7 @@ object Fit {
         "SELECT sj.et event_type, sj.hod, sj.nj n_days, " +
         "round(CAST(24 * sj.snum - st.stot AS DOUBLE) / CAST(1152 * sj.nj AS DOUBLE), 6) seasonal " +
         "FROM sj JOIN st ON st.et = sj.et ORDER BY 1, 2")),
-    ("q_ts_theta", qTsTheta, Some(
+    Entry("q_ts_theta", qTsTheta, Some(
       "WITH RECURSIVE g AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +

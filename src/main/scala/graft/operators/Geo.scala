@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.Column
@@ -49,8 +50,6 @@ import org.apache.spark.sql.functions._
   * at the source (the ANN by-bucket layout discipline).
   */
 object Geo {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---- deterministic coordinate derivation --------------------------------
 
   /** Customer points: lat ∈ [-85, 85), lon ∈ [-180, 180), 0.1° lattice. */
@@ -337,8 +336,8 @@ object Geo {
 
   // ---- catalog ------------------------------------------------------------
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_geo_hub_distance", qGeoHubDistance, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_geo_hub_distance", qGeoHubDistance, Some(
       s"WITH $HubsCte, " +
         "km AS (SELECT h.hub, " + hav("CAST((c_custkey * 7919) % 1700 AS DOUBLE) / 10.0 - 85.0",
           "CAST((c_custkey * 104729) % 3600 AS DOUBLE) / 10.0 - 180.0", "h.hlat", "h.hlon") + " km " +
@@ -346,20 +345,20 @@ object Geo {
         "SELECT hub, count(*) n, round(min(km), 3) min_km, round(max(km), 3) max_km, " +
         s"round(CAST(sum(${unitsSql("km", 1)}) AS DOUBLE) / count(*) / 10.0, 2) avg_km " +
         "FROM km GROUP BY hub ORDER BY hub")),
-    ("q_geo_cell_counts", qGeoCellCounts, Some(
+    Entry("q_geo_cell_counts", qGeoCellCounts, Some(
       s"WITH $PtsCte " +
         "SELECT CAST(floor((lat + 90.0) * 2.0) AS BIGINT) * 720 + CAST(floor((lon + 180.0) * 2.0) AS BIGINT) cell, " +
         "count(*) n, count(DISTINCT seg) segs FROM pts GROUP BY 1 ORDER BY n DESC, cell LIMIT 100")),
-    ("q_geo_bbox_join", qGeoBboxJoin, Some(
+    Entry("q_geo_bbox_join", qGeoBboxJoin, Some(
       s"WITH $PtsCte, $BoxesCte " +
         "SELECT bid, count(*) n_inside, min(id) min_id, max(id) max_id FROM boxes b JOIN pts p " +
         "ON p.lat BETWEEN b.blat - b.hh AND b.blat + b.hh AND p.lon BETWEEN b.blon - b.hw AND b.blon + b.hw " +
         "GROUP BY bid ORDER BY bid")),
-    ("q_geo_knn_probe", qGeoKnnProbe, Some(
+    Entry("q_geo_knn_probe", qGeoKnnProbe, Some(
       s"WITH $PtsCte " +
         "SELECT id, seg, round((lat - 17.3) * (lat - 17.3) + (lon - 42.7) * (lon - 42.7), 6) d2 " +
         "FROM pts ORDER BY (lat - 17.3) * (lat - 17.3) + (lon - 42.7) * (lon - 42.7), id LIMIT 12")),
-    ("q_geo_grid_cluster", qGeoGridCluster, Some(
+    Entry("q_geo_grid_cluster", qGeoGridCluster, Some(
       s"WITH RECURSIVE $PtsCte, " +
         "cells AS (SELECT cy, cx, count(*) n, cy * 36 + cx cell FROM (" +
         "SELECT CAST(floor((lat + 90.0) / 10.0) AS BIGINT) cy, CAST(floor((lon + 180.0) / 10.0) AS BIGINT) cx " +
@@ -371,7 +370,7 @@ object Geo {
         "lbl AS (SELECT s AS id, least(s, min(t)) cl FROM r GROUP BY s) " +
         "SELECT coalesce(lbl.cl, cells.cell) cluster_id, count(*) n_cells, CAST(sum(cells.n) AS BIGINT) n_points " +
         "FROM cells LEFT JOIN lbl ON lbl.id = cells.cell GROUP BY 1 ORDER BY 1")),
-    ("q_geo_nearest_hub", qGeoNearestHub, Some(
+    Entry("q_geo_nearest_hub", qGeoNearestHub, Some(
       s"WITH $PtsCte, $HubsCte, " +
         "ranked AS (SELECT p.id, h.hkey, h.hub, " +
         "(p.lat - h.hlat) * (p.lat - h.hlat) + (p.lon - h.hlon) * (p.lon - h.hlon) d2, " +
@@ -380,7 +379,7 @@ object Geo {
         "FROM pts p CROSS JOIN hubs h) " +
         "SELECT hkey, hub, count(*) n_assigned, round(max(d2), 6) max_d2 " +
         "FROM ranked WHERE rn = 1 GROUP BY hkey, hub ORDER BY hkey")),
-    ("q_geo_trajectory", qGeoTrajectory, Some(
+    Entry("q_geo_trajectory", qGeoTrajectory, Some(
       "WITH ev AS (SELECT user_id, ts, event_id, " +
         "CAST((event_id * 4621) % 1600 AS DOUBLE) / 10.0 - 80.0 elat, " +
         "CAST((event_id * 9043) % 3500 AS DOUBLE) / 10.0 - 175.0 elon FROM events), " +
@@ -390,14 +389,14 @@ object Geo {
         "SELECT user_id, count(*) n_moves, " +
         s"round(CAST(sum(${unitsSql("len", 6)}) AS DOUBLE) / 1e6, 6) path_deg, " +
         "round(max(len), 6) max_leg FROM seg GROUP BY user_id ORDER BY user_id")),
-    ("q_geo_st_heatmap", qGeoStHeatmap, Some(
+    Entry("q_geo_st_heatmap", qGeoStHeatmap, Some(
       "WITH ev AS (SELECT date_trunc('day', ts) dday, " +
         "CAST(floor((CAST((event_id * 4621) % 1600 AS DOUBLE) / 10.0 - 80.0 + 90.0) / 10.0) AS BIGINT) * 36 + " +
         "CAST(floor((CAST((event_id * 9043) % 3500 AS DOUBLE) / 10.0 - 175.0 + 180.0) / 10.0) AS BIGINT) cell FROM events), " +
         "agg AS (SELECT dday, cell, count(*) n FROM ev GROUP BY 1, 2), " +
         "r AS (SELECT dday, cell, n, CAST(row_number() OVER (PARTITION BY dday ORDER BY n DESC, cell) AS BIGINT) rn FROM agg) " +
         "SELECT dday, cell, n, rn FROM r WHERE rn <= 10 ORDER BY dday, rn")),
-    ("q_geo_od_matrix", qGeoOdMatrix, Some(
+    Entry("q_geo_od_matrix", qGeoOdMatrix, Some(
       "WITH ev AS (SELECT user_id, ts, event_id, " +
         "CAST(floor((CAST((event_id * 4621) % 1600 AS DOUBLE) / 10.0 - 80.0 + 90.0) / 10.0) AS BIGINT) * 36 + " +
         "CAST(floor((CAST((event_id * 9043) % 3500 AS DOUBLE) / 10.0 - 175.0 + 180.0) / 10.0) AS BIGINT) cell FROM events), " +
@@ -406,7 +405,7 @@ object Geo {
         "od AS (SELECT f.user_id, f.cell o_cell, l.cell d_cell FROM r f JOIN r l ON f.user_id = l.user_id " +
         "AND f.rn_a = 1 AND l.rn_d = 1) " +
         "SELECT o_cell, d_cell, count(*) n_users FROM od GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_geo_radius_search", qGeoRadiusSearch, Some(
+    Entry("q_geo_radius_search", qGeoRadiusSearch, Some(
       s"WITH $PtsCte " +
         s"SELECT seg, count(*) n, round(min(km), 3) min_km, round(max(km), 3) max_km FROM (" +
         s"SELECT seg, ${hav("lat", "lon", "48.85", "2.35")} km FROM pts) WHERE km < 3000.0 " +

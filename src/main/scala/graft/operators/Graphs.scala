@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -33,8 +34,6 @@ import org.apache.spark.sql.functions._
   * algorithm (no recursion, no fold) over the same rounded iterates.
   */
 object Graphs {
-  type Q = (SparkSession, String) => DataFrame
-
   /** (src, dst, n) edge list: consecutive event-type pairs per user in
     * (ts, event_id) order. One window shuffle + one hash aggregate. */
   private def edges(s: SparkSession, d: String): DataFrame = {
@@ -434,17 +433,17 @@ object Graphs {
       .orderBy("src", "dst")
   }
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_graph_markov2", qGraphMarkov2, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_graph_markov2", qGraphMarkov2, Some(
       s"WITH $EDGE_SQL, " +
         "p1 AS (SELECT src, dst, round(CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY src) AS BIGINT), 6) p FROM ed) " +
         "SELECT a.src, b.dst, round(sum(a.p * b.p), 6) p2 " +
         "FROM p1 a JOIN p1 b ON b.src = a.dst GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_graph_transitions", qGraphTransitions, Some(
+    Entry("q_graph_transitions", qGraphTransitions, Some(
       s"WITH $EDGE_SQL " +
         "SELECT src, dst, n, round(CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY src) AS BIGINT), 6) p " +
         "FROM ed ORDER BY src, dst")),
-    ("q_graph_pagerank", qGraphPagerank, Some(
+    Entry("q_graph_pagerank", qGraphPagerank, Some(
       s"WITH $EDGE_SQL, " +
         "ow AS (SELECT src, CAST(sum(n) AS BIGINT) outw FROM ed GROUP BY 1), " +
         "ef AS (SELECT ed.src, ed.dst, CAST(ed.n AS DOUBLE) / ow.outw frac FROM ed JOIN ow ON ow.src = ed.src), " +
@@ -457,13 +456,13 @@ object Graphs {
             s"FROM nodes n CROSS JOIN nn LEFT JOIN (ef JOIN r${i - 1} ON r${i - 1}.node = ef.src) " +
             s"ON ef.dst = n.node GROUP BY n.node, nn.c)").mkString +
         " SELECT node, rank FROM r20 ORDER BY node")),
-    ("q_graph_paths", qGraphPaths, Some(
+    Entry("q_graph_paths", qGraphPaths, Some(
       "WITH p AS (SELECT event_type e1, " +
         "lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) e2, " +
         "lead(event_type, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id) e3 FROM events) " +
         "SELECT e1, e2, e3, CAST(count(*) AS BIGINT) n FROM p WHERE e3 IS NOT NULL " +
         "GROUP BY 1, 2, 3 ORDER BY n DESC, e1, e2, e3 LIMIT 20")),
-    ("q_graph_attribution", qGraphAttribution, Some(
+    Entry("q_graph_attribution", qGraphAttribution, Some(
       "WITH lt AS (SELECT event_type, user_id, ts, event_id, " +
         "last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS) " +
         "OVER (PARTITION BY user_id ORDER BY ts, event_id " +
@@ -473,7 +472,7 @@ object Graphs {
         "SELECT touch, conversions, " +
         "round(CAST(conversions AS DOUBLE) / CAST(sum(conversions) OVER () AS BIGINT), 6) AS share " +
         "FROM conv ORDER BY touch")),
-    ("q_graph_triangles", qGraphTriangles, Some(
+    Entry("q_graph_triangles", qGraphTriangles, Some(
       "WITH p0 AS (SELECT event_type src, lead(event_type) OVER " +
         "(PARTITION BY user_id ORDER BY ts, event_id) dst FROM events), " +
         "ed AS (SELECT DISTINCT least(src, dst) a, greatest(src, dst) b FROM p0 " +
@@ -482,14 +481,14 @@ object Graphs {
         "JOIN ed e2 ON e2.a = e1.b " +
         "JOIN ed e3 ON e3.a = e1.a AND e3.b = e2.b " +
         "ORDER BY 1, 2, 3")),
-    ("q_graph_degree", qGraphDegree, Some(
+    Entry("q_graph_degree", qGraphDegree, Some(
       s"WITH $EDGE_SQL, " +
         "o AS (SELECT src node, CAST(count(*) AS BIGINT) out_deg, CAST(sum(n) AS BIGINT) out_w FROM ed GROUP BY 1), " +
         "i AS (SELECT dst node, CAST(count(*) AS BIGINT) in_deg, CAST(sum(n) AS BIGINT) in_w FROM ed GROUP BY 1) " +
         "SELECT coalesce(o.node, i.node) node, coalesce(out_deg, 0) out_deg, coalesce(out_w, 0) out_w, " +
         "coalesce(in_deg, 0) in_deg, coalesce(in_w, 0) in_w " +
         "FROM o FULL JOIN i ON i.node = o.node ORDER BY 1")),
-    ("q_graph_attribution_multi", qGraphAttributionMulti, Some(
+    Entry("q_graph_attribution_multi", qGraphAttributionMulti, Some(
       "WITH s AS (SELECT user_id, ts, event_id, event_type, " +
         "CAST(sum(CASE WHEN event_type <> 'purchase' THEN 1 ELSE 0 END) OVER " +
         "(PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) ti " +
@@ -506,7 +505,7 @@ object Graphs {
         "round(CAST(sum(lin6) AS DOUBLE) / 6.0, 6) linear_credit, " +
         "round(CAST(sum(upct) AS DOUBLE) / 100.0, 6) u_credit " +
         "FROM j GROUP BY 1 ORDER BY 1")),
-    ("q_graph_link_predict", qGraphLinkPredict, Some(
+    Entry("q_graph_link_predict", qGraphLinkPredict, Some(
       s"WITH $UND_SQL, " +
         "adj AS (SELECT a node, b nbr FROM und UNION ALL SELECT b node, a nbr FROM und), " +
         "deg AS (SELECT node, CAST(count(*) AS BIGINT) deg FROM adj GROUP BY 1), " +
@@ -520,7 +519,7 @@ object Graphs {
         "sc.adamic_adar, (und.a IS NOT NULL) is_edge " +
         "FROM sc JOIN deg da ON da.node = sc.a JOIN deg db ON db.node = sc.b " +
         "LEFT JOIN und ON und.a = sc.a AND und.b = sc.b ORDER BY 1, 2")),
-    ("q_graph_cluster_coef", qGraphClusterCoef, Some(
+    Entry("q_graph_cluster_coef", qGraphClusterCoef, Some(
       s"WITH $UND_SQL, " +
         "tri AS (SELECT e1.a, e1.b, e2.b c FROM und e1 " +
         "JOIN und e2 ON e2.a = e1.b " +
@@ -533,7 +532,7 @@ object Graphs {
         "CASE WHEN deg.deg < 2 THEN NULL ELSE " +
         "round(2.0 * CAST(coalesce(tn.tri, 0) AS DOUBLE) / CAST(deg.deg * (deg.deg - 1) AS DOUBLE), 6) END cc " +
         "FROM deg LEFT JOIN tn ON tn.node = deg.node ORDER BY 1")),
-    ("q_graph_attribution_markov", qGraphAttributionMarkov, Some(
+    Entry("q_graph_attribution_markov", qGraphAttributionMarkov, Some(
       "WITH seq0 AS (SELECT user_id, event_type, " +
         "row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) rn FROM events), " +
         "pn AS (SELECT user_id, CAST(min(rn) AS BIGINT) pn FROM seq0 WHERE event_type = 'purchase' GROUP BY 1), " +

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,8 +20,6 @@ import org.apache.spark.sql.functions._
   * TakeOrderedAndProject (per-partition heaps + driver merge, no global sort).
   */
 object Llm {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Compiled single-pass cosine: identical left-to-right double
     * accumulation as the HOF version and DuckDB's list_cosine_similarity —
     * bit-equal results — but a JIT'd loop instead of interpreted
@@ -127,20 +126,20 @@ object Llm {
         Num.roundd(Num.roundd(sum(element_at(col("embedding"), 2).cast("double")), 10) / count(lit(1)), 6).as("c1"))
       .orderBy("label")
 
-  val all: Seq[(String, Q, String)] = Seq(
-    ("q_dedup_exact", qDedupExact,
-      "SELECT md5(text) h, min(doc_id) keep_id, count(*) n FROM documents GROUP BY 1 HAVING count(*)>1 ORDER BY h"),
-    ("q_dedup_groups", qDedupGroups,
-      "SELECT md5(text) h, min(doc_id) keep_id, count(*) n FROM documents GROUP BY 1 ORDER BY h LIMIT 100"),
-    ("q_text_tokens", qTextTokens,
-      "SELECT w, count(*) cnt FROM (SELECT unnest(string_split(text,' ')) w FROM documents) WHERE w<>'' GROUP BY w ORDER BY cnt DESC, w LIMIT 50"),
-    ("q_text_lang", qTextLang,
-      "SELECT lang, count(*) docs, CAST(sum(n_chars) AS BIGINT) chars, round(avg(n_chars),2) avg_chars FROM documents GROUP BY lang ORDER BY lang"),
-    ("q_sim_topk", qSimTopk,
-      "SELECT e2.vec_id, round(list_cosine_similarity(CAST(e1.embedding AS DOUBLE[]), CAST(e2.embedding AS DOUBLE[])),6) sim FROM embeddings e1, embeddings e2 WHERE e1.vec_id=0 AND e2.vec_id<>0 ORDER BY sim DESC, e2.vec_id LIMIT 10"),
-    ("q_knn_label", qKnnLabel,
-      "WITH nn AS (SELECT e2.label, list_cosine_similarity(CAST(e1.embedding AS DOUBLE[]), CAST(e2.embedding AS DOUBLE[])) sim, e2.vec_id FROM embeddings e1, embeddings e2 WHERE e1.vec_id=0 AND e2.vec_id<>0 ORDER BY sim DESC, e2.vec_id LIMIT 25) SELECT label, count(*) votes FROM nn GROUP BY label ORDER BY votes DESC, label LIMIT 1"),
-    ("q_sim_centroid", qSimCentroid,
-      "SELECT label, count(*) n, round(round(sum(CAST(embedding[1] AS DOUBLE)),10)/count(*),6) c0, round(round(sum(CAST(embedding[2] AS DOUBLE)),10)/count(*),6) c1 FROM embeddings GROUP BY label ORDER BY label"),
+  val all: Seq[Entry] = Seq(
+    Entry("q_dedup_exact", qDedupExact,
+      Some("SELECT md5(text) h, min(doc_id) keep_id, count(*) n FROM documents GROUP BY 1 HAVING count(*)>1 ORDER BY h")),
+    Entry("q_dedup_groups", qDedupGroups,
+      Some("SELECT md5(text) h, min(doc_id) keep_id, count(*) n FROM documents GROUP BY 1 ORDER BY h LIMIT 100")),
+    Entry("q_text_tokens", qTextTokens,
+      Some("SELECT w, count(*) cnt FROM (SELECT unnest(string_split(text,' ')) w FROM documents) WHERE w<>'' GROUP BY w ORDER BY cnt DESC, w LIMIT 50")),
+    Entry("q_text_lang", qTextLang,
+      Some("SELECT lang, count(*) docs, CAST(sum(n_chars) AS BIGINT) chars, round(avg(n_chars),2) avg_chars FROM documents GROUP BY lang ORDER BY lang")),
+    Entry("q_sim_topk", qSimTopk,
+      Some("SELECT e2.vec_id, round(list_cosine_similarity(CAST(e1.embedding AS DOUBLE[]), CAST(e2.embedding AS DOUBLE[])),6) sim FROM embeddings e1, embeddings e2 WHERE e1.vec_id=0 AND e2.vec_id<>0 ORDER BY sim DESC, e2.vec_id LIMIT 10")),
+    Entry("q_knn_label", qKnnLabel,
+      Some("WITH nn AS (SELECT e2.label, list_cosine_similarity(CAST(e1.embedding AS DOUBLE[]), CAST(e2.embedding AS DOUBLE[])) sim, e2.vec_id FROM embeddings e1, embeddings e2 WHERE e1.vec_id=0 AND e2.vec_id<>0 ORDER BY sim DESC, e2.vec_id LIMIT 25) SELECT label, count(*) votes FROM nn GROUP BY label ORDER BY votes DESC, label LIMIT 1")),
+    Entry("q_sim_centroid", qSimCentroid,
+      Some("SELECT label, count(*) n, round(round(sum(CAST(embedding[1] AS DOUBLE)),10)/count(*),6) c0, round(round(sum(CAST(embedding[2] AS DOUBLE)),10)/count(*),6) c1 FROM embeddings GROUP BY label ORDER BY label")),
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,8 +27,6 @@ import org.apache.spark.sql.functions._
   * graft.operators.Dedup / Similarity.
   */
 object LlmScale {
-  type Q = (SparkSession, String) => DataFrame
-
   /** documents with distinct word-3-gram array `g` (docs with ≥3 words) —
     * the library shingler, aliased to the oracle queries' column name. */
   private def withNgrams(s: SparkSession, d: String): DataFrame =
@@ -92,9 +91,7 @@ object LlmScale {
     * oracle formulates banding independently (joins on the raw band
     * slices, no md5 band key), so this is a cross-algorithm check. */
   val qDedupLshBands: Q = (s, d) =>
-    Dedup.lshCandidates(
-        Dedup.minHashFromText(Tables.documents(s, d), "text", numHashes = 8),
-        "doc_id", bands = 4)
+    Dedup.lshCandidates(Dedup.MinhashDocs(s, d), "doc_id", bands = 4)
       .orderBy("id_a", "id_b")
 
   /** The full near-dup pipeline: banded LSH candidates verified with exact
@@ -271,20 +268,11 @@ object LlmScale {
       .orderBy("probe_id", "rnk")
   }
 
-  /** DuckDB twin of the srpBucket expression over column `c` (inline ±1
-    * plane literals, same left-to-right double accumulation). */
-  private def duckBucket(nPlanes: Int, dim: Int, c: String): String =
-    Similarity.srpPlanes(nPlanes, dim).zipWithIndex.map { case (plane, h) =>
-      val lits = plane.mkString("[", ", ", "]")
-      s"(CASE WHEN list_sum(list_transform(range($dim), i -> CAST($c[i+1] AS DOUBLE) * ($lits::DOUBLE[])[i+1])) > 0 THEN ${1 << h} ELSE 0 END)"
-    }.mkString(" + ")
-
   /** IVF-style ANN: seeded k-means clusters, search the nProbe nearest.
     * Oracle-less like the LSH variant (approximate by construction);
     * self-consistency + recall asserted in tests. */
   val qSimAnnIvf: Q = (s, d) =>
-    Similarity.ivfTopK(Tables.embeddings(s, d), "vec_id", "embedding",
-        probeId = 0L, topK = 5, k = 8, nProbe = 3, iters = 1)
+    Similarity.IvfIndex(s, d).topK("vec_id", "embedding", probeId = 0L, topK = 5, nProbe = 3)
       .withColumn("sim", Num.roundd(col("sim"), 6))
 
   /** PQ compression + ADC scan + exact re-rank (Similarity.PqModel): the
@@ -713,7 +701,7 @@ object LlmScale {
     * measured what the generator drew, for two container formats. */
   val qMultimodalDecode: Q = (s, d) =>
     Multimodal.decodeFeatures(
-        Multimodal.syntheticImages(s, d), Multimodal.ImageIoDecoder,
+        Multimodal.SyntheticImages(s, d), Multimodal.ImageIoDecoder,
         decodeParallelism = 32)
       .toDF()
       .select(col("id"), col("kind"), col("width"), col("height"), col("frames"))
@@ -726,7 +714,7 @@ object LlmScale {
     * + audio) through real codecs under the hash gate. */
   val qMultimodalAudio: Q = (s, d) =>
     Multimodal.decodeAudioFeatures(
-        Multimodal.syntheticWavs(s, d), decodeParallelism = 32)
+        Multimodal.SyntheticWavs(s, d), decodeParallelism = 32)
       .toDF()
       .orderBy("id")
 
@@ -739,7 +727,7 @@ object LlmScale {
     * (q_multimodal_decode only pins dimensions + payload sha). */
   val qMultimodalPhash: Q = (s, d) => {
     import s.implicits._
-    Multimodal.syntheticImages(s, d)
+    Multimodal.SyntheticImages(s, d)
       .repartition(32)
       .mapPartitions(_.map { r =>
         val img = Multimodal.ImageIoDecoder.readImage(r.payload)
@@ -835,13 +823,13 @@ object LlmScale {
       "pre AS (SELECT id_a, id_b FROM cand JOIN sge x ON x.doc_id = cand.id_a JOIN sge y ON y.doc_id = cand.id_b " +
       s"WHERE len(list_filter(range(64), i -> x.sig[i+1] = y.sig[i+1])) >= ${Dedup.prefilterMinAgree(0.2, 64)})"
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_docs_mix_report", qDocsMixReport, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_docs_mix_report", qDocsMixReport, Some(
       "WITH m AS (SELECT source, CAST(count(*) AS BIGINT) docs, " +
         "CAST(sum(len(string_split(text, ' '))) AS BIGINT) tokens FROM documents GROUP BY 1) " +
         "SELECT source, docs, tokens, round(CAST(tokens AS DOUBLE) / sum(tokens) OVER (), 6) token_share " +
         "FROM m ORDER BY source")),
-    ("q_emb_cluster_quality", qEmbClusterQuality, Some(
+    Entry("q_emb_cluster_quality", qEmbClusterQuality, Some(
       "WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) ev FROM embeddings), " +
         "dm AS (SELECT label, pos, round(round(sum(ev[pos + 1]), 10) / count(*), 6) cv " +
         "FROM e, (SELECT unnest(range(64)) pos) p GROUP BY 1, 2), " +
@@ -854,7 +842,7 @@ object LlmScale {
         "round(CAST(sum(CASE WHEN own > other THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) purity, " +
         "round(round(sum(own - other), 8) / count(*), 6) avg_margin " +
         "FROM agg GROUP BY label ORDER BY label")),
-    ("q_docs_filter_funnel", qDocsFilterFunnel, Some(
+    Entry("q_docs_filter_funnel", qDocsFilterFunnel, Some(
       "WITH k AS (SELECT doc_id, lang, n_chars, text, min(doc_id) OVER (PARTITION BY md5(text)) keep_id FROM documents) " +
         "SELECT CAST(count(*) AS BIGINT) n_total, " +
         "CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) n_lang, " +
@@ -863,7 +851,7 @@ object LlmScale {
         "CAST(sum(CASE WHEN lang = 'en' AND n_chars BETWEEN 150 AND 500 AND len(string_split(text, ' ')) >= 40 AND keep_id = doc_id THEN 1 ELSE 0 END) AS BIGINT) n_canonical, " +
         "round(CAST(sum(CASE WHEN lang = 'en' AND n_chars BETWEEN 150 AND 500 AND len(string_split(text, ' ')) >= 40 AND keep_id = doc_id THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) yield_rate " +
         "FROM k")),
-    ("q_text_contamination", qTextContamination, Some(
+    Entry("q_text_contamination", qTextContamination, Some(
       "WITH g AS (SELECT doc_id, source, list_distinct(list_transform(range(len(w) - 7), i -> array_to_string(w[i+1:i+8], ' '))) gs " +
         "FROM (SELECT doc_id, source, string_split(text, ' ') w FROM documents) WHERE len(w) >= 8), " +
         "e AS (SELECT doc_id, unnest(gs) ng FROM g WHERE source = 'src0'), " +
@@ -871,20 +859,20 @@ object LlmScale {
         "SELECT e.doc_id, CAST(count(*) AS BIGINT) n_ngrams, CAST(count(t.ng) AS BIGINT) n_hit, " +
         "round(CAST(count(t.ng) AS DOUBLE) / count(*), 6) ratio " +
         "FROM e LEFT JOIN t ON t.ng = e.ng GROUP BY e.doc_id ORDER BY e.doc_id")),
-    ("q_text_ngram_jaccard", qTextNgramJaccard, Some(
+    Entry("q_text_ngram_jaccard", qTextNgramJaccard, Some(
       s"$ngramCte SELECT a.doc_id id_a, b.doc_id id_b, round(CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))), 6) jac FROM ng a JOIN ng b ON b.doc_id = a.doc_id + 1 ORDER BY id_a")),
-    ("q_dedup_minhash", qDedupMinhash, Some(
+    Entry("q_dedup_minhash", qDedupMinhash, Some(
       s"$ngramCte, $sigCte " +
         "SELECT a.doc_id id_a, b.doc_id id_b, CAST(len(list_filter(range(8), i -> a.sig[i+1] = b.sig[i+1])) AS BIGINT) agree, CAST(len(list_filter(range(8), i -> a.sig[i+1] = b.sig[i+1])) AS DOUBLE)/8.0 est_jac FROM sg a JOIN sg b ON b.doc_id = a.doc_id + 1 ORDER BY id_a")),
-    ("q_dedup_simhash", qDedupSimhash, Some(
+    Entry("q_dedup_simhash", qDedupSimhash, Some(
       s"WITH th AS (SELECT doc_id, list_transform(list_distinct(string_split(text,' ')), x -> ${dh("'s'", "x")}) h FROM documents), " +
         "bits AS (SELECT doc_id, list_transform(range(60), b -> CASE WHEN list_sum(list_transform(h, v -> CASE WHEN (v >> b) & 1 = 1 THEN 1 ELSE -1 END)) > 0 THEN 1 ELSE 0 END) bt FROM th) " +
         "SELECT a.doc_id id_a, b.doc_id id_b, CAST(len(list_filter(range(60), i -> a.bt[i+1] != b.bt[i+1])) AS BIGINT) hamming FROM bits a JOIN bits b ON b.doc_id = a.doc_id + 1 ORDER BY id_a")),
-    ("q_dedup_lsh_bands", qDedupLshBands, Some(
+    Entry("q_dedup_lsh_bands", qDedupLshBands, needs = Seq(Dedup.MinhashDocs), oracle = Some(
       s"$ngramCte, $sigCte, " +
         "banded AS (SELECT doc_id, b, sig[b*2+1:b*2+2] sl FROM sg CROSS JOIN (SELECT unnest(range(4)) b)) " +
         "SELECT DISTINCT a.doc_id id_a, b.doc_id id_b FROM banded a JOIN banded b ON a.b = b.b AND a.sl = b.sl AND a.doc_id < b.doc_id ORDER BY id_a, id_b")),
-    ("q_dedup_source_overlap", qDedupSourceOverlap, Some(
+    Entry("q_dedup_source_overlap", qDedupSourceOverlap, Some(
       s"$ngramCte, $sigCte, " +
         "banded AS (SELECT doc_id, b, sig[b*2+1:b*2+2] sl FROM sg CROSS JOIN (SELECT unnest(range(4)) b)), " +
         "cand AS (SELECT DISTINCT a.doc_id id_a, b.doc_id id_b FROM banded a JOIN banded b ON a.b = b.b AND a.sl = b.sl AND a.doc_id < b.doc_id), " +
@@ -892,12 +880,12 @@ object LlmScale {
         "FROM cand JOIN documents x ON x.doc_id = cand.id_a JOIN documents y ON y.doc_id = cand.id_b " +
         "WHERE x.source <> y.source) " +
         "SELECT src_a, src_b, CAST(count(*) AS BIGINT) n_pairs FROM j GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_dedup_lsh_verified", qDedupLshVerified, Some(
+    Entry("q_dedup_lsh_verified", qDedupLshVerified, Some(
       s"$ngramCte, $sigCteE, $bandedPreCte " +
         "SELECT id_a, id_b, round(CAST(len(list_intersect(x.g, y.g)) AS DOUBLE) / (len(x.g) + len(y.g) - len(list_intersect(x.g, y.g))), 6) jac " +
         "FROM pre JOIN ng x ON x.doc_id = pre.id_a JOIN ng y ON y.doc_id = pre.id_b WHERE " +
         "CAST(len(list_intersect(x.g, y.g)) AS DOUBLE) / (len(x.g) + len(y.g) - len(list_intersect(x.g, y.g))) >= 0.2 ORDER BY id_a, id_b")),
-    ("q_dedup_cluster", qDedupCluster, Some(
+    Entry("q_dedup_cluster", qDedupCluster, Some(
       // WITH RECURSIVE accepts non-recursive CTEs in the same list, so the
       // shared ngram/signature/banding CTEs are reused verbatim
       s"${ngramCte.replaceFirst("WITH ", "WITH RECURSIVE ")}, $sigCteE, $bandedPreCte, " +
@@ -908,7 +896,7 @@ object LlmScale {
         "lbl AS (SELECT s AS id, least(s, min(t)) cl FROM r GROUP BY s), " +
         "sz AS (SELECT cl, count(*) n FROM lbl GROUP BY cl) " +
         "SELECT id AS doc_id, cl AS cluster_id, n AS cluster_size FROM lbl JOIN sz USING (cl) ORDER BY doc_id")),
-    ("q_dedup_survivors", qDedupSurvivors, Some(
+    Entry("q_dedup_survivors", qDedupSurvivors, Some(
       // same shared CTEs + recursive closure as q_dedup_cluster; survivors =
       // docs minus every clustered id that is not its cluster's minimum
       s"${ngramCte.replaceFirst("WITH ", "WITH RECURSIVE ")}, $sigCteE, $bandedPreCte, " +
@@ -920,7 +908,7 @@ object LlmScale {
         "drops AS (SELECT id FROM lbl WHERE id <> cl) " +
         "SELECT lang, count(*) n, CAST(sum(doc_id) AS BIGINT) id_sum, CAST(sum(n_chars) AS BIGINT) chars " +
         "FROM documents WHERE doc_id NOT IN (SELECT id FROM drops) GROUP BY lang ORDER BY lang")),
-    ("q_dedup_incremental", qDedupIncremental, Some(
+    Entry("q_dedup_incremental", qDedupIncremental, Some(
       // batch = src0, corpus = everything else; candidates are band-bucket
       // collisions batch×corpus plus batch×earlier-batch, verified by
       // 8-hash signature agreement >= 0.5 (estimated Jaccard)
@@ -937,18 +925,18 @@ object LlmScale {
         "SELECT d.doc_id, CAST(coalesce(nc, 0) AS BIGINT) n_corpus_dup, CAST(coalesce(nb, 0) AS BIGINT) n_batch_dup, " +
         "CAST(CASE WHEN coalesce(nc, 0) = 0 AND coalesce(nb, 0) = 0 THEN 1 ELSE 0 END AS BIGINT) keep " +
         "FROM documents d LEFT JOIN hits ON hits.bid = d.doc_id WHERE d.source = 'src0' ORDER BY d.doc_id")),
-    ("q_emb_neardup", qEmbNeardup, Some(
+    Entry("q_emb_neardup", qEmbNeardup, Some(
       "SELECT a.vec_id id_a, b.vec_id id_b, round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) sim " +
         "FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id " +
         "WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.4 ORDER BY id_a, id_b")),
-    ("q_sim_ann_batch", qSimAnnBatch, Some(
-      s"WITH b AS (SELECT vec_id, embedding, ${duckBucket(6, 64, "embedding")} bucket FROM embeddings), " +
+    Entry("q_sim_ann_batch", qSimAnnBatch, Some(
+      s"WITH b AS (SELECT vec_id, embedding, ${Similarity.srpBucketSql("embedding", 6)} bucket FROM embeddings), " +
         "p AS (SELECT vec_id probe_id, embedding pv, bucket pb FROM b WHERE vec_id < 10), " +
         "j AS (SELECT p.probe_id, b.vec_id, round(list_cosine_similarity(CAST(b.embedding AS DOUBLE[]), CAST(p.pv AS DOUBLE[])), 6) sim " +
         "FROM b JOIN p ON b.bucket = p.pb AND b.vec_id != p.probe_id), " +
         "r AS (SELECT probe_id, vec_id, sim, row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) rnk FROM j) " +
         "SELECT probe_id, CAST(rnk AS BIGINT) rnk, vec_id, sim FROM r WHERE rnk <= 3 ORDER BY probe_id, rnk")),
-    ("q_sim_matryoshka", qSimMatryoshka, Some(
+    Entry("q_sim_matryoshka", qSimMatryoshka, Some(
       "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings), " +
         "p AS (SELECT vec_id probe_id, v pv FROM e WHERE vec_id < 10), " +
         "s1 AS (SELECT p.probe_id, e.vec_id, round(list_cosine_similarity(e.v[1:32], p.pv[1:32]), 6) tsim, e.v, p.pv " +
@@ -957,10 +945,10 @@ object LlmScale {
         "r2 AS (SELECT probe_id, vec_id, round(list_cosine_similarity(v, pv), 6) fsim FROM r1 WHERE trnk <= 50), " +
         "r3 AS (SELECT probe_id, vec_id, fsim, CAST(row_number() OVER (PARTITION BY probe_id ORDER BY fsim DESC, vec_id) AS BIGINT) rnk FROM r2) " +
         "SELECT probe_id, rnk, vec_id, fsim sim FROM r3 WHERE rnk <= 3 ORDER BY probe_id, rnk")),
-    ("q_sim_ann_lsh", qSimAnnLsh, None), // approximate by construction; recall asserted in tests
-    ("q_sim_ann_ivf", qSimAnnIvf, None), // approximate by construction; recall asserted in tests
-    ("q_sim_ann_pq", qSimAnnPq, None), // approximate by construction; recall asserted in tests
-    ("q_text_tfidf", qTextTfidf, Some(
+    Entry("q_sim_ann_lsh", qSimAnnLsh, None), // approximate by construction; recall asserted in tests
+    Entry("q_sim_ann_ivf", qSimAnnIvf, needs = Seq(Similarity.IvfIndex), oracle = None), // approximate by construction; recall asserted in tests
+    Entry("q_sim_ann_pq", qSimAnnPq, None), // approximate by construction; recall asserted in tests
+    Entry("q_text_tfidf", qTextTfidf, Some(
       "WITH toks AS (SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) term FROM documents), " +
         "tf AS (SELECT doc_id, term, count(*) tf FROM toks WHERE len(term) > 0 GROUP BY 1, 2), " +
         "dfq AS (SELECT term, count(*) dfreq FROM tf GROUP BY 1), " +
@@ -969,7 +957,7 @@ object LlmScale {
         "FROM tf JOIN dfq USING (term) CROSS JOIN n), " +
         "rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS BIGINT) rn FROM sc) " +
         "SELECT doc_id, rn, term, tf, score FROM rk WHERE rn <= 3 ORDER BY doc_id, rn")),
-    ("q_text_langid", qTextLangid, Some(
+    Entry("q_text_langid", qTextLangid, Some(
       "WITH t AS (SELECT doc_id, list_distinct(string_split(text,' ')) tok FROM documents), " +
         "sc AS (SELECT doc_id, CAST(len(list_intersect(tok, ['der','die','das','und','ist','ein','nicht'])) AS BIGINT) s_de, " +
         "CAST(len(list_intersect(tok, ['the','a','of','and','to','in','is'])) AS BIGINT) s_en, " +
@@ -977,14 +965,14 @@ object LlmScale {
         "CAST(len(list_intersect(tok, ['le','la','de','et','un','est','que'])) AS BIGINT) s_fr FROM t) " +
         "SELECT doc_id, CASE WHEN s_de = m THEN 'de' WHEN s_en = m THEN 'en' WHEN s_es = m THEN 'es' ELSE 'fr' END pred_lang, s_de, s_en, s_es, s_fr " +
         "FROM (SELECT *, greatest(s_de, s_en, s_es, s_fr) m FROM sc) ORDER BY doc_id LIMIT 1000")),
-    ("q_text_quality", qTextQuality, Some(
+    Entry("q_text_quality", qTextQuality, Some(
       "WITH q AS (SELECT doc_id, n_chars, string_split(text,' ') w FROM documents), " +
         "r AS (SELECT doc_id, n_chars, CAST(len(w) AS BIGINT) n_tok, " +
         "CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE)/len(w) avg_wlen, " +
         "CAST(len(list_filter(w, x -> x IN ('the','a','of','and','to'))) AS DOUBLE)/len(w) stop_ratio FROM q) " +
         "SELECT doc_id, n_tok, round(avg_wlen, 4) avg_wlen, round(stop_ratio, 4) stop_ratio, " +
         "round(stop_ratio*0.3 + avg_wlen*0.05 + n_chars*0.0005, 4) score FROM r ORDER BY doc_id LIMIT 1000")),
-    ("q_text_repetition", qTextRepetition, Some(
+    Entry("q_text_repetition", qTextRepetition, Some(
       "WITH q AS (SELECT doc_id, string_split(text,' ') w FROM documents), " +
         "r AS (SELECT doc_id, CAST(len(w) AS BIGINT) n_tok, CAST(len(list_distinct(w)) AS BIGINT) distinct_tok, " +
         "CAST(list_max(list_transform(list_distinct(w), x -> len(list_filter(w, y -> y = x)))) AS BIGINT) top_cnt FROM q) " +
@@ -993,19 +981,19 @@ object LlmScale {
         "round(CAST(top_cnt AS DOUBLE)/n_tok, 4) top_ratio, " +
         "(CAST(top_cnt AS DOUBLE)/n_tok > 0.12 OR CAST(distinct_tok AS DOUBLE)/n_tok < 0.35) repetitive " +
         "FROM r ORDER BY doc_id LIMIT 1000")),
-    ("q_text_tokencount", qTextTokencount, Some(
+    Entry("q_text_tokencount", qTextTokencount, Some(
       "SELECT doc_id, CAST(len(w) AS BIGINT) ws_tokens, CAST(list_sum(list_transform(w, x -> greatest(1, CAST(ceil(length(x)/4.0) AS BIGINT)))) AS BIGINT) bpe_tokens, n_chars " +
         "FROM (SELECT doc_id, n_chars, string_split(text,' ') w FROM documents) ORDER BY doc_id LIMIT 1000")),
-    ("q_text_fingerprint", qTextFingerprint, Some(
+    Entry("q_text_fingerprint", qTextFingerprint, Some(
       s"$ngramCte, f AS (SELECT doc_id, list_sort(list_transform(g, x -> ${dh("'f'", "x")})) fps FROM ng) " +
         "SELECT doc_id, fps[1] fp1, fps[2] fp2, CAST(len(fps) AS BIGINT) n_grams FROM f ORDER BY doc_id LIMIT 1000")),
-    ("q_text_pii_mask", qTextPiiMask, Some(
+    Entry("q_text_pii_mask", qTextPiiMask, Some(
       "SELECT doc_id, substr(regexp_replace(regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '<EMAIL>', 'g'), '[0-9]+', '<NUM>', 'g'), 1, 80) masked, " +
         "CAST(len(regexp_extract_all(text, '[0-9]+')) AS BIGINT) n_num FROM documents ORDER BY doc_id LIMIT 1000")),
-    ("q_docs_sample", qDocsSample, Some(
+    Entry("q_docs_sample", qDocsSample, Some(
       s"SELECT doc_id, lang, source, ${dh("'smp'", "CAST(doc_id AS VARCHAR)")} % 100 hmod " +
         s"FROM documents WHERE ${dh("'smp'", "CAST(doc_id AS VARCHAR)")} % 100 < 10 ORDER BY doc_id")),
-    ("q_text_lm_score", qTextLmScore, Some(
+    Entry("q_text_lm_score", qTextLmScore, Some(
       "WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents), " +
         "bg AS (SELECT doc_id, unnest(w[:len(w)-1]) a, unnest(w[2:]) b FROM w WHERE len(w) >= 2), " +
         "c2 AS (SELECT a, b, count(*) c2 FROM bg GROUP BY 1, 2), " +
@@ -1017,7 +1005,7 @@ object LlmScale {
         "SELECT doc_id, CAST(count(*) AS BIGINT) n_bigrams, " +
         "round(round(sum(lp), 6) / count(*), 4) avg_logp " +
         "FROM term GROUP BY 1 ORDER BY 1")),
-    ("q_docs_temp_sample", qDocsTempSample, Some(
+    Entry("q_docs_temp_sample", qDocsTempSample, Some(
       s"WITH t AS (SELECT doc_id, source, CAST(len(string_split(text, ' ')) AS BIGINT) tok, " +
         s"${dh("'tmp'", "CAST(doc_id AS VARCHAR)")} % 1000000 hmod FROM documents), " +
         "st AS (SELECT source, CAST(count(*) AS BIGINT) n_total, CAST(sum(tok) AS BIGINT) tokens_total FROM t GROUP BY 1), " +
@@ -1030,14 +1018,14 @@ object LlmScale {
         "CAST(coalesce(n_kept, 0) AS BIGINT) n_kept, CAST(coalesce(tokens_kept, 0) AS BIGINT) tokens_kept, " +
         "round(CAST(coalesce(tokens_kept, 0) AS DOUBLE) / sum(coalesce(tokens_kept, 0)) OVER (), 6) kept_share " +
         "FROM r LEFT JOIN k ON k.source = r.source ORDER BY r.source")),
-    ("q_emb_quantize", qEmbQuantize, Some(
+    Entry("q_emb_quantize", qEmbQuantize, Some(
       "WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM embeddings), " +
         "m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) mx FROM e), " +
         "qq AS (SELECT vec_id, v, mx, list_transform(v, x -> CAST(round(x * 127.0 / mx) AS INTEGER)) q FROM m WHERE mx > 0) " +
         "SELECT vec_id, round(mx, 6) mxr, q[1] q1, q[2] q2, CAST(len(list_filter(q, y -> y != 0)) AS BIGINT) n_nonzero, " +
         "round(list_sum(list_transform(range(len(v)), i -> abs(v[i+1] - q[i+1] * mx / 127.0))) / len(v), 6) mae " +
         "FROM qq ORDER BY vec_id")),
-    ("q_emb_binary_quant", qEmbBinaryQuant, Some(
+    Entry("q_emb_binary_quant", qEmbBinaryQuant, Some(
       "WITH e AS (SELECT vec_id, embedding, list_transform(embedding, x -> CASE WHEN x >= 0 THEN 1 ELSE 0 END) b FROM embeddings), " +
         "p AS (SELECT embedding pa, b pb FROM e WHERE vec_id = 0), " +
         "h AS (SELECT e.vec_id, CAST(list_sum(list_transform(range(len(e.b)), i -> CASE WHEN e.b[i+1] = p.pb[i+1] THEN 0 ELSE 1 END)) AS BIGINT) hamming, " +
@@ -1045,20 +1033,20 @@ object LlmScale {
         "FROM e, p WHERE e.vec_id <> 0), " +
         "s AS (SELECT * FROM h ORDER BY hamming ASC, vec_id ASC LIMIT 50) " +
         "SELECT vec_id, hamming, sim FROM s ORDER BY sim DESC, vec_id ASC LIMIT 10")),
-    ("q_multimodal_resize", qMultimodalResize, Some(
+    Entry("q_multimodal_resize", qMultimodalResize, Some(
       "WITH m AS (SELECT doc_id, CAST(octet_length(CAST(text AS BLOB)) % 640 AS BIGINT) w, " +
         "CAST(octet_length(CAST(text AS BLOB)) % 480 AS BIGINT) h FROM documents), " +
         "p AS (SELECT doc_id, w, h, round(224.0 / greatest(w, h), 6) scale FROM m WHERE w > 0 AND h > 0) " +
         "SELECT doc_id, w, h, scale, CAST(round(w * scale, 0) AS BIGINT) rw, CAST(round(h * scale, 0) AS BIGINT) rh, " +
         "scale < 1.0 shrinks FROM p ORDER BY doc_id LIMIT 1000")),
-    ("q_multimodal_decode", qMultimodalDecode, Some(
+    Entry("q_multimodal_decode", qMultimodalDecode, needs = Seq(Multimodal.SyntheticImages), oracle = Some(
       "SELECT doc_id id, CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'bmp' END kind, " +
         "CAST(16 + doc_id % 32 AS INTEGER) width, CAST(16 + doc_id % 24 AS INTEGER) height, " +
         "1 frames FROM documents ORDER BY doc_id")),
-    ("q_multimodal_audio", qMultimodalAudio, Some(
+    Entry("q_multimodal_audio", qMultimodalAudio, needs = Seq(Multimodal.SyntheticWavs), oracle = Some(
       "SELECT doc_id id, 8000 sample_rate, 1 channels, 16 bits, " +
         "CAST(800 + doc_id % 800 AS BIGINT) frames FROM documents ORDER BY doc_id")),
-    ("q_multimodal_phash", qMultimodalPhash, Some(
+    Entry("q_multimodal_phash", qMultimodalPhash, needs = Seq(Multimodal.SyntheticImages), oracle = Some(
       // predicts every pixel from the generator contract (id-seeded RGB,
       // low 24 bits of id*2654435761 + x*31 + y*17) and replays the same
       // integer aHash block arithmetic the kernel runs on DECODED pixels
@@ -1075,7 +1063,7 @@ object LlmScale {
         "SELECT id doc_id, CAST(w AS BIGINT) w, CAST(h AS BIGINT) h, " +
         "string_agg(CAST(bv AS VARCHAR), '' ORDER BY pos) phash, " +
         "CAST(sum(bv) AS BIGINT) nbits FROM bits GROUP BY 1, 2, 3 ORDER BY doc_id")),
-    ("q_text_lang_confusion", qTextLangConfusion, Some(
+    Entry("q_text_lang_confusion", qTextLangConfusion, Some(
       "WITH t AS (SELECT doc_id, list_distinct(string_split(text,' ')) tok FROM documents), " +
         "sc AS (SELECT doc_id, CAST(len(list_intersect(tok, ['der','die','das','und','ist','ein','nicht'])) AS BIGINT) s_de, " +
         "CAST(len(list_intersect(tok, ['the','a','of','and','to','in','is'])) AS BIGINT) s_en, " +
@@ -1088,12 +1076,12 @@ object LlmScale {
         "SELECT lang, pred_lang, n, " +
         "round(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY lang), 6) recall " +
         "FROM mx ORDER BY lang, pred_lang")),
-    ("q_multimodal_framesample", qMultimodalFramesample, Some(
+    Entry("q_multimodal_framesample", qMultimodalFramesample, Some(
       "WITH m AS (SELECT doc_id, octet_length(CAST(text AS BLOB)) % 16 + 1 frames, sha256(text) sha FROM documents), " +
         "u AS (SELECT doc_id, sha, unnest(range(0, frames, 2)) f FROM m) " +
         "SELECT doc_id, CAST(f AS BIGINT) frame_idx, sha256(sha || ':' || CAST(f AS VARCHAR)) frame_sha " +
         "FROM u ORDER BY doc_id, frame_idx")),
-    ("q_multimodal_features", qMultimodalFeatures, Some(
+    Entry("q_multimodal_features", qMultimodalFeatures, Some(
       "SELECT doc_id, CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) byte_len, sha256(text) sha, " +
         "CAST(octet_length(CAST(text AS BLOB)) % 640 AS BIGINT) width, CAST(octet_length(CAST(text AS BLOB)) % 480 AS BIGINT) height, " +
         "CAST(octet_length(CAST(text AS BLOB)) % 16 + 1 AS BIGINT) frames FROM documents ORDER BY doc_id LIMIT 1000")),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -31,8 +32,6 @@ import org.apache.spark.sql.functions._
   * pure narrow projection: one scan, zero shuffles before the sort.
   */
 object Mining {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Non-empty space-split tokens of `text` as column `tk`. */
   private def withTokens(df: DataFrame): DataFrame =
     df.withColumn("tk", expr("filter(split(text, ' '), x -> x != '')"))
@@ -614,8 +613,8 @@ object Mining {
 
   // ---- catalog ------------------------------------------------------------
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_docs_pmi", qDocsPmi, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_docs_pmi", qDocsPmi, Some(
       "WITH t AS (SELECT list_filter(string_split(text, ' '), x -> x != '') tk FROM documents), " +
         "u AS (SELECT w, CAST(count(*) AS BIGINT) cw FROM (SELECT unnest(tk) w FROM t) GROUP BY 1), " +
         "n AS (SELECT CAST(sum(cw) AS BIGINT) n FROM u), " +
@@ -627,20 +626,20 @@ object Mining {
         "(CAST(b.b AS DOUBLE) * CAST(u1.cw AS DOUBLE) * CAST(u2.cw AS DOUBLE))), 6) pmi " +
         "FROM s JOIN u u1 ON u1.w = s.w1 JOIN u u2 ON u2.w = s.w2, n, b) " +
         "SELECT bg, cxy, pmi FROM j ORDER BY pmi DESC, bg LIMIT 30")),
-    ("q_docs_weighted_sample", qDocsWeightedSample, Some(
+    Entry("q_docs_weighted_sample", qDocsWeightedSample, Some(
       "WITH h AS (SELECT doc_id, source, n_chars w, " +
         "CAST('0x' || substr(md5('ws' || ':' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 1000000 hmod " +
         "FROM documents), " +
         "k AS (SELECT doc_id, source, w, " +
         "round(ln((CAST(hmod AS DOUBLE) + 0.5) / 1000000.0) / CAST(w AS DOUBLE), 9) es_key FROM h) " +
         "SELECT doc_id, source, w, es_key FROM k ORDER BY es_key DESC, doc_id LIMIT 20")),
-    ("q_docs_bigrams", qDocsBigrams, Some(
+    Entry("q_docs_bigrams", qDocsBigrams, Some(
       "WITH t AS (SELECT list_filter(string_split(text, ' '), x -> x != '') tk FROM documents), " +
         "b AS (SELECT unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) bg FROM t WHERE len(tk) >= 2), " +
         "c AS (SELECT bg, CAST(count(*) AS BIGINT) cnt FROM b GROUP BY 1), " +
         "r AS (SELECT bg, cnt, CAST(row_number() OVER (ORDER BY cnt DESC, bg ASC) AS BIGINT) rk FROM c) " +
         "SELECT rk, bg, cnt FROM r WHERE rk <= 30 ORDER BY rk")),
-    ("q_docs_winnow", qDocsWinnow, Some(
+    Entry("q_docs_winnow", qDocsWinnow, Some(
       "WITH t AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') tk FROM documents), " +
         "g AS (SELECT doc_id, [CAST('0x' || substr(md5('wn' || ':' || tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]), 1, 15) AS BIGINT) " +
         "FOR i IN range(1, len(tk)-1)] h FROM t WHERE len(tk) >= 6), " +
@@ -648,14 +647,14 @@ object Mining {
         "p AS (SELECT a.doc_id d1, b.doc_id d2, CAST(count(*) AS BIGINT) shared " +
         "FROM f a JOIN f b ON b.fp = a.fp AND a.doc_id < b.doc_id GROUP BY 1, 2) " +
         "SELECT d1, d2, shared FROM p ORDER BY shared DESC, d1, d2 LIMIT 50")),
-    ("q_docs_dup_rate", qDocsDupRate, Some(
+    Entry("q_docs_dup_rate", qDocsDupRate, Some(
       "WITH fp AS (SELECT source, md5(text) fp FROM documents), " +
         "c AS (SELECT fp, CAST(count(*) AS BIGINT) n FROM fp GROUP BY 1) " +
         "SELECT source, CAST(count(*) AS BIGINT) n_docs, " +
         "CAST(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS BIGINT) n_dup, " +
         "round(CAST(sum(CASE WHEN n > 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) dup_rate " +
         "FROM fp JOIN c USING (fp) GROUP BY 1 ORDER BY 1")),
-    ("q_docs_ngram_novelty", qDocsNgramNovelty, Some(
+    Entry("q_docs_ngram_novelty", qDocsNgramNovelty, Some(
       "WITH ng AS (SELECT doc_id, unnest(list_distinct(list_transform(range(len(w) - 2), " +
         "i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]))) g " +
         "FROM (SELECT doc_id, string_split(text, ' ') w FROM documents) WHERE len(w) >= 3), " +
@@ -664,7 +663,7 @@ object Mining {
         "CAST(sum(CASE WHEN fd = doc_id THEN 1 ELSE 0 END) AS BIGINT) n_novel, " +
         "round(CAST(sum(CASE WHEN fd = doc_id THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) novelty " +
         "FROM ng JOIN f USING (g) GROUP BY 1 ORDER BY doc_id")),
-    ("q_text_bpe_step", qTextBpeStep, Some(
+    Entry("q_text_bpe_step", qTextBpeStep, Some(
       "WITH v AS (SELECT w, CAST(count(*) AS BIGINT) f FROM " +
         "(SELECT unnest(list_filter(string_split(text, ' '), x -> x != '')) w FROM documents) GROUP BY 1), " +
         "p1 AS (SELECT p, CAST(sum(f) AS BIGINT) cnt FROM " +
@@ -677,7 +676,7 @@ object Mining {
         "(SELECT f, bp, bcnt, string_split(m, ' ') t FROM m) WHERE len(t) >= 2) GROUP BY 1, 2, 3), " +
         "r AS (SELECT *, CAST(row_number() OVER (ORDER BY cnt DESC, p) AS BIGINT) rk FROM p2) " +
         "SELECT rk, p, cnt, bp, bcnt FROM r WHERE rk <= 10 ORDER BY rk")),
-    ("q_docs_line_dedup", qDocsLineDedup, Some(
+    Entry("q_docs_line_dedup", qDocsLineDedup, Some(
       "WITH t AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') tk FROM documents), " +
         "l AS (SELECT doc_id, md5(array_to_string(tk[(k - 1) * 16 + 1 : k * 16], ' ')) fp " +
         "FROM (SELECT doc_id, tk, unnest(range(1, ((len(tk) - 1) // 16) + 2)) k FROM t WHERE len(tk) >= 1)), " +
@@ -686,14 +685,14 @@ object Mining {
         "CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) n_dup, " +
         "round(CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) dup_frac " +
         "FROM l JOIN c USING (fp) GROUP BY 1 ORDER BY doc_id")),
-    ("q_text_jaro_pairs", qTextJaroPairs, Some(
+    Entry("q_text_jaro_pairs", qTextJaroPairs, Some(
       "WITH t AS (SELECT doc_id, lang, substr(text, 1, 32) t, " +
         "lead(doc_id) OVER (PARTITION BY lang ORDER BY doc_id) next_id, " +
         "lead(substr(text, 1, 32)) OVER (PARTITION BY lang ORDER BY doc_id) next_t FROM documents) " +
         "SELECT lang, doc_id id_a, next_id id_b, " +
         "round(jaro_winkler_similarity(t, next_t), 6) sim " +
         "FROM t WHERE next_id IS NOT NULL ORDER BY id_a")),
-    ("q_emb_kmeans_step", qEmbKmeansStep, Some(
+    Entry("q_emb_kmeans_step", qEmbKmeansStep, Some(
       "WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(CASE WHEN x < 0 " +
         "THEN -floor(abs(CAST(x AS DOUBLE)) * 1000000 + 0.5) " +
         "ELSE floor(abs(CAST(x AS DOUBLE)) * 1000000 + 0.5) END AS BIGINT)) m FROM embeddings), " +
@@ -707,7 +706,7 @@ object Mining {
         "SELECT cid, CAST(i AS BIGINT) i, CAST(count(*) AS BIGINT) n, " +
         "round(CAST(sum(mv) AS DOUBLE) / count(*) / 1000000, 6) c_new " +
         "FROM x GROUP BY 1, 2 ORDER BY cid, i")),
-    ("q_emb_power_iter", qEmbPowerIter, Some {
+    Entry("q_emb_power_iter", qEmbPowerIter, Some {
       // AS MATERIALIZED is load-bearing: each step CTE references its
       // predecessor twice (u_k and n_k); without materialization DuckDB
       // inlines and re-evaluates the whole chain exponentially (~2^8
@@ -730,14 +729,14 @@ object Mining {
         "JOIN v8 a ON a.i = mm.i JOIN v8 b ON b.i = mm.j) " +
         "SELECT CAST(v8.i AS BIGINT) i, v8.v loading, lam.l lam FROM v8, lam ORDER BY i"
     }),
-    ("q_emb_semdedup", qEmbSemdedup, Some(semdedupSql(
+    Entry("q_emb_semdedup", qEmbSemdedup, Some(semdedupSql(
       "SELECT vec_id cid, m cm, embedding ce FROM e ORDER BY vec_id LIMIT 4"))),
     // same formula, k from the corpus size — the scale-safe variant
-    ("q_emb_semdedup_scaled", qEmbSemdedupScaled, Some(semdedupSql(
+    Entry("q_emb_semdedup_scaled", qEmbSemdedupScaled, Some(semdedupSql(
       "SELECT cid, cm, ce FROM (SELECT vec_id cid, m cm, embedding ce, " +
         "row_number() OVER (ORDER BY vec_id) rn FROM e) " +
         "WHERE rn <= (SELECT greatest(4, count(*) // 500) FROM embeddings)"))),
-    ("q_docs_dsir_weight", qDocsDsirWeight, Some(
+    Entry("q_docs_dsir_weight", qDocsDsirWeight, Some(
       "WITH t AS (SELECT doc_id, lang, unnest(list_filter(string_split(text, ' '), x -> x != '')) w FROM documents), " +
         "dw AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) c FROM t GROUP BY 1, 2), " +
         "raw AS (SELECT w, CAST(count(*) AS BIGINT) cr FROM t GROUP BY 1), " +
@@ -750,7 +749,7 @@ object Mining {
         "SELECT dw.doc_id, CAST(sum(dw.c) AS BIGINT) n_toks, " +
         "round(round(sum(dw.c * lr.lr), 6), 4) dsir_w " +
         "FROM dw JOIN lr ON lr.w = dw.w GROUP BY 1 ORDER BY 1")),
-    ("q_emb_array_hof", qEmbArrayHof, Some(
+    Entry("q_emb_array_hof", qEmbArrayHof, Some(
       "WITH t AS (SELECT vec_id, CAST(len(embedding) AS BIGINT) dim, " +
         "CAST(len(list_filter(embedding, x -> x > 0)) AS BIGINT) n_pos, " +
         "list_transform(embedding, x -> CAST(CASE WHEN x < 0 " +
@@ -760,7 +759,7 @@ object Mining {
         "round(sqrt(CAST(list_sum(list_transform(m, x -> x * x)) AS DOUBLE)) / 1000000, 6) l2, " +
         "round(CAST(list_sum(list_transform(m, x -> greatest(x, CAST(0 AS BIGINT)))) AS DOUBLE) / 1000000, 6) relu_sum " +
         "FROM t ORDER BY vec_id")),
-    ("q_text_kn_bigram", qTextKnBigram, Some(
+    Entry("q_text_kn_bigram", qTextKnBigram, Some(
       "WITH tr AS (SELECT list_filter(string_split(text, ' '), x -> x != '') tk FROM documents WHERE source != 'src0'), " +
         "big AS (SELECT split_part(bg, ' ', 1) w1, split_part(bg, ' ', 2) w2, CAST(count(*) AS BIGINT) c12 FROM " +
         "(SELECT unnest([tk[i] || ' ' || tk[i+1] FOR i IN range(1, len(tk))]) bg FROM tr WHERE len(tk) >= 2) GROUP BY 1, 2), " +
@@ -782,7 +781,7 @@ object Mining {
         "LEFT JOIN ctx ON ctx.cw1 = ev.w1 LEFT JOIN cont ON cont.kw2 = ev.w2 CROSS JOIN bt CROSS JOIN vo) " +
         "SELECT doc_id, CAST(count(*) AS BIGINT) n_pairs, " +
         "round(-sum(round(ln(p), 6)) / count(*), 4) kn_nll FROM sc GROUP BY 1 ORDER BY 1")),
-    ("q_docs_source_divergence", qDocsSourceDivergence, Some(
+    Entry("q_docs_source_divergence", qDocsSourceDivergence, Some(
       "WITH tk AS (SELECT source, unnest(list_filter(string_split(text, ' '), x -> x != '')) w FROM documents), " +
         "cnt AS (SELECT source, w, CAST(count(*) AS BIGINT) c FROM tk GROUP BY 1, 2), " +
         "tot AS (SELECT source ts, CAST(sum(c) AS BIGINT) t FROM cnt GROUP BY 1), " +

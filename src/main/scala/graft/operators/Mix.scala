@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -23,8 +24,6 @@ import org.apache.spark.sql.functions._
   * flip a digit — the chi-square discipline); final rates round through
   * [[Num.roundd]] on identical operand trees in both engines. */
 object Mix {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Whitespace token count; text-null coalesced (the Corpus contract). */
   private val tokCount =
     size(split(coalesce(col("text"), lit("")), " ")).cast("long")
@@ -141,14 +140,14 @@ object Mix {
 
   private val tokSql = "CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT)"
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_mix_temperature", qMixTemperature, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_mix_temperature", qMixTemperature, Some(
       s"WITH g AS (SELECT lang, CAST(sum($tokSql) AS BIGINT) n_tokens FROM documents GROUP BY 1), " +
         "t AS (SELECT lang, n_tokens, CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER () AS DOUBLE) p0, " +
         "round(pow(CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER () AS DOUBLE), 0.3), 9) w FROM g) " +
         "SELECT lang, n_tokens, round(p0, 6) p_raw, round(w / sum(w) OVER (), 6) p_temp, " +
         "round(w / sum(w) OVER () / p0, 4) boost FROM t ORDER BY lang")),
-    ("q_mix_epochs", qMixEpochs, Some(
+    Entry("q_mix_epochs", qMixEpochs, Some(
       s"WITH g AS (SELECT source, CAST(sum($tokSql) AS BIGINT) n_tokens FROM documents GROUP BY 1), " +
         "t AS (SELECT source, n_tokens, CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER () AS DOUBLE) p0, " +
         "round(pow(CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER () AS DOUBLE), 0.5), 9) w, " +
@@ -159,7 +158,7 @@ object Mix {
         "CAST(CASE WHEN budget * q > 4.0 * CAST(n_tokens AS DOUBLE) THEN 1 ELSE 0 END AS BIGINT) capped, " +
         "round(least(budget * q, 4.0 * CAST(n_tokens AS DOUBLE)), 2) alloc_final " +
         "FROM u ORDER BY source")),
-    ("q_mix_domain_matrix", qMixDomainMatrix, Some(
+    Entry("q_mix_domain_matrix", qMixDomainMatrix, Some(
       s"WITH g AS (SELECT source, lang, CAST(sum($tokSql) AS BIGINT) n_tokens FROM documents GROUP BY 1, 2) " +
         "SELECT source, lang, n_tokens, " +
         "round(CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER (PARTITION BY source) AS DOUBLE), 6) row_share, " +
@@ -167,13 +166,13 @@ object Mix {
         "round(CAST(n_tokens AS DOUBLE) * CAST(sum(n_tokens) OVER () AS DOUBLE) / " +
         "(CAST(sum(n_tokens) OVER (PARTITION BY source) AS DOUBLE) * CAST(sum(n_tokens) OVER (PARTITION BY lang) AS DOUBLE)), 4) lift " +
         "FROM g ORDER BY source, lang")),
-    ("q_mix_hhi", qMixHhi, Some(
+    Entry("q_mix_hhi", qMixHhi, Some(
       s"WITH g AS (SELECT source, CAST(sum($tokSql) AS BIGINT) n_tokens FROM documents GROUP BY 1), " +
         "t AS (SELECT CAST(n_tokens AS DOUBLE) / CAST(sum(n_tokens) OVER () AS DOUBLE) sh FROM g), " +
         "a AS (SELECT CAST(count(*) AS BIGINT) n_domains, sum(round(sh * sh, 9)) hhi0, max(sh) top0 FROM t) " +
         "SELECT n_domains, round(hhi0, 6) hhi, round(1.0 / hhi0, 4) eff_domains, " +
         "round(top0, 6) top_share FROM a ORDER BY n_domains")),
-    ("q_mix_dedup_discount", qMixDedupDiscount, Some(
+    Entry("q_mix_dedup_discount", qMixDedupDiscount, Some(
       s"WITH d AS (SELECT doc_id, source, $tokSql tok, md5(text) h FROM documents), " +
         "k AS (SELECT source, tok, CAST(CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY h) THEN 1 ELSE 0 END AS BIGINT) keep FROM d), " +
         "g AS (SELECT source, CAST(count(*) AS BIGINT) n_docs, CAST(sum(tok) AS BIGINT) tokens_raw, " +

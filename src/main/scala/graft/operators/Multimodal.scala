@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
+import graft.Catalog.Fixture
+
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata, processed in partition-sized batches.
   *
@@ -199,6 +201,11 @@ object Multimodal {
         .select(col("doc_id")).as[Long]
         .map(id => MediaRow(id, "wav", encodeWav(id)))
     }
+
+  /** The two encoded media corpora, pinned in memory as a pipeline keeps
+    * the media it stored at ingest; decode queries read them here. */
+  val SyntheticImages: Fixture[Dataset[MediaRow]] = Fixture.cached("synthetic_images")(syntheticImages)
+  val SyntheticWavs: Fixture[Dataset[MediaRow]] = Fixture.cached("synthetic_wavs")(syntheticWavs)
 
   /** REAL audio decode on the JDK's RIFF/WAV parser: measures the format
     * envelope from the container, not from metadata columns. Strict by

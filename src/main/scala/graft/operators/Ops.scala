@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,8 +22,6 @@ import org.apache.spark.sql.functions._
   * the unpartitioned window never sees raw events.
   */
 object Ops {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---- series churn: first-seen analysis ----------------------------------
 
   /** New-series-per-day report: how many user series appear for the first
@@ -617,8 +616,8 @@ object Ops {
       .orderBy("w", "rk")
   }
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_ts_sliding_topk", qTsSlidingTopk, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_ts_sliding_topk", qTsSlidingTopk, Some(
       "WITH uh AS (SELECT user_id, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
         "ex AS (SELECT user_id, h + i * INTERVAL 1 HOUR w, c FROM uh " +
         "CROSS JOIN (SELECT unnest(range(0, 24)) i) " +
@@ -627,7 +626,7 @@ object Ops {
         "r AS (SELECT w, user_id, cnt, CAST(row_number() OVER " +
         "(PARTITION BY w ORDER BY cnt DESC, user_id ASC) AS BIGINT) rk FROM wc) " +
         "SELECT w, rk, user_id, cnt FROM r WHERE rk <= 3 ORDER BY w, rk")),
-    ("q_ops_join_card", qOpsJoinCard, Some(
+    Entry("q_ops_join_card", qOpsJoinCard, Some(
       "WITH a AS (SELECT CAST('0x' || substr(md5('jc' || ':' || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) % 64 b, " +
         "CAST(count(*) AS BIGINT) na, CAST(count(DISTINCT user_id) AS BIGINT) da FROM events GROUP BY 1), " +
         "c AS (SELECT CAST('0x' || substr(md5('jc' || ':' || CAST(c_custkey AS VARCHAR)), 1, 15) AS BIGINT) % 64 b, " +
@@ -640,12 +639,12 @@ object Ops {
         "ex AS (SELECT CAST(count(*) AS DOUBLE) exact FROM events JOIN customer ON user_id = c_custkey) " +
         "SELECT estimator, est, exact, round((est - exact) * 100.0 / exact, 4) err_pct " +
         "FROM (SELECT * FROM ndv UNION ALL SELECT * FROM hist), ex ORDER BY estimator")),
-    ("q_scalar_bits", qScalarBits, Some(
+    Entry("q_scalar_bits", qScalarBits, Some(
       "SELECT event_id, event_id & 255 band, event_id | 4096 bor, " +
         "xor(event_id, user_id) bxor, event_id << 3 shl, event_id >> 2 shr, " +
         "CAST(bit_count(event_id) AS BIGINT) pc " +
         "FROM events WHERE event_id < 500 ORDER BY event_id")),
-    ("q_ops_fair_share", qOpsFairShare, Some(
+    Entry("q_ops_fair_share", qOpsFairShare, Some(
       "WITH dem AS (SELECT user_id, CAST(count(*) AS BIGINT) dem FROM events GROUP BY 1), " +
         "r AS (SELECT user_id, dem, CAST(row_number() OVER o AS BIGINT) i, " +
         "CAST(sum(dem) OVER o AS BIGINT) si FROM dem " +
@@ -658,7 +657,7 @@ object Ops {
         "ELSE round(CAST(tot // 2 - sk AS DOUBLE) / (n - k), 4) END alloc, " +
         "CAST(CASE WHEN i <= k THEN 1 ELSE 0 END AS BIGINT) satisfied " +
         "FROM r, st, kk ORDER BY user_id")),
-    ("q_graph_bfs_dist", qGraphBfsDist, Some(
+    Entry("q_graph_bfs_dist", qGraphBfsDist, Some(
       "WITH RECURSIVE ed AS (SELECT DISTINCT event_type src, " +
         "lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) dst FROM events), " +
         "e AS (SELECT src, dst FROM ed WHERE dst IS NOT NULL), " +
@@ -670,7 +669,7 @@ object Ops {
         "SELECT n.event_type node, CAST(coalesce(min(b.hops), -1) AS BIGINT) hops " +
         "FROM (SELECT DISTINCT event_type FROM events) n LEFT JOIN bfs b ON b.node = n.event_type " +
         "GROUP BY 1 ORDER BY 1")),
-    ("q_ts_topk_churn", qTsTopkChurn, Some(
+    Entry("q_ts_topk_churn", qTsTopkChurn, Some(
       "WITH w1 AS (SELECT user_id, round(sum(value), 6) sv FROM events " +
         "WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-01-08' GROUP BY 1), " +
         "t1 AS (SELECT user_id, sv sv1, CAST(row_number() OVER (ORDER BY sv DESC, user_id) AS BIGINT) rnk1 " +
@@ -684,7 +683,7 @@ object Ops {
         "WHEN rnk1 IS NOT NULL THEN 'exited' ELSE 'entered' END status, " +
         "rnk1, sv1, rnk4, sv4 " +
         "FROM t1 FULL JOIN t4 ON t4.user_id = t1.user_id ORDER BY 1")),
-    ("q_ts_mttr", qTsMttr, Some(
+    Entry("q_ts_mttr", qTsMttr, Some(
       "WITH h AS (SELECT event_type, CAST(datediff('hour', TIMESTAMP '2024-01-01', date_trunc('hour', ts)) AS BIGINT) hi, " +
         "CAST(count(*) AS BIGINT) n FROM events GROUP BY 1, 2), " +
         "t AS (SELECT event_type, CAST(sum(n) AS BIGINT) tn, CAST(count(*) AS BIGINT) nh FROM h GROUP BY 1), " +
@@ -697,7 +696,7 @@ object Ops {
         "SELECT event_type, CAST(count(*) AS BIGINT) n_incidents, round(avg(len), 4) mttr_h, " +
         "round(avg(gap), 4) mtbf_h, CAST(max(len) AS BIGINT) longest_h " +
         "FROM g GROUP BY 1 ORDER BY 1")),
-    ("q_ab_ztest", qAbZtest, Some(
+    Entry("q_ab_ztest", qAbZtest, Some(
       "WITH u AS (SELECT user_id, CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) conv " +
         "FROM events GROUP BY 1), " +
         "ua AS (SELECT CAST('0x' || substr(md5('ab' || ':' || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) % 2 variant, " +
@@ -712,7 +711,7 @@ object Ops {
         "sqrt(CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b) * " +
         "(1.0::DOUBLE - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b)) * " +
         "(1.0::DOUBLE / n_a + 1.0::DOUBLE / n_b)), 4) END z FROM w")),
-    ("q_ab_cuped", qAbCuped, Some(
+    Entry("q_ab_cuped", qAbCuped, Some(
       "WITH u AS (SELECT user_id, " +
         "CAST(sum(CASE WHEN event_type = 'purchase' AND ts < TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END) AS BIGINT) x, " +
         "CAST(sum(CASE WHEN event_type = 'purchase' AND ts >= TIMESTAMP '2024-01-16' THEN 1 ELSE 0 END) AS BIGINT) y " +
@@ -738,7 +737,7 @@ object Ops {
         "round(CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE) / " +
         "(CAST(n * sxx - sx * sx AS DOUBLE) * CAST(n * syy - sy * sy AS DOUBLE)), 6) END var_reduction " +
         "FROM th")),
-    ("q_ts_time_to_convert", qTsTimeToConvert, Some(
+    Entry("q_ts_time_to_convert", qTsTimeToConvert, Some(
       "WITH fv AS (SELECT user_id, min(ts) vt FROM events WHERE event_type = 'view' GROUP BY 1), " +
         "pp AS (SELECT e.user_id, fv.vt, min(e.ts) pt FROM events e JOIN fv ON fv.user_id = e.user_id " +
         "WHERE e.event_type = 'purchase' AND e.ts > fv.vt GROUP BY 1, 2), " +
@@ -746,12 +745,12 @@ object Ops {
         "SELECT cday, CAST(count(*) AS BIGINT) n_conv, round(quantile_cont(delta_s, 0.5), 4) p50_s, " +
         "round(quantile_cont(delta_s, 0.9), 4) p90_s, round(avg(delta_s), 2) avg_s " +
         "FROM dl GROUP BY 1 ORDER BY 1")),
-    ("q_ts_new_series", qTsNewSeries, Some(
+    Entry("q_ts_new_series", qTsNewSeries, Some(
       "WITH f AS (SELECT user_id, min(ts) fts FROM events GROUP BY 1), " +
         "p AS (SELECT date_trunc('day', fts) d, CAST(count(*) AS BIGINT) new_users FROM f GROUP BY 1) " +
         "SELECT d, new_users, CAST(sum(new_users) OVER (ORDER BY d) AS BIGINT) cum_users " +
         "FROM p ORDER BY d")),
-    ("q_ts_cardinality", qTsCardinality, Some(
+    Entry("q_ts_cardinality", qTsCardinality, Some(
       "WITH b AS (SELECT DISTINCT date_trunc('day', ts) d, event_type, user_id FROM events), " +
         "pt AS (SELECT d, event_type, CAST(count(*) AS BIGINT) n_series FROM b GROUP BY 1, 2), " +
         "pd AS (SELECT d, CAST(count(*) AS BIGINT) day_series FROM " +
@@ -759,7 +758,7 @@ object Ops {
         "SELECT pt.d, event_type, n_series, day_series, " +
         "round(CAST(n_series AS DOUBLE) / day_series, 6) frac " +
         "FROM pt JOIN pd ON pt.d = pd.d ORDER BY pt.d, event_type")),
-    ("q_ts_burn_rate", qTsBurnRate, Some(
+    Entry("q_ts_burn_rate", qTsBurnRate, Some(
       "WITH h AS (SELECT date_trunc('hour', ts) h, " +
         "CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) err, " +
         "CAST(count(*) AS BIGINT) tot FROM events GROUP BY 1), " +
@@ -772,7 +771,7 @@ object Ops {
         "SELECT h, err, tot, burn1, burn6, " +
         "CAST(CASE WHEN burn1 > 1.0 AND burn6 > 1.0 THEN 1 ELSE 0 END AS BIGINT) alert " +
         "FROM r ORDER BY h")),
-    ("q_ts_alert_for", qTsAlertFor, Some(
+    Entry("q_ts_alert_for", qTsAlertFor, Some(
       "WITH a AS (SELECT date_trunc('hour', ts) h, " +
         "CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) err, " +
         "CAST(count(*) AS BIGINT) tot FROM events GROUP BY 1), " +
@@ -782,7 +781,7 @@ object Ops {
         "g AS (SELECT h, r, breach, sum(onset) OVER (ORDER BY h) grp FROM o) " +
         "SELECT min(h) start_h, max(h) end_h, CAST(count(*) AS BIGINT) n_hours, max(r) peak " +
         "FROM g WHERE breach = 1 GROUP BY grp HAVING count(*) >= 3 ORDER BY start_h")),
-    ("q_ts_alert_transitions", qTsAlertTransitions, Some(
+    Entry("q_ts_alert_transitions", qTsAlertTransitions, Some(
       "WITH a AS (SELECT event_type, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) mv FROM events GROUP BY 1, 2), " +
         "t AS (SELECT event_type, CAST(sum(mv) AS BIGINT) total, CAST(count(*) AS BIGINT) hrs FROM a GROUP BY 1), " +
         "b AS (SELECT a.event_type, h, mv, CASE WHEN 10 * mv * hrs > 11 * total THEN 1 ELSE 0 END breach " +
@@ -798,7 +797,7 @@ object Ops {
         "SELECT event_type, 'fire' kind, h, mv FROM f WHERE breach = 1 AND st = 3 " +
         "UNION ALL SELECT event_type, 'resolve' kind, h, mv FROM f WHERE breach = 0 AND coalesce(pst, 0) >= 3) " +
         "ORDER BY event_type, h, kind")),
-    ("q_ts_availability", qTsAvailability, Some(
+    Entry("q_ts_availability", qTsAvailability, Some(
       "WITH b AS (SELECT DISTINCT date_trunc('day', ts) d, date_trunc('minute', ts) m FROM events), " +
         "c AS (SELECT d, CAST(count(*) AS BIGINT) n_min FROM b GROUP BY 1) " +
         "SELECT d, n_min, round(CAST(n_min AS DOUBLE) / 1440.0, 6) avail " +

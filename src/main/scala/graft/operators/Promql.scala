@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -27,8 +28,6 @@ import org.apache.spark.sql.functions._
   * only doubles are final displayed rates, pre-rounded via [[Num.roundd]].
   */
 object Promql {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Integer hour index since the dataset origin — the RANGE-frame order
     * key (hour gaps must consume frame width, so ROWS frames are wrong). */
   private def hourIdx: Column =
@@ -141,18 +140,18 @@ object Promql {
 
   // ---- catalog ------------------------------------------------------------
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_ts_count_values", qTsCountValues, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_ts_count_values", qTsCountValues, Some(
       "SELECT event_type, CAST(floor(value/50)*50 AS BIGINT) bucket, CAST(count(*) AS BIGINT) n " +
         "FROM events GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ts_subquery", qTsSubquery, Some(
+    Entry("q_ts_subquery", qTsSubquery, Some(
       "WITH h0 AS (SELECT event_type, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) n FROM events GROUP BY 1, 2), " +
         "r AS (SELECT event_type, h, CAST(datediff('hour', TIMESTAMP '2024-01-01', h) AS BIGINT) hi, " +
         "round(CAST(n AS DOUBLE)/3600.0, 6) rate FROM h0) " +
         "SELECT event_type, h, rate, max(rate) OVER w max6, CAST(count(*) OVER w AS BIGINT) n6 " +
         "FROM r WINDOW w AS (PARTITION BY event_type ORDER BY hi RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) " +
         "ORDER BY event_type, h")),
-    ("q_ts_slo_burn", qTsSloBurn, Some(
+    Entry("q_ts_slo_burn", qTsSloBurn, Some(
       "WITH h AS (SELECT date_trunc('hour', ts) h, " +
         "CAST(datediff('hour', TIMESTAMP '2024-01-01', date_trunc('hour', ts)) AS BIGINT) hi, " +
         "CAST(count(*) FILTER (event_type = 'error') AS BIGINT) e1, CAST(count(*) AS BIGINT) t1 FROM events GROUP BY 1, 2), " +
@@ -166,13 +165,13 @@ object Promql {
         "CAST(CASE WHEN e6*1000 > t6*210 AND e24*1000 > t24*210 THEN 1 ELSE 0 END AS BIGINT) ticket " +
         "FROM w WHERE (e1*100 > t1*23 AND e6*100 > t6*23) OR (e6*1000 > t6*210 AND e24*1000 > t24*210) " +
         "ORDER BY h")),
-    ("q_ts_idelta", qTsIdelta, Some(
+    Entry("q_ts_idelta", qTsIdelta, Some(
       "WITH r AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) dday, ts, value, event_id, " +
         "row_number() OVER (PARTITION BY event_type, date_trunc('day', ts) ORDER BY ts DESC, event_id DESC) rn FROM events) " +
         "SELECT event_type, dday, max(ts) last_ts, " +
         "round(max(CASE WHEN rn = 1 THEN value END) - max(CASE WHEN rn = 2 THEN value END), 2) idelta " +
         "FROM r WHERE rn <= 2 GROUP BY 1, 2 HAVING count(*) = 2 ORDER BY 1, 2")),
-    ("q_ts_vector_and", qTsVectorAnd, Some(
+    Entry("q_ts_vector_and", qTsVectorAnd, Some(
       "WITH h AS (SELECT date_trunc('hour', ts) h, " +
         "CAST(count(*) FILTER (event_type = 'error') AS BIGINT) errors, " +
         "CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) purchases FROM events GROUP BY 1), " +

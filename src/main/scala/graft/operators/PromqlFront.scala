@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.promql.PromQL
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -13,16 +14,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * gate catches it. PromqlFrontSpec separately brute-forces every
   * function against a driver-side reference evaluator. */
 object PromqlFront {
-  type Q = (SparkSession, String) => DataFrame
-
   private def q(text: String): Q = (s, d) => PromQL.query(s, d, text)
 
   private val hi =
     "CAST(datediff('hour', TIMESTAMP '2024-01-01', date_trunc('hour', ts)) AS BIGINT)"
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
+  val all: Seq[Entry] = Seq(
 
-    ("q_pql_rate_sum",
+    Entry("q_pql_rate_sum",
       q("""sum by (type) (rate(events{type!="view"}[6h]))"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -32,7 +31,7 @@ object PromqlFront {
           "SELECT ty AS \"type\", h, round(CAST(sum(wc) AS DOUBLE)/21600.0, 6) AS \"value\" " +
           "FROM w GROUP BY 1, 2 ORDER BY 1, 2")),
 
-    ("q_pql_hist_quantile",
+    Entry("q_pql_hist_quantile",
       q("""histogram_quantile(0.9, sum by (le) (rate(events_bucket[1h])))"""),
       Some(
         "WITH b AS (SELECT date_trunc('hour', ts) h, " +
@@ -51,7 +50,7 @@ object PromqlFront {
           "FROM t WHERE CAST(cum AS DOUBLE) >= target AND CAST(cum - c AS DOUBLE) < target " +
           "ORDER BY h")),
 
-    ("q_pql_topk",
+    Entry("q_pql_topk",
       q("""topk(2, sum by (type) (increase(events[24h])))"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -63,7 +62,7 @@ object PromqlFront {
           "SELECT ty AS \"type\", h, round(CAST(v AS DOUBLE), 6) AS \"value\" " +
           "FROM r WHERE rn <= 2 ORDER BY 1, 2")),
 
-    ("q_pql_ratio",
+    Entry("q_pql_ratio",
       q("""sum(rate(events{type="click"}[1h])) / sum(rate(events{type="view"}[1h]))"""),
       Some(
         "WITH h AS (SELECT date_trunc('hour', ts) h, " +
@@ -72,7 +71,7 @@ object PromqlFront {
           "SELECT h, round((CAST(c AS DOUBLE)/3600.0) / (CAST(v AS DOUBLE)/3600.0), 6) AS \"value\" " +
           "FROM h WHERE c > 0 AND v > 0 ORDER BY h")),
 
-    ("q_pql_quantile",
+    Entry("q_pql_quantile",
       q("""quantile_over_time(0.9, events{type="click"}[4h])"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, value, " +
@@ -84,7 +83,7 @@ object PromqlFront {
           "TIMESTAMP '2024-01-01' + tick * INTERVAL 1 HOUR AS h, qv AS \"value\" " +
           "FROM g WHERE own = 1 ORDER BY 1, 2, 3")),
 
-    ("q_pql_subquery",
+    Entry("q_pql_subquery",
       q("""max_over_time(rate(events{type="error"}[1h])[24h:1h])"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -95,7 +94,7 @@ object PromqlFront {
           "RANGE BETWEEN 23 PRECEDING AND CURRENT ROW), 6) AS \"value\" " +
           "FROM r ORDER BY 1, 2, 3")),
 
-    ("q_pql_irate",
+    Entry("q_pql_irate",
       q("""irate(events{type="view"}[6h])"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, ts, value, event_id sid, " +
@@ -116,7 +115,7 @@ object PromqlFront {
           "((epoch_us(l1t) - epoch_us(p2t)) / 1000000.0), 6) AS \"value\" " +
           "FROM q WHERE p2t IS NOT NULL ORDER BY 1, 2, 3")),
 
-    ("q_pql_wow_ratio",
+    Entry("q_pql_wow_ratio",
       q("""sum by (type) (rate(events[1h])) / sum by (type) (rate(events[1h] offset 1w))"""),
       Some(
         "WITH c AS (SELECT event_type ty, date_trunc('hour', ts) h, " +
@@ -126,7 +125,7 @@ object PromqlFront {
           "round((CAST(c.n AS DOUBLE)/3600.0) / (CAST(p.n AS DOUBLE)/3600.0), 6) AS \"value\" " +
           "FROM c JOIN p ON p.ty = c.ty AND p.hi = c.hi ORDER BY 1, 2")),
 
-    ("q_pql_alert_filter",
+    Entry("q_pql_alert_filter",
       q("""sum by (type) (rate(events{type=~"error|click"}[6h])) > 0.0002"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -138,7 +137,7 @@ object PromqlFront {
           "FROM w GROUP BY 1, 2) " +
           "SELECT * FROM g WHERE \"value\" > 0.0002 ORDER BY 1, 2")),
 
-    ("q_pql_unless",
+    Entry("q_pql_unless",
       q("""rate(events{type="error"}[1h]) unless ignoring(type) rate(events{type="purchase"}[1h])"""),
       Some(
         "WITH e AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -149,7 +148,7 @@ object PromqlFront {
           "round(CAST(e.n AS DOUBLE)/3600.0, 6) AS \"value\" " +
           "FROM e ANTI JOIN p ON p.u = e.u AND p.hi = e.hi ORDER BY 1, 2, 3")),
 
-    ("q_pql_binop_match",
+    Entry("q_pql_binop_match",
       q("""rate(events{type="click"}[1h]) / ignoring(type) rate(events{type="view"}[1h])"""),
       Some(
         "WITH c AS (SELECT CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -163,7 +162,7 @@ object PromqlFront {
     // ---- round 3: deriv/predict_linear, std moments, absent,
     // label_replace, count_values, group ------------------------------------
 
-    ("q_pql_deriv",
+    Entry("q_pql_deriv",
       q("""deriv(events{type="click"}[4h])"""),
       Some(derivCte("click", 3) +
         "q AS (SELECT ty, u, h, n * stv - st * sv num, n * stt - st * st den " +
@@ -172,7 +171,7 @@ object PromqlFront {
         "round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) AS \"value\" " +
         "FROM q WHERE den <> 0 ORDER BY 1, 2, 3")),
 
-    ("q_pql_predict",
+    Entry("q_pql_predict",
       q("""predict_linear(events{type="error"}[24h], 14400)"""),
       Some(derivCte("error", 23) +
         "q AS (SELECT ty, u, h, hi, n, st, sv, " +
@@ -184,7 +183,7 @@ object PromqlFront {
         "CAST(st AS DOUBLE) / CAST(n AS DOUBLE))) / 1000000.0, 6) AS \"value\" " +
         "FROM q WHERE den <> 0 ORDER BY 1, 2, 3")),
 
-    ("q_pql_stddev_time",
+    Entry("q_pql_stddev_time",
       q("""stddev_over_time(events{type="view"}[6h])"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -199,7 +198,7 @@ object PromqlFront {
           "(CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 1000000000000.0), 6) AS \"value\" " +
           "FROM w ORDER BY 1, 2, 3")),
 
-    ("q_pql_stdvar_by",
+    Entry("q_pql_stdvar_by",
       q("""stdvar by (type) (events)"""),
       Some(
         "WITH r AS (SELECT event_type ty, user_id, date_trunc('hour', ts) h, value, " +
@@ -212,7 +211,7 @@ object PromqlFront {
           "(CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 1000000000000.0, 6) AS \"value\" " +
           "FROM m ORDER BY 1, 2")),
 
-    ("q_pql_absent",
+    Entry("q_pql_absent",
       q("""absent(events{type="purchase", user="7"})"""),
       Some(
         "WITH g AS (SELECT unnest(generate_series(0, 719)) hi), " +
@@ -222,7 +221,7 @@ object PromqlFront {
           "round(1.0, 6) AS \"value\" " +
           "FROM g ANTI JOIN pres ON pres.hi = g.hi ORDER BY h")),
 
-    ("q_pql_label_replace",
+    Entry("q_pql_label_replace",
       q("""label_replace(sum by (type) (rate(events[2h])), "family", "$1", "type", "(c.*|v.*)")"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -233,7 +232,7 @@ object PromqlFront {
           "SELECT ty AS \"type\", regexp_extract(ty, '^(?:(c.*|v.*))$', 1) AS family, h, " +
           "v AS \"value\" FROM g ORDER BY 1, 2, 3")),
 
-    ("q_pql_count_values",
+    Entry("q_pql_count_values",
       q("""count_values("lvl", round(events{type="click"} / 50))"""),
       Some(
         "WITH r AS (SELECT user_id, date_trunc('hour', ts) h, value, " +
@@ -243,7 +242,7 @@ object PromqlFront {
           "SELECT lvl, h, round(CAST(count(*) AS DOUBLE), 6) AS \"value\" " +
           "FROM l GROUP BY 1, 2 ORDER BY 1, 2")),
 
-    ("q_pql_group",
+    Entry("q_pql_group",
       q("""group by (type) (events)"""),
       Some(
         "SELECT DISTINCT event_type AS \"type\", date_trunc('hour', ts) h, " +
@@ -255,7 +254,7 @@ object PromqlFront {
     // that hits group_left immediately (VERDICT r11 missing #1): the many
     // side keeps its full (type, user) label set, the one side is unique
     // per (type, hour) by construction of its sum by (type).
-    ("q_pql_group_left",
+    Entry("q_pql_group_left",
       q("""sum by (type, user) (rate(events[6h])) / on(type) group_left sum by (type) (rate(events[6h]))"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -270,7 +269,7 @@ object PromqlFront {
     // The mirrored modifier: many side on the RIGHT — each user's rate
     // inverted against its type total (how many user-rates fit in the
     // type's total at that hour).
-    ("q_pql_group_right",
+    Entry("q_pql_group_right",
       q("""sum by (type) (rate(events[6h])) / on(type) group_right sum by (type, user) (rate(events[6h]))"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -286,7 +285,7 @@ object PromqlFront {
     // 24h event count — the pinned expression evaluates once at the grid
     // hour holding unix 1704153600 (2024-01-02 00:00) and re-emits as a
     // constant across every step, per upstream range-query semantics.
-    ("q_pql_at_pin",
+    Entry("q_pql_at_pin",
       q("""sum by (type) (rate(events[2h])) / on(type) sum by (type) (increase(events[24h] @ 1704153600))"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -305,7 +304,7 @@ object PromqlFront {
     // threshold-table alert shape: users contributing more than 10% of
     // their type's rate at that hour. The filtered result carries the
     // lhs (many) series and its value, per upstream.
-    ("q_pql_threshold_match",
+    Entry("q_pql_threshold_match",
       // NB: no parens after group_left — '(' there parses as the include
       // list (upstream grammar); * binds tighter than > so none are needed
       q("""sum by (type, user) (rate(events[6h])) > on(type) group_left sum by (type) (rate(events[6h])) * 0.1"""),
@@ -323,7 +322,7 @@ object PromqlFront {
 
     // absent_over_time: the windowed alert-on-silence — grid hours whose
     // trailing 6 h window saw no purchase from user 7.
-    ("q_pql_absent_window",
+    Entry("q_pql_absent_window",
       q("""absent_over_time(events{type="purchase", user="7"}[6h])"""),
       Some(
         "WITH g AS (SELECT unnest(generate_series(0, 719)) hi), " +
@@ -335,7 +334,7 @@ object PromqlFront {
           "FROM g ANTI JOIN pres ON pres.hi = g.hi ORDER BY h")),
 
     // label_join: composite series keys from existing labels.
-    ("q_pql_label_join",
+    Entry("q_pql_label_join",
       q("""label_join(sum by (type, user) (increase(events[3h])), "series", "-", "type", "user")"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -347,7 +346,7 @@ object PromqlFront {
 
     // quantile AGGREGATOR: the cross-series percentile per (type, hour)
     // — which user sits at the p90 of each type's instant values.
-    ("q_pql_quantile_agg",
+    Entry("q_pql_quantile_agg",
       q("""quantile by (type) (0.9, events)"""),
       Some(
         "WITH r AS (SELECT event_type ty, date_trunc('hour', ts) h, value, " +
@@ -361,7 +360,7 @@ object PromqlFront {
     // hour whose trailing 12 h window holds a sample of the series, labels
     // kept (the exact dual of absent_over_time; ADVICE r12 made the [Nh]
     // argument real via the same presence expansion).
-    ("q_pql_present",
+    Entry("q_pql_present",
       q("""present_over_time(events{type="error"}[12h])"""),
       Some(
         "WITH p0 AS (SELECT DISTINCT event_type ty, CAST(user_id AS VARCHAR) u, " +
@@ -372,7 +371,7 @@ object PromqlFront {
           "FROM pres ORDER BY 1, 2, 3")),
 
     // sgn over a centered rate: the -1/0/+1 watermark indicator.
-    ("q_pql_sgn",
+    Entry("q_pql_sgn",
       q("""sgn(sum by (type) (rate(events[1h])) - 0.0003)"""),
       Some(
         "WITH c AS (SELECT event_type ty, date_trunc('hour', ts) h, " +
@@ -387,7 +386,7 @@ object PromqlFront {
 
     // sort_desc: presentation order by value — top offenders first, the
     // dashboard default for instant tables.
-    ("q_pql_sort",
+    Entry("q_pql_sort",
       q("""sort_desc(sum by (type) (increase(events[24h])))"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -400,7 +399,7 @@ object PromqlFront {
 
     // time() arithmetic: seconds-of-day / 3600 = the hour-of-day ramp on
     // the eval grid (origin is midnight, so the value is exactly hi % 24).
-    ("q_pql_time_arith",
+    Entry("q_pql_time_arith",
       q("""time() % 86400 / 3600"""),
       Some(
         "SELECT TIMESTAMP '2024-01-01' + hi * INTERVAL 1 HOUR h, " +
@@ -409,7 +408,7 @@ object PromqlFront {
 
     // timestamp() composed with hour(): the hour-of-day of each series'
     // last sample — both value-as-timestamp functions in one expression.
-    ("q_pql_timestamp_hour",
+    Entry("q_pql_timestamp_hour",
       q("""hour(timestamp(events{type="purchase"}))"""),
       Some(
         "WITH r AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, ts, " +
@@ -421,7 +420,7 @@ object PromqlFront {
     // calendar extractors (zero-arg forms default to time()): one packed
     // integer per grid hour — year·1e8 + month·1e6 + dom·1e4 + hour·1e2 +
     // day_of_week (0-based Sunday, PromQL convention = DuckDB dayofweek).
-    ("q_pql_calendar",
+    Entry("q_pql_calendar",
       q("""year() * 100000000 + month() * 1000000 + day_of_month() * 10000 + hour() * 100 + day_of_week()"""),
       Some(
         "SELECT h, round(CAST(year(h) * 100000000 + month(h) * 1000000 + " +
@@ -431,7 +430,7 @@ object PromqlFront {
 
     // scalar(): the grand-total denominator — each type's share of the
     // all-series rate at that hour (scalar output joins back via on()).
-    ("q_pql_scalar_share",
+    Entry("q_pql_scalar_share",
       q("""sum by (type) (rate(events[1h])) / on() group_left scalar(sum(rate(events[1h])))"""),
       Some(
         "WITH c AS (SELECT event_type ty, date_trunc('hour', ts) h, " +
@@ -445,7 +444,7 @@ object PromqlFront {
     // raw samples, upstream recurrence — the oracle's recursive CTE
     // replays the identical IEEE sequence (the q_ts_holt device; NOT
     // list_reduce, whose struct accumulator aliases in DuckDB 1.0.0).
-    ("q_pql_holt",
+    Entry("q_pql_holt",
       q("""holt_winters(events{type="click"}[6h], 0.5, 0.3)"""),
       Some(
         "WITH RECURSIVE s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, ts, event_id sid, value, " +
@@ -473,7 +472,7 @@ object PromqlFront {
 
     // quantile WITHOUT (the ADVICE r12 fix): the cross-series median per
     // (type, hour) spelled via label complement instead of by().
-    ("q_pql_quantile_without",
+    Entry("q_pql_quantile_without",
       q("""quantile without (user) (0.5, events)"""),
       Some(
         "WITH r AS (SELECT event_type ty, date_trunc('hour', ts) h, value, " +
@@ -485,7 +484,7 @@ object PromqlFront {
 
     // libm family over one shared (memoized) panel: ln + sqrt + log2 of
     // the same 24h increase — three instant functions, one panel subtree.
-    ("q_pql_math",
+    Entry("q_pql_math",
       q("""ln(sum by (type) (increase(events[24h]))) + sqrt(sum by (type) (increase(events[24h]))) + log2(sum by (type) (increase(events[24h])))"""),
       Some(
         "WITH s AS (SELECT event_type ty, CAST(user_id AS VARCHAR) u, date_trunc('hour', ts) h, " +
@@ -498,7 +497,7 @@ object PromqlFront {
 
     // `or on() vector(0)`: the canonical gap-fill idiom — the purchase
     // rate where it exists, an explicit 0 at every silent grid hour.
-    ("q_pql_vector_fill",
+    Entry("q_pql_vector_fill",
       q("""sum(rate(events{type="purchase"}[1h])) or on() vector(0)"""),
       Some(
         "WITH c AS (SELECT date_trunc('hour', ts) h, " +

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,8 +24,6 @@ import org.apache.spark.sql.functions._
   * partial states, so the panel costs one pass at any corpus size.
   */
 object Quality {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Whitespace token count; NULL text pinned to '' (1 token both engines). */
   private val tokCount =
     size(split(coalesce(col("text"), lit("")), " ")).cast("long")
@@ -416,8 +415,8 @@ object Quality {
       "mx AS (SELECT d.lang, pr.pred_lang, CAST(count(*) AS BIGINT) n " +
       "FROM pr JOIN documents d USING (doc_id) GROUP BY 1, 2), "
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_emb_whiten", qEmbWhiten, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_emb_whiten", qEmbWhiten, Some(
       "WITH x AS (SELECT vec_id, CAST(p.pos AS BIGINT) dim, CAST(embedding[p.pos + 1] AS DOUBLE) v " +
         "FROM embeddings, (SELECT unnest(range(64)) pos) p), " +
         "a AS (SELECT dim, round(round(sum(v), 10) / count(*), 6) mean, " +
@@ -427,7 +426,7 @@ object Quality {
         "round((x.v - st.mean) / sqrt(st.variance + 0.000001), 6) w " +
         "FROM x JOIN st ON st.dim = x.dim WHERE x.vec_id < 50 " +
         "ORDER BY x.vec_id, x.dim")),
-    ("q_docs_gopher_rules", qDocsGopherRules, Some(
+    Entry("q_docs_gopher_rules", qDocsGopherRules, Some(
       "WITH f AS (SELECT doc_id, w FROM " +
         "(SELECT doc_id, unnest(string_split(coalesce(text, ''), ' ')) w FROM documents) WHERE w != ''), " +
         "pd AS (SELECT doc_id, CAST(count(*) AS BIGINT) nw, CAST(sum(len(w)) AS BIGINT) sumlen, " +
@@ -452,7 +451,7 @@ object Quality {
         "FROM r GROUP BY 1) " +
         "SELECT source, n_docs, fail_wc, fail_wlen, fail_sym, fail_alpha, fail_stop, n_pass, " +
         "round(CAST(n_pass AS DOUBLE) / n_docs, 4) pass_rate FROM g ORDER BY source")),
-    ("q_text_heldout_ppl", qTextHeldoutPpl, Some(
+    Entry("q_text_heldout_ppl", qTextHeldoutPpl, Some(
       "WITH tc AS (SELECT w tw, CAST(count(*) AS BIGINT) c FROM " +
         "(SELECT unnest(string_split(coalesce(text, ''), ' ')) w FROM documents WHERE source != 'src0') " +
         "WHERE w != '' GROUP BY 1), " +
@@ -463,7 +462,7 @@ object Quality {
         "FROM ev LEFT JOIN tc ON tc.tw = ev.w, st) " +
         "SELECT doc_id, CAST(count(*) AS BIGINT) n_tokens, " +
         "round(-sum(lnp) / count(*), 4) nll FROM sc GROUP BY 1 ORDER BY 1")),
-    ("q_emb_norm_dist", qEmbNormDist, Some(
+    Entry("q_emb_norm_dist", qEmbNormDist, Some(
       "WITH x AS (SELECT vec_id, label, CAST(embedding[p.pos + 1] AS DOUBLE) v " +
         "FROM embeddings, (SELECT unnest(range(64)) pos) p), " +
         "ss AS (SELECT vec_id, label, round(sum(v * v), 8) ss FROM x GROUP BY 1, 2), " +
@@ -473,7 +472,7 @@ object Quality {
         "round(round(sum(nrm), 8) / count(*), 6) mean_norm, " +
         "min(nrm) mn, max(nrm) mx " +
         "FROM nr GROUP BY 1 ORDER BY 1")),
-    ("q_text_fertility", qTextFertility, Some(
+    Entry("q_text_fertility", qTextFertility, Some(
       "WITH t AS (SELECT lang, CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok, " +
         "CAST(length(coalesce(text, '')) AS BIGINT) chars FROM documents), " +
         "a AS (SELECT lang, CAST(count(*) AS BIGINT) n_docs, CAST(sum(tok) AS BIGINT) tokens, " +
@@ -482,7 +481,7 @@ object Quality {
         "round(CAST(chars AS DOUBLE) / CAST(tokens AS DOUBLE), 4) chars_per_tok, " +
         "round(CAST(tokens AS DOUBLE) / CAST(n_docs AS DOUBLE), 4) toks_per_doc " +
         "FROM a ORDER BY lang")),
-    ("q_text_entropy", qTextEntropy, Some(
+    Entry("q_text_entropy", qTextEntropy, Some(
       "WITH w AS (SELECT lang, unnest(string_split(coalesce(text, ''), ' ')) w FROM documents), " +
         "c AS (SELECT lang, w, CAST(count(*) AS BIGINT) c FROM w WHERE w != '' GROUP BY 1, 2), " +
         "a AS (SELECT lang, CAST(sum(c) AS BIGINT) n_tokens, CAST(count(*) AS BIGINT) vocab, " +
@@ -492,14 +491,14 @@ object Quality {
         "CASE WHEN vocab > 1 THEN round((round(ln(CAST(n_tokens AS DOUBLE)), 6) - slnc / CAST(n_tokens AS DOUBLE)) / " +
         "round(ln(CAST(vocab AS DOUBLE)), 6), 4) END norm_entropy " +
         "FROM a ORDER BY lang")),
-    ("q_text_ttr", qTextTtr, Some(
+    Entry("q_text_ttr", qTextTtr, Some(
       "WITH t AS (SELECT source, CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok, " +
         "CAST(len(list_distinct(string_split(coalesce(text, ''), ' '))) AS BIGINT) utok FROM documents), " +
         "r AS (SELECT source, round(CAST(utok AS DOUBLE) / CAST(tok AS DOUBLE), 4) ttr FROM t) " +
         "SELECT source, CAST(count(*) AS BIGINT) n_docs, " +
         "round(sum(ttr) / count(*), 4) avg_ttr, min(ttr) min_ttr, max(ttr) max_ttr " +
         "FROM r GROUP BY 1 ORDER BY 1")),
-    ("q_emb_dim_stats", qEmbDimStats, Some(
+    Entry("q_emb_dim_stats", qEmbDimStats, Some(
       "WITH x AS (SELECT CAST(p.pos AS BIGINT) dim, CAST(embedding[p.pos + 1] AS DOUBLE) v " +
         "FROM embeddings, (SELECT unnest(range(64)) pos) p), " +
         "a AS (SELECT dim, CAST(count(*) AS BIGINT) n, " +
@@ -510,7 +509,7 @@ object Quality {
         "SELECT dim, n, mean, variance, mn, mx, " +
         "CAST(CASE WHEN variance < 0.0001 THEN 1 ELSE 0 END AS BIGINT) dead " +
         "FROM b ORDER BY dim")),
-    ("q_eval_kappa", qEvalKappa, Some(
+    Entry("q_eval_kappa", qEvalKappa, Some(
       evalConfusionSql +
         "tot AS (SELECT CAST(sum(n) AS BIGINT) n, " +
         "CAST(sum(CASE WHEN lang = pred_lang THEN n ELSE 0 END) AS BIGINT) agree FROM mx), " +
@@ -523,7 +522,7 @@ object Quality {
         "CASE WHEN n * n - chance != 0 THEN " +
         "round(CAST(n * agree - chance AS DOUBLE) / CAST(n * n - chance AS DOUBLE), 6) END kappa " +
         "FROM tot CROSS JOIN rc")),
-    ("q_eval_prf", qEvalPrf, Some(
+    Entry("q_eval_prf", qEvalPrf, Some(
       evalConfusionSql +
         "r AS (SELECT lang k, CAST(sum(n) AS BIGINT) support FROM mx GROUP BY 1), " +
         "c AS (SELECT pred_lang k, CAST(sum(n) AS BIGINT) predicted FROM mx GROUP BY 1), " +
@@ -536,7 +535,7 @@ object Quality {
         "CASE WHEN u.support + u.predicted > 0 THEN " +
         "round(CAST(2 * coalesce(dg.tp, 0) AS DOUBLE) / (u.support + u.predicted), 6) END f1 " +
         "FROM u LEFT JOIN dg ON dg.k = u.\"label\" ORDER BY u.\"label\"")),
-    ("q_eval_auc", qEvalAuc, Some(
+    Entry("q_eval_auc", qEvalAuc, Some(
       "WITH roll AS (SELECT n_chars v, " +
         "CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) cpos, " +
         "CAST(sum(CASE WHEN lang != 'en' THEN 1 ELSE 0 END) AS BIGINT) cneg " +
@@ -548,7 +547,7 @@ object Quality {
         "SELECT n_pos, n_neg, CASE WHEN n_pos > 0 AND n_neg > 0 THEN " +
         "round(CAST(r2 - n_pos * (n_pos + 1) AS DOUBLE) / CAST(2 * n_pos * n_neg AS DOUBLE), 6) END auc " +
         "FROM a")),
-    ("q_eval_calibration", qEvalCalibration, Some(
+    Entry("q_eval_calibration", qEvalCalibration, Some(
       "WITH t AS (SELECT doc_id, lang, list_distinct(string_split(text,' ')) tok FROM documents), " +
         "sc AS (SELECT doc_id, lang, CAST(len(list_intersect(tok, ['der','die','das','und','ist','ein','nicht'])) AS BIGINT) s_de, " +
         "CAST(len(list_intersect(tok, ['the','a','of','and','to','in','is'])) AS BIGINT) s_en, " +

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,8 +22,6 @@ import org.apache.spark.sql.functions._
   * materialization).
   */
 object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---- A. scans ----------------------------------------------------------
 
   // (l_orderkey, l_linenumber) is NOT unique in this data — the ORDER BY
@@ -452,99 +451,99 @@ object Relational {
 
   /** name → (impl, oracle SQL). Oracle texts: SURVEY.md §8, with explicit
     * casts added where DuckDB's and Spark's natural output types diverge. */
-  val all: Seq[(String, Q, String)] = Seq(
-    ("q_sql_recursive_bfs", qSqlRecursiveBfs,
-      "WITH RECURSIVE ed AS (SELECT DISTINCT src, dst FROM (" +
+  val all: Seq[Entry] = Seq(
+    Entry("q_sql_recursive_bfs", qSqlRecursiveBfs,
+      Some("WITH RECURSIVE ed AS (SELECT DISTINCT src, dst FROM (" +
         "SELECT event_type src, lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) dst " +
         "FROM events) t WHERE dst IS NOT NULL AND src <> dst), " +
         "r(node, d) AS (SELECT 'signup', 0 UNION ALL " +
         "SELECT DISTINCT ed.dst, r.d + 1 FROM r JOIN ed ON ed.src = r.node WHERE r.d < 6) " +
-        "SELECT node, CAST(min(d) AS BIGINT) hops FROM r GROUP BY node ORDER BY node"),
-    ("q_scan_project", qScanProject,
-      "SELECT l_orderkey, l_partkey, l_quantity, l_extendedprice FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey, l_quantity, l_extendedprice"),
-    ("q_filter_pred", qFilterPred,
-      "SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem WHERE l_shipdate >= TIMESTAMP '1998-01-01' AND l_discount BETWEEN 0.02 AND 0.06 AND l_quantity < 10 ORDER BY l_orderkey, l_linenumber, l_extendedprice"),
-    ("q_case_expr", qCaseExpr,
-      "SELECT o_orderkey, CASE WHEN o_totalprice>300000 THEN 'high' WHEN o_totalprice>100000 THEN 'mid' ELSE 'low' END band FROM orders ORDER BY o_orderkey LIMIT 1000"),
-    ("q_agg_hash", qAggHash,
-      "SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) sum_qty, round(sum(l_extendedprice),2) sum_base, round(sum(l_extendedprice*(1-l_discount)),2) sum_disc, round(round(sum(l_quantity),6)/count(*),4) avg_qty, count(*) cnt FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-01' GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"),
-    ("q_agg_distinct", qAggDistinct,
-      "SELECT c_mktsegment, count(DISTINCT c_nationkey) nations, count(*) cnt FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment"),
-    ("q_agg_rollup", qAggRollup,
-      "SELECT coalesce(r_name,'ALL') r, coalesce(n_name,'ALL') n, count(*) cnt FROM nation JOIN region ON n_regionkey=r_regionkey GROUP BY ROLLUP(r_name, n_name) ORDER BY r, n"),
-    ("q_agg_cube", qAggCube,
-      "SELECT coalesce(l_returnflag,'ALL') f, coalesce(l_linestatus,'ALL') s, count(*) cnt FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus) ORDER BY f, s"),
-    ("q_agg_grouping_sets", qAggGroupingSets,
-      "SELECT coalesce(l_returnflag,'ALL') f, coalesce(l_linestatus,'ALL') st, count(*) cnt, round(sum(l_quantity),2) sq FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus)) ORDER BY f, st"),
-    ("q_window_dist", qWindowDist,
-      "SELECT c_mktsegment, c_custkey, round(percent_rank() OVER w, 6) pr, round(cume_dist() OVER w, 6) cd, CAST(ntile(4) OVER w AS BIGINT) quartile FROM customer WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey) ORDER BY c_mktsegment, c_custkey LIMIT 1000"),
-    ("q_scalar_string2", qScalarString2,
-      "SELECT c_custkey, regexp_replace(c_name, '[0-9]', '#', 'g') masked, reverse(c_name) rev, lpad(CAST(c_custkey AS VARCHAR), 10, '0') padded, concat_ws('|', c_mktsegment, c_name) joined, trim('  x  ') trimmed FROM customer ORDER BY c_custkey LIMIT 500"),
-    ("q_join_inner", qJoinInner,
-      "SELECT o_orderkey, c_name, o_totalprice FROM orders JOIN customer ON o_custkey=c_custkey WHERE o_totalprice > 400000 ORDER BY o_orderkey"),
-    ("q_join_multiway", qJoinMultiway,
-      "SELECT r_name, n_name, round(sum(o_totalprice),2) rev FROM orders JOIN customer ON o_custkey=c_custkey JOIN nation ON c_nationkey=n_nationkey JOIN region ON n_regionkey=r_regionkey GROUP BY r_name, n_name ORDER BY r_name, n_name"),
-    ("q_join_left", qJoinLeft,
-      "SELECT c_custkey, count(o_orderkey) n_orders FROM customer LEFT JOIN orders ON o_custkey=c_custkey GROUP BY c_custkey ORDER BY c_custkey"),
-    ("q_join_full", qJoinFull,
-      "SELECT coalesce(a.k,b.k) k, a.cnt_s, b.cnt_c FROM (SELECT s_nationkey k, count(*) cnt_s FROM supplier GROUP BY 1) a FULL JOIN (SELECT c_nationkey k, count(*) cnt_c FROM customer GROUP BY 1) b ON a.k=b.k ORDER BY k"),
-    ("q_join_semi", qJoinSemi,
-      "SELECT c_custkey, c_name FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey AND o_totalprice>450000) ORDER BY c_custkey"),
-    ("q_join_anti", qJoinAnti,
-      "SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey) ORDER BY c_custkey"),
-    ("q_join_theta_range", qJoinThetaRange,
-      "SELECT p_brand, count(*) cnt FROM part JOIN lineitem ON l_partkey=p_partkey AND l_quantity BETWEEN p_size-5 AND p_size+5 GROUP BY p_brand ORDER BY p_brand"),
-    ("q_join_lateral", qJoinLateral,
-      "SELECT n_name, c_name, c_acctbal FROM nation, " +
+        "SELECT node, CAST(min(d) AS BIGINT) hops FROM r GROUP BY node ORDER BY node")),
+    Entry("q_scan_project", qScanProject,
+      Some("SELECT l_orderkey, l_partkey, l_quantity, l_extendedprice FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey, l_quantity, l_extendedprice")),
+    Entry("q_filter_pred", qFilterPred,
+      Some("SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem WHERE l_shipdate >= TIMESTAMP '1998-01-01' AND l_discount BETWEEN 0.02 AND 0.06 AND l_quantity < 10 ORDER BY l_orderkey, l_linenumber, l_extendedprice")),
+    Entry("q_case_expr", qCaseExpr,
+      Some("SELECT o_orderkey, CASE WHEN o_totalprice>300000 THEN 'high' WHEN o_totalprice>100000 THEN 'mid' ELSE 'low' END band FROM orders ORDER BY o_orderkey LIMIT 1000")),
+    Entry("q_agg_hash", qAggHash,
+      Some("SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) sum_qty, round(sum(l_extendedprice),2) sum_base, round(sum(l_extendedprice*(1-l_discount)),2) sum_disc, round(round(sum(l_quantity),6)/count(*),4) avg_qty, count(*) cnt FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-01' GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus")),
+    Entry("q_agg_distinct", qAggDistinct,
+      Some("SELECT c_mktsegment, count(DISTINCT c_nationkey) nations, count(*) cnt FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment")),
+    Entry("q_agg_rollup", qAggRollup,
+      Some("SELECT coalesce(r_name,'ALL') r, coalesce(n_name,'ALL') n, count(*) cnt FROM nation JOIN region ON n_regionkey=r_regionkey GROUP BY ROLLUP(r_name, n_name) ORDER BY r, n")),
+    Entry("q_agg_cube", qAggCube,
+      Some("SELECT coalesce(l_returnflag,'ALL') f, coalesce(l_linestatus,'ALL') s, count(*) cnt FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus) ORDER BY f, s")),
+    Entry("q_agg_grouping_sets", qAggGroupingSets,
+      Some("SELECT coalesce(l_returnflag,'ALL') f, coalesce(l_linestatus,'ALL') st, count(*) cnt, round(sum(l_quantity),2) sq FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus)) ORDER BY f, st")),
+    Entry("q_window_dist", qWindowDist,
+      Some("SELECT c_mktsegment, c_custkey, round(percent_rank() OVER w, 6) pr, round(cume_dist() OVER w, 6) cd, CAST(ntile(4) OVER w AS BIGINT) quartile FROM customer WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey) ORDER BY c_mktsegment, c_custkey LIMIT 1000")),
+    Entry("q_scalar_string2", qScalarString2,
+      Some("SELECT c_custkey, regexp_replace(c_name, '[0-9]', '#', 'g') masked, reverse(c_name) rev, lpad(CAST(c_custkey AS VARCHAR), 10, '0') padded, concat_ws('|', c_mktsegment, c_name) joined, trim('  x  ') trimmed FROM customer ORDER BY c_custkey LIMIT 500")),
+    Entry("q_join_inner", qJoinInner,
+      Some("SELECT o_orderkey, c_name, o_totalprice FROM orders JOIN customer ON o_custkey=c_custkey WHERE o_totalprice > 400000 ORDER BY o_orderkey")),
+    Entry("q_join_multiway", qJoinMultiway,
+      Some("SELECT r_name, n_name, round(sum(o_totalprice),2) rev FROM orders JOIN customer ON o_custkey=c_custkey JOIN nation ON c_nationkey=n_nationkey JOIN region ON n_regionkey=r_regionkey GROUP BY r_name, n_name ORDER BY r_name, n_name")),
+    Entry("q_join_left", qJoinLeft,
+      Some("SELECT c_custkey, count(o_orderkey) n_orders FROM customer LEFT JOIN orders ON o_custkey=c_custkey GROUP BY c_custkey ORDER BY c_custkey")),
+    Entry("q_join_full", qJoinFull,
+      Some("SELECT coalesce(a.k,b.k) k, a.cnt_s, b.cnt_c FROM (SELECT s_nationkey k, count(*) cnt_s FROM supplier GROUP BY 1) a FULL JOIN (SELECT c_nationkey k, count(*) cnt_c FROM customer GROUP BY 1) b ON a.k=b.k ORDER BY k")),
+    Entry("q_join_semi", qJoinSemi,
+      Some("SELECT c_custkey, c_name FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey AND o_totalprice>450000) ORDER BY c_custkey")),
+    Entry("q_join_anti", qJoinAnti,
+      Some("SELECT c_custkey, c_name FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey) ORDER BY c_custkey")),
+    Entry("q_join_theta_range", qJoinThetaRange,
+      Some("SELECT p_brand, count(*) cnt FROM part JOIN lineitem ON l_partkey=p_partkey AND l_quantity BETWEEN p_size-5 AND p_size+5 GROUP BY p_brand ORDER BY p_brand")),
+    Entry("q_join_lateral", qJoinLateral,
+      Some("SELECT n_name, c_name, c_acctbal FROM nation, " +
         "LATERAL (SELECT c_name, c_acctbal FROM customer WHERE c_nationkey = n_nationkey " +
         "ORDER BY c_acctbal DESC, c_name LIMIT 2) " +
-        "ORDER BY n_name, c_acctbal DESC, c_name"),
-    ("q_join_bloom_pruned", qJoinBloomPruned,
-      "SELECT l_orderkey, o_totalprice, count(*) n_items, round(round(sum(l_extendedprice*(1-l_discount)),8),2) revenue " +
+        "ORDER BY n_name, c_acctbal DESC, c_name")),
+    Entry("q_join_bloom_pruned", qJoinBloomPruned,
+      Some("SELECT l_orderkey, o_totalprice, count(*) n_items, round(round(sum(l_extendedprice*(1-l_discount)),8),2) revenue " +
         "FROM lineitem JOIN orders ON l_orderkey=o_orderkey WHERE o_totalprice>400000 " +
-        "GROUP BY l_orderkey, o_totalprice ORDER BY l_orderkey"),
-    ("q_sort_topk", qSortTopk,
-      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100"),
-    ("q_page_keyset", qPageKeyset,
-      "SELECT event_id, ts, user_id, event_type, value FROM events " +
+        "GROUP BY l_orderkey, o_totalprice ORDER BY l_orderkey")),
+    Entry("q_sort_topk", qSortTopk,
+      Some("SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100")),
+    Entry("q_page_keyset", qPageKeyset,
+      Some("SELECT event_id, ts, user_id, event_type, value FROM events " +
         "WHERE ts > TIMESTAMP '2024-01-15 12:00:00' " +
         "OR (ts = TIMESTAMP '2024-01-15 12:00:00' AND event_id > 0) " +
-        "ORDER BY ts, event_id LIMIT 100"),
-    ("q_set_union", qSetUnion,
-      "SELECT c_nationkey k FROM customer UNION SELECT s_nationkey k FROM supplier ORDER BY k"),
-    ("q_set_intersect", qSetIntersect,
-      "SELECT c_nationkey k FROM customer INTERSECT SELECT s_nationkey k FROM supplier ORDER BY k"),
-    ("q_set_except", qSetExcept,
-      "SELECT c_nationkey k FROM customer EXCEPT SELECT s_nationkey k FROM supplier ORDER BY k"),
-    ("q_window_rank", qWindowRank,
-      "SELECT * FROM (SELECT c_mktsegment, c_custkey, c_acctbal, rank() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey) rnk FROM customer) WHERE rnk <= 5 ORDER BY c_mktsegment, rnk, c_custkey"),
-    ("q_window_lag", qWindowLag,
-      "SELECT o_custkey, o_orderkey, o_orderdate, lag(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) prev_price FROM orders ORDER BY o_custkey, o_orderdate, o_orderkey LIMIT 1000"),
-    ("q_window_frame", qWindowFrame,
-      "SELECT o_custkey, o_orderkey, round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey ROWS BETWEEN 2 PRECEDING AND CURRENT ROW),2) run3 FROM orders ORDER BY o_custkey, o_orderkey LIMIT 1000"),
-    ("q_window_nth", qWindowNth,
-      "SELECT o_custkey, o_orderkey, " +
+        "ORDER BY ts, event_id LIMIT 100")),
+    Entry("q_set_union", qSetUnion,
+      Some("SELECT c_nationkey k FROM customer UNION SELECT s_nationkey k FROM supplier ORDER BY k")),
+    Entry("q_set_intersect", qSetIntersect,
+      Some("SELECT c_nationkey k FROM customer INTERSECT SELECT s_nationkey k FROM supplier ORDER BY k")),
+    Entry("q_set_except", qSetExcept,
+      Some("SELECT c_nationkey k FROM customer EXCEPT SELECT s_nationkey k FROM supplier ORDER BY k")),
+    Entry("q_window_rank", qWindowRank,
+      Some("SELECT * FROM (SELECT c_mktsegment, c_custkey, c_acctbal, rank() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey) rnk FROM customer) WHERE rnk <= 5 ORDER BY c_mktsegment, rnk, c_custkey")),
+    Entry("q_window_lag", qWindowLag,
+      Some("SELECT o_custkey, o_orderkey, o_orderdate, lag(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) prev_price FROM orders ORDER BY o_custkey, o_orderdate, o_orderkey LIMIT 1000")),
+    Entry("q_window_frame", qWindowFrame,
+      Some("SELECT o_custkey, o_orderkey, round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey ROWS BETWEEN 2 PRECEDING AND CURRENT ROW),2) run3 FROM orders ORDER BY o_custkey, o_orderkey LIMIT 1000")),
+    Entry("q_window_nth", qWindowNth,
+      Some("SELECT o_custkey, o_orderkey, " +
         "first_value(o_totalprice) OVER w cheapest, " +
         "nth_value(o_totalprice, 2) OVER w secnd, " +
         "last_value(o_totalprice) OVER w priciest " +
         "FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey " +
         "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) " +
-        "ORDER BY o_custkey, o_orderkey LIMIT 1000"),
-    ("q_scalar_string", qScalarString,
-      "SELECT c_custkey, upper(c_name) u, substr(c_name,1,8) s, CAST(length(c_name) AS BIGINT) l, regexp_extract(c_name,'([0-9]+)',1) num FROM customer WHERE c_name LIKE 'Customer%' ORDER BY c_custkey LIMIT 500"),
-    ("q_scalar_date", qScalarDate,
-      "SELECT o_orderkey, CAST(date_trunc('month', o_orderdate) AS DATE) m, CAST(extract(year FROM o_orderdate) AS BIGINT) y, CAST(extract(dow FROM o_orderdate) AS BIGINT) dw, CAST(date_diff('day', TIMESTAMP '1995-01-01', o_orderdate) AS BIGINT) dd FROM orders ORDER BY o_orderkey LIMIT 1000"),
-    ("q_scalar_math", qScalarMath,
-      "SELECT l_orderkey, l_linenumber, round(sqrt(l_extendedprice),4) r1, round(ln(l_extendedprice+1),4) r2, abs(l_discount-0.05) r3, CAST(floor(l_quantity) AS BIGINT) f, CAST(ceil(l_tax*100) AS BIGINT) c FROM lineitem ORDER BY l_orderkey, l_linenumber, r1, r2, r3, f, c LIMIT 1000"),
-    ("q_scalar_json", qScalarJson,
-      "SELECT event_id, CAST(json_extract(props,'$.k') AS INTEGER) k FROM events ORDER BY event_id LIMIT 1000"),
-    ("q_scalar_json_struct", qScalarJsonStruct,
-      "SELECT event_id, CAST(json_extract(doc, '$.meta.k') AS INTEGER) k, json_extract_string(doc, '$.type') etype " +
+        "ORDER BY o_custkey, o_orderkey LIMIT 1000")),
+    Entry("q_scalar_string", qScalarString,
+      Some("SELECT c_custkey, upper(c_name) u, substr(c_name,1,8) s, CAST(length(c_name) AS BIGINT) l, regexp_extract(c_name,'([0-9]+)',1) num FROM customer WHERE c_name LIKE 'Customer%' ORDER BY c_custkey LIMIT 500")),
+    Entry("q_scalar_date", qScalarDate,
+      Some("SELECT o_orderkey, CAST(date_trunc('month', o_orderdate) AS DATE) m, CAST(extract(year FROM o_orderdate) AS BIGINT) y, CAST(extract(dow FROM o_orderdate) AS BIGINT) dw, CAST(date_diff('day', TIMESTAMP '1995-01-01', o_orderdate) AS BIGINT) dd FROM orders ORDER BY o_orderkey LIMIT 1000")),
+    Entry("q_scalar_math", qScalarMath,
+      Some("SELECT l_orderkey, l_linenumber, round(sqrt(l_extendedprice),4) r1, round(ln(l_extendedprice+1),4) r2, abs(l_discount-0.05) r3, CAST(floor(l_quantity) AS BIGINT) f, CAST(ceil(l_tax*100) AS BIGINT) c FROM lineitem ORDER BY l_orderkey, l_linenumber, r1, r2, r3, f, c LIMIT 1000")),
+    Entry("q_scalar_json", qScalarJson,
+      Some("SELECT event_id, CAST(json_extract(props,'$.k') AS INTEGER) k FROM events ORDER BY event_id LIMIT 1000")),
+    Entry("q_scalar_json_struct", qScalarJsonStruct,
+      Some("SELECT event_id, CAST(json_extract(doc, '$.meta.k') AS INTEGER) k, json_extract_string(doc, '$.type') etype " +
         "FROM (SELECT event_id, '{\"meta\":' || props || ',\"type\":\"' || event_type || '\"}' doc FROM events) " +
-        "WHERE CAST(json_extract(doc, '$.meta.k') AS INTEGER) >= 50 ORDER BY event_id LIMIT 1000"),
-    ("q_scalar_regex", qScalarRegex,
-      "SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z]+ing\\b')) AS BIGINT) n_ing, " +
+        "WHERE CAST(json_extract(doc, '$.meta.k') AS INTEGER) >= 50 ORDER BY event_id LIMIT 1000")),
+    Entry("q_scalar_regex", qScalarRegex,
+      Some("SELECT doc_id, CAST(len(regexp_extract_all(lower(text), '[a-z]+ing\\b')) AS BIGINT) n_ing, " +
         "regexp_extract_all(lower(text), '[a-z]+ing\\b')[1] first_ing, " +
-        "CAST(len(regexp_extract_all(text, '[0-9]+')) AS BIGINT) n_num FROM documents ORDER BY doc_id"),
+        "CAST(len(regexp_extract_all(text, '[0-9]+')) AS BIGINT) n_num FROM documents ORDER BY doc_id")),
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -22,8 +23,6 @@ import org.apache.spark.sql.functions._
   * useless eval).
   */
 object Retrieval {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Int8 symmetric per-vector quantization: q_i = floor(x_i·127/max|x| +
     * 0.5) — the explicit floor(+0.5) form is engine-portable (no
     * BigDecimal-vs-IEEE rounding split). r17: the max|x| normalizer is
@@ -279,9 +278,9 @@ object Retrieval {
       " SELECT qid, pick, cid, rel, score FROM sel5 ORDER BY qid, pick"
   }
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_sim_mmr", qSimMmr, Some(mmrOracle)),
-    ("q_sim_eval_metrics", qSimEvalMetrics, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_sim_mmr", qSimMmr, Some(mmrOracle)),
+    Entry("q_sim_eval_metrics", qSimEvalMetrics, Some(
       "WITH q AS (SELECT vec_id qid, CAST(embedding AS DOUBLE[]) qv FROM embeddings WHERE vec_id < 20), " +
         "c AS (SELECT vec_id cid, CAST(embedding AS DOUBLE[]) cv FROM embeddings WHERE vec_id >= 20), " +
         "qq AS (SELECT qid, qv, list_transform(qv, x -> CAST(floor(x * 127.0 / " +
@@ -299,7 +298,7 @@ object Retrieval {
         "round(sum(rel / log2(CAST(prk + 1 AS DOUBLE))) / " +
         "(SELECT sum(CAST(1 AS DOUBLE) / log2(CAST(i + 1 AS DOUBLE))) FROM range(1, 11) t(i)), 6) ndcg " +
         "FROM hits GROUP BY qid ORDER BY qid")),
-    ("q_docs_curriculum", qDocsCurriculum, Some(
+    Entry("q_docs_curriculum", qDocsCurriculum, Some(
       "WITH sc AS (SELECT doc_id, lang, n_chars, " +
         "CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) tok FROM documents), " +
         "aw AS (SELECT doc_id, lang, tok, round(CAST(n_chars AS DOUBLE) / tok, 6) awl FROM sc), " +
@@ -307,7 +306,7 @@ object Retrieval {
         "SELECT phase, CAST(count(*) AS BIGINT) n_docs, CAST(sum(tok) AS BIGINT) toks, " +
         "round(round(sum(awl), 8) / count(*), 6) avg_awl, CAST(count(DISTINCT lang) AS BIGINT) n_langs " +
         "FROM ph GROUP BY 1 ORDER BY 1")),
-    ("q_sim_rrf_fusion", qSimRrfFusion, Some(
+    Entry("q_sim_rrf_fusion", qSimRrfFusion, Some(
       "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) v FROM embeddings), " +
         "b AS (SELECT vec_id, v, list_transform(v, x -> CASE WHEN x >= 0 THEN 1 ELSE 0 END) bits FROM e), " +
         "qs AS (SELECT vec_id qid, v qv, bits qb FROM b WHERE vec_id < 20), " +
@@ -322,7 +321,7 @@ object Retrieval {
         "SELECT qid, cid, ra, rb, rrf FROM " +
         "(SELECT *, row_number() OVER (PARTITION BY qid ORDER BY rrf DESC, cid) rn FROM f) " +
         "WHERE rn <= 5 ORDER BY qid, rrf DESC, cid")),
-    ("q_emb_hard_negatives", qEmbHardNegatives, Some(
+    Entry("q_emb_hard_negatives", qEmbHardNegatives, Some(
       "WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) v FROM embeddings), " +
         "qs AS (SELECT vec_id qid, label ql, v qv FROM e WHERE vec_id < 20), " +
         "cs AS (SELECT vec_id cid, label cl, v cv FROM e WHERE vec_id >= 20), " +

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -27,14 +28,6 @@ import org.apache.spark.sql.functions._
   * one keyed sessionization shuffle that q_ts_session already pays.
   */
 object Signal {
-  type Q = (SparkSession, String) => DataFrame
-
-  /** The canonical gapless hour grid of the dataset's time range (the
-    * q_ts_gapfill bounds). Absent hours are real zeros for COUNT series —
-    * correlating only observed hours would bias r toward dense periods. */
-  private def hourGrid(s: SparkSession): DataFrame = s.sql(
-    "SELECT explode(sequence(TIMESTAMP_NTZ '2024-01-01 00:00:00', TIMESTAMP_NTZ '2024-01-30 23:00:00', INTERVAL 1 HOUR)) AS h")
-
   /** Pearson r per lag from a (lg, x, yl) pair table via exact integer
     * moments — one hash aggregate per call, shared by xcorr and ACF. */
   private def corrByLag(pairs: DataFrame): DataFrame =
@@ -66,7 +59,7 @@ object Signal {
       .groupBy(date_trunc("hour", col("ts")).as("ah"))
       .agg(count(when(col("event_type") === "click", 1)).as("ax"),
         count(when(col("event_type") === "view", 1)).as("ay"))
-    val g = hourGrid(s).join(agg, col("h") === col("ah"), "left")
+    val g = Fit.hourGrid(s).join(agg, col("h") === col("ah"), "left")
       .select(col("h"), coalesce(col("ax"), lit(0L)).as("x"), coalesce(col("ay"), lit(0L)).as("y"))
     val w = Window.orderBy("h")
     val withLeads = (0 to 6).foldLeft(g)((df, l) => df.withColumn(s"y$l", lead("y", l).over(w)))
@@ -83,7 +76,7 @@ object Signal {
     val agg = Tables.events(s, d)
       .groupBy(date_trunc("hour", col("ts")).as("ah"))
       .agg(count(lit(1)).as("ax"))
-    val g = hourGrid(s).join(agg, col("h") === col("ah"), "left")
+    val g = Fit.hourGrid(s).join(agg, col("h") === col("ah"), "left")
       .select(col("h"), coalesce(col("ax"), lit(0L)).as("x"))
     val w = Window.orderBy("h")
     val withLeads = (1 to 24).foldLeft(g)((df, l) => df.withColumn(s"y$l", lead("x", l).over(w)))
@@ -156,7 +149,7 @@ object Signal {
     * engines execute the identical IEEE multiply-add sequence. */
   val qTsHoltWinters: Q = (s, d) => {
     val ev = Tables.events(s, d)
-    val grid = hourGrid(s).crossJoin(ev.select("event_type").distinct())
+    val grid = Fit.hourGrid(s).crossJoin(ev.select("event_type").distinct())
     val hourly = ev
       .groupBy(col("event_type").as("aet"), date_trunc("hour", col("ts")).as("ah"))
       .agg(Num.roundd(sum("value"), 6).as("asv"))
@@ -291,7 +284,7 @@ object Signal {
       .groupBy(date_trunc("hour", col("ts")).as("ah"))
       .agg(count(when(col("event_type") === "click", 1)).as("ax"),
         count(when(col("event_type") === "view", 1)).as("ay"))
-    val g = hourGrid(s).join(agg, col("h") === col("ah"), "left")
+    val g = Fit.hourGrid(s).join(agg, col("h") === col("ah"), "left")
       .select(col("h"), coalesce(col("ax"), lit(0L)).as("x"), coalesce(col("ay"), lit(0L)).as("y"))
     val f = Window.orderBy("h").rowsBetween(-23, Window.currentRow)
     g.select(col("h"),
@@ -386,7 +379,7 @@ object Signal {
     * ROUNDED PAA values, so symbolization is engine-reproducible. */
   val qTsSaxMotif: Q = (s, d) => {
     val ev = Tables.events(s, d)
-    val grid = hourGrid(s).crossJoin(ev.select("event_type").distinct())
+    val grid = Fit.hourGrid(s).crossJoin(ev.select("event_type").distinct())
     val hourly = ev
       .groupBy(col("event_type").as("aet"), date_trunc("hour", col("ts")).as("ah"))
       .agg(Num.roundd(sum("value"), 6).as("asv"))
@@ -468,7 +461,7 @@ object Signal {
     val hourly = Tables.events(s, d)
       .groupBy(col("event_type").as("et"), date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("c"))
-    val p = types.crossJoin(broadcast(hourGrid(s)))
+    val p = types.crossJoin(broadcast(Fit.hourGrid(s)))
       .join(hourly, Seq("et", "h"), "left")
       .select(col("et"), col("h"), coalesce(col("c"), lit(0L)).as("c"))
     val wf = Window.partitionBy("et").orderBy("h").rowsBetween(-23, 0)
@@ -543,9 +536,6 @@ object Signal {
 
   // ---- catalog ------------------------------------------------------------
 
-  private val GRID =
-    "SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h"
-
   private def corrTail: String =
     "m AS (SELECT lg, CAST(count(*) AS BIGINT) np, CAST(sum(x) AS BIGINT) sx, CAST(sum(yl) AS BIGINT) sy, " +
       "CAST(sum(x*yl) AS BIGINT) sxy, CAST(sum(x*x) AS BIGINT) sxx, CAST(sum(yl*yl) AS BIGINT) syy " +
@@ -566,7 +556,7 @@ object Signal {
     val hourly = Tables.events(s, d)
       .groupBy(col("event_type").as("et"), date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("c"))
-    val panel = types.crossJoin(broadcast(hourGrid(s)))
+    val panel = types.crossJoin(broadcast(Fit.hourGrid(s)))
       .join(hourly, Seq("et", "h"), "left")
       .select(col("et"), col("h"), coalesce(col("c"), lit(0L)).as("c"))
     val a = panel.select(col("et").as("et_a"), col("h"), col("c").as("ca"))
@@ -827,8 +817,8 @@ object Signal {
       .toDF(keyCol, "i", "nn", "dist")
   }
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_ts_matrix_profile", qTsMatrixProfile, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_ts_matrix_profile", qTsMatrixProfile, Some(
       "WITH bg AS (SELECT unnest(range(120)) b), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "cnt AS (SELECT event_type et, CAST(datediff('hour', TIMESTAMP '2024-01-01', date_trunc('hour', ts)) // 6 AS BIGINT) cb, " +
@@ -849,8 +839,8 @@ object Signal {
         "r AS (SELECT et, i, j, d2l, row_number() OVER (PARTITION BY et, i ORDER BY d2l, j) rn FROM bo) " +
         "SELECT et event_type, i, j AS nn, round(sqrt(CAST(d2l AS DOUBLE)) / 1000000, 6) dist " +
         "FROM r WHERE rn = 1 ORDER BY 1, 2")),
-    ("q_ts_series_dist", qTsSeriesDist, Some(
-      s"WITH grid AS ($GRID), " +
+    Entry("q_ts_series_dist", qTsSeriesDist, Some(
+      s"WITH grid AS (${Fit.HourGridSql}), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) ah, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
         "p AS (SELECT ty.et, grid.h, coalesce(hc.c, 0) c FROM ty CROSS JOIN grid " +
@@ -859,8 +849,8 @@ object Signal {
         "SELECT et_a, et_b, CAST(sum(abs(ca - cb)) AS BIGINT) l1, " +
         "round(sqrt(CAST(sum((ca - cb) * (ca - cb)) AS DOUBLE)), 6) l2 " +
         "FROM j GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ts_xcorr_lag", qTsXcorrLag, Some(
-      s"WITH grid AS ($GRID), " +
+    Entry("q_ts_xcorr_lag", qTsXcorrLag, Some(
+      s"WITH grid AS (${Fit.HourGridSql}), " +
         "agg AS (SELECT date_trunc('hour', ts) ah, " +
         "CAST(count(*) FILTER (event_type = 'click') AS BIGINT) ax, " +
         "CAST(count(*) FILTER (event_type = 'view') AS BIGINT) ay FROM events GROUP BY 1), " +
@@ -868,20 +858,20 @@ object Signal {
         "p AS (" +
         (0 to 6).map(l => s"SELECT $l lg, x, lead(y, $l) OVER (ORDER BY h) yl FROM g")
           .mkString(" UNION ALL ") + "), " + corrTail)),
-    ("q_ts_acf", qTsAcf, Some(
-      s"WITH grid AS ($GRID), " +
+    Entry("q_ts_acf", qTsAcf, Some(
+      s"WITH grid AS (${Fit.HourGridSql}), " +
         "agg AS (SELECT date_trunc('hour', ts) ah, CAST(count(*) AS BIGINT) ax FROM events GROUP BY 1), " +
         "g AS (SELECT h, coalesce(ax, 0) x FROM grid LEFT JOIN agg ON ah = h), " +
         "p AS (" +
         (1 to 24).map(l => s"SELECT $l lg, x, lead(x, $l) OVER (ORDER BY h) yl FROM g")
           .mkString(" UNION ALL ") + "), " + corrTail)),
-    ("q_ts_vwap", qTsVwap, Some(
+    Entry("q_ts_vwap", qTsVwap, Some(
       "WITH e AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) dday, value, " +
         "CAST(json_extract(props, '$.k') AS BIGINT) k FROM events) " +
         "SELECT event_type, dday, CAST(count(*) AS BIGINT) n, CAST(sum(k) AS BIGINT) vol, " +
         "round(round(sum(value * k), 8) / CAST(sum(k) AS BIGINT), 6) vwap " +
         "FROM e GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ts_m4", qTsM4, Some(
+    Entry("q_ts_m4", qTsM4, Some(
       "WITH e AS (SELECT event_type, epoch_us(ts) // 14400000000 b, ts, event_id, value FROM events), " +
         "w AS (SELECT event_type, b, value, " +
         "row_number() OVER (PARTITION BY event_type, b ORDER BY ts, event_id) rn, " +
@@ -890,14 +880,14 @@ object Signal {
         "min(value) vmin, max(value) vmax, " +
         "max(CASE WHEN rn = 1 THEN value END) vopen, max(CASE WHEN rn = cnt THEN value END) vclose " +
         "FROM w GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ts_decay_topk", qTsDecayTopk, Some(
+    Entry("q_ts_decay_topk", qTsDecayTopk, Some(
       "WITH w AS (SELECT user_id, CAST(1 AS DOUBLE) / (1::BIGINT << " +
         "CAST((epoch_us(TIMESTAMP '2024-01-31 00:00:00') - epoch_us(ts)) // 86400000000 AS INTEGER)) wt " +
         "FROM events) " +
         "SELECT user_id, CAST(count(*) AS BIGINT) n_events, sum(wt) score " +
         "FROM w GROUP BY 1 ORDER BY score DESC, user_id LIMIT 20")),
-    ("q_ts_holt_winters", qTsHoltWinters, Some(
-      s"WITH RECURSIVE grid AS ($GRID), " +
+    Entry("q_ts_holt_winters", qTsHoltWinters, Some(
+      s"WITH RECURSIVE grid AS (${Fit.HourGridSql}), " +
         "types AS (SELECT DISTINCT event_type FROM events), " +
         "agg AS (SELECT event_type aet, date_trunc('hour', ts) ah, round(sum(value), 6) asv " +
         "FROM events GROUP BY 1, 2), " +
@@ -920,7 +910,7 @@ object Signal {
         "SELECT r.event_type, round(l, 6) lvl, round(b, 6) trend, round(l + b + h0.shod, 6) fc1 " +
         "FROM rec r JOIN hm h0 ON h0.event_type = r.event_type AND h0.hod = 0 " +
         "WHERE r.i = r.n ORDER BY r.event_type")),
-    ("q_ts_interval_merge", qTsIntervalMerge, Some(
+    Entry("q_ts_interval_merge", qTsIntervalMerge, Some(
       "WITH iv AS (SELECT event_type, event_id, ts - INTERVAL 30 MINUTE s, ts + INTERVAL 30 MINUTE e " +
         "FROM events WHERE value > 100.0), " +
         "mk AS (SELECT event_type, event_id, s, e, " +
@@ -932,7 +922,7 @@ object Signal {
         "SELECT event_type, gid, min(s) w_start, max(e) w_end, CAST(count(*) AS BIGINT) n_events, " +
         "CAST(date_diff('second', min(s), max(e)) AS BIGINT) dur_s " +
         "FROM isl GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_join_interval_overlap", qJoinIntervalOverlap, Some(
+    Entry("q_join_interval_overlap", qJoinIntervalOverlap, Some(
       "WITH marked AS (SELECT user_id, ts, CASE WHEN ts - lag(ts) OVER " +
         "(PARTITION BY user_id ORDER BY ts) > INTERVAL 30 MINUTE OR lag(ts) OVER " +
         "(PARTITION BY user_id ORDER BY ts) IS NULL THEN 1 ELSE 0 END new_s FROM events), " +
@@ -949,8 +939,8 @@ object Signal {
         "CAST(date_diff('second', greatest(s_start, w_start), least(s_end, w_end)) AS BIGINT) ov_s " +
         "FROM sess JOIN win ON s_start < w_end AND w_start < s_end " +
         "ORDER BY user_id, sid, gid")),
-    ("q_ts_rolling_corr", qTsRollingCorr, Some(
-      s"WITH grid AS ($GRID), " +
+    Entry("q_ts_rolling_corr", qTsRollingCorr, Some(
+      s"WITH grid AS (${Fit.HourGridSql}), " +
         "agg AS (SELECT date_trunc('hour', ts) ah, " +
         "CAST(count(*) FILTER (event_type = 'click') AS BIGINT) ax, " +
         "CAST(count(*) FILTER (event_type = 'view') AS BIGINT) ay FROM events GROUP BY 1), " +
@@ -963,14 +953,14 @@ object Signal {
         "SELECT h, round(CAST(np*sxy - sx*sy AS DOUBLE) / " +
         "(sqrt(CAST(np*sxx - sx*sx AS DOUBLE)) * sqrt(CAST(np*syy - sy*sy AS DOUBLE))), 6) r " +
         "FROM w WHERE np = 24 AND np*sxx - sx*sx > 0 AND np*syy - sy*sy > 0 ORDER BY h")),
-    ("q_ts_mad", qTsMad, Some(
+    Entry("q_ts_mad", qTsMad, Some(
       "WITH med AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) dday, " +
         "round(quantile_cont(value, 0.5), 4) med, CAST(count(*) AS BIGINT) n FROM events GROUP BY 1, 2), " +
         "dev AS (SELECT e.event_type, m.dday, m.med, m.n, abs(e.value - m.med) ad " +
         "FROM events e JOIN med m ON m.event_type = e.event_type AND m.dday = CAST(date_trunc('day', e.ts) AS DATE)) " +
         "SELECT event_type, dday, n, med, round(quantile_cont(ad, 0.5), 4) mad " +
         "FROM dev GROUP BY event_type, dday, n, med ORDER BY event_type, dday")),
-    ("q_ts_drift_psi", qTsDriftPsi, Some(
+    Entry("q_ts_drift_psi", qTsDriftPsi, Some(
       "WITH e AS (SELECT event_type, least(CAST(floor(value / 50.0) AS BIGINT), 9) b, " +
         "CASE WHEN ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-01-08' THEN 1 ELSE 0 END in1, " +
         "CASE WHEN ts >= TIMESTAMP '2024-01-22' AND ts < TIMESTAMP '2024-01-29' THEN 1 ELSE 0 END in2 " +
@@ -989,8 +979,8 @@ object Signal {
         "terms AS (SELECT event_type, n1, n2, round((p - q) * round(ln(p / q), 6), 8) term FROM pq) " +
         "SELECT event_type, n1, n2, round(round(sum(term), 8), 6) psi " +
         "FROM terms GROUP BY 1, 2, 3 ORDER BY 1")),
-    ("q_ts_sax_motif", qTsSaxMotif, Some(
-      s"WITH grid AS ($GRID), " +
+    Entry("q_ts_sax_motif", qTsSaxMotif, Some(
+      s"WITH grid AS (${Fit.HourGridSql}), " +
         "types AS (SELECT DISTINCT event_type FROM events), " +
         "agg AS (SELECT event_type aet, date_trunc('hour', ts) ah, round(sum(value), 6) asv " +
         "FROM events GROUP BY 1, 2), " +
@@ -1008,7 +998,7 @@ object Signal {
         "w AS (SELECT event_type, dday, string_agg(letter, '' ORDER BY seg) word FROM lt GROUP BY 1, 2) " +
         "SELECT event_type, word, CAST(count(*) AS BIGINT) n_days, min(dday) first_day " +
         "FROM w GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ts_periodogram", qTsPeriodogram, Some(
+    Entry("q_ts_periodogram", qTsPeriodogram, Some(
       "WITH h AS (SELECT event_type, CAST(datediff('hour', TIMESTAMP '2024-01-01', date_trunc('hour', ts)) AS BIGINT) hi, " +
         "CAST(count(*) AS BIGINT) n FROM events GROUP BY 1, 2), " +
         "x AS (SELECT event_type, hi, n, unnest([24, 12, 8, 6]) p FROM h), " +
@@ -1016,7 +1006,7 @@ object Signal {
         s"${duckTrigCase(math.sin)} s FROM x), " +
         "a AS (SELECT event_type, period, round(sum(n*c), 6) a6, round(sum(n*s), 6) b6 FROM t GROUP BY 1, 2) " +
         "SELECT event_type, period, a6, b6, round(a6*a6 + b6*b6, 2) power FROM a ORDER BY 1, 2")),
-    ("q_ts_haar_energy", qTsHaarEnergy, Some(
+    Entry("q_ts_haar_energy", qTsHaarEnergy, Some(
       "WITH hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) cn FROM events GROUP BY 1, 2), " +
         "pf AS (SELECT et, CAST(datediff('hour', TIMESTAMP '2024-01-01', h) AS BIGINT) x, cn FROM hc " +
         "WHERE datediff('hour', TIMESTAMP '2024-01-01', h) >= 0 AND datediff('hour', TIMESTAMP '2024-01-01', h) < 512), " +
@@ -1028,8 +1018,8 @@ object Signal {
         "SELECT et event_type, lv AS \"level\", CAST(512 // bs AS BIGINT) n_coef, " +
         "round(CAST(sum(dc * dc) AS DOUBLE) / bs, 6) energy " +
         "FROM co GROUP BY et, lv, bs ORDER BY 1, 2")),
-    ("q_ts_rolling_median", qTsRollingMedian, Some(
-      s"WITH grid AS ($GRID), " +
+    Entry("q_ts_rolling_median", qTsRollingMedian, Some(
+      s"WITH grid AS (${Fit.HourGridSql}), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
         "p AS (SELECT ty.et, grid.h, CAST(coalesce(hc.c, 0) AS BIGINT) c " +

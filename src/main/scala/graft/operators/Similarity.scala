@@ -2,8 +2,11 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Catalog.Fixture
+import graft.Tables
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -52,6 +55,14 @@ object Similarity {
     when(size(col(vecCol)) === dim, bucket).otherwise(expr(
       s"raise_error(concat('graft srpBucket: vector length ', cast(size($vecCol) as string), ' != dim $dim'))"))
   }
+
+  /** DuckDB twin of `srpBucket` over column `vecCol` (inline ±1 plane
+    * literals, same left-to-right double accumulation), for oracles. */
+  def srpBucketSql(vecCol: String, nPlanes: Int, dim: Int = 64): String =
+    srpPlanes(nPlanes, dim).zipWithIndex.map { case (plane, h) =>
+      val lits = plane.mkString("[", ", ", "]")
+      s"(CASE WHEN list_sum(list_transform(range($dim), i -> CAST($vecCol[i+1] AS DOUBLE) * ($lits::DOUBLE[])[i+1])) > 0 THEN ${1 << h} ELSE 0 END)"
+    }.mkString(" + ")
 
   /** Exact all-pairs cosine ≥ threshold, (id_a < id_b).
     *
@@ -208,6 +219,14 @@ object Similarity {
                k: Int, iters: Int = 2): (DataFrame, Array[Array[Double]]) = {
     val m = IvfModel.build(emb, idCol, vecCol, k, iters)
     (m.assigned, m.centroids)
+  }
+
+  /** The catalog's IVF index over the embeddings table: 8 clusters, one
+    * Lloyd round. `pin` also materializes the persisted assignments. */
+  val IvfIndex: Fixture[IvfModel] = {
+    def model(s: SparkSession, d: String) =
+      IvfModel.build(Tables.embeddings(s, d), "vec_id", "embedding", k = 8, iters = 1)
+    Fixture("ivf_index", model, (s, d) => { model(s, d).assigned.count(); Nil })
   }
 
   /** IVF search: exact cosine inside the `nProbe` clusters whose centroids

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,8 +20,6 @@ import org.apache.spark.sql.functions._
   * Spark's hll_sketch_agg / hll_union_agg).
   */
 object Sketches {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Approximate distinct users per event type (HyperLogLog++, rsd 1%). */
   val qSketchDistinct: Q = (s, d) =>
     Tables.events(s, d)
@@ -233,8 +232,8 @@ object Sketches {
       .orderBy("user_id")
   }
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_sketch_cm_point", qSketchCmPoint, Some({
+  val all: Seq[Entry] = Seq(
+    Entry("q_sketch_cm_point", qSketchCmPoint, Some({
       def hj(j: Int) =
         s"CAST('0x' || substr(md5('cm$j' || ':' || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) % 256"
       "WITH cj AS (SELECT user_id, unnest([0, 1, 2, 3]) j FROM events), " +
@@ -250,18 +249,18 @@ object Sketches {
         "FROM pb JOIN cells ON cells.j = pb.j AND cells.bucket = pb.bucket " +
         "GROUP BY 1, 2 ORDER BY 1"
     })),
-    ("q_sketch_distinct", qSketchDistinct, None), // approximate by design; error bounded in SketchSpec
-    ("q_sketch_quantile", qSketchQuantile, None), // approximate by design; t-digest rank error bounded in SketchSpec
-    ("q_sketch_hll_merge", qSketchHllMerge, None), // approximate by design; merge-losslessness asserted in SketchSpec
-    ("q_sketch_tdigest_merge", qSketchTdigestMerge, None), // approximate by design; merged rank error bounded in SketchSpec
-    ("q_sketch_kmv_merge_days", qSketchKmvMergeDays, Some(
+    Entry("q_sketch_distinct", qSketchDistinct, None), // approximate by design; error bounded in SketchSpec
+    Entry("q_sketch_quantile", qSketchQuantile, None), // approximate by design; t-digest rank error bounded in SketchSpec
+    Entry("q_sketch_hll_merge", qSketchHllMerge, None), // approximate by design; merge-losslessness asserted in SketchSpec
+    Entry("q_sketch_tdigest_merge", qSketchTdigestMerge, None), // approximate by design; merged rank error bounded in SketchSpec
+    Entry("q_sketch_kmv_merge_days", qSketchKmvMergeDays, Some(
       "WITH h AS (SELECT DISTINCT CAST('0x' || substr(md5('kmv:' || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) hv FROM events), " +
         "k AS (SELECT list_sort(list(hv))[:64] l, count(*) n FROM h), " +
         "d AS (SELECT CAST(count(DISTINCT date_trunc('day', ts)) AS BIGINT) nd FROM events) " +
         "SELECT round(CASE WHEN k.n < 64 THEN CAST(k.n AS DOUBLE) " +
         "ELSE 63.0 / (CAST(k.l[64] AS DOUBLE) / 1152921504606846976.0) END, 4) est_users, d.nd n_day_sketches " +
         "FROM k, d")),
-    ("q_sketch_kmv_intersect", qSketchKmvIntersect, Some(
+    Entry("q_sketch_kmv_intersect", qSketchKmvIntersect, Some(
       "WITH h AS (SELECT DISTINCT event_type, CAST('0x' || substr(md5('kmv:' || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) hv " +
         "FROM events WHERE event_type IN ('click', 'view')), " +
         "ka AS (SELECT list_sort(list(hv))[:64] l FROM h WHERE event_type = 'click'), " +
@@ -276,11 +275,11 @@ object Sketches {
         "round(CASE WHEN len(la) < 64 THEN CAST(len(la) AS DOUBLE) ELSE 63.0 / (CAST(la[64] AS DOUBLE) / 1152921504606846976.0) END, 4) est_click, " +
         "round(CASE WHEN len(lb) < 64 THEN CAST(len(lb) AS DOUBLE) ELSE 63.0 / (CAST(lb[64] AS DOUBLE) / 1152921504606846976.0) END, 4) est_view, " +
         "round(CAST(cb AS DOUBLE) / kk * du, 4) est_both FROM w")),
-    ("q_sketch_freq_exact", qSketchFreqExact, Some(
+    Entry("q_sketch_freq_exact", qSketchFreqExact, Some(
       "SELECT CAST(row_number() OVER (ORDER BY cnt DESC, event_type) AS BIGINT) rnk, event_type, cnt " +
         "FROM (SELECT event_type, CAST(count(*) AS BIGINT) cnt FROM events GROUP BY 1) ORDER BY rnk")),
-    ("q_sketch_freq_hh", qSketchFreqHh, None), // approximate by design; MG under/over bounds asserted in SketchSpec
-    ("q_sketch_hist_quantile", qSketchHistQuantile, Some(
+    Entry("q_sketch_freq_hh", qSketchFreqHh, None), // approximate by design; MG under/over bounds asserted in SketchSpec
+    Entry("q_sketch_hist_quantile", qSketchHistQuantile, Some(
       "WITH b AS (SELECT event_type, CASE WHEN value < 0.0 THEN 0 WHEN value >= 100.0 THEN 11 " +
         "ELSE 1 + CAST(floor((value - 0.0) * 10 / (100.0 - 0.0)) AS INT) END idx FROM events), " +
         "c AS (SELECT event_type, idx, count(*) n FROM b GROUP BY 1, 2), " +
@@ -293,7 +292,7 @@ object Sketches {
         "ELSE 0.0 + (idx - 1) * 10.0 + 10.0 * (target - cb) / n END, 6) val FROM hit WHERE rn = 1) " +
         "SELECT event_type, max(CASE WHEN qq = 0.5 THEN val END) p50_hist, " +
         "max(CASE WHEN qq = 0.9 THEN val END) p90_hist FROM v GROUP BY event_type ORDER BY event_type")),
-    ("q_sketch_hist_agg", qSketchHistAgg, Some(
+    Entry("q_sketch_hist_agg", qSketchHistAgg, Some(
       "WITH b AS (SELECT event_type, CASE WHEN value < 0.0 THEN 0 WHEN value >= 100.0 THEN 11 " +
         "ELSE 1 + CAST(floor((value - 0.0) * 10 / (100.0 - 0.0)) AS INT) END idx FROM events), " +
         "c AS (SELECT event_type, idx, CAST(count(*) AS BIGINT) n FROM b GROUP BY 1, 2), " +

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -23,16 +24,8 @@ import org.apache.spark.sql.functions._
   * combining aggregate at any corpus size.
   */
 object Sre {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Exact integer cents for the 2-decimal metric value. */
   private val cents = expr("cast(round(value * 100.0) as bigint)")
-
-  private def hourGrid(s: SparkSession): DataFrame = s.sql(
-    "SELECT explode(sequence(TIMESTAMP_NTZ '2024-01-01 00:00:00', TIMESTAMP_NTZ '2024-01-30 23:00:00', INTERVAL 1 HOUR)) AS h")
-
-  private val GRID =
-    "SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h"
 
   // ---- Apdex --------------------------------------------------------------
 
@@ -73,7 +66,7 @@ object Sre {
       .groupBy(col("event_type").as("at"), date_trunc("hour", col("ts")).as("ah"))
       .agg(count(lit(1)).as("ax"))
     val types = Tables.events(s, d).select("event_type").distinct()
-    val g = types.crossJoin(hourGrid(s))
+    val g = types.crossJoin(Fit.hourGrid(s))
       .join(agg, col("event_type") === col("at") && col("h") === col("ah"), "left")
       .select(col("event_type"), col("h"), coalesce(col("ax"), lit(0L)).as("x"))
     val f = Window.partitionBy("event_type").orderBy("h").rowsBetween(-23, Window.currentRow)
@@ -304,7 +297,7 @@ object Sre {
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("err"),
         count(lit(1)).as("tot"))
-    val g = hourGrid(s)
+    val g = Fit.hourGrid(s)
       .join(hourly, Seq("h"), "left")
       .select(col("h"), coalesce(col("err"), lit(0L)).as("err"),
         coalesce(col("tot"), lit(0L)).as("tot"))
@@ -323,8 +316,8 @@ object Sre {
 
   // ---- catalog ------------------------------------------------------------
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_ts_rate_limit", qTsRateLimit, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_ts_rate_limit", qTsRateLimit, Some(
       "WITH RECURSIVE t AS (SELECT user_id, CAST(epoch_us(ts) AS BIGINT) tus, " +
         "CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) i FROM events), " +
         "rec AS (" +
@@ -340,15 +333,15 @@ object Sre {
         "SELECT user_id, CAST(count(*) AS BIGINT) n_events, CAST(sum(adm) AS BIGINT) n_admitted, " +
         "CAST(count(*) - sum(adm) AS BIGINT) n_rejected " +
         "FROM rec GROUP BY 1 ORDER BY 1")),
-    ("q_ts_apdex", qTsApdex, Some(
+    Entry("q_ts_apdex", qTsApdex, Some(
       "SELECT CAST(date_trunc('day', ts) AS DATE) dday, event_type, CAST(count(*) AS BIGINT) n, " +
         "CAST(sum(CASE WHEN value <= 50.0 THEN 1 ELSE 0 END) AS BIGINT) n_sat, " +
         "CAST(sum(CASE WHEN value > 50.0 AND value <= 200.0 THEN 1 ELSE 0 END) AS BIGINT) n_tol, " +
         "round((CAST(sum(CASE WHEN value <= 50.0 THEN 1 ELSE 0 END) AS DOUBLE) + " +
         "CAST(sum(CASE WHEN value > 50.0 AND value <= 200.0 THEN 1 ELSE 0 END) AS DOUBLE) * 0.5) / count(*), 4) apdex " +
         "FROM events GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ts_bollinger", qTsBollinger, Some(
-      s"WITH grid AS ($GRID), " +
+    Entry("q_ts_bollinger", qTsBollinger, Some(
+      s"WITH grid AS (${Fit.HourGridSql}), " +
         "ty AS (SELECT DISTINCT event_type FROM events), " +
         "agg AS (SELECT event_type et, date_trunc('hour', ts) ah, CAST(count(*) AS BIGINT) ax FROM events GROUP BY 1, 2), " +
         "g AS (SELECT ty.event_type, grid.h, coalesce(agg.ax, 0) x FROM ty CROSS JOIN grid " +
@@ -362,7 +355,7 @@ object Sre {
         "SELECT event_type, h, x, ma, sd, lo, hi, " +
         "CAST(CASE WHEN CAST(x AS DOUBLE) > hi THEN 1 WHEN CAST(x AS DOUBLE) < lo THEN -1 ELSE 0 END AS BIGINT) breach " +
         "FROM e ORDER BY event_type, h")),
-    ("q_ts_spike_ratio", qTsSpikeRatio, Some(
+    Entry("q_ts_spike_ratio", qTsSpikeRatio, Some(
       "WITH ty AS (SELECT DISTINCT event_type FROM events), " +
         "days AS (SELECT unnest(generate_series(DATE '2024-01-01', DATE '2024-01-30', INTERVAL 1 DAY)) dday), " +
         "hods AS (SELECT unnest(range(0, 24)) hod), " +
@@ -379,7 +372,7 @@ object Sre {
         "SELECT event_type, dday, hod, x, base, ratio, " +
         "CAST(CASE WHEN ratio >= 2.0 THEN 1 ELSE 0 END AS BIGINT) spike " +
         "FROM r ORDER BY event_type, dday, hod")),
-    ("q_ts_winsorize", qTsWinsorize, Some(
+    Entry("q_ts_winsorize", qTsWinsorize, Some(
       "WITH f AS (SELECT event_type ft, round(quantile_cont(value, 0.05), 4) p05, " +
         "round(quantile_cont(value, 0.95), 4) p95 FROM events GROUP BY 1), " +
         "c AS (SELECT e.event_type, f.p05, f.p95, e.value, " +
@@ -392,7 +385,7 @@ object Sre {
         "round(CAST(sum(cents) AS DOUBLE) / (count(*) * 100.0), 6) mean_raw, " +
         "round(CAST(sum(ci) AS DOUBLE) / (count(*) * 10000.0), 6) mean_wins " +
         "FROM c GROUP BY event_type, p05, p95 ORDER BY event_type")),
-    ("q_ts_benford", qTsBenford, Some(
+    Entry("q_ts_benford", qTsBenford, Some(
       "WITH dg AS (SELECT CAST(substr(CAST(CAST(round(value * 100.0) AS BIGINT) AS VARCHAR), 1, 1) AS BIGINT) digit " +
         "FROM events WHERE CAST(round(value * 100.0) AS BIGINT) > 0), " +
         "c AS (SELECT digit, CAST(count(*) AS BIGINT) n FROM dg GROUP BY 1), " +
@@ -402,7 +395,7 @@ object Sre {
         "WHEN 5 THEN 0.0792 WHEN 6 THEN 0.0669 WHEN 7 THEN 0.0580 WHEN 8 THEN 0.0512 ELSE 0.0458 END AS DOUBLE) expected " +
         "FROM c, t) " +
         "SELECT digit, n, frac, expected, round(frac - expected, 4) dev FROM x ORDER BY digit")),
-    ("q_sre_root_cause", qSreRootCause, Some(
+    Entry("q_sre_root_cause", qSreRootCause, Some(
       "WITH b AS (SELECT CASE WHEN ts < TIMESTAMP '2024-01-08' THEN 1 ELSE 0 END isf, " +
         "event_type, CAST(hour(ts) AS VARCHAR) hod, CAST(isodow(ts) - 1 AS VARCHAR) dow " +
         "FROM events WHERE ts < TIMESTAMP '2024-01-15'), " +
@@ -421,8 +414,8 @@ object Sre {
         "ln(2.0 * (CAST(c.av AS DOUBLE) / t.act) / (CAST(c.fv AS DOUBLE) / t.ft + CAST(c.av AS DOUBLE) / t.act)) END" +
         "), 6) END surprise " +
         "FROM c JOIN t ON t.dim = c.dim ORDER BY 1, 2")),
-    ("q_sre_burn_alert", qSreBurnAlert, Some(
-      s"WITH g AS ($GRID), " +
+    Entry("q_sre_burn_alert", qSreBurnAlert, Some(
+      s"WITH g AS (${Fit.HourGridSql}), " +
         "hc AS (SELECT date_trunc('hour', ts) h, " +
         "CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) err, " +
         "CAST(count(*) AS BIGINT) tot FROM events GROUP BY 1), " +

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -31,28 +32,6 @@ import org.apache.spark.sql.functions._
   * per tested pair; beyond that the moment columns move to DecimalType.
   */
 object Stats {
-  type Q = (SparkSession, String) => DataFrame
-
-  /** Gapless per-type hourly count panel (et, x, c) — the q_ts_gapfill
-    * grid; absent hours are real zeros (see Signal.hourGrid). */
-  private def hourlyPanel(s: SparkSession, d: String): DataFrame = {
-    val grid = s.sql(
-      "SELECT explode(sequence(TIMESTAMP_NTZ '2024-01-01 00:00:00', TIMESTAMP_NTZ '2024-01-30 23:00:00', INTERVAL 1 HOUR)) AS h")
-    val types = Tables.events(s, d).select(col("event_type").as("et")).distinct()
-    val hourly = Tables.events(s, d)
-      .groupBy(col("event_type").as("et"), date_trunc("hour", col("ts")).as("h"))
-      .agg(count(lit(1)).as("c"))
-    // r18: a rotate pin here was measured and REJECTED (cross_corr
-    // 0.28 → 0.46 s while ar2_fit −0.1 and ljung_box neutral — net
-    // negative): the lag-join branches overlap inside one job at sf0.1.
-    types.crossJoin(broadcast(grid))
-      .join(hourly, Seq("et", "h"), "left")
-      .select(col("et"),
-        expr("timestampdiff(HOUR, TIMESTAMP_NTZ '2024-01-01 00:00:00', h)")
-          .cast("long").as("x"),
-        coalesce(col("c"), lit(0L)).as("c"))
-  }
-
   /** Per-distinct-value two-sample rollup of `events.value` for the
     * click/view pair: (value, c1, c2) — the scan-collapsing step shared
     * by KS and Mann–Whitney. Distinct doubles group identically on both
@@ -74,7 +53,7 @@ object Stats {
     * guard, not divide-by-zero. The lag fan-out is a (et, hour)-keyed
     * self-join of the ≤types×720 panel × 24 lags — post-aggregate. */
   val qStatLjungBox: Q = (s, d) => {
-    val p = hourlyPanel(s, d)
+    val p = Fit.hourlyPanel(s, d)
     val ks = s.sql("SELECT explode(sequence(1, 24)) AS k").select(col("k").cast("long").as("k"))
     val lagged = p.crossJoin(broadcast(ks))
       .withColumn("xl", col("x") - col("k"))
@@ -382,7 +361,7 @@ object Stats {
     * → NULL. The lag fan-out is panel × 49 joined on the hour key —
     * post-aggregate, never event volume. */
   val qTsCrossCorr: Q = (s, d) => {
-    val p = hourlyPanel(s, d)
+    val p = Fit.hourlyPanel(s, d)
     val a = p.filter(col("et") === "click").select(col("x"), col("c").as("ca"))
     val b = p.filter(col("et") === "view").select(col("x").as("xb"), col("c").as("cb"))
     val lags = s.sql("SELECT explode(sequence(-24, 24)) AS lag")
@@ -415,7 +394,7 @@ object Stats {
     * double trees over the ROUNDED r's, mirrored token-for-token;
     * |r1| = 1 (perfectly linear series) guards to NULL. */
   val qTsAr2Fit: Q = (s, d) => {
-    val p = hourlyPanel(s, d)
+    val p = Fit.hourlyPanel(s, d)
     val ks = s.sql("SELECT explode(sequence(1, 2)) AS k").select(col("k").cast("long").as("k"))
     val lagged = p.crossJoin(broadcast(ks))
       .withColumn("xl", col("x") - col("k"))
@@ -451,12 +430,9 @@ object Stats {
 
   // ---- catalog ------------------------------------------------------------
 
-  private val GRID =
-    "SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h"
-
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_stat_ljung_box", qStatLjungBox, Some(
-      s"WITH g AS ($GRID), " +
+  val all: Seq[Entry] = Seq(
+    Entry("q_stat_ljung_box", qStatLjungBox, Some(
+      s"WITH g AS (${Fit.HourGridSql}), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
         "p AS (SELECT ty.et, CAST(datediff('hour', TIMESTAMP '2024-01-01', g.h) AS BIGINT) x, " +
@@ -471,7 +447,7 @@ object Stats {
         "t AS (SELECT et, k, n, r, round(r * r / CAST(n - k AS DOUBLE), 12) term FROM r) " +
         "SELECT et event_type, k, r, round(CAST(n * (n + 2) AS DOUBLE) * " +
         "sum(term) OVER (PARTITION BY et ORDER BY k), 6) q_lb FROM t ORDER BY 1, 2")),
-    ("q_stat_ks", qStatKs, Some(
+    Entry("q_stat_ks", qStatKs, Some(
       "WITH roll AS (SELECT value, CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) c1, " +
         "CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) c2 " +
         "FROM events WHERE event_type IN ('click', 'view') GROUP BY 1), " +
@@ -481,7 +457,7 @@ object Stats {
         "SELECT round(CAST(abs(t.n2 * c.cum1 - t.n1 * c.cum2) AS DOUBLE) / CAST(t.n1 * t.n2 AS DOUBLE), 6) ks_d, " +
         "c.value at_value, t.n1, t.n2 FROM c, t " +
         "ORDER BY abs(t.n2 * c.cum1 - t.n1 * c.cum2) DESC, c.value LIMIT 1")),
-    ("q_stat_mannwhitney", qStatMannWhitney, Some(
+    Entry("q_stat_mannwhitney", qStatMannWhitney, Some(
       "WITH roll AS (SELECT value, CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) c1, " +
         "CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) c2 " +
         "FROM events WHERE event_type IN ('click', 'view') GROUP BY 1), " +
@@ -496,7 +472,7 @@ object Stats {
         "(2.0 * sqrt(CAST(n1 * n2 AS DOUBLE) * (CAST(n1 + n2 + 1 AS DOUBLE) - " +
         "CAST(tie AS DOUBLE) / CAST((n1 + n2) * (n1 + n2 - 1) AS DOUBLE)) / 12.0)), 6) END z, " +
         "n1, n2 FROM b")),
-    ("q_stat_chi2", qStatChi2, Some(
+    Entry("q_stat_chi2", qStatChi2, Some(
       "WITH ev AS (SELECT event_type et, CAST(isodow(ts) - 1 AS BIGINT) dw FROM events), " +
         "obs AS (SELECT et, dw, CAST(count(*) AS BIGINT) o FROM ev GROUP BY 1, 2), " +
         "grid AS (SELECT ty.et, CAST(d.dw AS BIGINT) dw FROM (SELECT DISTINCT et FROM ev) ty " +
@@ -512,8 +488,8 @@ object Stats {
         "SELECT round(sum(cell), 6) chi2, CAST((count(DISTINCT et) - 1) * (count(DISTINCT dw) - 1) AS BIGINT) dof, " +
         "round(sqrt(sum(cell) / CAST(max(nn) * least(count(DISTINCT et) - 1, count(DISTINCT dw) - 1) AS DOUBLE)), 6) cramers_v, " +
         "CAST(max(nn) AS BIGINT) n FROM cells ORDER BY 1")),
-    ("q_ts_cross_corr", qTsCrossCorr, Some(
-      s"WITH g AS ($GRID), " +
+    Entry("q_ts_cross_corr", qTsCrossCorr, Some(
+      s"WITH g AS (${Fit.HourGridSql}), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events " +
         "WHERE event_type IN ('click', 'view') GROUP BY 1, 2), " +
         "p AS (SELECT ty.et, CAST(datediff('hour', TIMESTAMP '2024-01-01', g.h) AS BIGINT) x, " +
@@ -528,8 +504,8 @@ object Stats {
         "round(CAST(n * sab - sa * sb AS DOUBLE) / " +
         "sqrt(CAST(n * saa - sa * sa AS DOUBLE) * CAST(n * sbb - sb * sb AS DOUBLE)), 6) END r " +
         "FROM m ORDER BY lag")),
-    ("q_ts_ar2_fit", qTsAr2Fit, Some(
-      s"WITH g AS ($GRID), " +
+    Entry("q_ts_ar2_fit", qTsAr2Fit, Some(
+      s"WITH g AS (${Fit.HourGridSql}), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
         "p AS (SELECT ty.et, CAST(datediff('hour', TIMESTAMP '2024-01-01', g.h) AS BIGINT) x, " +
@@ -550,7 +526,7 @@ object Stats {
         "SELECT et event_type, r1, r2, phi1, phi2, " +
         "CASE WHEN phi1 IS NULL THEN NULL ELSE round(1.0 - phi1 * r1 - phi2 * r2, 6) END innov_ratio " +
         "FROM ph ORDER BY 1")),
-    ("q_stat_mutual_info", qStatMutualInfo, Some(
+    Entry("q_stat_mutual_info", qStatMutualInfo, Some(
       "WITH ev AS (SELECT event_type et, CAST(isodow(ts) - 1 AS BIGINT) dw FROM events), " +
         "o AS (SELECT et, dw, CAST(count(*) AS BIGINT) o FROM ev GROUP BY 1, 2), " +
         "r AS (SELECT et, CAST(sum(o) AS BIGINT) rt FROM o GROUP BY 1), " +
@@ -564,7 +540,7 @@ object Stats {
         "SELECT round(miraw, 6) mi, round(hrow, 6) h_row, round(hcol, 6) h_col, " +
         "CASE WHEN hrow > 0 AND hcol > 0 THEN round(miraw / sqrt(hrow * hcol), 6) END nmi, t.nn n " +
         "FROM mi CROSS JOIN hr CROSS JOIN hc CROSS JOIN t")),
-    ("q_seq_entropy", qSeqEntropy, Some(
+    Entry("q_seq_entropy", qSeqEntropy, Some(
       "WITH p AS (SELECT event_type v, " +
         "lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) nx FROM events), " +
         "u AS (SELECT v, CAST(count(*) AS BIGINT) cw FROM p GROUP BY 1), " +
@@ -579,7 +555,7 @@ object Stats {
         "round(h1raw - h2raw, 6) info_gain, round(exp(round(h1raw, 6)), 6) ppl_unigram, " +
         "round(exp(round(h2raw, 6)), 6) ppl_bigram " +
         "FROM h1 CROSS JOIN h2 CROSS JOIN un CROSS JOIN bn")),
-    ("q_stat_bootstrap_ci", qStatBootstrapCi, Some(
+    Entry("q_stat_bootstrap_ci", qStatBootstrapCi, Some(
       "WITH x0 AS (SELECT event_id, CAST(round(value * 100.0) AS BIGINT) cents, " +
         "md5('boot' || ':' || CAST(event_id AS VARCHAR)) dig FROM events WHERE event_type = 'purchase'), " +
         "x AS (SELECT event_id, cents, CAST('0x' || substr(dig, 1, 15) AS BIGINT) h1, " +

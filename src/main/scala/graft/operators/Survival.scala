@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.{ArtifactStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -39,8 +40,6 @@ import org.apache.spark.sql.functions._
   * (segment, duration) counts before any sequential work.
   */
 object Survival {
-  type Q = (SparkSession, String) => DataFrame
-
   private val StudyEnd = "TIMESTAMP_NTZ '2024-01-07 00:00:00'"
 
   private def r6(v: Double): Double = {
@@ -199,8 +198,8 @@ object Survival {
       "ru AS (SELECT seg, t, CAST(sum(ev) AS BIGINT) d, CAST(count(*) - sum(ev) AS BIGINT) cns " +
       "FROM subj GROUP BY 1, 2), "
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_user_kaplan_meier", qUserKaplanMeier, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_user_kaplan_meier", qUserKaplanMeier, Some(
       SubjCte +
         "r AS (SELECT seg, t, d, cns, " +
         "CAST(row_number() OVER (PARTITION BY seg ORDER BY t) AS BIGINT) rn FROM ru), " +
@@ -218,7 +217,7 @@ object Survival {
         "FROM km JOIN r ON r.seg = km.seg AND r.rn = km.rn + 1) " +
         "SELECT seg segment, t t_hours, n at_risk, d deaths, cns censored, hazard, " +
         "round(surv, 6) survival FROM km ORDER BY 1, 2")),
-    ("q_user_nelson_aalen", qUserNelsonAalen, Some(
+    Entry("q_user_nelson_aalen", qUserNelsonAalen, Some(
       SubjCte +
         "st AS (SELECT seg, t, d, cns, " +
         "CAST(sum(d + cns) OVER (PARTITION BY seg ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) n FROM ru), " +
@@ -228,7 +227,7 @@ object Survival {
         "round(sum(hzv) OVER (PARTITION BY seg ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) cumhaz, " +
         "round(sum(vzv) OVER (PARTITION BY seg ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 9) cumvar " +
         "FROM hz ORDER BY 1, 2")),
-    ("q_user_logrank", qUserLogrank, Some(
+    Entry("q_user_logrank", qUserLogrank, Some(
       SubjCte +
         "sp AS (SELECT t te, dall, nall FROM (SELECT t, CAST(sum(d) AS BIGINT) dall, " +
         "CAST(sum(sum(d + cns)) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) nall " +

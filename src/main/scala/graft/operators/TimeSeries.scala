@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -23,8 +24,6 @@ import org.apache.spark.sql.functions._
   *    sides lives in graft.operators.AsofJoin.
   */
 object TimeSeries {
-  type Q = (SparkSession, String) => DataFrame
-
   val qTsTumbling: Q = (s, d) =>
     Tables.events(s, d)
       .groupBy(date_trunc("hour", col("ts")).as("w"), col("event_type"))
@@ -1153,13 +1152,13 @@ object TimeSeries {
       .orderBy("h")
   }
 
-  val all: Seq[(String, Q, String)] = Seq(
-    ("q_ts_local_day", qTsLocalDay,
-      "SELECT CAST(date_trunc('day', (ts AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York') AS DATE) nyday, " +
+  val all: Seq[Entry] = Seq(
+    Entry("q_ts_local_day", qTsLocalDay,
+      Some("SELECT CAST(date_trunc('day', (ts AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York') AS DATE) nyday, " +
         "event_type, CAST(count(*) AS BIGINT) cnt, round(sum(value), 2) sv " +
-        "FROM events GROUP BY 1, 2 ORDER BY 1, 2"),
-    ("q_ts_funnel_exclusion", qTsFunnelExclusion,
-      "WITH su AS (SELECT user_id, min(ts) sts FROM events WHERE event_type = 'signup' GROUP BY 1), " +
+        "FROM events GROUP BY 1, 2 ORDER BY 1, 2")),
+    Entry("q_ts_funnel_exclusion", qTsFunnelExclusion,
+      Some("WITH su AS (SELECT user_id, min(ts) sts FROM events WHERE event_type = 'signup' GROUP BY 1), " +
         "j AS (SELECT e.user_id, su.sts, " +
         "min(CASE WHEN e.event_type = 'purchase' AND e.ts > su.sts THEN e.ts END) pts " +
         "FROM events e JOIN su ON su.user_id = e.user_id GROUP BY 1, 2), " +
@@ -1170,9 +1169,9 @@ object TimeSeries {
         "CAST(sum(CASE WHEN j.pts IS NOT NULL AND err.user_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) n_tainted, " +
         "CAST(sum(CASE WHEN j.pts IS NOT NULL AND err.user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) n_clean, " +
         "round(CAST(sum(CASE WHEN j.pts IS NOT NULL AND err.user_id IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 4) clean_rate " +
-        "FROM j LEFT JOIN err ON err.user_id = j.user_id GROUP BY 1 ORDER BY 1"),
-    ("q_ts_session_capped", qTsSessionCapped,
-      "WITH RECURSIVE t AS (SELECT user_id, CAST(epoch_us(ts) AS BIGINT) tus, " +
+        "FROM j LEFT JOIN err ON err.user_id = j.user_id GROUP BY 1 ORDER BY 1")),
+    Entry("q_ts_session_capped", qTsSessionCapped,
+      Some("WITH RECURSIVE t AS (SELECT user_id, CAST(epoch_us(ts) AS BIGINT) tus, " +
         "CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS BIGINT) i FROM events), " +
         "rec AS (" +
         "SELECT user_id, i, tus, tus ss FROM t WHERE i = 1 " +
@@ -1182,9 +1181,9 @@ object TimeSeries {
         "FROM rec r JOIN t ON t.user_id = r.user_id AND t.i = r.i + 1) " +
         "SELECT user_id, make_timestamp(ss) s_start, CAST(count(*) AS BIGINT) n_events, " +
         "CAST((max(tus) - min(tus)) // 1000000 AS BIGINT) dur_s " +
-        "FROM rec GROUP BY 1, 2 ORDER BY 1, 2"),
-    ("q_ts_session_hours", qTsSessionHours,
-      "WITH m AS (SELECT user_id, ts, CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL " +
+        "FROM rec GROUP BY 1, 2 ORDER BY 1, 2")),
+    Entry("q_ts_session_hours", qTsSessionHours,
+      Some("WITH m AS (SELECT user_id, ts, CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL " +
         "OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 30 MINUTE THEN 1 ELSE 0 END new_s FROM events), " +
         "se AS (SELECT user_id, ts, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) sid FROM m), " +
         "sess AS (SELECT user_id, sid, CAST(epoch_us(min(ts)) AS BIGINT) s_us, " +
@@ -1195,38 +1194,38 @@ object TimeSeries {
         "least(e_us, b + 3600000000) - greatest(s_us, b) ov_us FROM sl) " +
         "SELECT make_timestamp(slice_us) h, CAST(count(*) AS BIGINT) n_sessions, " +
         "round(CAST(sum(ov_us) AS DOUBLE) / 60000000.0, 4) mins " +
-        "FROM o GROUP BY 1 ORDER BY 1"),
-    ("q_ts_range_frame", qTsRangeFrame,
-      "WITH t AS (SELECT event_id, event_type, ts, CAST(round(value * 100.0) AS BIGINT) cents FROM events), " +
+        "FROM o GROUP BY 1 ORDER BY 1")),
+    Entry("q_ts_range_frame", qTsRangeFrame,
+      Some("WITH t AS (SELECT event_id, event_type, ts, CAST(round(value * 100.0) AS BIGINT) cents FROM events), " +
         "w AS (SELECT event_id, event_type, ts, CAST(count(*) OVER f AS BIGINT) n_1h, " +
         "CAST(sum(cents) OVER f AS BIGINT) sc FROM t " +
         "WINDOW f AS (PARTITION BY event_type ORDER BY ts RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)) " +
         "SELECT event_id, event_type, ts, n_1h, " +
-        "round(CAST(sc AS DOUBLE) / (n_1h * 100.0), 6) mean_1h FROM w ORDER BY event_id"),
-    ("q_ts_tumbling", qTsTumbling,
-      "SELECT date_trunc('hour', ts) w, event_type, count(*) cnt, round(sum(value),2) sv, round(round(sum(value),8)/count(*),4) av FROM events GROUP BY 1,2 ORDER BY 1,2"),
-    ("q_ts_downsample_day", qTsDownsampleDay,
-      "SELECT date_trunc('day', ts) d, event_type, count(*) cnt, round(min(value),2) mn, round(max(value),2) mx, round(round(sum(value),8)/count(*),4) av FROM events GROUP BY 1,2 ORDER BY 1,2"),
-    ("q_ts_sliding", qTsSliding,
-      "SELECT ws.w, count(*) cnt FROM (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-31', INTERVAL 15 MINUTE)) w) ws JOIN events e ON e.ts >= ws.w AND e.ts < ws.w + INTERVAL 1 HOUR GROUP BY ws.w ORDER BY ws.w"),
-    ("q_ts_session", qTsSession,
-      "WITH marked AS (SELECT user_id, ts, CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 30 MINUTE OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL THEN 1 ELSE 0 END new_s FROM events), sess AS (SELECT user_id, ts, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) sid FROM marked) SELECT user_id, sid, count(*) n_events, CAST(date_diff('second', min(ts), max(ts)) AS BIGINT) dur_s FROM sess GROUP BY user_id, sid ORDER BY user_id, sid"),
-    ("q_ts_gapfill", qTsGapfill,
-      "WITH hours AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), agg AS (SELECT date_trunc('hour', ts) h, round(sum(value),2) sv FROM events GROUP BY 1) SELECT hours.h, coalesce(agg.sv, 0.0) sv FROM hours LEFT JOIN agg ON hours.h=agg.h ORDER BY hours.h"),
-    ("q_ts_last_point", qTsLastPoint,
-      "SELECT user_id, max_by(value, ts) last_value, max(ts) last_ts FROM events GROUP BY user_id ORDER BY user_id"),
-    ("q_ts_delta", qTsDelta,
-      "SELECT user_id, ts, round(value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id),4) delta FROM events ORDER BY user_id, ts, event_id LIMIT 5000"),
-    ("q_ts_topk_per_day", qTsTopkPerDay,
-      "SELECT d, user_id, cnt, rn FROM (SELECT date_trunc('day',ts) d, user_id, count(*) cnt, CAST(row_number() OVER (PARTITION BY date_trunc('day',ts) ORDER BY count(*) DESC, user_id) AS BIGINT) rn FROM events GROUP BY 1,2) WHERE rn<=5 ORDER BY d, rn"),
-    ("q_ts_histogram", qTsHistogram,
-      "SELECT floor(value/50)*50 bucket, count(*) cnt FROM events GROUP BY 1 ORDER BY 1"),
-    ("q_ts_percentile", qTsPercentile,
-      "SELECT event_type, round(quantile_cont(value, 0.5),4) p50, round(quantile_cont(value, 0.95),4) p95, count(*) cnt FROM events GROUP BY event_type ORDER BY event_type"),
-    ("q_ts_locf", qTsLocf,
-      "WITH hours AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), agg AS (SELECT date_trunc('hour', ts) h, round(sum(value),2) sv FROM events GROUP BY 1), j AS (SELECT hours.h, agg.sv FROM hours LEFT JOIN agg ON hours.h=agg.h) SELECT h, last_value(sv IGNORE NULLS) OVER (ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) sv_locf FROM j ORDER BY h"),
-    ("q_ts_lerp", qTsLerp,
-      "WITH hours AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
+        "round(CAST(sc AS DOUBLE) / (n_1h * 100.0), 6) mean_1h FROM w ORDER BY event_id")),
+    Entry("q_ts_tumbling", qTsTumbling,
+      Some("SELECT date_trunc('hour', ts) w, event_type, count(*) cnt, round(sum(value),2) sv, round(round(sum(value),8)/count(*),4) av FROM events GROUP BY 1,2 ORDER BY 1,2")),
+    Entry("q_ts_downsample_day", qTsDownsampleDay,
+      Some("SELECT date_trunc('day', ts) d, event_type, count(*) cnt, round(min(value),2) mn, round(max(value),2) mx, round(round(sum(value),8)/count(*),4) av FROM events GROUP BY 1,2 ORDER BY 1,2")),
+    Entry("q_ts_sliding", qTsSliding,
+      Some("SELECT ws.w, count(*) cnt FROM (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-31', INTERVAL 15 MINUTE)) w) ws JOIN events e ON e.ts >= ws.w AND e.ts < ws.w + INTERVAL 1 HOUR GROUP BY ws.w ORDER BY ws.w")),
+    Entry("q_ts_session", qTsSession,
+      Some("WITH marked AS (SELECT user_id, ts, CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 30 MINUTE OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL THEN 1 ELSE 0 END new_s FROM events), sess AS (SELECT user_id, ts, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) sid FROM marked) SELECT user_id, sid, count(*) n_events, CAST(date_diff('second', min(ts), max(ts)) AS BIGINT) dur_s FROM sess GROUP BY user_id, sid ORDER BY user_id, sid")),
+    Entry("q_ts_gapfill", qTsGapfill,
+      Some("WITH hours AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), agg AS (SELECT date_trunc('hour', ts) h, round(sum(value),2) sv FROM events GROUP BY 1) SELECT hours.h, coalesce(agg.sv, 0.0) sv FROM hours LEFT JOIN agg ON hours.h=agg.h ORDER BY hours.h")),
+    Entry("q_ts_last_point", qTsLastPoint,
+      Some("SELECT user_id, max_by(value, ts) last_value, max(ts) last_ts FROM events GROUP BY user_id ORDER BY user_id")),
+    Entry("q_ts_delta", qTsDelta,
+      Some("SELECT user_id, ts, round(value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id),4) delta FROM events ORDER BY user_id, ts, event_id LIMIT 5000")),
+    Entry("q_ts_topk_per_day", qTsTopkPerDay,
+      Some("SELECT d, user_id, cnt, rn FROM (SELECT date_trunc('day',ts) d, user_id, count(*) cnt, CAST(row_number() OVER (PARTITION BY date_trunc('day',ts) ORDER BY count(*) DESC, user_id) AS BIGINT) rn FROM events GROUP BY 1,2) WHERE rn<=5 ORDER BY d, rn")),
+    Entry("q_ts_histogram", qTsHistogram,
+      Some("SELECT floor(value/50)*50 bucket, count(*) cnt FROM events GROUP BY 1 ORDER BY 1")),
+    Entry("q_ts_percentile", qTsPercentile,
+      Some("SELECT event_type, round(quantile_cont(value, 0.5),4) p50, round(quantile_cont(value, 0.95),4) p95, count(*) cnt FROM events GROUP BY event_type ORDER BY event_type")),
+    Entry("q_ts_locf", qTsLocf,
+      Some("WITH hours AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), agg AS (SELECT date_trunc('hour', ts) h, round(sum(value),2) sv FROM events GROUP BY 1), j AS (SELECT hours.h, agg.sv FROM hours LEFT JOIN agg ON hours.h=agg.h) SELECT h, last_value(sv IGNORE NULLS) OVER (ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) sv_locf FROM j ORDER BY h")),
+    Entry("q_ts_lerp", qTsLerp,
+      Some("WITH hours AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
         "agg AS (SELECT date_trunc('hour', ts) h, round(sum(value),2) sv FROM events GROUP BY 1), " +
         "j AS (SELECT hours.h, agg.sv FROM hours LEFT JOIN agg ON hours.h=agg.h), " +
         "p AS (SELECT h, sv, " +
@@ -1238,98 +1237,98 @@ object TimeSeries {
         "wn AS (ORDER BY h ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) " +
         "SELECT h, round(CASE WHEN sv IS NOT NULL THEN sv WHEN pv IS NULL THEN NULL WHEN nv IS NULL THEN pv " +
         "ELSE pv + (nv - pv) * (CAST(epoch_us(h) - epoch_us(pt) AS DOUBLE) / CAST(epoch_us(nt) - epoch_us(pt) AS DOUBLE)) END, 4) sv_lerp " +
-        "FROM p ORDER BY h"),
-    ("q_ts_rate", qTsRate,
-      "SELECT user_id, ts, round((value - lag(value) OVER w) / (CAST(epoch_us(ts) - epoch_us(lag(ts) OVER w) AS DOUBLE) / 1000000.0), 6) rate FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id) ORDER BY user_id, ts, event_id LIMIT 5000"),
-    ("q_ts_rate_resets", qTsRateResets,
-      "SELECT user_id, ts, round((CASE WHEN lag(value) OVER w IS NULL THEN NULL " +
+        "FROM p ORDER BY h")),
+    Entry("q_ts_rate", qTsRate,
+      Some("SELECT user_id, ts, round((value - lag(value) OVER w) / (CAST(epoch_us(ts) - epoch_us(lag(ts) OVER w) AS DOUBLE) / 1000000.0), 6) rate FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id) ORDER BY user_id, ts, event_id LIMIT 5000")),
+    Entry("q_ts_rate_resets", qTsRateResets,
+      Some("SELECT user_id, ts, round((CASE WHEN lag(value) OVER w IS NULL THEN NULL " +
         "WHEN value >= lag(value) OVER w THEN value - lag(value) OVER w ELSE value END) / " +
         "(CAST(epoch_us(ts) - epoch_us(lag(ts) OVER w) AS DOUBLE) / 1000000.0), 6) rate " +
         "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id) " +
-        "ORDER BY user_id, ts, event_id LIMIT 5000"),
-    ("q_ts_changes", qTsChanges,
-      "WITH m AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) dd, " +
+        "ORDER BY user_id, ts, event_id LIMIT 5000")),
+    Entry("q_ts_changes", qTsChanges,
+      Some("WITH m AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) dd, " +
         "CASE WHEN value <> lag(value) OVER (PARTITION BY user_id, CAST(date_trunc('day', ts) AS DATE) ORDER BY ts, event_id) THEN 1 ELSE 0 END chg " +
         "FROM events) " +
-        "SELECT user_id, dd, CAST(sum(chg) AS BIGINT) changes, count(*) n FROM m GROUP BY 1, 2 ORDER BY 1, 2"),
-    ("q_ts_irate", qTsIrate,
-      "WITH m AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) dd, value, ts, " +
+        "SELECT user_id, dd, CAST(sum(chg) AS BIGINT) changes, count(*) n FROM m GROUP BY 1, 2 ORDER BY 1, 2")),
+    Entry("q_ts_irate", qTsIrate,
+      Some("WITH m AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) dd, value, ts, " +
         "lag(value) OVER w prev_v, lag(ts) OVER w prev_ts, " +
         "row_number() OVER (PARTITION BY user_id, CAST(date_trunc('day', ts) AS DATE) ORDER BY ts DESC, event_id DESC) rn " +
         "FROM events WINDOW w AS (PARTITION BY user_id, CAST(date_trunc('day', ts) AS DATE) ORDER BY ts, event_id)) " +
         "SELECT user_id, dd, round((CASE WHEN value >= prev_v THEN value - prev_v ELSE value END) / " +
         "(CAST(epoch_us(ts) - epoch_us(prev_ts) AS DOUBLE) / 1000000.0), 6) irate " +
-        "FROM m WHERE rn = 1 AND prev_ts IS NOT NULL ORDER BY user_id, dd"),
-    ("q_ts_heatmap", qTsHeatmap,
-      "SELECT CAST(extract(hour FROM ts) AS BIGINT) hod, CAST(floor(value / 10) * 10 AS BIGINT) vbucket, count(*) cnt " +
-        "FROM events GROUP BY 1, 2 ORDER BY 1, 2"),
-    ("q_ts_deriv", qTsDeriv,
-      "WITH m AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) dd, count(*) n, " +
+        "FROM m WHERE rn = 1 AND prev_ts IS NOT NULL ORDER BY user_id, dd")),
+    Entry("q_ts_heatmap", qTsHeatmap,
+      Some("SELECT CAST(extract(hour FROM ts) AS BIGINT) hod, CAST(floor(value / 10) * 10 AS BIGINT) vbucket, count(*) cnt " +
+        "FROM events GROUP BY 1, 2 ORDER BY 1, 2")),
+    Entry("q_ts_deriv", qTsDeriv,
+      Some("WITH m AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) dd, count(*) n, " +
         "round(sum(CAST(epoch_us(ts) % 86400000000 AS DOUBLE) / 1000000.0), 4) st, " +
         "round(sum(value), 4) sv, " +
         "round(sum((CAST(epoch_us(ts) % 86400000000 AS DOUBLE) / 1000000.0) * value), 4) stv, " +
         "round(sum((CAST(epoch_us(ts) % 86400000000 AS DOUBLE) / 1000000.0) * (CAST(epoch_us(ts) % 86400000000 AS DOUBLE) / 1000000.0)), 4) stt " +
         "FROM events GROUP BY 1, 2) " +
         "SELECT event_type, dd, round((n * stv - st * sv) / (n * stt - st * st), 8) slope " +
-        "FROM m ORDER BY event_type, dd"),
-    ("q_ts_increase", qTsIncrease,
-      "WITH dl AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) d, value - lag(value) OVER (PARTITION BY user_id, CAST(date_trunc('day', ts) AS DATE) ORDER BY ts, event_id) delta FROM events) SELECT user_id, d, round(sum(CASE WHEN delta > 0 THEN delta ELSE 0.0 END), 2) inc FROM dl GROUP BY user_id, d ORDER BY user_id, d"),
-    ("q_ts_moving_avg", qTsMovingAvg,
-      "WITH hourly AS (SELECT event_type, CAST(epoch_us(date_trunc('hour', ts)) / 1000000 AS BIGINT) hs, round(sum(value),2) sv FROM events GROUP BY 1,2) SELECT event_type, make_timestamp(hs * 1000000) h, sv, round(round(sum(sv) OVER w, 8) / count(*) OVER w, 4) mov FROM hourly WINDOW w AS (PARTITION BY event_type ORDER BY hs RANGE BETWEEN 7200 PRECEDING AND CURRENT ROW) ORDER BY event_type, h"),
-    ("q_ts_retention", qTsRetention,
-      "WITH daily AS (SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) d, user_id FROM events), c AS (SELECT d, count(*) n_users FROM daily GROUP BY d), r AS (SELECT a.d, count(*) retained FROM daily a JOIN daily b ON b.user_id = a.user_id AND b.d = a.d + 1 GROUP BY a.d) SELECT c.d, c.n_users, r.retained, round(CAST(r.retained AS DOUBLE) / c.n_users, 4) rate FROM c JOIN r ON c.d = r.d ORDER BY c.d"),
-    ("q_ts_funnel", qTsFunnel,
-      "WITH v AS (SELECT user_id, min(ts) t_view FROM events WHERE event_type = 'view' GROUP BY user_id) SELECT v.user_id, v.t_view, min(e.ts) t_purchase FROM v JOIN events e ON e.user_id = v.user_id AND e.event_type = 'purchase' AND e.ts > v.t_view AND e.ts <= v.t_view + INTERVAL 1 HOUR GROUP BY v.user_id, v.t_view ORDER BY v.user_id"),
-    ("q_ts_rollup_time", qTsRollupTime,
-      "WITH dg AS (SELECT CAST(extract(year FROM ts) AS BIGINT) y, CAST(extract(month FROM ts) AS BIGINT) m, " +
+        "FROM m ORDER BY event_type, dd")),
+    Entry("q_ts_increase", qTsIncrease,
+      Some("WITH dl AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) d, value - lag(value) OVER (PARTITION BY user_id, CAST(date_trunc('day', ts) AS DATE) ORDER BY ts, event_id) delta FROM events) SELECT user_id, d, round(sum(CASE WHEN delta > 0 THEN delta ELSE 0.0 END), 2) inc FROM dl GROUP BY user_id, d ORDER BY user_id, d")),
+    Entry("q_ts_moving_avg", qTsMovingAvg,
+      Some("WITH hourly AS (SELECT event_type, CAST(epoch_us(date_trunc('hour', ts)) / 1000000 AS BIGINT) hs, round(sum(value),2) sv FROM events GROUP BY 1,2) SELECT event_type, make_timestamp(hs * 1000000) h, sv, round(round(sum(sv) OVER w, 8) / count(*) OVER w, 4) mov FROM hourly WINDOW w AS (PARTITION BY event_type ORDER BY hs RANGE BETWEEN 7200 PRECEDING AND CURRENT ROW) ORDER BY event_type, h")),
+    Entry("q_ts_retention", qTsRetention,
+      Some("WITH daily AS (SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) d, user_id FROM events), c AS (SELECT d, count(*) n_users FROM daily GROUP BY d), r AS (SELECT a.d, count(*) retained FROM daily a JOIN daily b ON b.user_id = a.user_id AND b.d = a.d + 1 GROUP BY a.d) SELECT c.d, c.n_users, r.retained, round(CAST(r.retained AS DOUBLE) / c.n_users, 4) rate FROM c JOIN r ON c.d = r.d ORDER BY c.d")),
+    Entry("q_ts_funnel", qTsFunnel,
+      Some("WITH v AS (SELECT user_id, min(ts) t_view FROM events WHERE event_type = 'view' GROUP BY user_id) SELECT v.user_id, v.t_view, min(e.ts) t_purchase FROM v JOIN events e ON e.user_id = v.user_id AND e.event_type = 'purchase' AND e.ts > v.t_view AND e.ts <= v.t_view + INTERVAL 1 HOUR GROUP BY v.user_id, v.t_view ORDER BY v.user_id")),
+    Entry("q_ts_rollup_time", qTsRollupTime,
+      Some("WITH dg AS (SELECT CAST(extract(year FROM ts) AS BIGINT) y, CAST(extract(month FROM ts) AS BIGINT) m, " +
         "CAST(extract(day FROM ts) AS BIGINT) dd, count(*) cnt, round(sum(value), 2) sv FROM events GROUP BY 1, 2, 3) " +
         "SELECT y, m, dd, CAST(sum(cnt) AS BIGINT) cnt, round(round(sum(sv), 8), 2) sv FROM dg " +
-        "GROUP BY ROLLUP(y, m, dd) ORDER BY y NULLS FIRST, m NULLS FIRST, dd NULLS FIRST"),
-    ("q_ts_ewma", qTsEwma,
-      "WITH hv AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 6) sv FROM events GROUP BY 1, 2), " +
+        "GROUP BY ROLLUP(y, m, dd) ORDER BY y NULLS FIRST, m NULLS FIRST, dd NULLS FIRST")),
+    Entry("q_ts_ewma", qTsEwma,
+      Some("WITH hv AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 6) sv FROM events GROUP BY 1, 2), " +
         "dl AS (SELECT event_type, CAST(date_trunc('day', h) AS DATE) AS \"day\", list(sv ORDER BY h) vs FROM hv GROUP BY 1, 2) " +
         "SELECT event_type, \"day\", round(list_reduce(vs, (acc, x) -> 0.3 * x + 0.7 * acc), 6) ewma " +
-        "FROM dl ORDER BY event_type, \"day\""),
-    ("q_ts_anomaly", qTsAnomaly,
-      "WITH hv AS (SELECT event_type, date_trunc('hour', ts) h, count(*) c FROM events GROUP BY 1, 2), " +
+        "FROM dl ORDER BY event_type, \"day\"")),
+    Entry("q_ts_anomaly", qTsAnomaly,
+      Some("WITH hv AS (SELECT event_type, date_trunc('hour', ts) h, count(*) c FROM events GROUP BY 1, 2), " +
         "wz AS (SELECT event_type, h, c, count(*) OVER w n24, " +
         "CAST(sum(c) OVER w AS DOUBLE) / count(*) OVER w mu, " +
         "round(stddev_samp(c) OVER w, 6) sd " +
         "FROM hv WINDOW w AS (PARTITION BY event_type ORDER BY h ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)) " +
         "SELECT event_type, h, c, round((c - mu) / sd, 3) z FROM wz " +
-        "WHERE n24 = 24 AND sd > 0 AND abs(round((c - mu) / sd, 3)) > 2 ORDER BY event_type, h"),
-    ("q_ts_twa", qTsTwa,
-      "WITH e AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) dday, ts, event_id, value, epoch_us(ts) us FROM events), " +
+        "WHERE n24 = 24 AND sd > 0 AND abs(round((c - mu) / sd, 3)) > 2 ORDER BY event_type, h")),
+    Entry("q_ts_twa", qTsTwa,
+      Some("WITH e AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) dday, ts, event_id, value, epoch_us(ts) us FROM events), " +
         "seg AS (SELECT user_id, dday, value, lead(us) OVER (PARTITION BY user_id, dday ORDER BY ts, event_id) - us dt FROM e) " +
         "SELECT user_id, dday, count(*) n_seg, round(sum(value * dt) / sum(dt), 6) twa " +
-        "FROM seg WHERE dt IS NOT NULL GROUP BY user_id, dday ORDER BY user_id, dday"),
-    ("q_ts_ohlc", qTsOhlc,
-      "SELECT date_trunc('hour', ts) h, event_type, arg_min(value, ts) \"open\", max(value) high, " +
-        "min(value) low, arg_max(value, ts) \"close\", count(*) n FROM events GROUP BY 1, 2 ORDER BY 1, 2"),
-    ("q_ts_asof_nearest", qTsAsofNearest,
-      "WITH probes AS (SELECT user_id k, CAST(date_trunc('day', ts) AS TIMESTAMP) pt FROM events GROUP BY 1, 2), " +
+        "FROM seg WHERE dt IS NOT NULL GROUP BY user_id, dday ORDER BY user_id, dday")),
+    Entry("q_ts_ohlc", qTsOhlc,
+      Some("SELECT date_trunc('hour', ts) h, event_type, arg_min(value, ts) \"open\", max(value) high, " +
+        "min(value) low, arg_max(value, ts) \"close\", count(*) n FROM events GROUP BY 1, 2 ORDER BY 1, 2")),
+    Entry("q_ts_asof_nearest", qTsAsofNearest,
+      Some("WITH probes AS (SELECT user_id k, CAST(date_trunc('day', ts) AS TIMESTAMP) pt FROM events GROUP BY 1, 2), " +
         "pairs AS (SELECT k, pt, e.value v, row_number() OVER (PARTITION BY k, pt " +
         "ORDER BY abs(epoch_us(e.ts) - epoch_us(pt)), e.ts) rn FROM probes JOIN events e ON e.user_id = k) " +
-        "SELECT k, pt, v FROM pairs WHERE rn = 1 ORDER BY k, pt"),
-    ("q_ts_error_ratio", qTsErrorRatio,
-      "SELECT date_trunc('hour', ts) h, CAST(count(*) FILTER (event_type = 'error') AS BIGINT) errors, " +
+        "SELECT k, pt, v FROM pairs WHERE rn = 1 ORDER BY k, pt")),
+    Entry("q_ts_error_ratio", qTsErrorRatio,
+      Some("SELECT date_trunc('hour', ts) h, CAST(count(*) FILTER (event_type = 'error') AS BIGINT) errors, " +
         "CAST(count(*) AS BIGINT) total, " +
         "round(CAST(count(*) FILTER (event_type = 'error') AS DOUBLE) / count(*), 6) ratio " +
-        "FROM events GROUP BY 1 ORDER BY 1"),
-    ("q_ts_threshold_cross", qTsThresholdCross,
-      "WITH hv AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 2) sv FROM events GROUP BY 1, 2), " +
+        "FROM events GROUP BY 1 ORDER BY 1")),
+    Entry("q_ts_threshold_cross", qTsThresholdCross,
+      Some("WITH hv AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 2) sv FROM events GROUP BY 1, 2), " +
         "lg AS (SELECT event_type, h, sv, lag(sv) OVER (PARTITION BY event_type ORDER BY h) prev_sv FROM hv) " +
-        "SELECT event_type, h, prev_sv, sv FROM lg WHERE sv > 400.0 AND prev_sv <= 400.0 ORDER BY event_type, h"),
-    ("q_ts_cohort", qTsCohort,
-      "WITH daily AS (SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) d FROM events), " +
+        "SELECT event_type, h, prev_sv, sv FROM lg WHERE sv > 400.0 AND prev_sv <= 400.0 ORDER BY event_type, h")),
+    Entry("q_ts_cohort", qTsCohort,
+      Some("WITH daily AS (SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) d FROM events), " +
         "f AS (SELECT user_id, d, min(d) OVER (PARTITION BY user_id) fd FROM daily), " +
         "g AS (SELECT fd cohort_day, CAST(d - fd AS BIGINT) offset_d, CAST(count(*) AS BIGINT) n_users " +
         "FROM f WHERE d - fd <= 7 GROUP BY 1, 2) " +
         "SELECT cohort_day, offset_d, n_users, " +
         "round(CAST(n_users AS DOUBLE) / sum(CASE WHEN offset_d = 0 THEN n_users ELSE 0 END) OVER (PARTITION BY cohort_day), 4) rate " +
-        "FROM g ORDER BY cohort_day, offset_d"),
-    ("q_user_ltv_cohort", qUserLtvCohort,
-      "WITH su AS (SELECT user_id, CAST(min(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7) AS BIGINT) cw " +
+        "FROM g ORDER BY cohort_day, offset_d")),
+    Entry("q_user_ltv_cohort", qUserLtvCohort,
+      Some("WITH su AS (SELECT user_id, CAST(min(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7) AS BIGINT) cw " +
         "FROM events WHERE event_type = 'signup' GROUP BY 1), " +
         "cs AS (SELECT cw, CAST(count(*) AS BIGINT) n_users FROM su GROUP BY 1), " +
         "pu AS (SELECT user_id, CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS BIGINT) pw, " +
@@ -1340,27 +1339,27 @@ object TimeSeries {
         "round(CAST(rv.rev AS DOUBLE) / 100.0, 2) revenue, " +
         "round(CAST(sum(rv.rev) OVER (PARTITION BY rv.cw ORDER BY rv.offset_w " +
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / (cs.n_users * 100), 6) ltv " +
-        "FROM rv JOIN cs ON cs.cw = rv.cw ORDER BY 1, 2"),
-    ("q_ts_gaps", qTsGaps,
-      "WITH g AS (SELECT event_type, lag(ts) OVER (PARTITION BY event_type ORDER BY ts, event_id) prev_ts, ts FROM events) " +
+        "FROM rv JOIN cs ON cs.cw = rv.cw ORDER BY 1, 2")),
+    Entry("q_ts_gaps", qTsGaps,
+      Some("WITH g AS (SELECT event_type, lag(ts) OVER (PARTITION BY event_type ORDER BY ts, event_id) prev_ts, ts FROM events) " +
         "SELECT event_type, prev_ts gap_start, ts gap_end, CAST(date_diff('second', prev_ts, ts) AS BIGINT) gap_s " +
-        "FROM g WHERE ts - prev_ts > INTERVAL 60 MINUTE ORDER BY event_type, gap_start"),
-    ("q_ts_corr_pair", qTsCorrPair,
-      "WITH hourly AS (SELECT date_trunc('hour', ts) h, " +
+        "FROM g WHERE ts - prev_ts > INTERVAL 60 MINUTE ORDER BY event_type, gap_start")),
+    Entry("q_ts_corr_pair", qTsCorrPair,
+      Some("WITH hourly AS (SELECT date_trunc('hour', ts) h, " +
         "CAST(count(*) FILTER (event_type = 'click') AS BIGINT) x, " +
         "CAST(count(*) FILTER (event_type = 'view') AS BIGINT) y FROM events GROUP BY 1), " +
         "m AS (SELECT CAST(date_trunc('day', h) AS DATE) dday, CAST(count(*) AS BIGINT) n_hours, " +
         "sum(x) sx, sum(y) sy, sum(x*y) sxy, sum(x*x) sxx, sum(y*y) syy FROM hourly GROUP BY 1) " +
         "SELECT dday, n_hours, round(CAST(n_hours*sxy - sx*sy AS DOUBLE) / " +
         "(sqrt(CAST(n_hours*sxx - sx*sx AS DOUBLE)) * sqrt(CAST(n_hours*syy - sy*sy AS DOUBLE))), 6) r " +
-        "FROM m WHERE n_hours*sxx - sx*sx > 0 AND n_hours*syy - sy*sy > 0 ORDER BY dday"),
+        "FROM m WHERE n_hours*sxx - sx*sx > 0 AND n_hours*syy - sy*sy > 0 ORDER BY dday")),
     // Oracle is a recursive CTE, NOT list_reduce: DuckDB 1.0.0's list_reduce
     // with a struct accumulator updates fields in place, so from the second
     // iteration the 'b' expression reads the freshly-written 'l' (verified
     // on a 3-element fold: acc.l = new l). Row-wise recursion has no such
     // aliasing; the arithmetic tree matches Spark's fold exactly.
-    ("q_ts_holt", qTsHolt,
-      "WITH RECURSIVE hv AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 6) sv FROM events GROUP BY 1, 2), " +
+    Entry("q_ts_holt", qTsHolt,
+      Some("WITH RECURSIVE hv AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 6) sv FROM events GROUP BY 1, 2), " +
         "seq AS (SELECT event_type, CAST(date_trunc('day', h) AS DATE) dday, sv, " +
         "CAST(row_number() OVER (PARTITION BY event_type, date_trunc('day', h) ORDER BY h) AS BIGINT) i, " +
         "CAST(count(*) OVER (PARTITION BY event_type, date_trunc('day', h)) AS BIGINT) n FROM hv), " +
@@ -1374,28 +1373,28 @@ object TimeSeries {
         "0.3::DOUBLE * ((0.5::DOUBLE * s.sv + 0.5::DOUBLE * (r.l + r.b)) - r.l) + 0.7::DOUBLE * r.b AS b " +
         "FROM rec r JOIN seq s ON s.event_type = r.event_type AND s.dday = r.dday AND s.i = r.i + 1) " +
         "SELECT event_type, dday, round(l, 6) lvl, round(b, 6) trend, round(l + b, 6) fc1 " +
-        "FROM rec WHERE i = n ORDER BY event_type, dday"),
-    ("q_ts_asof_forward", qTsAsofForward,
-      "WITH probes AS (SELECT user_id k, CAST(date_trunc('day', ts) AS TIMESTAMP) pt FROM events GROUP BY 1, 2), " +
+        "FROM rec WHERE i = n ORDER BY event_type, dday")),
+    Entry("q_ts_asof_forward", qTsAsofForward,
+      Some("WITH probes AS (SELECT user_id k, CAST(date_trunc('day', ts) AS TIMESTAMP) pt FROM events GROUP BY 1, 2), " +
         "pairs AS (SELECT probes.k, probes.pt, e.value v, " +
         "row_number() OVER (PARTITION BY probes.k, probes.pt ORDER BY e.ts ASC) rn " +
         "FROM probes JOIN events e ON e.user_id = probes.k AND e.ts >= probes.pt), " +
         "hit AS (SELECT k, pt, v FROM pairs WHERE rn = 1) " +
         "SELECT probes.k, probes.pt, hit.v FROM probes LEFT JOIN hit ON hit.k = probes.k AND hit.pt = probes.pt " +
-        "ORDER BY probes.k, probes.pt"),
-    ("q_ts_asof_tolerance", qTsAsofTolerance,
-      "WITH probes AS (SELECT user_id k, CAST(date_trunc('day', ts) AS TIMESTAMP) pt FROM events GROUP BY 1, 2), " +
+        "ORDER BY probes.k, probes.pt")),
+    Entry("q_ts_asof_tolerance", qTsAsofTolerance,
+      Some("WITH probes AS (SELECT user_id k, CAST(date_trunc('day', ts) AS TIMESTAMP) pt FROM events GROUP BY 1, 2), " +
         "pairs AS (SELECT probes.k, probes.pt, e.value v, " +
         "row_number() OVER (PARTITION BY probes.k, probes.pt ORDER BY e.ts DESC) rn " +
         "FROM probes JOIN events e ON e.user_id = probes.k AND e.ts <= probes.pt " +
         "AND epoch_us(probes.pt) - epoch_us(e.ts) <= 21600000000), " +
         "hit AS (SELECT k, pt, v FROM pairs WHERE rn = 1) " +
         "SELECT probes.k, probes.pt, hit.v FROM probes LEFT JOIN hit ON hit.k = probes.k AND hit.pt = probes.pt " +
-        "ORDER BY probes.k, probes.pt"),
-    ("q_ts_asof_join", qTsAsofJoin,
-      "SELECT o.o_orderkey, e.ts FROM (SELECT o_orderkey, o_orderdate FROM orders WHERE o_orderkey % 1000 = 0) o ASOF JOIN events e ON e.ts <= o.o_orderdate + INTERVAL 10585 DAY ORDER BY o.o_orderkey"),
-    ("q_ts_predict_linear", qTsPredictLinear,
-      "WITH m AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) dd, count(*) n, " +
+        "ORDER BY probes.k, probes.pt")),
+    Entry("q_ts_asof_join", qTsAsofJoin,
+      Some("SELECT o.o_orderkey, e.ts FROM (SELECT o_orderkey, o_orderdate FROM orders WHERE o_orderkey % 1000 = 0) o ASOF JOIN events e ON e.ts <= o.o_orderdate + INTERVAL 10585 DAY ORDER BY o.o_orderkey")),
+    Entry("q_ts_predict_linear", qTsPredictLinear,
+      Some("WITH m AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) dd, count(*) n, " +
         "round(sum(CAST(epoch_us(ts) % 86400000000 AS DOUBLE) / 1000000.0), 4) st, " +
         "round(sum(value), 4) sv, " +
         "round(sum((CAST(epoch_us(ts) % 86400000000 AS DOUBLE) / 1000000.0) * value), 4) stv, " +
@@ -1403,32 +1402,32 @@ object TimeSeries {
         "FROM events GROUP BY 1, 2), " +
         "k AS (SELECT event_type, dd, n, st, sv, round((n * stv - st * sv) / (n * stt - st * st), 8) slope FROM m), " +
         "ki AS (SELECT event_type, dd, slope, round((sv - slope * st) / n, 8) icept FROM k) " +
-        "SELECT event_type, dd, round(slope * 90000.0 + icept, 4) pred FROM ki ORDER BY event_type, dd"),
-    ("q_ts_resets", qTsResets,
-      "WITH m AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) dd, " +
+        "SELECT event_type, dd, round(slope * 90000.0 + icept, 4) pred FROM ki ORDER BY event_type, dd")),
+    Entry("q_ts_resets", qTsResets,
+      Some("WITH m AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) dd, " +
         "CASE WHEN value < lag(value) OVER (PARTITION BY user_id, CAST(date_trunc('day', ts) AS DATE) ORDER BY ts, event_id) THEN 1 ELSE 0 END rst " +
         "FROM events) " +
-        "SELECT user_id, dd, CAST(sum(rst) AS BIGINT) resets, count(*) n FROM m GROUP BY 1, 2 ORDER BY 1, 2"),
-    ("q_ts_quantile_time", qTsQuantileTime,
-      "SELECT ws.w, round(quantile_cont(e.value, 0.9), 4) p90, count(*) cnt " +
+        "SELECT user_id, dd, CAST(sum(rst) AS BIGINT) resets, count(*) n FROM m GROUP BY 1, 2 ORDER BY 1, 2")),
+    Entry("q_ts_quantile_time", qTsQuantileTime,
+      Some("SELECT ws.w, round(quantile_cont(e.value, 0.9), 4) p90, count(*) cnt " +
         "FROM (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-31', INTERVAL 15 MINUTE)) w) ws " +
         "JOIN events e ON e.ts >= ws.w AND e.ts < ws.w + INTERVAL 1 HOUR " +
-        "GROUP BY ws.w ORDER BY ws.w"),
-    ("q_ts_vector_ratio", qTsVectorRatio,
-      "WITH h AS (SELECT date_trunc('hour', ts) h, " +
+        "GROUP BY ws.w ORDER BY ws.w")),
+    Entry("q_ts_vector_ratio", qTsVectorRatio,
+      Some("WITH h AS (SELECT date_trunc('hour', ts) h, " +
         "round(sum(CASE WHEN event_type = 'click' THEN value END), 2) clicks, " +
         "round(sum(CASE WHEN event_type = 'view' THEN value END), 2) vws " +
         "FROM events GROUP BY 1) " +
         "SELECT h, clicks, vws, round(clicks / vws, 6) ratio FROM h " +
-        "WHERE clicks IS NOT NULL AND vws IS NOT NULL ORDER BY h"),
-    ("q_ts_seasonal_naive", qTsSeasonalNaive,
-      "WITH hr AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 2) sv FROM events GROUP BY 1, 2), " +
+        "WHERE clicks IS NOT NULL AND vws IS NOT NULL ORDER BY h")),
+    Entry("q_ts_seasonal_naive", qTsSeasonalNaive,
+      Some("WITH hr AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 2) sv FROM events GROUP BY 1, 2), " +
         "lg AS (SELECT event_type, h, sv, lag(sv, 168) OVER (PARTITION BY event_type ORDER BY h) expected FROM hr) " +
         "SELECT event_type, h, sv, expected, round(sv / expected, 6) ratio, " +
         "CAST(CASE WHEN abs(sv / expected - 1) > 0.5 THEN 1 ELSE 0 END AS BIGINT) anom " +
-        "FROM lg WHERE expected IS NOT NULL ORDER BY event_type, h"),
-    ("q_ts_histogram_quantile", qTsHistogramQuantile,
-      "WITH e AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) dd, " +
+        "FROM lg WHERE expected IS NOT NULL ORDER BY event_type, h")),
+    Entry("q_ts_histogram_quantile", qTsHistogramQuantile,
+      Some("WITH e AS (SELECT event_type, CAST(date_trunc('day', ts) AS DATE) dd, " +
         "len(list_filter([10.0, 25.0, 50.0, 100.0, 200.0, 400.0], x -> value > x)) bi FROM events), " +
         "g AS (SELECT event_type, dd, bi, count(*) cnt FROM e GROUP BY 1, 2, 3), " +
         "c AS (SELECT *, sum(cnt) OVER (PARTITION BY event_type, dd ORDER BY bi) cum, " +
@@ -1439,14 +1438,14 @@ object TimeSeries {
         "SELECT event_type, dd, CAST(total AS BIGINT) n, " +
         "round(CASE WHEN bi = 6 THEN 400.0 ELSE " +
         "lo + ([10.0, 25.0, 50.0, 100.0, 200.0, 400.0][bi + 1] - lo) * (target - (cum - cnt)) / cnt END, 4) p90 " +
-        "FROM p ORDER BY event_type, dd"),
-    ("q_ts_absent", qTsAbsent,
-      "WITH p AS (SELECT user_id, event_type, max(ts) last_seen, CAST(count(*) AS BIGINT) n FROM events GROUP BY 1, 2), " +
+        "FROM p ORDER BY event_type, dd")),
+    Entry("q_ts_absent", qTsAbsent,
+      Some("WITH p AS (SELECT user_id, event_type, max(ts) last_seen, CAST(count(*) AS BIGINT) n FROM events GROUP BY 1, 2), " +
         "c AS (SELECT date_trunc('day', max(ts)) cutoff FROM events) " +
         "SELECT user_id, event_type, n, last_seen FROM p CROSS JOIN c " +
-        "WHERE last_seen < cutoff ORDER BY user_id, event_type"),
-    ("q_ts_cusum", qTsCusum,
-      "WITH RECURSIVE hv AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 6) sv FROM events GROUP BY 1, 2), " +
+        "WHERE last_seen < cutoff ORDER BY user_id, event_type")),
+    Entry("q_ts_cusum", qTsCusum,
+      Some("WITH RECURSIVE hv AS (SELECT event_type, date_trunc('hour', ts) h, round(sum(value), 6) sv FROM events GROUP BY 1, 2), " +
         "seq AS (SELECT event_type, CAST(date_trunc('day', h) AS DATE) dday, sv, " +
         "CAST(row_number() OVER (PARTITION BY event_type, date_trunc('day', h) ORDER BY h) AS BIGINT) i, " +
         "CAST(count(*) OVER (PARTITION BY event_type, date_trunc('day', h)) AS BIGINT) n FROM hv), " +
@@ -1464,15 +1463,15 @@ object TimeSeries {
         "r.al + CASE WHEN greatest(0.0::DOUBLE, r.pos + (s.sv - r.mu)) > r.hthr THEN 1 ELSE 0 END al " +
         "FROM rec r JOIN seq s ON s.event_type = r.event_type AND s.dday = r.dday AND s.i = r.i + 1) " +
         "SELECT event_type, dday, n n_hours, mu, round(pos, 6) cusum_end, round(mx, 6) cusum_max, al n_alarms " +
-        "FROM rec WHERE i = n ORDER BY event_type, dday"),
-    ("q_ts_seasonal_decomp", qTsSeasonalDecomp,
-      "WITH hr AS (SELECT event_type, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) cnt FROM events GROUP BY 1, 2), " +
+        "FROM rec WHERE i = n ORDER BY event_type, dday")),
+    Entry("q_ts_seasonal_decomp", qTsSeasonalDecomp,
+      Some("WITH hr AS (SELECT event_type, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) cnt FROM events GROUP BY 1, 2), " +
         "wf AS (SELECT event_type, h, cnt, " +
         "count(*) OVER (PARTITION BY event_type ORDER BY h ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) wn, " +
         "sum(cnt) OVER (PARTITION BY event_type ORDER BY h ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING) s25 " +
         "FROM hr) " +
         "SELECT event_type, CAST(extract(hour FROM h) AS BIGINT) hod, CAST(count(*) AS BIGINT) n, " +
         "round(CAST(sum(cnt * 25 - s25) AS DOUBLE) / (count(*) * 25.0), 6) seasonal " +
-        "FROM wf WHERE wn = 25 GROUP BY event_type, hod ORDER BY event_type, hod"),
+        "FROM wf WHERE wn = 25 GROUP BY event_type, hod ORDER BY event_type, hod")),
   )
 }

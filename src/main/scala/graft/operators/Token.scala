@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -22,8 +23,6 @@ import org.apache.spark.sql.functions._
   * locale- or regex-dependent splitter.
   */
 object Token {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Adjacent character-pair frequencies over in-word positions — the
     * statistic the FIRST BPE merge maximizes (Sennrich et al., 2016
     * reads exactly this table each round). Top 50 by (count, pair).
@@ -147,20 +146,20 @@ object Token {
       .orderBy("lang")
   }
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_tok_bpe_pairs", qTokBpePairs, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_tok_bpe_pairs", qTokBpePairs, Some(
       "WITH wf AS (SELECT w, CAST(count(*) AS BIGINT) c FROM (" +
         "SELECT unnest(string_split(text, ' ')) w FROM documents) WHERE len(w) >= 2 GROUP BY w) " +
         "SELECT pair, CAST(sum(c) AS BIGINT) cnt FROM (" +
         "SELECT unnest(list_transform(range(1, len(w)), i -> w[i:i+1])) pair, c FROM wf) " +
         "GROUP BY pair ORDER BY cnt DESC, pair LIMIT 50")),
-    ("q_tok_fertility", qTokFertility, Some(
+    Entry("q_tok_fertility", qTokFertility, Some(
       "SELECT lang, CAST(count(*) AS BIGINT) n_words, " +
         "CAST(sum((len(w) + 3) // 4) AS BIGINT) n_pieces, " +
         "round(CAST(sum((len(w) + 3) // 4) AS DOUBLE) / count(*), 6) fertility FROM (" +
         "SELECT lang, unnest(string_split(text, ' ')) w FROM documents) " +
         "WHERE w <> '' GROUP BY lang ORDER BY lang")),
-    ("q_tok_vocab_coverage", qTokVocabCoverage, Some(
+    Entry("q_tok_vocab_coverage", qTokVocabCoverage, Some(
       "WITH ww AS (SELECT source, w FROM (" +
         "SELECT source, unnest(string_split(text, ' ')) w FROM documents) WHERE w <> ''), " +
         "v AS (SELECT w vw FROM ww GROUP BY w ORDER BY count(*) DESC, w LIMIT 1000) " +
@@ -168,12 +167,12 @@ object Token {
         "CAST(sum(CASE WHEN vw IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) n_in_vocab, " +
         "round(CAST(count(*) - sum(CASE WHEN vw IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) oov_rate " +
         "FROM ww LEFT JOIN v ON v.vw = ww.w GROUP BY source ORDER BY source")),
-    ("q_tok_byte_ratio", qTokByteRatio, Some(
+    Entry("q_tok_byte_ratio", qTokByteRatio, Some(
       "SELECT lang, CAST(sum(strlen(text)) AS BIGINT) bytes, " +
         "CAST(sum(len(text)) AS BIGINT) chars, " +
         "round(CAST(sum(strlen(text)) AS DOUBLE) / sum(len(text)), 6) bytes_per_char " +
         "FROM documents GROUP BY lang ORDER BY lang")),
-    ("q_tok_alphabet_coverage", qTokAlphabetCoverage, Some(
+    Entry("q_tok_alphabet_coverage", qTokAlphabetCoverage, Some(
       "WITH g AS (SELECT lang, ch, CAST(count(*) AS BIGINT) cnt FROM (" +
         "SELECT lang, unnest(string_split(text, '')) ch FROM documents) WHERE ch <> '' " +
         "GROUP BY lang, ch), " +

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{ArtifactStore, Tables}
+import graft.Catalog.Fixture
 import graft.operators.Similarity
 import org.apache.hadoop.fs.{FileSystem, FileUtil, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -981,9 +982,12 @@ object Ingest {
 
   // ---- embeddings by LSH bucket -------------------------------------------
 
+  /** SRP hyperplanes of the by-bucket ANN layouts and their probes. */
+  val AnnPlanes = 6
+
   /** Write `embeddings` partitioned by SRP-LSH bucket (the ANN layout). */
   def writeEmbeddingsByBucket(emb: DataFrame, path: String,
-                              nPlanes: Int = 6, dim: Int = 64): Unit =
+                              nPlanes: Int = AnnPlanes, dim: Int = 64): Unit =
     emb
       .withColumn("bucket", Similarity.srpBucket("embedding", nPlanes, dim))
       .repartition(col("bucket"))
@@ -991,7 +995,7 @@ object Ingest {
 
   /** Materialize (once per session) the by-bucket layout for a scale dir. */
   def embeddingsByBucket(spark: SparkSession, sfDir: String,
-                         nPlanes: Int = 6, dim: Int = 64,
+                         nPlanes: Int = AnnPlanes, dim: Int = 64,
                          root: String = defaultRoot): String =
     ArtifactStore(spark, s"emb_by_bucket:$sfDir:$nPlanes:$dim:$root") {
       val p = s"$root/${slug(sfDir)}/embeddings_by_bucket_$nPlanes"
@@ -1021,7 +1025,7 @@ object Ingest {
     * Exact codegen'd cosine inside the bucket; same results as the
     * unpartitioned `Similarity.annTopK` for the same planes. */
   def annTopKPruned(spark: SparkSession, path: String, probeVec: Array[Double],
-                    excludeId: Long, k: Int, nPlanes: Int = 6, dim: Int = 64): DataFrame = {
+                    excludeId: Long, k: Int, nPlanes: Int = AnnPlanes, dim: Int = 64): DataFrame = {
     val b = srpBucketOf(probeVec, nPlanes, dim)
     graft.functions.GraftFunctions.register(spark)
     spark.read.parquet(path)
@@ -1047,7 +1051,7 @@ object Ingest {
     * engines share, so the entry is oracle-backed end-to-end. */
   def annBatchPruned(spark: SparkSession, path: String,
                      probes: Seq[(Long, Array[Double])], k: Int,
-                     nPlanes: Int = 6, dim: Int = 64): DataFrame = {
+                     nPlanes: Int = AnnPlanes, dim: Int = 64): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val probeRows = probes.flatMap { case (id, v) =>
@@ -1109,7 +1113,7 @@ object Ingest {
     * bit-identical to a from-scratch rebuild) ∪ unindexed post-crash
     * dirs. Brand-new buckets materialize through the swap's mkdirs. */
   def annUpsertVectors(spark: SparkSession, layoutPath: String, updates: DataFrame,
-                       nPlanes: Int = 6, dim: Int = 64): DeleteStats = {
+                       nPlanes: Int = AnnPlanes, dim: Int = 64): DeleteStats = {
     val upd = updates.withColumn("bucket",
       Similarity.srpBucket("embedding", nPlanes, dim))
     val ids = collectBatchIds(upd, "vec_id")
@@ -1136,7 +1140,7 @@ object Ingest {
     * with no rebuild; q_ann_cdc_probe's oracle reconstructs the mutated
     * corpus from the original embeddings table directly. */
   def annCdcMaintained(spark: SparkSession, sfDir: String,
-                       nPlanes: Int = 6, dim: Int = 64,
+                       nPlanes: Int = AnnPlanes, dim: Int = 64,
                        root: String = defaultRoot): String =
     ArtifactStore(spark, s"ann_cdc:$sfDir:$nPlanes:$root") {
       val src = embeddingsByBucket(spark, sfDir, nPlanes, dim, root)
@@ -1160,7 +1164,7 @@ object Ingest {
     * proves the streaming face reaches the exact batch-CDC truth, and
     * that the mutations commute across triggers on disjoint ids. */
   def annStreamMaintained(spark: SparkSession, sfDir: String,
-                          nPlanes: Int = 6, dim: Int = 64,
+                          nPlanes: Int = AnnPlanes, dim: Int = 64,
                           root: String = defaultRoot): String =
     ArtifactStore(spark, s"ann_stream:$sfDir:$nPlanes:$root") {
       val src = embeddingsByBucket(spark, sfDir, nPlanes, dim, root)
@@ -1467,4 +1471,30 @@ object Ingest {
         Some(s"$root/$tag/customer_bucketed"))
     (to, tc)
   }
+
+  // ---- catalog fixtures -----------------------------------------------------
+
+  /** The layouts and mutated corpora catalog queries read, each at the
+    * defaults those queries use: a builder reaches its layout through
+    * these, and `Harness.pin` builds every one some entry needs. */
+  val EventsByDay: Fixture[String] = Fixture.built("events_by_day")(eventsByDay(_, _))
+  val EmbeddingsByBucket: Fixture[String] = Fixture.built("embeddings_by_bucket")(embeddingsByBucket(_, _))
+  val BucketedOrdersCustomer: Fixture[(String, String)] =
+    Fixture.built("bucketed_orders_customer")(bucketedOrdersCustomer(_, _))
+  val EventsZordered: Fixture[String] = Fixture.built("events_zordered")(eventsZordered(_, _))
+  val EventsHourlyRollup: Fixture[String] = Fixture.built("events_hourly_rollup")(eventsHourlyRollup(_, _))
+  val EventsWithRetention: Fixture[String] = Fixture.built("events_with_retention")(eventsWithRetention(_, _))
+  val EventsCompacted: Fixture[String] = Fixture.built("events_compacted")(eventsCompacted(_, _))
+  val EventsTextFormats: Fixture[(String, String)] = Fixture.built("events_text_formats")(eventsTextFormats(_, _))
+  val EventsByDayTyped: Fixture[String] = Fixture.built("events_by_day_typed")(eventsByDayTyped(_, _))
+  val EventsTiered: Fixture[(String, String)] = Fixture.built("events_tiered")(eventsTiered(_, _))
+  val DocsByShard: Fixture[String] = Fixture.built("docs_by_shard")(docsByShard(_, _))
+  val AnnCdcMaintained: Fixture[String] = Fixture.built("ann_cdc_maintained")(annCdcMaintained(_, _))
+  val AnnStreamMaintained: Fixture[String] = Fixture.built("ann_stream_maintained")(annStreamMaintained(_, _))
+  val IvmJoinPairs: Fixture[String] = Fixture.built("ivm_join_pairs")(ivmJoinPairs(_, _))
+  val IvmJoinDeleted: Fixture[String] = Fixture.built("ivm_join_deleted")(ivmJoinDeleted(_, _))
+  val GdprDeleted: Fixture[(String, String)] = Fixture.built("gdpr_deleted")(gdprDeleted(_, _))
+  val CdcUpserted: Fixture[String] = Fixture.built("cdc_upserted")(cdcUpserted(_, _))
+  val EventsGdprDeleted: Fixture[String] = Fixture.built("events_gdpr_deleted")(eventsGdprDeleted(_, _))
+  val EventsCorrected: Fixture[String] = Fixture.built("events_corrected")(eventsCorrected(_, _))
 }

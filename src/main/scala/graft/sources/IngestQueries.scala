@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import graft.operators.{Num, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -12,14 +13,12 @@ import org.apache.spark.sql.functions._
   * not just that the filter math agrees.
   */
 object IngestQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Time-range aggregate over the by-day layout. The `day BETWEEN`
     * predicate is a partition filter: only 5 of 30 partition directories
     * are read (WritePathSpec asserts the pruning; at 100 TB this is the
     * difference between scanning a month and scanning 5 days). */
   val qIngestDayPrune: Q = (s, d) => {
-    val path = Ingest.eventsByDay(s, d)
+    val path = Ingest.EventsByDay(s, d)
     Ingest.readEventsByDay(s, path)
       .filter(col("day").between(lit("2024-01-05").cast("date"), lit("2024-01-09").cast("date")))
       .groupBy("day", "event_type")
@@ -37,7 +36,7 @@ object IngestQueries {
     * errs·n_days > total (the q_ts_alert_transitions device), so the dim
     * is deterministic and non-empty at every scale factor. */
   val qIngestDpp: Q = (s, d) => {
-    val path = Ingest.eventsByDay(s, d)
+    val path = Ingest.EventsByDay(s, d)
     val fact = Ingest.readEventsByDay(s, path)
     val daily = Tables.events(s, d)
       .filter(col("event_type") === "error")
@@ -60,12 +59,15 @@ object IngestQueries {
     * vector's bucket from inline plane literals and searches the same
     * bucket — a full cross-engine check of the LSH bucketing AND the
     * layout round-trip. */
-  val qAnnBucketPruned: Q = (s, d) => {
-    val path = Ingest.embeddingsByBucket(s, d, nPlanes = 6)
+  val qAnnBucketPruned: Q = (s, d) => annProbe(s, d, Ingest.EmbeddingsByBucket(s, d))
+
+  /** Top-5 neighbors of vector 0 in its bucket of the by-bucket layout at
+    * `path`, sims rounded to 6 dp. */
+  private def annProbe(s: SparkSession, d: String, path: String): DataFrame = {
     val probeVec = Tables.embeddings(s, d)
       .filter(col("vec_id") === 0).select(col("embedding"))
       .head().getSeq[Float](0).toArray.map(_.toDouble)
-    Ingest.annTopKPruned(s, path, probeVec, excludeId = 0L, k = 5, nPlanes = 6)
+    Ingest.annTopKPruned(s, path, probeVec, excludeId = 0L, k = 5)
       .withColumn("sim", Num.roundd(col("sim"), 6))
   }
 
@@ -77,14 +79,7 @@ object IngestQueries {
     * table — a pass proves deletes vanished, stale copies moved, and new
     * placements match a from-scratch rebuild, with no index rebuild in
     * the serving path. */
-  val qAnnCdcProbe: Q = (s, d) => {
-    val path = Ingest.annCdcMaintained(s, d)
-    val probeVec = Tables.embeddings(s, d)
-      .filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray.map(_.toDouble)
-    Ingest.annTopKPruned(s, path, probeVec, excludeId = 0L, k = 5, nPlanes = 6)
-      .withColumn("sim", Num.roundd(col("sim"), 6))
-  }
+  val qAnnCdcProbe: Q = (s, d) => annProbe(s, d, Ingest.AnnCdcMaintained(s, d))
 
   /** ANN probe against the STREAM-maintained layout
     * (Ingest.annStreamMaintained + streaming/StreamVectors): the same
@@ -93,14 +88,7 @@ object IngestQueries {
     * through the batch mutations inside foreachBatch. The oracle is
     * q_ann_cdc_probe's verbatim: a pass proves continuous ingest
     * converges to the exact batch-CDC truth with no rebuild. */
-  val qAnnStreamProbe: Q = (s, d) => {
-    val path = Ingest.annStreamMaintained(s, d)
-    val probeVec = Tables.embeddings(s, d)
-      .filter(col("vec_id") === 0).select(col("embedding"))
-      .head().getSeq[Float](0).toArray.map(_.toDouble)
-    Ingest.annTopKPruned(s, path, probeVec, excludeId = 0L, k = 5, nPlanes = 6)
-      .withColumn("sim", Num.roundd(col("sim"), 6))
-  }
+  val qAnnStreamProbe: Q = (s, d) => annProbe(s, d, Ingest.AnnStreamMaintained(s, d))
 
   /** Batch multiprobe ANN over the by-bucket layout (see
     * Ingest.annBatchPruned): 3 probes × (own + 6 hamming-1 buckets),
@@ -108,23 +96,14 @@ object IngestQueries {
     * rows — bounded by design, the same contract as the IVF seed
     * collect. */
   val qAnnBatchMultiprobe: Q = (s, d) => {
-    val path = Ingest.embeddingsByBucket(s, d, nPlanes = 6)
+    val path = Ingest.EmbeddingsByBucket(s, d)
     val probes = Tables.embeddings(s, d)
       .filter(col("vec_id") < 3).select("vec_id", "embedding")
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray.map(_.toDouble))
       .sortBy(_._1).toSeq
-    Ingest.annBatchPruned(s, path, probes, k = 3, nPlanes = 6)
+    Ingest.annBatchPruned(s, path, probes, k = 3)
   }
-
-  /** DuckDB-side bucket expression: per-plane sign bits from the same
-    * literal ±1 matrix, same left-to-right double accumulation
-    * (list_sum over in-order products) as the srpBucket column. */
-  private def duckBucketExpr(nPlanes: Int, dim: Int): String =
-    Similarity.srpPlanes(nPlanes, dim).zipWithIndex.map { case (plane, h) =>
-      val lits = plane.mkString("[", ", ", "]")
-      s"(CASE WHEN list_sum(list_transform(range($dim), i -> CAST(embedding[i+1] AS DOUBLE) * ($lits::DOUBLE[])[i+1])) > 0 THEN ${1 << h} ELSE 0 END)"
-    }.mkString(" + ")
 
   /** Join two tables hash-bucketed AND sorted on the join key with the
     * same bucket count: the plan is a SortMergeJoin with NO Exchange and
@@ -134,7 +113,7 @@ object IngestQueries {
     * cost is paid once at ingest. Oracle runs the same join on the
     * original parquet, so a pass also proves the bucketed round-trip. */
   val qIngestBucketedJoin: Q = (s, d) => {
-    val (to, tc) = Ingest.bucketedOrdersCustomer(s, d)
+    val (to, tc) = Ingest.BucketedOrdersCustomer(s, d)
     s.table(to).join(s.table(tc), col("o_custkey") === col("c_custkey"))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("cnt"), Num.roundd(sum("o_totalprice"), 2).as("rev"))
@@ -180,8 +159,8 @@ object IngestQueries {
     * rewrite changed the PLAN and not the ANSWER; WritePathSpec asserts
     * the plan reads the rollup file + 3 raw directories. */
   val qIngestRouteRule: Q = (s, d) => {
-    val rollupPath = Ingest.eventsHourlyRollup(s, d)
-    val rawPath = Ingest.eventsByDay(s, d)
+    val rollupPath = Ingest.EventsHourlyRollup(s, d)
+    val rawPath = Ingest.EventsByDay(s, d)
     graft.plans.RollupRouting.register(s, rawPath, rollupPath, "2024-01-26")
     Ingest.readEventsByDay(s, rawPath)
       .filter(col("ts") >= lit("2024-01-08").cast("timestamp_ntz") &&
@@ -207,7 +186,7 @@ object IngestQueries {
     * Oracle filters the raw table to the retained range, so a pass proves
     * the drop removed exactly the expired partitions and nothing else. */
   val qIngestRetention: Q = (s, d) => {
-    val path = Ingest.eventsWithRetention(s, d)
+    val path = Ingest.EventsWithRetention(s, d)
     s.read.parquet(path)
       .groupBy("day", "event_type")
       .agg(count(lit(1)).as("cnt"), Num.roundd(sum("value"), 2).as("sv"))
@@ -219,7 +198,7 @@ object IngestQueries {
     * Oracle aggregates the raw table, so a pass proves compaction
     * rewrote every row verbatim. */
   val qIngestCompacted: Q = (s, d) => {
-    val path = Ingest.eventsCompacted(s, d)
+    val path = Ingest.EventsCompacted(s, d)
     s.read.parquet(path)
       .groupBy("day", "event_type")
       .agg(count(lit(1)).as("cnt"), Num.roundd(sum("value"), 2).as("sv"))
@@ -246,26 +225,21 @@ object IngestQueries {
     * events, so a pass proves the delta decomposition composed to
     * exactly the full join — incremental view maintenance for joins,
     * the piece the aggregate-only cagg path cannot express. */
-  val qIngestIvmJoin: Q = (s, d) => {
-    val p = Ingest.ivmJoinPairs(s, d)
+  val qIngestIvmJoin: Q = (s, d) => pairReport(s, Ingest.IvmJoinPairs(s, d))
+
+  /** Per-user pair count and shortest lag over the pair artifact at `p`. */
+  private def pairReport(s: SparkSession, p: String): DataFrame =
     s.read.parquet(p)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_pairs"), min("lag_us").as("min_lag_us"))
       .orderBy("user_id")
-  }
 
   /** Serve the join view AFTER a CDC delete batch (purchases of user 3,
     * clicks of user 5): exactly the referencing pairs are gone, proven
     * against a full-recompute oracle on the mutated predicate. The
     * delete touched only the ≤2 cday dirs per deleted event derived
     * from the deletes' own timestamps (Ingest.ivmJoinDelete). */
-  val qIngestIvmDelete: Q = (s, d) => {
-    val p = Ingest.ivmJoinDeleted(s, d)
-    s.read.parquet(p)
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_pairs"), min("lag_us").as("min_lag_us"))
-      .orderBy("user_id")
-  }
+  val qIngestIvmDelete: Q = (s, d) => pairReport(s, Ingest.IvmJoinDeleted(s, d))
 
   /** Schema-evolution read over the two-generation layout: `mergeSchema`
     * unions the v1/v2 footers, v1 rows surface the added column as NULL,
@@ -287,7 +261,7 @@ object IngestQueries {
     * formats round-trip every row and µs timestamp under explicit schemas
     * (the TSDB collector path; inference is never used). */
   val qIngestTextFormats: Q = (s, d) => {
-    val (jsonPath, csvPath) = Ingest.eventsTextFormats(s, d)
+    val (jsonPath, csvPath) = Ingest.EventsTextFormats(s, d)
     def daily(df: org.apache.spark.sql.DataFrame, fmt: String) =
       df.groupBy(to_date(col("ts")).as("dday"), col("event_type"))
         .agg(count(lit(1)).as("cnt"), Num.roundd(sum("value"), 2).as("sv"))
@@ -306,7 +280,7 @@ object IngestQueries {
     * rule and a full listing WITHOUT it). Oracle filters the raw table —
     * a pass proves the derived bounds are sound (supersets). */
   val qIngestDerivedPrune: Q = (s, d) => {
-    val path = Ingest.eventsByDay(s, d)
+    val path = Ingest.EventsByDay(s, d)
     org.apache.spark.sql.graft.PlanApi.addOptimization(s, graft.plans.DerivedPartitionFilters)
     Ingest.readEventsByDay(s, path)
       .filter(expr("ts >= TIMESTAMP_NTZ '2024-01-12 06:00:00' AND ts < TIMESTAMP_NTZ '2024-01-15 18:00:00'"))
@@ -346,7 +320,7 @@ object IngestQueries {
     * behavior (untouched files keep their bytes, index stays consistent,
     * idempotence) is asserted in WritePathSpec. */
   val qDocsDelete: Q = (s, d) => {
-    val (pd, pe) = Ingest.gdprDeleted(s, d)
+    val (pd, pe) = Ingest.GdprDeleted(s, d)
     def part(path: String, tag: String, idCol: String) =
       s.read.parquet(path)
         .agg(count(lit(1)).as("n"), sum(idCol).as("id_sum"))
@@ -377,7 +351,7 @@ object IngestQueries {
   }
 
   val qDocsUpsert: Q = (s, d) => {
-    val p = Ingest.cdcUpserted(s, d)
+    val p = Ingest.CdcUpserted(s, d)
     s.read.parquet(p)
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n"), sum("doc_id").as("id_sum"), sum("n_chars").as("chars"))
@@ -390,7 +364,7 @@ object IngestQueries {
     * granular rewrite removed exactly the user's rows across all day
     * directories and damaged nothing else. */
   val qEventsDeleteUser: Q = (s, d) => {
-    val p = Ingest.eventsGdprDeleted(s, d)
+    val p = Ingest.EventsGdprDeleted(s, d)
     s.read.parquet(p)
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"), Num.roundd(sum("value"), 2).as("sv"),
@@ -404,7 +378,7 @@ object IngestQueries {
     * over the raw table — a pass proves the day-granular upsert replaced
     * exactly the corrected readings and nothing else. */
   val qEventsCorrect: Q = (s, d) => {
-    val p = Ingest.eventsCorrected(s, d)
+    val p = Ingest.EventsCorrected(s, d)
     s.read.parquet(p)
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"), Num.roundd(sum("value"), 2).as("sv"))
@@ -459,7 +433,7 @@ object IngestQueries {
     * documents via the hash rule — a pass proves routing, layout write,
     * and pruned read agree end to end. */
   val qIngestShardServe: Q = (s, d) => {
-    val path = Ingest.docsByShard(s, d)
+    val path = Ingest.DocsByShard(s, d)
     s.read.parquet(path)
       .filter(col("shard") === 3)
       .groupBy("lang")
@@ -469,8 +443,20 @@ object IngestQueries {
       .orderBy("lang")
   }
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_ingest_snapshot_diff", qIngestSnapshotDiff, Some(
+  /** q_ann_cdc_probe's oracle, which q_ann_stream_probe shares: the
+    * mutated corpus rebuilt from the original embeddings table. */
+  private val annCdcOracle =
+    "WITH e AS (SELECT vec_id, CASE WHEN vec_id IN (5, 17) " +
+      "THEN list_transform(embedding, x -> -x) ELSE embedding END AS embedding " +
+      "FROM embeddings WHERE vec_id NOT IN (3, 11)), " +
+      s"b AS (SELECT vec_id, embedding, ${Similarity.srpBucketSql("embedding", Ingest.AnnPlanes)} AS bucket FROM e) " +
+      "SELECT vec_id, round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), " +
+      "(SELECT CAST(embedding AS DOUBLE[]) FROM e WHERE vec_id = 0)), 6) sim " +
+      "FROM b WHERE bucket = (SELECT bucket FROM b WHERE vec_id = 0) AND vec_id != 0 " +
+      "ORDER BY sim DESC, vec_id ASC LIMIT 5"
+
+  val all: Seq[Entry] = Seq(
+    Entry("q_ingest_snapshot_diff", qIngestSnapshotDiff, Some(
       "WITH v1 AS (SELECT doc_id, n_chars FROM documents), " +
         "ups AS (SELECT doc_id, n_chars + 1000 n_chars FROM documents WHERE doc_id % 10 = 0), " +
         "ins AS (SELECT doc_id + 1000000 doc_id, n_chars FROM documents WHERE doc_id < 5), " +
@@ -484,7 +470,7 @@ object IngestQueries {
         "SELECT cls, CAST(count(*) AS BIGINT) n, CAST(sum(doc_id) AS BIGINT) id_sum, " +
         "CAST(sum(COALESCE(cb, 0) - COALESCE(ca, 0)) AS BIGINT) chars_delta " +
         "FROM k GROUP BY 1 ORDER BY 1")),
-    ("q_ingest_time_travel", qIngestTimeTravel, Some(
+    Entry("q_ingest_time_travel", qIngestTimeTravel, Some(
       "WITH v1 AS (SELECT doc_id, n_chars FROM documents), " +
         "ups AS (SELECT doc_id, n_chars + 1000 n_chars FROM documents WHERE doc_id % 10 = 0), " +
         "ins AS (SELECT doc_id + 1000000 doc_id, n_chars FROM documents WHERE doc_id < 5), " +
@@ -497,14 +483,14 @@ object IngestQueries {
         // casts in the others
         "UNION ALL SELECT CAST(2 AS BIGINT), CAST(count(*) AS BIGINT), CAST(sum(doc_id) AS BIGINT), CAST(sum(n_chars) AS BIGINT) FROM v2 " +
         "UNION ALL SELECT CAST(3 AS BIGINT), CAST(count(*) AS BIGINT), CAST(sum(doc_id) AS BIGINT), CAST(sum(n_chars) AS BIGINT) FROM v3 ORDER BY ver")),
-    ("q_events_correct", qEventsCorrect, Some(
+    Entry("q_events_correct", qEventsCorrect, needs = Seq(Ingest.EventsCorrected), oracle = Some(
       "SELECT event_type, count(*) cnt, " +
         "round(sum(CASE WHEN event_id IN (5, 17, 23) THEN 999.5 ELSE value END), 2) sv " +
         "FROM events GROUP BY 1 ORDER BY 1")),
-    ("q_events_delete_user", qEventsDeleteUser, Some(
+    Entry("q_events_delete_user", qEventsDeleteUser, needs = Seq(Ingest.EventsGdprDeleted), oracle = Some(
       "SELECT event_type, count(*) cnt, round(sum(value), 2) sv, count(DISTINCT user_id) users " +
         "FROM events WHERE user_id NOT IN (7) GROUP BY 1 ORDER BY 1")),
-    ("q_docs_upsert", qDocsUpsert, Some(
+    Entry("q_docs_upsert", qDocsUpsert, needs = Seq(Ingest.CdcUpserted), oracle = Some(
       "WITH up AS (SELECT doc_id, text, lang, source, n_chars FROM documents WHERE doc_id NOT IN (3, 8) " +
         "UNION ALL SELECT 3, 'updated text three', 'en', 'cdc', 18 " +
         "UNION ALL SELECT 8, 'updated text eight', 'en', 'cdc', 18 " +
@@ -512,44 +498,44 @@ object IngestQueries {
         "UNION ALL SELECT 100001, 'new doc two', 'en', 'cdc', 11) " +
         "SELECT lang, source, count(*) n, CAST(sum(doc_id) AS BIGINT) id_sum, CAST(sum(n_chars) AS BIGINT) chars " +
         "FROM up GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_docs_delete_mor", qDocsDeleteMor, Some(
+    Entry("q_docs_delete_mor", qDocsDeleteMor, Some(
       "SELECT lang, CAST(count(*) AS BIGINT) n, CAST(sum(doc_id) AS BIGINT) id_sum, " +
         "CAST(sum(n_chars) AS BIGINT) chars FROM documents " +
         "WHERE doc_id NOT IN (7,13,101,256) GROUP BY lang ORDER BY lang")),
-    ("q_docs_delete", qDocsDelete, Some(
+    Entry("q_docs_delete", qDocsDelete, needs = Seq(Ingest.GdprDeleted), oracle = Some(
       "SELECT 'docs' part, count(*) n, CAST(sum(doc_id) AS BIGINT) id_sum FROM documents WHERE doc_id NOT IN (7,13,101,256) " +
         "UNION ALL SELECT 'emb' part, count(*) n, CAST(sum(vec_id) AS BIGINT) id_sum FROM embeddings WHERE vec_id NOT IN (7,13,101,256) " +
         "ORDER BY part")),
-    ("q_ingest_shard_serve", qIngestShardServe, Some(
+    Entry("q_ingest_shard_serve", qIngestShardServe, needs = Seq(Ingest.DocsByShard), oracle = Some(
       "SELECT lang, CAST(count(*) AS BIGINT) n_docs, " +
         "CAST(sum(len(string_split(coalesce(text, ''), ' '))) AS BIGINT) tokens, " +
         "CAST(sum(doc_id) AS BIGINT) id_sum FROM documents " +
         "WHERE CAST('0x' || substr(md5('shard' || ':' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 16 = 3 " +
         "GROUP BY lang ORDER BY lang")),
-    ("q_ingest_derived_prune", qIngestDerivedPrune, Some(
+    Entry("q_ingest_derived_prune", qIngestDerivedPrune, needs = Seq(Ingest.EventsByDay), oracle = Some(
       "SELECT event_type, count(*) cnt, round(sum(value), 2) sv FROM events " +
         "WHERE ts >= TIMESTAMP '2024-01-12 06:00:00' AND ts < TIMESTAMP '2024-01-15 18:00:00' " +
         "GROUP BY 1 ORDER BY 1")),
-    ("q_ingest_text_formats", qIngestTextFormats, Some(
+    Entry("q_ingest_text_formats", qIngestTextFormats, needs = Seq(Ingest.EventsTextFormats), oracle = Some(
       "WITH d AS (SELECT CAST(ts AS DATE) dday, event_type, CAST(count(*) AS BIGINT) cnt, round(sum(value), 2) sv " +
         "FROM events GROUP BY 1, 2) " +
         "SELECT fmt, dday, event_type, cnt, sv FROM (SELECT unnest(['csv', 'json']) fmt), d " +
         "ORDER BY fmt, dday, event_type")),
-    ("q_ingest_retention", qIngestRetention, Some(
+    Entry("q_ingest_retention", qIngestRetention, needs = Seq(Ingest.EventsWithRetention), oracle = Some(
       "SELECT CAST(ts AS DATE) AS \"day\", event_type, count(*) cnt, round(sum(value), 2) sv " +
         "FROM events WHERE CAST(ts AS DATE) >= DATE '2024-01-08' " +
         "GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ingest_compacted", qIngestCompacted, Some(
+    Entry("q_ingest_compacted", qIngestCompacted, needs = Seq(Ingest.EventsCompacted), oracle = Some(
       "SELECT CAST(ts AS DATE) AS \"day\", event_type, count(*) cnt, round(sum(value), 2) sv " +
         "FROM events GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ingest_ivm_join", qIngestIvmJoin, Some(
+    Entry("q_ingest_ivm_join", qIngestIvmJoin, needs = Seq(Ingest.IvmJoinPairs), oracle = Some(
       "SELECT c.user_id, CAST(count(*) AS BIGINT) n_pairs, " +
         "min(epoch_us(p.ts) - epoch_us(c.ts)) min_lag_us " +
         "FROM events c JOIN events p ON p.user_id = c.user_id " +
         "AND c.event_type = 'click' AND p.event_type = 'purchase' " +
         "AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE " +
         "GROUP BY c.user_id ORDER BY c.user_id")),
-    ("q_ingest_ivm_delete", qIngestIvmDelete, Some(
+    Entry("q_ingest_ivm_delete", qIngestIvmDelete, needs = Seq(Ingest.IvmJoinDeleted), oracle = Some(
       "SELECT c.user_id, CAST(count(*) AS BIGINT) n_pairs, " +
         "min(epoch_us(p.ts) - epoch_us(c.ts)) min_lag_us " +
         "FROM events c JOIN events p ON p.user_id = c.user_id " +
@@ -557,52 +543,52 @@ object IngestQueries {
         "AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE " +
         "WHERE c.user_id NOT IN (3, 5) " +
         "GROUP BY c.user_id ORDER BY c.user_id")),
-    ("q_ingest_cagg_refresh", qIngestCaggRefresh, Some(
+    Entry("q_ingest_cagg_refresh", qIngestCaggRefresh, needs = Seq(Ingest.EventsByDay), oracle = Some(
       "SELECT CAST(ts AS DATE) dday, event_type, CAST(count(*) AS BIGINT) cnt, " +
         "round(round(sum(value), 8), 2) sv FROM events GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ingest_schema_merge", qIngestSchemaMerge, Some(
+    Entry("q_ingest_schema_merge", qIngestSchemaMerge, Some(
       "WITH e AS (SELECT event_type, value, " +
         "CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 'r' || CAST(user_id % 4 AS VARCHAR) " +
         "ELSE 'none' END region FROM events) " +
         "SELECT region, event_type, CAST(count(*) AS BIGINT) cnt, round(sum(value), 2) sv " +
         "FROM e GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ingest_zorder_box", qIngestZorderBox, Some(
+    Entry("q_ingest_zorder_box", qIngestZorderBox, needs = Seq(Ingest.EventsZordered), oracle = Some(
       "SELECT event_id, ts, user_id, event_type, value FROM events " +
         "WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-14' " +
         "AND value >= 80 AND value < 100 ORDER BY event_id")),
-    ("q_ingest_cagg_serve", qIngestCaggServe, Some(
+    Entry("q_ingest_cagg_serve", qIngestCaggServe, needs = Seq(Ingest.EventsHourlyRollup, Ingest.EventsByDay), oracle = Some(
       "WITH hv AS (SELECT date_trunc('hour', ts) h, event_type, CAST(count(*) AS BIGINT) cnt, round(sum(value), 8) sv8 " +
         "FROM events GROUP BY 1, 2) " +
         "SELECT CAST(date_trunc('day', h) AS DATE) dday, event_type, CAST(sum(cnt) AS BIGINT) cnt, " +
         "round(round(sum(sv8), 8), 2) sv FROM hv GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ingest_cagg_route", qIngestCaggRoute, Some(
+    Entry("q_ingest_cagg_route", qIngestCaggRoute, needs = Seq(Ingest.EventsHourlyRollup, Ingest.EventsByDay), oracle = Some(
       "WITH hv AS (SELECT date_trunc('hour', ts) h, event_type, CAST(count(*) AS BIGINT) cnt, round(sum(value), 8) sv8 " +
         "FROM events WHERE ts >= TIMESTAMP '2024-01-10' AND ts < TIMESTAMP '2024-01-29' GROUP BY 1, 2) " +
         "SELECT CAST(date_trunc('day', h) AS DATE) dday, event_type, CAST(sum(cnt) AS BIGINT) cnt, " +
         "round(round(sum(sv8), 8), 2) sv FROM hv GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ingest_route_rule", qIngestRouteRule, Some(
+    Entry("q_ingest_route_rule", qIngestRouteRule, needs = Seq(Ingest.EventsHourlyRollup, Ingest.EventsByDay), oracle = Some(
       "SELECT CAST(date_trunc('day', ts) AS DATE) dday, event_type, CAST(count(*) AS BIGINT) cnt " +
         "FROM events WHERE ts >= TIMESTAMP '2024-01-08' AND ts < TIMESTAMP '2024-01-29' " +
         "GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ingest_bloom_index", qIngestBloomIndex, Some(
+    Entry("q_ingest_bloom_index", qIngestBloomIndex, needs = Seq(Ingest.EventsByDay), oracle = Some(
       "SELECT event_id, CAST(ts AS DATE) AS \"day\", user_id, event_type, value " +
         "FROM events WHERE event_id IN (7, 404, 777) ORDER BY event_id")),
-    ("q_ingest_bucketed_join", qIngestBucketedJoin, Some(
+    Entry("q_ingest_bucketed_join", qIngestBucketedJoin, needs = Seq(Ingest.BucketedOrdersCustomer), oracle = Some(
       "SELECT c_mktsegment, count(*) cnt, round(sum(o_totalprice), 2) rev " +
         "FROM orders JOIN customer ON o_custkey = c_custkey " +
         "GROUP BY c_mktsegment ORDER BY c_mktsegment")),
-    ("q_ingest_tag_prune", qIngestTagPrune, Some(
+    Entry("q_ingest_tag_prune", qIngestTagPrune, needs = Seq(Ingest.EventsByDayTyped), oracle = Some(
       "SELECT CAST(ts AS DATE) AS \"day\", count(*) cnt, round(sum(value), 2) sv " +
         "FROM events WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-20' " +
         "AND event_type = 'click' " +
         "AND CAST(json_extract_string(props, '$.k') AS INT) BETWEEN 10 AND 60 " +
         "GROUP BY 1 ORDER BY 1")),
-    ("q_ingest_tiered", qIngestTiered, Some(
+    Entry("q_ingest_tiered", qIngestTiered, needs = Seq(Ingest.EventsTiered), oracle = Some(
       "WITH hv AS (SELECT date_trunc('hour', ts) h, event_type, CAST(count(*) AS BIGINT) cnt, round(sum(value), 8) sv8 " +
         "FROM events WHERE CAST(ts AS DATE) >= DATE '2024-01-08' GROUP BY 1, 2) " +
         "SELECT CAST(date_trunc('day', h) AS DATE) dday, event_type, CAST(sum(cnt) AS BIGINT) cnt, " +
         "round(round(sum(sv8), 8), 2) sv FROM hv GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ingest_dpp", qIngestDpp, Some(
+    Entry("q_ingest_dpp", qIngestDpp, needs = Seq(Ingest.EventsByDay), oracle = Some(
       "WITH de AS (SELECT CAST(date_trunc('day', ts) AS DATE) hday, CAST(count(*) AS BIGINT) errs " +
         "FROM events WHERE event_type = 'error' GROUP BY 1), " +
         "t AS (SELECT CAST(sum(errs) AS BIGINT) tot, CAST(count(*) AS BIGINT) nd FROM de), " +
@@ -610,13 +596,13 @@ object IngestQueries {
         "SELECT CAST(date_trunc('day', e.ts) AS DATE) AS \"day\", e.event_type, CAST(count(*) AS BIGINT) cnt " +
         "FROM events e JOIN hot ON hot.hday = CAST(date_trunc('day', e.ts) AS DATE) " +
         "GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ingest_day_prune", qIngestDayPrune, Some(
+    Entry("q_ingest_day_prune", qIngestDayPrune, needs = Seq(Ingest.EventsByDay), oracle = Some(
       // `day` is a DuckDB keyword — a bare alias is a parser error (r02); AS-quote it
       "SELECT CAST(ts AS DATE) AS \"day\", event_type, count(*) cnt, round(sum(value), 2) sv " +
         "FROM events WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-05' AND DATE '2024-01-09' " +
         "GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_ann_batch_multiprobe", qAnnBatchMultiprobe, Some(
-      s"WITH b AS (SELECT vec_id, embedding, ${duckBucketExpr(6, 64)} AS bucket FROM embeddings), " +
+    Entry("q_ann_batch_multiprobe", qAnnBatchMultiprobe, needs = Seq(Ingest.EmbeddingsByBucket), oracle = Some(
+      s"WITH b AS (SELECT vec_id, embedding, ${Similarity.srpBucketSql("embedding", Ingest.AnnPlanes)} AS bucket FROM embeddings), " +
         "p AS (SELECT vec_id probe_id, embedding pv, bucket pb FROM b WHERE vec_id < 3), " +
         // masks: 0 = own bucket, powers of two = one flipped plane each
         "pp AS (SELECT probe_id, pv, xor(pb, m) AS bucket FROM p, (SELECT unnest([0, 1, 2, 4, 8, 16, 32]) m)), " +
@@ -624,29 +610,13 @@ object IngestQueries {
         "FROM b JOIN pp ON b.bucket = pp.bucket AND b.vec_id != pp.probe_id), " +
         "r AS (SELECT probe_id, vec_id, sim, row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC, vec_id) rnk FROM j) " +
         "SELECT probe_id, CAST(rnk AS BIGINT) rnk, vec_id, sim FROM r WHERE rnk <= 3 ORDER BY probe_id, rnk")),
-    ("q_ann_bucket_pruned", qAnnBucketPruned, Some(
-      s"WITH b AS (SELECT vec_id, embedding, ${duckBucketExpr(6, 64)} AS bucket FROM embeddings) " +
+    Entry("q_ann_bucket_pruned", qAnnBucketPruned, needs = Seq(Ingest.EmbeddingsByBucket), oracle = Some(
+      s"WITH b AS (SELECT vec_id, embedding, ${Similarity.srpBucketSql("embedding", Ingest.AnnPlanes)} AS bucket FROM embeddings) " +
         "SELECT vec_id, round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), " +
         "(SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) sim " +
         "FROM b WHERE bucket = (SELECT bucket FROM b WHERE vec_id = 0) AND vec_id != 0 " +
         "ORDER BY sim DESC, vec_id ASC LIMIT 5")),
-    ("q_ann_cdc_probe", qAnnCdcProbe, Some(
-      "WITH e AS (SELECT vec_id, CASE WHEN vec_id IN (5, 17) " +
-        "THEN list_transform(embedding, x -> -x) ELSE embedding END AS embedding " +
-        "FROM embeddings WHERE vec_id NOT IN (3, 11)), " +
-        s"b AS (SELECT vec_id, embedding, ${duckBucketExpr(6, 64)} AS bucket FROM e) " +
-        "SELECT vec_id, round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), " +
-        "(SELECT CAST(embedding AS DOUBLE[]) FROM e WHERE vec_id = 0)), 6) sim " +
-        "FROM b WHERE bucket = (SELECT bucket FROM b WHERE vec_id = 0) AND vec_id != 0 " +
-        "ORDER BY sim DESC, vec_id ASC LIMIT 5")),
-    ("q_ann_stream_probe", qAnnStreamProbe, Some(
-      "WITH e AS (SELECT vec_id, CASE WHEN vec_id IN (5, 17) " +
-        "THEN list_transform(embedding, x -> -x) ELSE embedding END AS embedding " +
-        "FROM embeddings WHERE vec_id NOT IN (3, 11)), " +
-        s"b AS (SELECT vec_id, embedding, ${duckBucketExpr(6, 64)} AS bucket FROM e) " +
-        "SELECT vec_id, round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), " +
-        "(SELECT CAST(embedding AS DOUBLE[]) FROM e WHERE vec_id = 0)), 6) sim " +
-        "FROM b WHERE bucket = (SELECT bucket FROM b WHERE vec_id = 0) AND vec_id != 0 " +
-        "ORDER BY sim DESC, vec_id ASC LIMIT 5")),
+    Entry("q_ann_cdc_probe", qAnnCdcProbe, needs = Seq(Ingest.AnnCdcMaintained), oracle = Some(annCdcOracle)),
+    Entry("q_ann_stream_probe", qAnnStreamProbe, needs = Seq(Ingest.AnnStreamMaintained), oracle = Some(annCdcOracle)),
   )
 }

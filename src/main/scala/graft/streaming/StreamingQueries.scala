@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Catalog.{Entry, Q}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -27,8 +28,6 @@ import org.apache.spark.sql.types._
   * bucketed on the join key.
   */
 object StreamingQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   /** events schema as produced by Tables.events (ts already TIMESTAMP_NTZ
     * is not streamable from raw parquet — the stream reads the raw ns longs
     * and applies the same conversion). */
@@ -450,8 +449,8 @@ object StreamingQueries {
     geofenceHits(eventsStream(s, dir).withWatermark("ts", "2 hours"),
       graft.operators.Geo.boxCells(graft.operators.Geo.boxes(s, sfDir)))
 
-  val all: Seq[(String, Q, Option[String])] = Seq(
-    ("q_stream_geofence", qStreamGeofence, Some(
+  val all: Seq[Entry] = Seq(
+    Entry("q_stream_geofence", qStreamGeofence, Some(
       "WITH boxes AS (SELECT s_suppkey bid, " +
         "CAST((s_suppkey * 4817) % 1500 AS DOUBLE) / 10.0 - 75.0 blat, " +
         "CAST((s_suppkey * 12391) % 3300 AS DOUBLE) / 10.0 - 165.0 blon, " +
@@ -462,7 +461,7 @@ object StreamingQueries {
         "SELECT h, bid, count(*) hits FROM ev JOIN boxes ON " +
         "elat BETWEEN blat - hh AND blat + hh AND elon BETWEEN blon - hw AND blon + hw " +
         "GROUP BY h, bid ORDER BY h, bid")),
-    ("q_stream_burst", qStreamBurst, Some(
+    Entry("q_stream_burst", qStreamBurst, Some(
       "WITH g AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
@@ -481,12 +480,12 @@ object StreamingQueries {
         "SELECT et event_type, TIMESTAMP '2024-01-01' + sx * INTERVAL 1 HOUR start_h, " +
         "TIMESTAMP '2024-01-01' + ex * INTERVAL 1 HOUR end_h, n_hours, peak, total " +
         "FROM ep WHERE ex < 719 ORDER BY 1, 2")),
-    ("q_stream_promql_alert", qStreamPromqlAlert, Some(
+    Entry("q_stream_promql_alert", qStreamPromqlAlert, Some(
       "WITH c AS (SELECT event_type ty, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) n " +
         "FROM events WHERE regexp_matches(event_type, '^(?:error|click)$') GROUP BY 1, 2) " +
         "SELECT ty AS \"type\", h, round(CAST(n AS DOUBLE)/3600.0, 6) AS \"value\" " +
         "FROM c WHERE CAST(n AS DOUBLE)/3600.0 > 0.0004 ORDER BY 1, 2")),
-    ("q_stream_page_hinkley", qStreamPageHinkley, Some(
+    Entry("q_stream_page_hinkley", qStreamPageHinkley, Some(
       "WITH g AS (SELECT unnest(generate_series(TIMESTAMP '2024-01-01', TIMESTAMP '2024-01-30 23:00:00', INTERVAL 1 HOUR)) h), " +
         "ty AS (SELECT DISTINCT event_type et FROM events), " +
         "hc AS (SELECT event_type et, date_trunc('hour', ts) h, CAST(count(*) AS BIGINT) c FROM events GROUP BY 1, 2), " +
@@ -503,43 +502,43 @@ object StreamingQueries {
         "round(CAST(ph AS DOUBLE) / 1000000, 6) ph, " +
         "CAST(CASE WHEN ph > 100000000 THEN 1 ELSE 0 END AS BIGINT) alarm " +
         "FROM ph ORDER BY event_type, h")),
-    ("q_stream_asof", qStreamAsof, Some(
+    Entry("q_stream_asof", qStreamAsof, Some(
       "WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type <> 'signup'), " +
         "r AS (SELECT user_id, ts, value FROM events WHERE event_type = 'signup') " +
         "SELECT p.event_id, r.value AS asof_value FROM p ASOF LEFT JOIN r " +
         "ON p.user_id = r.user_id AND r.ts <= p.ts ORDER BY p.event_id")),
-    ("q_stream_tumbling_wm", qStreamTumblingWm, Some(
+    Entry("q_stream_tumbling_wm", qStreamTumblingWm, Some(
       "SELECT date_trunc('hour', ts) w, event_type, count(*) cnt FROM events GROUP BY 1,2 ORDER BY 1,2")),
-    ("q_stream_sliding", qStreamSliding, Some(
+    Entry("q_stream_sliding", qStreamSliding, Some(
       // each event belongs to the 3 hourly-aligned 3h windows covering it
       "SELECT date_trunc('hour', ts) - i * INTERVAL 1 HOUR w, event_type, count(*) cnt " +
         "FROM (SELECT ts, event_type, unnest([0, 1, 2]) i FROM events) " +
         "GROUP BY 1, 2 ORDER BY 1, 2")),
-    ("q_stream_session", qStreamSession, Some(
+    Entry("q_stream_session", qStreamSession, Some(
       "WITH marked AS (SELECT user_id, ts, CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 30 MINUTE OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL THEN 1 ELSE 0 END new_s FROM events), sess AS (SELECT user_id, ts, sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) sid FROM marked) SELECT user_id, min(ts) s_start, count(*) n_events FROM sess GROUP BY user_id, sid ORDER BY user_id, s_start")),
-    ("q_stream_dedup", qStreamDedup, Some(
+    Entry("q_stream_dedup", qStreamDedup, Some(
       "SELECT event_type, count(*) cnt FROM (SELECT DISTINCT ON (event_id) event_type FROM events ORDER BY event_id) GROUP BY event_type ORDER BY event_type")),
-    ("q_stream_interval_join", qStreamIntervalJoin, Some(
+    Entry("q_stream_interval_join", qStreamIntervalJoin, Some(
       "SELECT c.user_id, count(*) n_pairs, min(epoch_us(p.ts) - epoch_us(c.ts)) min_lag_us " +
         "FROM events c JOIN events p ON p.user_id = c.user_id " +
         "AND c.event_type = 'click' AND p.event_type = 'purchase' " +
         "AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE " +
         "GROUP BY c.user_id ORDER BY c.user_id")),
-    ("q_stream_outer_join", qStreamOuterJoin, Some(
+    Entry("q_stream_outer_join", qStreamOuterJoin, Some(
       "SELECT c.event_id cid, c.user_id cu, c.ts ct, CAST(count(p.ts) AS BIGINT) n_purch, " +
         "min(epoch_us(p.ts) - epoch_us(c.ts)) min_lag_us " +
         "FROM events c LEFT JOIN events p ON p.event_type = 'purchase' AND p.user_id = c.user_id " +
         "AND p.ts > c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE " +
         "WHERE c.event_type = 'click' GROUP BY 1, 2, 3 ORDER BY cid")),
-    ("q_stream_static_join", qStreamStaticJoin, Some(
+    Entry("q_stream_static_join", qStreamStaticJoin, Some(
       "SELECT c_mktsegment, count(*) cnt FROM events JOIN customer ON user_id=c_custkey GROUP BY c_mktsegment ORDER BY c_mktsegment")),
-    ("q_stream_burn_counters", qStreamBurnCounters, Some(
+    Entry("q_stream_burn_counters", qStreamBurnCounters, Some(
       "SELECT date_trunc('hour', ts) h, " +
         "CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) err, " +
         "CAST(count(*) AS BIGINT) tot FROM events GROUP BY 1 ORDER BY h")),
-    ("q_stream_first_seen", qStreamFirstSeen, Some(
+    Entry("q_stream_first_seen", qStreamFirstSeen, Some(
       "SELECT user_id, min(ts) first_ts FROM events GROUP BY 1 ORDER BY user_id")),
-    ("q_stream_dau", qStreamDau, Some(
+    Entry("q_stream_dau", qStreamDau, Some(
       "SELECT (epoch_us(ts) // 86400000000) * 86400000000 day_us, " +
         "CAST(count(DISTINCT user_id) AS BIGINT) n_users FROM events GROUP BY 1 ORDER BY 1")),
   )

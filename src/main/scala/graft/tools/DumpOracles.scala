@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Write SparkEntry.oracleSql as oracle_sql.json WITHOUT executing any
   * query — feeds tools/duck_baseline.py re-baselines, which only need
   * the SQL text. Usage: runMain graft.tools.DumpOracles <outDir> */
@@ -9,18 +7,7 @@ object DumpOracles {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     new java.io.File(outDir).mkdirs()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.writeOracles(outDir, graft.SparkEntry.oracleSql)
     println(s"[dump-oracles] ${graft.SparkEntry.oracleSql.size} oracles -> $outDir/oracle_sql.json")
   }
 }

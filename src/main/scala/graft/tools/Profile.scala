@@ -27,9 +27,11 @@ object Profile {
 
   /** Fields of a profile, in output order: `_s` fields are seconds, the
     * rest counts. `jobs` are the jobs of the action; plan counts read the
-    * final adaptive plan. */
+    * final adaptive plan, where `exchanges` are the hash and range
+    * shuffles that run and `reused_exchanges` the ones served from an
+    * earlier shuffle of the same plan. */
   val fields = Seq("build_s", "plan_s", "exec_s", "build_jobs", "jobs",
-    "exchanges", "scans", "smj", "bnlj", "codegen_fallbacks")
+    "exchanges", "reused_exchanges", "scans", "smj", "bnlj", "codegen_fallbacks")
 
   /** Build the frame, plan it and `collect()` it, timing each step and
     * counting the jobs started while building and while executing. */
@@ -55,9 +57,13 @@ object Profile {
       val execJobs = jobsSince()
       val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
       def count(re: String): Double = re.r.findAllIn(plan).length.toDouble
+      // a node's name opens its line after the tree prefix; a ReusedExchange
+      // line also quotes the exchange it reuses, so match names only
+      def nodes(name: String): Double = count(s"(?m)^[ :+-]*$name")
       Map("build_s" -> buildS, "plan_s" -> planS, "exec_s" -> execS,
         "build_jobs" -> buildJobs.toDouble, "jobs" -> execJobs.toDouble,
-        "exchanges" -> count("(?i)Exchange (hash|range)partitioning"),
+        "exchanges" -> nodes("Exchange (hash|range)partitioning"),
+        "reused_exchanges" -> nodes("ReusedExchange "),
         "scans" -> count("FileScan parquet"), "smj" -> count("SortMergeJoin"),
         "bnlj" -> count("BroadcastNestedLoop"), "codegen_fallbacks" -> count("CodegenFallback"))
     } finally sc.removeSparkListener(listener)

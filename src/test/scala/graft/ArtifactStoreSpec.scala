@@ -118,7 +118,9 @@ class ArtifactStoreSpec extends SparkSuite {
     ("src/main/scala builds sessions in one place: SparkSession.builder only in Harness",
       """SparkSession\.builder""", "Harness.scala", "a second session builder"),
     ("src/main/scala samples host steal in one place: the /proc/stat reader only in Harness",
-      "\"/proc/stat\"", "Harness.scala", "a second /proc/stat reader"))
+      "\"/proc/stat\"", "Harness.scala", "a second /proc/stat reader"),
+    ("src/main/scala declares the catalog query type in one place: type Q only in Catalog",
+      """type Q =""", "Catalog.scala", "a second catalog query type"))
 
   for ((name, pattern, owner, what) <- owners) test(name) {
     val main = new File("src/main/scala")

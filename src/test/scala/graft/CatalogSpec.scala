@@ -1,6 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.graft.PlanApi
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Catalog-level integration tests on sf0.001 (SURVEY.md §5 items 1 & 5).
   *
@@ -28,25 +34,24 @@ class CatalogSpec extends SparkSuite {
   }
 
   test("no duplicate catalog names: the queries Map must not shadow a registration") {
-    // queries is a Map built from the per-module Seqs; a repeated name keeps
+    // queries is a Map built from the one entry list; a repeated name keeps
     // only the LAST registration and the first silently vanishes from the
     // gate (this bit round 11: q_ts_seasonal_decomp registered twice).
-    val perModule =
-      Seq(graft.operators.Relational.all.size, graft.operators.TimeSeries.all.size,
-        graft.operators.Llm.all.size, graft.operators.Analytics.all.size,
-        graft.streaming.StreamingQueries.all.size, graft.operators.LlmScale.all.size,
-        graft.operators.Sketches.all.size, graft.sources.IngestQueries.all.size,
-        graft.operators.Corpus.all.size, graft.operators.Ops.all.size,
-        graft.operators.Signal.all.size, graft.operators.Graphs.all.size,
-        graft.operators.Retrieval.all.size, graft.operators.Features.all.size,
-        graft.operators.Promql.all.size, graft.operators.PromqlFront.all.size,
-        graft.operators.Sre.all.size, graft.operators.Quality.all.size,
-        graft.operators.Fit.all.size, graft.operators.Mining.all.size,
-        graft.operators.Change.all.size, graft.operators.Stats.all.size,
-        graft.operators.Survival.all.size, graft.operators.Geo.all.size,
-        graft.operators.Token.all.size, graft.operators.Mix.all.size).sum
-    assert(SparkEntry.queries.size == perModule,
-      s"catalog Map has ${SparkEntry.queries.size} entries but modules register $perModule — a name is duplicated")
+    val names = SparkEntry.entries.map(_.name)
+    assert(SparkEntry.queries.size == names.size,
+      s"catalog Map has ${SparkEntry.queries.size} entries but the entry list has ${names.size} — " +
+        s"duplicated: ${names.diff(names.distinct).mkString(", ")}")
+  }
+
+  test("queries hold exactly the names of the recorded full catalog; only the approximate ones lack an oracle") {
+    val src = scala.io.Source.fromFile("perfbench/refs/catalog-full.tsv")
+    val recorded = try src.getLines().map(_.split('\t')(0)).toSet finally src.close()
+    assert(recorded.size == 402, s"${recorded.size} names in catalog-full.tsv")
+    val names = SparkEntry.queries.keySet
+    assert(names == recorded, s"missing: ${recorded diff names}; unrecorded: ${names diff recorded}")
+    val approximate = Set("q_sim_ann_lsh", "q_sim_ann_ivf", "q_sim_ann_pq", "q_sketch_distinct",
+      "q_sketch_quantile", "q_sketch_hll_merge", "q_sketch_tdigest_merge", "q_sketch_freq_hh")
+    assert((names diff SparkEntry.oracleSql.keySet) == approximate)
   }
 
   test("golden: q_agg_hash matches DuckDB on sf0.001") {
@@ -107,5 +112,38 @@ class CatalogSpec extends SparkSuite {
     // DuckDB on the same file: min 2024-01-01 00:09:58.778549, max 2024-01-30 23:26:16.220708
     assert(r.get(0).toString == "2024-01-01T00:09:58.778549")
     assert(r.get(1).toString == "2024-01-30T23:26:16.220708")
+  }
+
+  test("every cached fixture is read by some entry that lists it in needs (sf0.001)") {
+    // read = its InMemoryRelation is in the entry's final plan or in the
+    // plan of an action the builder runs; a fixture no entry reads is a
+    // pin that costs Bench setup and memory for nothing
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { seen.add(qe); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def caches(qe: QueryExecution): Seq[AnyRef] =
+      qe.withCachedData.collectWithSubqueries { case r: InMemoryRelation => r.cacheBuilder }
+    val fixtures = SparkEntry.entries.flatMap(_.needs).distinct
+    val pinned = fixtures.map(f => f -> f.pin(spark, sf0001)).filter(_._2.nonEmpty)
+    assert(pinned.nonEmpty, "no fixture caches a frame")
+    spark.listenerManager.register(listener)
+    try {
+      val unread = pinned.filterNot { case (f, frames) =>
+        val ours = frames.flatMap(d => caches(d.queryExecution))
+        SparkEntry.entries.filter(_.needs.contains(f)).exists { e =>
+          PlanApi.drainListeners(spark.sparkContext)
+          seen.clear()
+          val df = e.build(spark, sf0001)
+          PlanApi.drainListeners(spark.sparkContext)
+          (df.queryExecution +: seen.asScala.toSeq).exists(caches(_).exists(b => ours.exists(_ eq b)))
+        }
+      }
+      assert(unread.isEmpty, s"cached but read by no entry that needs it: ${unread.map(_._1.name).mkString(", ")}")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      pinned.flatMap(_._2).foreach(_.unpersist(blocking = true))
+    }
   }
 }

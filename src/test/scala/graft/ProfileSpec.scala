@@ -21,4 +21,10 @@ class ProfileSpec extends SparkSuite {
     assert(m("smj") == 0 && m("bnlj") == 0 && m("scans") == 0, m)
     assert(Profile.fields.forall(m.contains), m)
   }
+
+  test("Profile.measure counts a reused exchange apart from the exchanges that run") {
+    val g = spark.range(1000).groupBy((col("id") % 10).as("k")).count()
+    val m = Profile.measure(spark)(g.as("a").join(g.as("b"), "k"))
+    assert(m("exchanges") == 1 && m("reused_exchanges") == 1, m)
+  }
 }
